@@ -193,7 +193,7 @@ object Bench {
     val queryTotal = timings.values.sum
     val buildTotal = builds.values.sum
     val total = queryTotal + buildTotal
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","query_total":$queryTotal,"build_total":$buildTotal,"host_factor":$hostFactor,"host_factor_par":$hostFactorPar,"canary_series":$cs,"reps":$reps,"agg":"median","queries":$qs,"builds":$bs,"errors":$es,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","query_total":$queryTotal,"build_total":$buildTotal,"host_factor":$hostFactor,"host_factor_par":$hostFactorPar,"canary_series":$cs,"canary_every":$canaryEvery,"reps":$reps,"agg":"median","queries":$qs,"builds":$bs,"errors":$es,"sf":"$sfDir"}"""
     // full per-query detail: first line of stdout (human/log record) and
     // a sidecar file for mechanical regression diffing. Targeted runs
     // (BENCH_ONLY / BENCH_BUILDS filters) must NOT clobber the sidecar —

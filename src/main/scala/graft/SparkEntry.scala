@@ -84,7 +84,7 @@ object SparkEntry {
     // same LRU bound as the ANN/graph caches (compacted stores hold
     // localCheckpoint blocks; eviction drops the reference and lets the
     // ContextCleaner reclaim them)
-    private val cache = new VectorOps.LruMemo[
+    private val cache = new graft.util.LruMemo[
       (SparkSession, String, Option[Timestamp]), graft.log.BulkFactStore](
       VectorOps.MaxCachedIndexes, _ => ())
     def compacted(s: SparkSession, d: String): graft.log.BulkFactStore =
@@ -104,7 +104,7 @@ object SparkEntry {
     * base index over vec_id % 7 != 0, the residue class appended via
     * [[VectorOps.ivfAppend]]. Construction is billed in `build_ivf`. */
   private[graft] object IvfAppendCache {
-    private val cache = new VectorOps.LruMemo[
+    private val cache = new graft.util.LruMemo[
       (SparkSession, String), VectorOps.IvfAppended](
       VectorOps.MaxCachedIndexes, _.index.indexed.unpersist(false))
     def get(s: SparkSession, d: String): VectorOps.IvfAppended =

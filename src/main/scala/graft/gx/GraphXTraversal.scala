@@ -5,6 +5,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
+import graft.util.LruMemo
+import graft.util.LruMemo.releaseCheckpoint
 
 /**
  * GraphX bridge: materialize a snapshot as a `Graph[Unit, Int]`
@@ -19,16 +21,21 @@ import graft.snapshot.Snapshot
  */
 object GraphXTraversal {
 
+  /** How many entries each memo below keeps pinned: snapshots are
+    * immutable, so identity-keying is safe, and the least-recently-used
+    * entry is released on eviction — per-job snapshots in a long-lived
+    * session can't accumulate cached RDDs until storage memory dies. */
+  private[graft] final val MaxCachedGraphs = 4
+
   /** Deterministic label→code dictionary per snapshot: labels are a
     * handful of strings but the full edge RDD is O(100 TB / row-size) —
     * caching 10⁸+ per-edge String objects is multi-GB of pure pointer/
     * header overhead and was the first thing to push sf5 storage into
     * eviction cascades (round-9 probe: the slow hop MOVED between reps).
     * An Int attr caches in a primitive array per partition instead. */
-  private val labelCodeCache =
-    scala.collection.concurrent.TrieMap.empty[Snapshot, Map[String, Int]]
+  private val labelCodeCache = new LruMemo[Snapshot, Map[String, Int]](MaxCachedGraphs, _ => ())
   def labelCodes(snap: Snapshot): Map[String, Int] =
-    labelCodeCache.getOrElseUpdate(snap,
+    labelCodeCache.getOrBuild(snap)(
       snap.edges.select(col("label")).distinct().collect()
         .map(_.getString(0)).sorted.zipWithIndex.toMap)
 
@@ -45,38 +52,12 @@ object GraphXTraversal {
 
   /** Memoized, persisted graph per snapshot: the vertex/edge RDD build is
     * a one-time projection cost (like TpchGraph.snapshot's persist), so
-    * repeated traversals pay only the message-passing rounds. Snapshots
-    * are immutable — identity-keying is safe. BOUNDED: at most
-    * [[MaxCachedGraphs]] graphs stay pinned; the least-recently-used entry
-    * is unpersisted on eviction, so per-job snapshots in a long-lived
-    * session can't accumulate cached RDDs until storage memory dies. */
-  private val MaxCachedGraphs = 4
-
-  /** One LRU graph cache: accessOrder LinkedHashMap bounded at
-    * [[MaxCachedGraphs]], unpersisting the evicted graph — the single
-    * home for the eviction policy shared by the full-graph and
-    * label-filtered caches. */
-  private final class LruGraphCache[K, VD, ED] {
-    private val m = new java.util.LinkedHashMap[K, Graph[VD, ED]](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[K, Graph[VD, ED]]): Boolean = {
-        val evict = size() > MaxCachedGraphs
-        if (evict) e.getValue.unpersist(blocking = false)
-        evict
-      }
-    }
-    def getOrBuild(key: K)(build: => Graph[VD, ED]): Graph[VD, ED] =
-      synchronized {
-        val hit = m.get(key)
-        if (hit != null) hit
-        else { val g = build.cache(); m.put(key, g); g }
-      }
-  }
-
-  private val cache = new LruGraphCache[Snapshot, Unit, Int]
+    * repeated traversals pay only the message-passing rounds. Eviction
+    * unpersists the graph. */
+  private val cache =
+    new LruMemo[Snapshot, Graph[Unit, Int]](MaxCachedGraphs, _.unpersist(blocking = false))
   def cachedGraph(snap: Snapshot): Graph[Unit, Int] =
-    cache.getOrBuild(snap)(graphOf(snap))
+    cache.getOrBuild(snap)(graphOf(snap).cache())
 
   /** Count label-sequence paths: start with 1 at every vertex with an
     * out-edge of labels.head? No — start at ALL vertices (the reference
@@ -158,10 +139,9 @@ object GraphXTraversal {
     * [[cachedLabelGraph]] lookups — which must derive the width BEFORE
     * probing the graph cache — don't re-count. Snapshots are immutable;
     * identity-keying is safe, same as the graph caches. */
-  private val labelCountCache =
-    scala.collection.concurrent.TrieMap.empty[(Snapshot, Seq[String]), Long]
+  private val labelCountCache = new LruMemo[(Snapshot, Seq[String]), Long](MaxCachedGraphs, _ => ())
   private[graft] def labelEdgeCount(snap: Snapshot, labels: Seq[String]): Long =
-    labelCountCache.getOrElseUpdate((snap, labels.sorted),
+    labelCountCache.getOrBuild((snap, labels.sorted))(
       snap.edges.where(col("label").isin(labels: _*)).count())
 
   /** Label-filtered edge RDD for the iterative analytics: built with
@@ -241,7 +221,8 @@ object GraphXTraversal {
     * the partitioned edge RDD) is checked against a DuckDB oracle
     * that recomputes the census with a 3-way relational self-join.
     * Returns one row: (n_parts, n_coedges, n_triangles). */
-  private val pairGraphCache = new LruGraphCache[(Snapshot, Double), Unit, Unit]
+  private val pairGraphCache =
+    new LruMemo[(Snapshot, Double), Graph[Unit, Unit]](MaxCachedGraphs, _.unpersist(blocking = false))
 
   /** The bulk-quantity part co-occurrence pair graph, shared by
     * [[triangleCensusDF]] and [[clusteringCoeffDF]]: the expensive part
@@ -334,29 +315,17 @@ object GraphXTraversal {
     * commutatively — map-side combined like any degree-bounded
     * aggregation; the vertex join is vertex-sized. Rounds are a graph
     * property, not a data-volume one. */
-  /** Memoized LPA labelings: the result is a materialized
-    * (localCheckpoint) vertex-sized DataFrame, so the LRU holds plain
-    * references — eviction needs no unpersist, the ContextCleaner
-    * reclaims dropped checkpoint blocks. [[modularityDF]] shares the
-    * labeling instead of re-running the rounds. */
-  private val lpaCache =
-    new java.util.LinkedHashMap[(Snapshot, Int, Double), DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Snapshot, Int, Double), DataFrame]): Boolean =
-        size() > MaxCachedGraphs
-    }
+  /** Memoized LPA labelings (the shared [[graft.util.LruMemo]]): the
+    * result is a materialized (localCheckpoint) vertex-sized DataFrame,
+    * so the LRU holds plain references — eviction needs no unpersist,
+    * the ContextCleaner reclaims dropped checkpoint blocks.
+    * [[modularityDF]] shares the labeling instead of re-running the
+    * rounds. */
+  private val lpaCache = new LruMemo[(Snapshot, Int, Double), DataFrame](MaxCachedGraphs, _ => ())
 
   def communitiesLpaDF(spark: SparkSession, snap: Snapshot, rounds: Int = 4,
-                       minQty: Double = 30.0): DataFrame = lpaCache.synchronized {
-    val hit = lpaCache.get((snap, rounds, minQty))
-    if (hit != null) hit
-    else {
-      val built = buildLpa(spark, snap, rounds, minQty)
-      lpaCache.put((snap, rounds, minQty), built)
-      built
-    }
-  }
+                       minQty: Double = 30.0): DataFrame =
+    lpaCache.getOrBuild((snap, rounds, minQty))(buildLpa(spark, snap, rounds, minQty))
 
   private def buildLpa(spark: SparkSession, snap: Snapshot, rounds: Int,
                        minQty: Double): DataFrame = {
@@ -416,20 +385,6 @@ object GraphXTraversal {
     releaseCheckpoint(ed)
     labels // retained: buildLpa memoizes it (lpaCache)
   }
-
-  /** Free an eager localCheckpoint's blocks (the §18 release discipline
-    * for DataFrame loops): the checkpoint parks edge/vertex-scale
-    * partitions in the block manager keyed by an internal RDD that only
-    * the checkpointed plan references — dropping the DataFrame leaves
-    * reclamation to the ContextCleaner, which only runs after a driver
-    * GC; meanwhile a filling storage pool evicts the session's MEMOIZED
-    * views and later queries pay full recomputes (the §16
-    * tail-poisoning disease, round 9). Unpersist the backing RDD
-    * explicitly the moment the next round is materialized. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Eager localCheckpoint that actually PRESERVES the frame's
     * HashPartitioning. Under AQE (the Spark 4 default),
@@ -834,30 +789,36 @@ object GraphXTraversal {
     * triangle census's wedge join) + one degree dimension join; returns
     * (a, b, deg_a, deg_b) for every bridge, endpoint degrees attached
     * so downstream can separate leaf-bridges (deg 1) from genuine
-    * community connectors. */
+    * community connectors. The bridge-sized result is memoized per
+    * (snap, minQty) in the shared [[graft.util.LruMemo]]; eviction
+    * frees its checkpoint blocks, so repeated calls pin one copy. */
+  private val bridgesCache =
+    new LruMemo[(Snapshot, Double), DataFrame](MaxCachedGraphs, releaseCheckpoint)
+
   def localBridgesDF(spark: SparkSession, snap: Snapshot,
-                     minQty: Double = 30.0): DataFrame = {
-    val g = pairGraph(snap, minQty)
-    val e0 = spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId)))
-      .toDF("a", "b").localCheckpoint(true)
-    val adj = e0.select(col("a").as("v"))
-      .unionAll(e0.select(col("b").as("v")))
-    val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
-    // stage the oriented frame once (r15, same fix as kTrussPeel): the
-    // lazy edgeSupport re-executed its degree aggregation + both
-    // dimension joins 3×; the u-partitioned checkpoint also collapses
-    // the wedge self-join's two exchanges. The bridge-sized result is
-    // materialized so the staging checkpoints can be released here.
-    val o = partitionedCheckpoint(orientedEdges(e0), col("u"))
-    val out = edgeSupportFromOriented(e0, o).where(col("support") === 0L)
-      .join(deg.select(col("v").as("a"), col("d").as("deg_a")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("deg_b")), "b")
-      .select(col("a"), col("b"), col("deg_a"), col("deg_b"))
-      .localCheckpoint(true)
-    releaseCheckpoint(o)
-    releaseCheckpoint(e0)
-    out
-  }
+                     minQty: Double = 30.0): DataFrame =
+    bridgesCache.getOrBuild((snap, minQty)) {
+      val g = pairGraph(snap, minQty)
+      val e0 = spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId)))
+        .toDF("a", "b").localCheckpoint(true)
+      val adj = e0.select(col("a").as("v"))
+        .unionAll(e0.select(col("b").as("v")))
+      val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
+      // stage the oriented frame once (r15, same fix as kTrussPeel): the
+      // lazy edgeSupport re-executed its degree aggregation + both
+      // dimension joins 3×; the u-partitioned checkpoint also collapses
+      // the wedge self-join's two exchanges. The bridge-sized result is
+      // materialized so the staging checkpoints can be released here.
+      val o = partitionedCheckpoint(orientedEdges(e0), col("u"))
+      val out = edgeSupportFromOriented(e0, o).where(col("support") === 0L)
+        .join(deg.select(col("v").as("a"), col("d").as("deg_a")), "a")
+        .join(deg.select(col("v").as("b"), col("d").as("deg_b")), "b")
+        .select(col("a"), col("b"), col("deg_a"), col("deg_b"))
+        .localCheckpoint(true)
+      releaseCheckpoint(o)
+      releaseCheckpoint(e0)
+      out
+    }
 
   /**
    * Degree assortativity of the co-occurrence pair graph: the Pearson
@@ -989,14 +950,15 @@ object GraphXTraversal {
     * (Pregel state and iteration joins then span every snapshot vertex
     * and edge), so filter-then-memoize is the right order. */
   private val labelGraphCache =
-    new LruGraphCache[(Snapshot, Seq[String], Int), Unit, Unit]
+    new LruMemo[(Snapshot, Seq[String], Int), Graph[Unit, Unit]](
+      MaxCachedGraphs, _.unpersist(blocking = false))
   def cachedLabelGraph(snap: Snapshot, labels: Seq[String]): Graph[Unit, Unit] = {
     // width derived from the filtered edge count (memoized), and kept in
     // the key: a snapshot whose subgraph grew enough to change the width
     // must not silently return a graph built at the old one
     val width = widthFor(labelEdgeCount(snap, labels))
     labelGraphCache.getOrBuild((snap, labels.sorted, width))(
-      Graph.fromEdges(labelEdges(snap, labels, width), ()))
+      Graph.fromEdges(labelEdges(snap, labels, width), ()).cache())
   }
 
   /** Single-source-class BFS: GraphX `ShortestPaths` (Pregel, distances
@@ -1015,36 +977,18 @@ object GraphXTraversal {
     * why filter-then-memoize beats running over the full graph. */
   /** Memoized Pregel BFS results — shortest_paths, harmonic_centrality
     * AND betweenness_landmarks all start from the same (snap, landmarks,
-    * labels) level table; the checkpointed frame is shared like the LPA
-    * labeling ([[lpaCache]]) instead of re-running Pregel per caller. */
+    * labels) level table; the checkpointed frame is shared through the
+    * [[graft.util.LruMemo]], like the LPA labeling, instead of
+    * re-running Pregel per caller. */
   private val spCache =
-    new java.util.LinkedHashMap[(Snapshot, Seq[Long], Seq[String]), DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Snapshot, Seq[Long], Seq[String]), DataFrame]): Boolean =
-        size() > MaxCachedGraphs
-    }
+    new LruMemo[(Snapshot, Seq[Long], Seq[String]), DataFrame](MaxCachedGraphs, _ => ())
 
   def shortestPathsDF(spark: SparkSession, snap: Snapshot,
                       landmarks: Seq[Long],
                       labels: Seq[String] =
-                        Seq("placed", "contains", "supplied_by")): DataFrame = {
-    val key = (snap, landmarks, labels)
-    val hit = spCache.synchronized(spCache.get(key))
-    if (hit != null) hit
-    else {
-      // build OUTSIDE the monitor — holding it across the multi-round
-      // Pregel run would stall unrelated keys; a lost race just keeps
-      // the winner's frame (checkpoint blocks of the loser are
-      // reclaimed by the ContextCleaner)
-      val built = buildShortestPaths(spark, snap, landmarks, labels)
-      spCache.synchronized {
-        val race = spCache.get(key)
-        if (race != null) race
-        else { spCache.put(key, built); built }
-      }
-    }
-  }
+                        Seq("placed", "contains", "supplied_by")): DataFrame =
+    spCache.getOrBuild((snap, landmarks, labels))(
+      buildShortestPaths(spark, snap, landmarks, labels))
 
   private def buildShortestPaths(spark: SparkSession, snap: Snapshot,
                                  landmarks: Seq[Long],
@@ -1080,49 +1024,34 @@ object GraphXTraversal {
     * (3 levels here; the default leaves slack — extra rounds are
     * idempotent at the fixpoint). Returns (vertex_id, landmark_id,
     * dist_w); unreachable pairs carry no row, landmarks self-report 0. */
-  /** Memoized long-weighted edge frames for [[ssspWeightedDF]] — the
-    * contribCache discipline: the fact-table scan + quantity join
-    * dominates each call (measured 47 s/rep at sf5 unmemoized), while
-    * the relaxation rounds are landmark-cone-sized. Eviction frees the
-    * checkpoint blocks. */
+  /** Memoized long-weighted edge frames for [[ssspWeightedDF]] in the
+    * shared [[graft.util.LruMemo]], like [[contribEdges]]: the
+    * fact-table scan + quantity join dominates each call (measured
+    * 47 s/rep at sf5 unmemoized), while the relaxation rounds are
+    * landmark-cone-sized. Eviction frees the checkpoint blocks. */
   private val wedgeCache =
-    new java.util.LinkedHashMap[(Snapshot, Seq[String]), DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Snapshot, Seq[String]), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedGraphs
-        if (evict) releaseCheckpoint(e.getValue)
-        evict
-      }
-    }
+    new LruMemo[(Snapshot, Seq[String]), DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
-  private[gx] def weightedEdges(snap: Snapshot, labels: Seq[String]): DataFrame =
-    wedgeCache.synchronized {
-      val key = (snap, labels.sorted)
-      val hit = wedgeCache.get(key)
-      if (hit != null) hit
-      else {
-        import graft.model.{A, PropType}
-        // one row per edge id (the contribEdges uniqueness pin), then
-        // the long cost: quantity where carried, 1 otherwise
-        val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
-          .groupBy(col("e")).agg(max(col("v")).as("q"))
-          .select(col("e").as("id"), col("q"))
-        // pre-partitioned on `dst` (r15, VERDICT r14 item 1): every
-        // Bellman–Ford round joins this edge-scale frame on `dst`
-        // against the vertex-sized tentative-distance frame, so the
-        // preserved HashPartitioning removes one edge-scale exchange per
-        // relaxation round (4 per call, memoized across calls)
-        val built = partitionedCheckpoint(
-          snap.edges.where(col("label").isin(labels: _*))
-            .select(col("id"), col("outV").as("src"), col("inV").as("dst"))
-            .join(qty, Seq("id"), "left_outer")
-            .select(col("src"), col("dst"),
-              coalesce(col("q"), lit(1.0)).cast("long").as("wt")),
-          col("dst"))
-        wedgeCache.put(key, built)
-        built
-      }
+  private[graft] def weightedEdges(snap: Snapshot, labels: Seq[String]): DataFrame =
+    wedgeCache.getOrBuild((snap, labels.sorted)) {
+      import graft.model.{A, PropType}
+      // one row per edge id (the contribEdges uniqueness pin), then
+      // the long cost: quantity where carried, 1 otherwise
+      val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
+        .groupBy(col("e")).agg(max(col("v")).as("q"))
+        .select(col("e").as("id"), col("q"))
+      // pre-partitioned on `dst` (r15, VERDICT r14 item 1): every
+      // Bellman–Ford round joins this edge-scale frame on `dst`
+      // against the vertex-sized tentative-distance frame, so the
+      // preserved HashPartitioning removes one edge-scale exchange per
+      // relaxation round (4 per call, memoized across calls)
+      partitionedCheckpoint(
+        snap.edges.where(col("label").isin(labels: _*))
+          .select(col("id"), col("outV").as("src"), col("inV").as("dst"))
+          .join(qty, Seq("id"), "left_outer")
+          .select(col("src"), col("dst"),
+            coalesce(col("q"), lit(1.0)).cast("long").as("wt")),
+        col("dst"))
     }
 
   def ssspWeightedDF(spark: SparkSession, snap: Snapshot,
@@ -1388,18 +1317,10 @@ object GraphXTraversal {
     * preserved HashPartitioning lets every iteration's rank join reuse
     * the layout instead of re-exchanging the edge-scale side each round
     * (plain localCheckpoint under AQE records UnknownPartitioning and
-    * silently re-exchanged every round — the r14 fix). LRU-bounded like
-    * [[lpaCache]]; eviction frees the checkpoint blocks explicitly. */
-  private val contribCache =
-    new java.util.LinkedHashMap[Snapshot, DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Snapshot, DataFrame]): Boolean = {
-        val evict = size() > MaxCachedGraphs
-        if (evict) releaseCheckpoint(e.getValue)
-        evict
-      }
-    }
+    * silently re-exchanged every round — the r14 fix). LRU-bounded in the
+    * shared [[graft.util.LruMemo]]; eviction frees the checkpoint blocks
+    * explicitly ([[graft.util.LruMemo.releaseCheckpoint]]). */
+  private val contribCache = new LruMemo[Snapshot, DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
   /** ONE dual-weight contribution-edge checkpoint serves the whole
     * pagerank family (r12 verdict item 7): the uniform 1∕outdeg weight
@@ -1408,32 +1329,26 @@ object GraphXTraversal {
     * per-u aggregation (count and Σqty together) + one join + one
     * checkpoint — the suite used to build and checkpoint the edge table
     * twice. Callers project the weight column they walk with. */
-  private[gx] def contribEdges(snap: Snapshot): DataFrame = contribCache.synchronized {
-    val hit = contribCache.get(snap)
-    if (hit != null) hit
-    else {
-      import graft.model.{A, PropType}
-      // one row per edge id BEFORE the join: snap.prop is one-row-per-
-      // element at a resolved checkpoint today, but the unweighted
-      // family's edge count (d) now rides the same joined frame, so a
-      // duplicate prop row would silently duplicate edges and corrupt
-      // BOTH weights (r13 advice) — pin uniqueness with an aggregate.
-      val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
-        .groupBy(col("e")).agg(max(col("v")).as("wt"))
-        .select(col("e").as("id"), col("wt"))
-      val e = snap.edges.select(col("id"), col("outV").as("u"), col("inV").as("v"))
-        .join(qty, Seq("id"), "left_outer")
-        .select(col("u"), col("v"), coalesce(col("wt"), lit(1.0)).as("wt"))
-      val tot = e.groupBy(col("u"))
-        .agg(count(lit(1)).as("d"), sum(col("wt")).as("tw"))
-      val built = partitionedCheckpoint(
-        e.join(tot, "u")
-          .select(col("u"), col("v"),
-            (lit(1.0) / col("d")).as("w"),
-            (col("wt") / col("tw")).as("wq")), col("u"))
-      contribCache.put(snap, built)
-      built
-    }
+  private[gx] def contribEdges(snap: Snapshot): DataFrame = contribCache.getOrBuild(snap) {
+    import graft.model.{A, PropType}
+    // one row per edge id BEFORE the join: snap.prop is one-row-per-
+    // element at a resolved checkpoint today, but the unweighted
+    // family's edge count (d) now rides the same joined frame, so a
+    // duplicate prop row would silently duplicate edges and corrupt
+    // BOTH weights (r13 advice) — pin uniqueness with an aggregate.
+    val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
+      .groupBy(col("e")).agg(max(col("v")).as("wt"))
+      .select(col("e").as("id"), col("wt"))
+    val e = snap.edges.select(col("id"), col("outV").as("u"), col("inV").as("v"))
+      .join(qty, Seq("id"), "left_outer")
+      .select(col("u"), col("v"), coalesce(col("wt"), lit(1.0)).as("wt"))
+    val tot = e.groupBy(col("u"))
+      .agg(count(lit(1)).as("d"), sum(col("wt")).as("tw"))
+    partitionedCheckpoint(
+      e.join(tot, "u")
+        .select(col("u"), col("v"),
+          (lit(1.0) / col("d")).as("w"),
+          (col("wt") / col("tw")).as("wq")), col("u"))
   }
 
   /** Memoized vertex frame (v), pre-partitioned on `v` and eagerly
@@ -1442,29 +1357,13 @@ object GraphXTraversal {
     * on either side — and, critically, the rounds never re-derive the
     * vertex scan from the fact table (10 rounds × 2 references would be
     * 20 fact-table scans per query, a recompute cascade the moment
-    * storage pressure evicts the snapshot's persisted facts). Same LRU
-    * bound + explicit release as [[contribCache]]. */
-  private val vertsCache =
-    new java.util.LinkedHashMap[Snapshot, DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Snapshot, DataFrame]): Boolean = {
-        val evict = size() > MaxCachedGraphs
-        if (evict) releaseCheckpoint(e.getValue)
-        evict
-      }
-    }
+    * storage pressure evicts the snapshot's persisted facts). Same
+    * [[graft.util.LruMemo]] bound + explicit release as [[contribEdges]]. */
+  private val vertsCache = new LruMemo[Snapshot, DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
-  private[gx] def vertexFrame(snap: Snapshot): DataFrame = vertsCache.synchronized {
-    val hit = vertsCache.get(snap)
-    if (hit != null) hit
-    else {
-      val built = partitionedCheckpoint(
-        snap.vertexIds.select(col("id").as("v")), col("v"))
-      vertsCache.put(snap, built)
-      built
-    }
-  }
+  private[gx] def vertexFrame(snap: Snapshot): DataFrame =
+    vertsCache.getOrBuild(snap)(
+      partitionedCheckpoint(snap.vertexIds.select(col("id").as("v")), col("v")))
 
   /** Quantity-weighted static PageRank as relational rounds — rank flows
     * along `contains` edges in proportion to line-item quantity (bulk

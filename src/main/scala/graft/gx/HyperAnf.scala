@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.snapshot.Snapshot
+import graft.util.LruMemo
+import graft.util.LruMemo.releaseCheckpoint
 
 /**
  * HyperANF-style neighborhood function over the label-filtered
@@ -100,23 +102,15 @@ object HyperAnf {
   // ---- the fixpoint ----
 
   /** Memoized per-(vertex, hop) estimates — `hyperanf` and
-    * `effective_diameter` share one propagation (the spCache
-    * discipline). Eviction FREES the evicted frame's checkpoint blocks
-    * (the Ranks.pin release rule — an eager localCheckpoint the LRU
-    * drops without unpersisting leaks one estimate-frame copy per
-    * evicted key for the session lifetime; a caller holding an evicted
-    * frame fails loudly on the missing block, never silently). */
+    * `effective_diameter` share one propagation through the shared
+    * [[graft.util.LruMemo]]. Eviction FREES the evicted frame's
+    * checkpoint blocks (an eager localCheckpoint the LRU drops without
+    * unpersisting leaks one estimate-frame copy per evicted key for the
+    * session lifetime; a caller holding an evicted frame fails loudly
+    * on the missing block, never silently). */
   private val MaxCached = 8
   private val anfCache =
-    new java.util.LinkedHashMap[(Snapshot, Int, Seq[String]), DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Snapshot, Int, Seq[String]), DataFrame]): Boolean = {
-        val evict = size() > MaxCached
-        if (evict) releaseCheckpoint(e.getValue)
-        evict
-      }
-    }
+    new LruMemo[(Snapshot, Int, Seq[String]), DataFrame](MaxCached, releaseCheckpoint)
 
   /** Per-vertex ball-size estimates: (vertex_id, hop, est_micros) for
     * hop = 1..hops, one row per graph vertex per hop (balls include the
@@ -124,19 +118,8 @@ object HyperAnf {
     * row, the Graph.fromEdges convention shared with the other
     * analytics). */
   def hyperAnfDF(spark: SparkSession, snap: Snapshot, hops: Int = 3,
-                 labels: Seq[String] = DagLabels): DataFrame = {
-    val key = (snap, hops, labels)
-    val hit = anfCache.synchronized(anfCache.get(key))
-    if (hit != null) hit
-    else {
-      val built = buildAnf(spark, snap, hops, labels)
-      anfCache.synchronized {
-        val race = anfCache.get(key)
-        if (race != null) race
-        else { anfCache.put(key, built); built }
-      }
-    }
-  }
+                 labels: Seq[String] = DagLabels): DataFrame =
+    anfCache.getOrBuild((snap, hops, labels))(buildAnf(spark, snap, hops, labels))
 
   /** The distinct (src, dst) edge frame the systolic rounds walk —
     * extracted so [[graft.gx.RoundSteps]] can dump a round over the
@@ -280,10 +263,4 @@ object HyperAnf {
     row.select((1 to hops).map(h => col(s"d$h").cast("long").as(s"n$h"))
       :+ eff.as("eff_diameter_90"): _*)
   }
-
-  /** The §18 release discipline (see GraphXTraversal.releaseCheckpoint). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 }

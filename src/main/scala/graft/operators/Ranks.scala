@@ -47,8 +47,9 @@ object Ranks {
     * correctness note in [[prefixRank]]); without a release, a
     * long-lived session accumulates one ranked-frame copy in executor
     * storage PER CALL (r13 advice). The registry below evicts+frees
-    * the oldest beyond this bound — the same LRU discipline as
-    * GraphXTraversal's contribCache. A caller must therefore consume
+    * the oldest beyond this bound — the same bound-and-release
+    * discipline as the [[graft.util.LruMemo]] memos. A caller must
+    * therefore consume
     * its ranked frame before issuing [[MaxPinned]] further prefixRank
     * calls (an unpersisted localCheckpoint cannot recompute; a stale
     * read fails loudly with a missing-block error, never silently).
@@ -59,17 +60,11 @@ object Ranks {
   private val pinned = new java.util.ArrayDeque[DataFrame]()
 
   /** Register a checkpointed frame; evict + free the oldest beyond
-    * [[MaxPinned]]. Unpersists the BACKING RDD (the LogicalRDD leaf),
-    * not the Dataset cache entry — a localCheckpoint parks its blocks
-    * under an internal RDD the CacheManager never tracks (same
-    * mechanics as GraphXTraversal.releaseCheckpoint). */
+    * [[MaxPinned]] via [[graft.util.LruMemo.releaseCheckpoint]]. */
   private def pin(df: DataFrame): Unit = pinned.synchronized {
     pinned.addLast(df)
-    while (pinned.size() > MaxPinned) {
-      pinned.removeFirst().queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
+    while (pinned.size() > MaxPinned)
+      graft.util.LruMemo.releaseCheckpoint(pinned.removeFirst())
   }
 
   /** Append a 1-based dense global rank column `rankCol` ordered by

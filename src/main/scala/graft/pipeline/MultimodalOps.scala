@@ -910,9 +910,7 @@ object MultimodalOps {
       .join(fam(4000000000L, "n_exact", "exact_split"), lit(true))
       .join(a7, lit(true))
       .localCheckpoint(true) // one row; lets fps/media release below
-    fps.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.util.LruMemo.releaseCheckpoint(fps)
     m.unpersist(false)
     res
   }

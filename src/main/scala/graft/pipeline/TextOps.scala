@@ -3017,7 +3017,7 @@ object TextOps {
     * vocabulary, fertility). Same LRU discipline as the IVF index and
     * LPA labelings; eviction unpersists the symbol table. */
   object BpeCache {
-    private val cache = new VectorOps.LruMemo[
+    private val cache = new graft.util.LruMemo[
       (org.apache.spark.sql.SparkSession, String, Int), (DataFrame, DataFrame)](
       2, t => t._2.unpersist(false))
     def trained(spark: org.apache.spark.sql.SparkSession, dir: String,

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.LruMemo
+import graft.util.LruMemo.releaseCheckpoint
 
 /**
  * Similarity search over an embedding column (`array<float>`), for the
@@ -22,14 +24,6 @@ object VectorOps {
 
   /** embedding cast to array<double> for stable math. */
   def dvec(c: Column): Column = c.cast("array<double>")
-
-  /** The §18 release discipline (see GraphXTraversal.releaseCheckpoint):
-    * free an eager localCheckpoint's backing blocks once no downstream
-    * plan will read them again. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Two-phase grouped shortlist: keep each group's top `n` ids by
     * (score desc, id asc). With the graft extension loaded this is the
@@ -808,38 +802,6 @@ object VectorOps {
     val indexed = spark.read.parquet(s"$root/indexed")
       .persist(StorageLevel.MEMORY_AND_DISK)
     IvfIndex(centroids, indexed, centroids.count().toInt)
-  }
-
-  /** Bounded LRU memo — the same eviction discipline as the GraphX graph
-    * caches (gx/GraphXTraversal): accessOrder LinkedHashMap capped at
-    * `max`, the evicted value's persisted state released via `onEvict`.
-    * A long-lived session touching many corpora keeps at most `max`
-    * indexes pinned instead of accumulating every one forever. */
-  private[graft] final class LruMemo[K, V](max: Int, onEvict: V => Unit) {
-    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
-        val evict = this.size() > max
-        if (evict) onEvict(e.getValue)
-        evict
-      }
-    }
-    def getOrBuild(key: K)(build: => V): V = {
-      synchronized {
-        val hit = m.get(key)
-        if (hit != null) return hit
-      }
-      // build OUTSIDE the monitor: a multi-minute index build must not
-      // block concurrent hits on other keys. On a lost race the loser's
-      // duplicate is released through the same onEvict hook.
-      val v = build
-      synchronized {
-        val raced = m.get(key)
-        if (raced != null) { onEvict(v); raced }
-        else { m.put(key, v); v }
-      }
-    }
-    def size: Int = synchronized(m.size())
-    def contains(key: K): Boolean = synchronized(m.containsKey(key))
   }
 
   private[graft] val MaxCachedIndexes = 4

@@ -613,4 +613,54 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
       math.sqrt((BigInt(n) * syy - sy * sy).toDouble)
     assert(math.abs(num / den - 1.0) < 1e-12)
   }
+
+  /** Id of the RDD backing an eager localCheckpoint (its LogicalRDD leaf). */
+  private def backingRddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get
+
+  // label sets no other caller memoizes, so each call below inserts a new
+  // key and the first one is the least recently used after the last
+  private val freshLabelSets = Seq(Seq("placed"), Seq("contains"),
+    Seq("supplied_by"), Seq("in_region"), Seq("placed", "contains"))
+
+  test("gx memos: MaxCachedGraphs + 1 keys evict and release the LRU entry; hits are identical") {
+    import graft.gx.GraphXTraversal.{MaxCachedGraphs, cachedLabelGraph, weightedEdges}
+    import org.apache.spark.storage.StorageLevel
+    assert(freshLabelSets.size == MaxCachedGraphs + 1)
+    val snap = TpchGraph.snapshot(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+
+    val frames = freshLabelSets.map(weightedEdges(snap, _))
+    val firstRdd = backingRddId(frames.head)
+    val lastRdd = backingRddId(frames.last)
+    assert(!persisted.contains(firstRdd), "evicted checkpoint still pinned")
+    assert(persisted.contains(lastRdd))
+    assert(weightedEdges(snap, freshLabelSets.last) eq frames.last)
+    // the key is the SORTED label set
+    assert(weightedEdges(snap, freshLabelSets.last.reverse) eq frames.last)
+
+    val graphs = freshLabelSets.map(cachedLabelGraph(snap, _))
+    assert(graphs.head.edges.getStorageLevel == StorageLevel.NONE,
+      "evicted graph's edge RDD still persisted")
+    assert(graphs.last.edges.getStorageLevel != StorageLevel.NONE)
+    assert(cachedLabelGraph(snap, freshLabelSets.last) eq graphs.last)
+  }
+
+  test("localBridgesDF: memoized per (snap, minQty); repeats pin nothing new, eviction releases") {
+    import graft.gx.GraphXTraversal.{MaxCachedGraphs, localBridgesDF}
+    val snap = TpchGraph.snapshot(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val first = localBridgesDF(spark, snap, 30.0)
+    val pinnedAfterFirst = persisted.size
+    (1 to 3).foreach { _ =>
+      assert(localBridgesDF(spark, snap, 30.0) eq first)
+    }
+    assert(persisted.size <= pinnedAfterFirst, "repeated calls pinned new RDDs")
+    val firstRdd = backingRddId(first)
+    assert(persisted.contains(firstRdd))
+    (1 to MaxCachedGraphs).foreach(i => localBridgesDF(spark, snap, 30.0 + i))
+    assert(!persisted.contains(firstRdd), "evicted bridges checkpoint still pinned")
+  }
 }

@@ -816,7 +816,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("LruMemo: bounded, LRU eviction order, access refreshes recency") {
     val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val memo = new VectorOps.LruMemo[Int, String](3, evicted += _)
+    val memo = new graft.util.LruMemo[Int, String](3, evicted += _)
     (1 to 3).foreach(i => memo.getOrBuild(i)(s"v$i"))
     memo.getOrBuild(1)("rebuilt-1") // hit: refreshes 1, does NOT rebuild
     assert(memo.getOrBuild(1)("x") == "v1")
@@ -828,6 +828,38 @@ class PipelineSpec extends AnyFunSuite {
     // the shared ANN caches ride the same bound
     assert(VectorOps.IvfCache.cachedCount <= VectorOps.MaxCachedIndexes)
     assert(VectorOps.PqCache.cachedCount <= VectorOps.MaxCachedIndexes)
+  }
+
+  test("LruMemo: a lost build race goes to onEvict once; a failed build leaves no entry") {
+    import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+    val evicted = new ConcurrentLinkedQueue[AnyRef]()
+    val memo = new graft.util.LruMemo[Int, AnyRef](3, v => evicted.add(v))
+    // both builds of key 7 are in flight at once: each waits for the other
+    val bothBuilding = new CountDownLatch(2)
+    val pool = Executors.newFixedThreadPool(2)
+    val got = try {
+      val futures = (1 to 2).map(_ => pool.submit(new Callable[AnyRef] {
+        def call(): AnyRef = memo.getOrBuild(7) {
+          bothBuilding.countDown()
+          assert(bothBuilding.await(30, TimeUnit.SECONDS), "builds did not overlap")
+          new Object
+        }
+      }))
+      futures.map(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(got(0) eq got(1), "racing callers must share the winner's instance")
+    assert(evicted.size == 1, "the loser's duplicate reaches onEvict exactly once")
+    assert(!(evicted.peek() eq got(0)), "the winner must not be released")
+    assert(memo.size == 1)
+    // a build that throws memoizes nothing; the next call rebuilds
+    intercept[IllegalStateException](
+      memo.getOrBuild(8)(throw new IllegalStateException("build failed")))
+    assert(!memo.contains(8) && memo.size == 1)
+    var builds = 0
+    val rebuilt = memo.getOrBuild(8) { builds += 1; "rebuilt" }
+    assert(rebuilt == "rebuilt" && builds == 1 && memo.contains(8))
+    assert(memo.getOrBuild(8) { builds += 1; "again" } == "rebuilt" && builds == 1)
+    assert(evicted.size == 1)
   }
 
   test("pqTrain: sparse id space misses the sample residue class; falls back to full corpus") {
