@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.gx.RoundSteps.Step
 
 /** Dev tool: print the executed plan of named registered queries —
   * `runMain graft.PlanDump <sfDir> <query1,query2,...>`. The curated
@@ -21,15 +22,15 @@ object PlanDump {
     // checkpointing ops show only a LogicalRDD once executed — expose
     // their PRE-checkpoint plans under dedicated names
     def docs = spark.read.parquet(s"$dir/documents.parquet")
-    val inner: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "decontaminate_inner" -> (() => graft.pipeline.TextOps.decontaminate(
+    val inner: Map[String, () => Step] = Map(
+      "decontaminate_inner" -> (() => Step(graft.pipeline.TextOps.decontaminate(
         docs.where(org.apache.spark.sql.functions.col("doc_id") % 25 =!= 0),
         docs.where(org.apache.spark.sql.functions.col("doc_id") % 25 === 0),
-        n = 3, checkpoint = false)),
+        n = 3, checkpoint = false))),
       "unigram_logprob_inner" -> (() =>
-        graft.pipeline.TextOps.unigramLogProb(docs, checkpoint = false)),
-      "bm25_scores_inner" -> (() => graft.pipeline.TextOps.bm25Scores(
-        docs, Seq("spark", "join", "window"), checkpoint = false))) ++
+        Step(graft.pipeline.TextOps.unigramLogProb(docs, checkpoint = false))),
+      "bm25_scores_inner" -> (() => Step(graft.pipeline.TextOps.bm25Scores(
+        docs, Seq("spark", "join", "window"), checkpoint = false)))) ++
       // iterative operators' per-round plans (r15 evidence tooling): the
       // registered queries return checkpointed results, so the inner
       // Exchange placement is only visible through these
@@ -42,14 +43,19 @@ object PlanDump {
     val formatted = sys.env.get("SPARK_GRAFT_PLAN_MODE").contains("formatted")
     names.foreach { n =>
       println(s"==== $n ====")
-      val df = inner.get(n).map(_.apply())
-        .getOrElse(SparkEntry.queries(n)(spark, dir))
-      if (formatted)
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      else
-        println(df.queryExecution.executedPlan.toString)
+      println(planText(inner.get(n).map(_.apply())
+        .getOrElse(Step(SparkEntry.queries(n)(spark, dir))), formatted))
     }
     spark.stop()
   }
+
+  /** The step's plan text; its staging checkpoints are released once the
+    * text is captured, since nothing reads them afterwards. */
+  private[graft] def planText(step: Step, formatted: Boolean): String =
+    try {
+      if (formatted)
+        step.df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      else step.df.queryExecution.executedPlan.toString
+    } finally step.release()
 }

@@ -26,8 +26,13 @@ import graft.model._
  *  - setProperty / removeProperty touch the element
  *                                                 (FluxElement.java:99-167)
  *
- * Reads used by this driver-side API scan the in-memory log (TCK-scale
- * graphs); the set-oriented analytical path over the same log is
+ * Per-element reads — isDeleted, properties, edge label/endpoints,
+ * incident edges and neighbors, `difference(workingSet, d1, d2)` — read
+ * only the element's own facts through the log's entity and reference
+ * indexes ([[graft.log.MemFactLog]]), so they cost O(element history),
+ * not O(log). Whole-graph reads (`getVertices()`, `getEdges()`,
+ * [[GraphView]]'s `vertices`/`edges`, the count scans) still scan the
+ * in-memory log; the set-oriented analytical path over the same log is
  * [[graft.snapshot.Snapshot]].
  */
 final class GraftGraph(val log: MemFactLog) {
@@ -213,7 +218,7 @@ final class GraftGraph(val log: MemFactLog) {
     /** Incident edges (FluxVertex.java:76-85,150-180). dir ∈ out|in|both;
       * empty labels ⇒ all. BOTH = out ++ in (MultiIterable concat). */
     def getEdges(dir: String, labels: String*): Seq[EdgeHandle] = {
-      val es = edgeRecords(pinnedTx)
+      val es = incidentEdges(id, pinnedTx)
       val sel = dir match {
         case "out"  => es.filter(_.outV == id)
         case "in"   => es.filter(_.inV == id)
@@ -226,7 +231,7 @@ final class GraftGraph(val log: MemFactLog) {
     /** 1-hop neighbors — bag semantics, duplicates preserved
       * (FluxVertex.java:87-117). */
     def getVertices(dir: String, labels: String*): Seq[VertexHandle] = {
-      val es = edgeRecords(pinnedTx)
+      val es = incidentEdges(id, pinnedTx)
       def opp(dirNow: String): Seq[Long] = dirNow match {
         case "out" => es.filter(e => e.outV == id && (labels.isEmpty || labels.contains(e.label))).map(_.inV)
         case "in"  => es.filter(e => e.inV == id && (labels.isEmpty || labels.contains(e.label))).map(_.outV)
@@ -246,8 +251,7 @@ final class GraftGraph(val log: MemFactLog) {
     protected def at(tx: Long): Elem = new EdgeHandle(id, tx)
 
     private def rec: EdgeRec =
-      edgeRecords(pinnedTx).find(_.id == id)
-        .getOrElse(throw new NoSuchElementException(s"edge $id"))
+      edgeRec(id, pinnedTx).getOrElse(throw new NoSuchElementException(s"edge $id"))
 
     def getLabel: String = rec.label
     /** Endpoint lookup (FluxEdge.java:77-85). dir ∈ in|out. */
@@ -469,7 +473,8 @@ final class GraftGraph(val log: MemFactLog) {
   /** Facts present at d1 but NOT at d2, over the working set — the
     * difference graph (FluxGraph.java:250-273, FluxUtil.java:241-319).
     * Keeps structural facts of surviving elements, drops orphaned
-    * element-type facts (normalize), and records original ids.
+    * element-type facts (normalize), and records original ids. Reads
+    * only the working set's entities, through the entity index.
     *
     * This is the driver-side shortcut for interactive (TCK-scale) graphs;
     * the set-oriented engine path over ANY store — including a
@@ -477,24 +482,28 @@ final class GraftGraph(val log: MemFactLog) {
     * [[graft.snapshot.Snapshot.differenceFacts]], with identical
     * semantics (asserted by TemporalSpec parity). */
   def difference(workingSet: Seq[Long], d1: Timestamp, d2: Timestamp): DiffGraph = {
-    val ws = workingSet.toSet
-    val f1 = liveFacts(log.resolveTx(d1)).filter(f => ws(f.e))
-    val f2 = liveFacts(log.resolveTx(d2)).filter(f => ws(f.e)).toSet
-    val key = (f: Fact) => (f.e, f.attr, f.vStr, f.vLong, f.vDouble, f.vDec, f.vBool, f.vTs, f.vRef)
-    val k2 = f2.map(key)
-    val diff = f1.filterNot(f => f.attr != A.ElementType && k2(key(f)))
-    // normalize: drop elements whose ONLY remaining fact is the type fact
-    val byE = diff.groupBy(_.e)
-    val kept = byE.filter { case (_, fs) => fs.exists(_.attr != A.ElementType) }
-    DiffGraph.fromFacts(log.spark, kept.values.flatten.toSeq)
+    val (t1, t2) = (log.resolveTx(d1), log.resolveTx(d2))
+    val kept = workingSet.distinct.flatMap { e =>
+      val f1 = liveFactsOf(e, t1)
+      val k2 = liveFactsOf(e, t2).map(valueKey).toSet
+      val changed = f1.filter(f => f.attr != A.ElementType && !k2(valueKey(f)))
+      // normalize: an element whose ONLY remaining fact is the type fact
+      // is dropped; a surviving one keeps its type fact
+      if (changed.isEmpty) Nil else f1.filter(_.attr == A.ElementType) ++ changed
+    }
+    DiffGraph.fromFacts(log.spark, kept)
   }
 
   /** Per-element difference of two version handles (FluxGraph.java:275-280). */
   def difference(e1: Elem, e2: Elem): Seq[Fact] = {
-    val key = (f: Fact) => (f.attr, f.vStr, f.vLong, f.vDouble, f.vDec, f.vBool, f.vTs, f.vRef)
-    val k2 = e2.facts.map(key).toSet
-    e1.facts.filterNot(f => k2(key(f)))
+    val k2 = e2.facts.map(valueKey).toSet
+    e1.facts.filterNot(f => k2(valueKey(f)))
   }
+
+  /** A fact's identity within one element: attribute plus value (tx is
+    * provenance, not identity). */
+  private def valueKey(f: Fact) =
+    (f.attr, f.vStr, f.vLong, f.vDouble, f.vDec, f.vBool, f.vTs, f.vRef)
 
   // ---- internal driver-side reads over the log ----
 
@@ -503,48 +512,63 @@ final class GraftGraph(val log: MemFactLog) {
   /** Uncommitted buffered facts, made visible to current-view reads while
     * batching (stamped one past the head so latest-wins sees them last) —
     * otherwise an element created inside inTx looks deleted to validate()
-    * and can't be used until the commit. */
-  private def pendingFacts: Seq[Fact] =
+    * and can't be used until the commit. Package-visible so a whole-log
+    * reference can replay head reads made inside a batch. */
+  private[graft] def pendingFacts: Seq[Fact] =
     if (buffer.isEmpty) Nil
     else buffer.toSeq.zipWithIndex.map { case (f, i) =>
       f.copy(tx = log.headTx + 1, seq = i.toLong)
     }
 
-  private def liveFacts(asOf: Long): Seq[Fact] = {
-    val base = if (asOf == Long.MaxValue) log.allFacts ++ pendingFacts
-               else log.allFacts.filter(_.tx <= asOf)
-    base.groupBy(f => (f.e, f.attr)).valuesIterator
-      .map(_.maxBy(f => (f.tx, f.seq)))
-      .filter(_.added).toSeq
+  /** Latest-wins over facts in (tx, seq) order — the log's append order,
+    * with pending facts last: the last fact per (e, attr), retractions
+    * dropped. */
+  private def latestWins(fs: Iterator[Fact]): Seq[Fact] = {
+    val last = mutable.LinkedHashMap.empty[(Long, String), Fact]
+    fs.foreach(f => last((f.e, f.attr)) = f)
+    last.valuesIterator.filter(_.added).toSeq
   }
 
-  private def liveFactsOf(e: Long, asOf: Long): Seq[Fact] = {
-    val base = if (asOf == Long.MaxValue) log.allFacts ++ pendingFacts
-               else log.allFacts.filter(_.tx <= asOf)
-    base.filter(f => f.e == e)
-      .groupBy(_.attr).valuesIterator
-      .map(_.maxBy(f => (f.tx, f.seq)))
-      .filter(_.added).toSeq
-  }
+  /** Whole-graph live facts: a scan of the log. */
+  private def liveFacts(asOf: Long): Seq[Fact] =
+    if (asOf == Long.MaxValue) latestWins(log.allFacts.iterator ++ pendingFacts)
+    else latestWins(log.allFacts.iterator.filter(_.tx <= asOf))
 
-  /** Bulk edge read: ONE pass over the live facts instead of a per-handle
-    * `edgeRecords` rebuild — the set-oriented twin of `getEdges()` for
-    * whole-graph scans (each handle's getLabel/getVertex re-derives the
-    * edge table, which is fine for point reads and quadratic for scans). */
+  /** One element's live facts: an entity-index read, O(history of e). */
+  private def liveFactsOf(e: Long, asOf: Long): Seq[Fact] =
+    if (asOf == Long.MaxValue)
+      latestWins(log.factsOf(e).iterator ++ pendingFacts.filter(_.e == e))
+    else latestWins(log.factsOf(e).iterator.filter(_.tx <= asOf))
+
+  /** Bulk edge read for whole-graph writers: the live edge ids from one
+    * scan, each resolved from its own facts. */
   private[graft] def edgeTuples(): Seq[(Long, String, Long, Long)] =
-    edgeRecords(Long.MaxValue).map(r => (r.id, r.label, r.outV, r.inV))
+    getEdges().flatMap(e => edgeRec(e.id, Long.MaxValue))
+      .map(r => (r.id, r.label, r.outV, r.inV))
 
-  private def edgeRecords(asOf: Long): Seq[EdgeRec] = {
-    val live = liveFacts(asOf)
-    val edgeIds = live.collect { case f if f.attr == A.ElementType && f.vStr == A.Edge => f.e }.toSet
-    val byE = live.filter(f => edgeIds(f.e)).groupBy(_.e)
-    byE.flatMap { case (e, fs) =>
-      for {
-        label <- fs.find(_.attr == A.EdgeLabel).map(_.vStr)
-        out <- fs.find(_.attr == A.EdgeOut).map(_.vRef.longValue)
-        in <- fs.find(_.attr == A.EdgeIn).map(_.vRef.longValue)
-      } yield EdgeRec(e, label, out, in)
-    }.toSeq
+  /** Label and endpoints of edge `e` live at `asOf`, from the edge's own
+    * facts; None when `e` is not a live edge there. */
+  private def edgeRec(e: Long, asOf: Long): Option[EdgeRec] = {
+    val fs = liveFactsOf(e, asOf)
+    def get(attr: String) = fs.find(_.attr == attr)
+    for {
+      _ <- fs.find(f => f.attr == A.ElementType && f.vStr == A.Edge)
+      label <- get(A.EdgeLabel).map(_.vStr)
+      out <- get(A.EdgeOut).map(_.vRef.longValue)
+      in <- get(A.EdgeIn).map(_.vRef.longValue)
+    } yield EdgeRec(e, label, out, in)
+  }
+
+  /** Edges live at `asOf` that may touch vertex `v`: reference-index
+    * candidates (plus, at head, edges referencing `v` in the pending
+    * buffer), each checked live; callers match the endpoint side. */
+  private def incidentEdges(v: Long, asOf: Long): Seq[EdgeRec] = {
+    val pending =
+      if (asOf != Long.MaxValue) Nil
+      else buffer.iterator.collect {
+        case f if (f.attr == A.EdgeOut || f.attr == A.EdgeIn) && f.vRef == v => f.e
+      }.toSeq
+    (log.edgesReferencing(v) ++ pending).distinct.flatMap(edgeRec(_, asOf))
   }
 
   private def timeIdOf(e: Long, asOf: Long): Long =

@@ -3,7 +3,7 @@ package graft.log
 import scala.collection.mutable
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
-import graft.model.{Fact, Touch, TxMeta}
+import graft.model.{A, Fact, Touch, TxMeta}
 
 /**
  * The storage abstraction: an append-only log of [[Fact]]s plus the two
@@ -143,7 +143,20 @@ object BulkFactStore {
  * Driver-side mutable fact log: the write path of the interactive graph
  * API. All commits are serialized through this object (single-writer,
  * monotonic tx ids), matching the reference's transactor semantics.
- * Reads over it are set-oriented DataFrames created on demand.
+ *
+ * `commit` maintains, under the same lock, the driver-side indexes the
+ * per-element reads of [[graft.graph.GraftGraph]] use — the reference
+ * answers the same reads from Datomic's covering indexes
+ * (FluxEdge.java:77-90, FluxVertex.java:161-180):
+ *  - entity index (EAVT): entity → its facts in tx order, holding the
+ *    same objects as the log ([[factsOf]]);
+ *  - reference index (VAET): vertex → edges whose out/in endpoint fact
+ *    ever referenced it ([[edgesReferencing]]); callers check liveness at
+ *    their own pin;
+ *  - per-element tx set: version-chain navigation in O(log chain);
+ *  - instant staircase: [[resolveTx]] in O(log txs).
+ * Whole-graph reads ([[allFacts]] and the DataFrames below) still scan
+ * the log.
  */
 final class MemFactLog(val spark: SparkSession) extends FactStore {
   import spark.implicits._
@@ -163,6 +176,15 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
     * a full-log scan per step (the reference's EAVT/log indexes give it
     * the same asymptotics). */
   private val elemTxs = mutable.LongMap.empty[mutable.TreeSet[Long]]
+  /** entity index (EAVT): each entity's facts in (tx, seq) order. */
+  private val entityFacts = mutable.LongMap.empty[mutable.ArrayBuffer[Fact]]
+  /** reference index (VAET): vertex → ids of the edges whose EdgeOut /
+    * EdgeIn fact ever referenced it, in first-reference order. */
+  private val refEdges = mutable.LongMap.empty[mutable.LinkedHashSet[Long]]
+  /** instant → tx "staircase": strictly increasing in both key and value.
+    * A tx whose instant is ≥ a later tx's instant can never be the max tx
+    * at or before any date, so commit drops it. */
+  private val staircase = new java.util.TreeMap[Timestamp, java.lang.Long]()
   private var nextTx: Long = 0L
   private var nextEntity: Long = 1L
 
@@ -182,14 +204,20 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
     val instant = at.getOrElse(new Timestamp(System.currentTimeMillis()))
     txs += TxMeta(tx, instant)
     txInstants(tx) = instant
+    staircase.tailMap(instant, true).clear()
+    staircase.put(instant, tx)
     def index(e: Long): Unit =
       elemTxs.getOrElseUpdate(e, mutable.TreeSet.empty[Long]) += tx
     // prevTx resolved against pre-commit state, then state advanced.
     touched.distinct.foreach { e =>
       touches += Touch(e, tx, elemMaxTx.getOrElse(e, -1L))
     }
-    txData.zipWithIndex.foreach { case (f, i) =>
-      facts += f.copy(tx = tx, seq = i.toLong)
+    txData.zipWithIndex.foreach { case (f0, i) =>
+      val f = f0.copy(tx = tx, seq = i.toLong)
+      facts += f
+      entityFacts.getOrElseUpdate(f.e, mutable.ArrayBuffer.empty[Fact]) += f
+      if ((f.attr == A.EdgeOut || f.attr == A.EdgeIn) && f.vRef != null)
+        refEdges.getOrElseUpdate(f.vRef.longValue, mutable.LinkedHashSet.empty[Long]) += f.e
       elemMaxTx(f.e) = tx
       index(f.e)
     }
@@ -220,10 +248,21 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
   def instantOf(tx: Long): Option[Timestamp] =
     synchronized(txInstants.get(tx))
 
+  /** Max tx whose instant ≤ `at`, -1 when none: one floor lookup on the
+    * staircase. */
   def resolveTx(at: Timestamp): Long = synchronized {
-    txs.iterator.filter(!_.txInstant.after(at)).map(_.tx)
-      .foldLeft(-1L)(math.max)
+    val hit = staircase.floorEntry(at)
+    if (hit == null) -1L else hit.getValue.longValue
   }
+
+  /** Facts about `e` in (tx, seq) order — an entity-index read, O(history of e). */
+  def factsOf(e: Long): Seq[Fact] =
+    synchronized(entityFacts.get(e).fold(Seq.empty[Fact])(_.toVector))
+
+  /** Ids of the edges whose out/in endpoint fact ever referenced vertex
+    * `v` (retracted or re-pointed ones included) — a reference-index read. */
+  def edgesReferencing(v: Long): Seq[Long] =
+    synchronized(refEdges.get(v).fold(Seq.empty[Long])(_.toVector))
 
   // ---- driver-local reads (the "peer cache" fast path; the same data is
   //      always available set-oriented via the DataFrames below) ----

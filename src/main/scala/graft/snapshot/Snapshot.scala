@@ -14,14 +14,15 @@ import graft.log.FactStore
  * rather than pinning a ThreadLocal: on a cluster, "the current db" must
  * be a value you can hold, cache and join against, not ambient state.
  *
- * Latest-wins dedup is a `max_by(struct(values, added), tx)` hash
+ * Latest-wins dedup is a `max_by(struct(values, added), (tx, seq))`
  * aggregation — NOT a row_number window — so Spark runs it with map-side
  * partial aggregation: each input partition combines its own facts per
  * (e, attr) before the shuffle, which at 100 TB moves only one row per
  * touched (entity, attribute) per input partition instead of the whole
- * history. Retraction-aware: if the latest fact for (e, attr) is a
- * retraction (added = false) the attribute is absent from the snapshot
- * but remains in [[history]].
+ * history (see [[currentFacts]] for the physical operator). Retraction-
+ * aware: if the latest fact for (e, attr) is a retraction
+ * (added = false) the attribute is absent from the snapshot but remains
+ * in [[history]].
  */
 final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
 
@@ -30,22 +31,37 @@ final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
     * stores the tx predicate also lands on the txBucket partition column,
     * so an asOf over a long history reads only the file ranges ≤ the
     * checkpoint (partition pruning — no scan of later history). */
-  def history: DataFrame = {
-    val base =
-      if (asOfTx == Long.MaxValue) store.factsDF
-      else store.txBucketSize match {
-        case Some(sz) =>
-          store.factsDF.where(col("txBucket") <= lit(asOfTx / sz) && col("tx") <= asOfTx)
-        case None => store.factsDF.where(col("tx") <= asOfTx)
-      }
-    base.drop("txBucket")
+  def history: DataFrame = txRange(None)
+
+  /** Facts appended after tx `t` — `db.since(t)` (ImmutableFluxGraph.java:81).
+    * On a bucket-partitioned store the lower bound also lands on the
+    * txBucket column, so buckets wholly at or before `t` are pruned. */
+  def since(t: Long): DataFrame = txRange(Some(t))
+
+  /** Facts with `after < tx ≤ asOfTx` (either bound optional), each bound
+    * repeated on the txBucket partition column when the store has one. */
+  private def txRange(after: Option[Long]): DataFrame = {
+    val upper = Some(asOfTx).filter(_ != Long.MaxValue)
+    val onTx = upper.map(col("tx") <= _).toSeq ++ after.map(col("tx") > _)
+    val onBucket = store.txBucketSize.toSeq.flatMap { sz =>
+      upper.map(u => col("txBucket") <= lit(u / sz)).toSeq ++
+        after.map(t => col("txBucket") >= lit(t / sz))
+    }
+    (onBucket ++ onTx).reduceOption(_ && _)
+      .fold(store.factsDF)(store.factsDF.where)
+      .drop("txBucket")
   }
 
-  /** Facts appended after tx `t` — `db.since(t)` (ImmutableFluxGraph.java:81). */
-  def since(t: Long): DataFrame = history.where(col("tx") > t)
-
   /** The current (latest-wins, retraction-filtered) fact set: one row per
-    * live (e, attr). */
+    * live (e, attr).
+    *
+    * Physical shape: the latest-wins step executes as a `SortAggregate`
+    * (partial + final around one shuffle on (e, attr)), not a hash
+    * aggregation — `max_by`'s buffer holds the payload struct, which the
+    * fixed-width hash-aggregation map cannot store. The payload struct
+    * carries all seven value columns and is built below the aggregation,
+    * so a typed read such as [[prop]] still decodes every value column
+    * even though it projects one. */
   lazy val currentFacts: DataFrame = {
     if (store.preDeduped) {
       // at most one fact per (e, attr) by construction: the latest-wins

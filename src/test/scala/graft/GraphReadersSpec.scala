@@ -178,8 +178,7 @@ class GraphReadersSpec extends AnyFunSuite {
 
     // structural digest that is engine-id independent: counts, label
     // histogram, the SORTED in-degree multiset, and an exact weight sum.
-    // Bulk-read via edgeTuples — per-handle getLabel/getVertex re-derive
-    // the edge table each call, which is quadratic at 8k edges.
+    // Bulk-read via edgeTuples: one log scan for the live edge ids.
     def digest(g: GraftGraph): (Int, Int, Map[String, Int], Seq[Int], Long, Set[Any]) = {
       val es = g.edgeTuples()
       val indeg = es.groupBy(_._4).values.map(_.size).toSeq.sorted.reverse

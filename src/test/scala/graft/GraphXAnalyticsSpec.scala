@@ -663,4 +663,22 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     (1 to MaxCachedGraphs).foreach(i => localBridgesDF(spark, snap, 30.0 + i))
     assert(!persisted.contains(firstRdd), "evicted bridges checkpoint still pinned")
   }
+
+  test("RoundSteps: dumping every step's plan releases its staging checkpoints") {
+    import graft.gx.RoundSteps
+    val snap = TpchGraph.snapshot(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def dumpAll(): Unit = RoundSteps.steps.valuesIterator.foreach { fn =>
+      assert(PlanDump.planText(fn(spark, snap), formatted = false).nonEmpty)
+    }
+    dumpAll() // builds the shared memoized frames the steps read
+    val before = persisted
+    // every step except betweenness stages at least one checkpoint
+    val staged = RoundSteps.steps.valuesIterator.map(_(spark, snap))
+      .map { step => val n = step.staging.size; step.release(); n }.toSeq
+    assert(staged.count(_ > 0) == RoundSteps.steps.size - 1)
+    assert(persisted == before)
+    dumpAll()
+    assert(persisted == before, "a step's staging checkpoint is still pinned after its dump")
+  }
 }

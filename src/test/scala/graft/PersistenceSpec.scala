@@ -46,4 +46,31 @@ class PersistenceSpec extends AnyFunSuite {
       lookupPlan.contains("EqualTo(attr"),
       s"expected attr filter pushed to parquet:\n$lookupPlan")
   }
+
+  test("since(t) on a tx-bucketed store prunes buckets below t; rows equal the unpruned scan") {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, Literal}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val g = new GraftGraph(TestSpark.spark)
+    val v = g.addVertex()
+    (1 to 10).foreach(i => v.setProperty("p", i.toLong)) // txs 0..10
+    val dir = Files.createTempDirectory("graftsince").toString
+    g.log.save(dir, txBucketSize = 3L)
+    val store = FactLog.open(TestSpark.spark, dir)
+    val cols = Seq("e", "attr", "vLong", "tx", "seq", "added").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(cols: _*).collect().toSet
+    // t = 2 and 5 end a bucket, t = 3 starts one, t = 7 sits inside one
+    for (t <- Seq(2L, 3L, 5L, 7L); pin <- Seq(Long.MaxValue, 9L)) {
+      val snap = new Snapshot(store, pin)
+      val df = snap.since(t)
+      val bounds = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+        .flatMap(_.partitionFilters).collect {
+          case GreaterThanOrEqual(l, Literal(b, _)) if l.references.exists(_.name == "txBucket") =>
+            b.toString.toLong
+        }
+      assert(bounds == Seq(t / 3), s"t=$t pin=$pin: lower bucket bound missing from PartitionFilters")
+      val unpruned = store.factsDF.where(col("tx") > t && col("tx") <= pin)
+      assert(rows(df) == rows(unpruned), s"t=$t pin=$pin")
+      assert(rows(df).size == g.log.allFacts.count(f => f.tx > t && f.tx <= pin))
+    }
+  }
 }
