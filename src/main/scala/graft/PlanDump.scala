@@ -40,11 +40,16 @@ object PlanDump {
     // SPARK_GRAFT_PLAN_MODE=formatted emits `explain("formatted")` text
     // (operator list + details: PushedFilters/ReadSchema/join build side)
     // — the shape the r14 plan-evidence files under plans/ record.
-    val formatted = sys.env.get("SPARK_GRAFT_PLAN_MODE").contains("formatted")
+    // SPARK_GRAFT_PLAN_MODE=codegen runs each step and prints the
+    // whole-stage sources it compiled: a value inlined as a literal shows
+    // up here as a per-parameter recompile.
+    val mode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "")
     names.foreach { n =>
       println(s"==== $n ====")
-      println(planText(inner.get(n).map(_.apply())
-        .getOrElse(Step(SparkEntry.queries(n)(spark, dir))), formatted))
+      val step = inner.get(n).map(_.apply())
+        .getOrElse(Step(SparkEntry.queries(n)(spark, dir)))
+      println(if (mode == "codegen") codegenText(step)
+              else planText(step, mode == "formatted"))
     }
     spark.stop()
   }
@@ -57,5 +62,18 @@ object PlanDump {
         step.df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
       else step.df.queryExecution.executedPlan.toString
+    } finally step.release()
+
+  /** Runs the step (so an adaptive plan is final) and returns every
+    * whole-stage subtree with its generated source
+    * (`debug.codegenStringSeq`); staging is released as in [[planText]]. */
+  private[graft] def codegenText(step: Step): String =
+    try {
+      step.df.queryExecution.toRdd.count()
+      val stages = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(step.df.queryExecution.executedPlan)
+      stages.zipWithIndex.map { case ((subtree, code, _), i) =>
+        s"== Subtree ${i + 1} / ${stages.size} ==\n$subtree\nGenerated code:\n$code"
+      }.mkString(s"Found ${stages.size} WholeStageCodegen subtrees.\n", "\n", "")
     } finally step.release()
 }

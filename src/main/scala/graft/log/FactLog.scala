@@ -30,11 +30,15 @@ trait FactStore {
   /** (tx, txInstant) transaction metadata. */
   def txsDF: DataFrame
 
-  /** Resolve an as-of date to the max tx whose instant ≤ date
-    * (FluxGraph.java:224-243 does a hand-rolled max over all txs). */
+  /** Resolve an as-of date to the max tx whose instant ≤ date, -1 when
+    * none (FluxGraph.java:224-243 does a hand-rolled max over all txs).
+    * Both stores answer on the driver from a [[TxStaircase]], with no
+    * Spark job: the tx table is small next to the facts, and a `max`
+    * aggregation per call would pay Spark's fixed cost of two jobs on
+    * every as-of read. */
   def resolveTx(at: Timestamp): Long
 
-  /** Highest committed tx id (head of the log). */
+  /** Highest committed tx id (head of the log), -1 when empty. */
   def headTx: Long
 
   /** True when the store guarantees at most ONE fact per (e, attr) —
@@ -67,15 +71,14 @@ final class BulkFactStore(
     val providedEdges: Option[DataFrame] = None) extends FactStore {
   import org.apache.spark.sql.functions._
 
-  def resolveTx(at: Timestamp): Long = {
-    val r = txsDF.where(col("txInstant") <= lit(at)).agg(max(col("tx"))).head()
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
+  /** The tx table folded into a staircase by one collect, on first use.
+    * A bulk store is immutable (the contract `headTx` always assumed), so
+    * it is built once per store. */
+  private lazy val txIndex: (TxStaircase, Long) = TxStaircase.collect(txsDF)
 
-  lazy val headTx: Long = {
-    val r = txsDF.agg(max(col("tx"))).head()
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
+  def resolveTx(at: Timestamp): Long = txIndex._1.floor(at)
+
+  def headTx: Long = txIndex._2
 
   /** Persist this store in the same tx-bucketed parquet layout the
     * mutable log writes ([[FactLog.open]] reopens it): the durable path
@@ -154,9 +157,15 @@ object BulkFactStore {
  *    ever referenced it ([[edgesReferencing]]); callers check liveness at
  *    their own pin;
  *  - per-element tx set: version-chain navigation in O(log chain);
- *  - instant staircase: [[resolveTx]] in O(log txs).
+ *  - instant staircase ([[TxStaircase]]): [[resolveTx]] in O(log txs).
  * Whole-graph reads ([[allFacts]] and the DataFrames below) still scan
  * the log.
+ *
+ * The DataFrames are ONE partition each: their rows already sit in this
+ * JVM, so splitting them buys no parallelism, and a single partition
+ * satisfies every clustered distribution — latest-wins and per-element
+ * windows over the log plan no exchange (a snapshot read is one job,
+ * with no shuffle).
  */
 final class MemFactLog(val spark: SparkSession) extends FactStore {
   import spark.implicits._
@@ -181,10 +190,8 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
   /** reference index (VAET): vertex → ids of the edges whose EdgeOut /
     * EdgeIn fact ever referenced it, in first-reference order. */
   private val refEdges = mutable.LongMap.empty[mutable.LinkedHashSet[Long]]
-  /** instant → tx "staircase": strictly increasing in both key and value.
-    * A tx whose instant is ≥ a later tx's instant can never be the max tx
-    * at or before any date, so commit drops it. */
-  private val staircase = new java.util.TreeMap[Timestamp, java.lang.Long]()
+  /** instant → tx staircase, appended at every commit. */
+  private val staircase = new TxStaircase
   private var nextTx: Long = 0L
   private var nextEntity: Long = 1L
 
@@ -204,8 +211,7 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
     val instant = at.getOrElse(new Timestamp(System.currentTimeMillis()))
     txs += TxMeta(tx, instant)
     txInstants(tx) = instant
-    staircase.tailMap(instant, true).clear()
-    staircase.put(instant, tx)
+    staircase.add(TxStaircase.key(instant), tx)
     def index(e: Long): Unit =
       elemTxs.getOrElseUpdate(e, mutable.TreeSet.empty[Long]) += tx
     // prevTx resolved against pre-commit state, then state advanced.
@@ -250,10 +256,7 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
 
   /** Max tx whose instant ≤ `at`, -1 when none: one floor lookup on the
     * staircase. */
-  def resolveTx(at: Timestamp): Long = synchronized {
-    val hit = staircase.floorEntry(at)
-    if (hit == null) -1L else hit.getValue.longValue
-  }
+  def resolveTx(at: Timestamp): Long = synchronized(staircase.floor(at))
 
   /** Facts about `e` in (tx, seq) order — an entity-index read, O(history of e). */
   def factsOf(e: Long): Seq[Fact] =
@@ -272,10 +275,10 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
 
   def factsDF: DataFrame = {
     val ds: Dataset[Fact] = spark.createDataset(allFacts)
-    ds.toDF()
+    ds.toDF().coalesce(1)
   }
-  def touchesDF: DataFrame = spark.createDataset(allTouches).toDF()
-  def txsDF: DataFrame = spark.createDataset(allTxs).toDF()
+  def touchesDF: DataFrame = spark.createDataset(allTouches).toDF().coalesce(1)
+  def txsDF: DataFrame = spark.createDataset(allTxs).toDF().coalesce(1)
 
   /** Persist the log as Parquet partitioned by tx-range buckets so later
     * asOf reads prune files (SURVEY §1.4: partition by tx-range). */

@@ -23,6 +23,10 @@ import graft.log.FactStore
  * aware: if the latest fact for (e, attr) is a retraction
  * (added = false) the attribute is absent from the snapshot but remains
  * in [[history]].
+ *
+ * Pins (`asOfTx`, a `since` bound, the two sides of a same-store diff)
+ * enter the plan as bound parameters ([[Pin]]), not literals, so reads
+ * at different pins share their generated code (see [[txRange]]).
  */
 final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
 
@@ -39,10 +43,22 @@ final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
   def since(t: Long): DataFrame = txRange(Some(t))
 
   /** Facts with `after < tx ≤ asOfTx` (either bound optional), each bound
-    * repeated on the txBucket partition column when the store has one. */
+    * repeated on the txBucket partition column when the store has one.
+    *
+    * The tx bounds are bound parameters ([[Pin]]), not literals: reads
+    * that differ only in their pins generate identical code, so each
+    * read shape compiles once and stays JIT-warm instead of compiling
+    * fresh whole-stage classes per request. The txBucket bounds stay
+    * literals — partition pruning evaluates them at planning time, never
+    * in generated code. The trade: a pinned `tx` bound is not pushed
+    * into the scan, so there is no parquet row-group pruning on `tx`
+    * (which costs at most the boundary bucket's rows on a tx-bucketed
+    * store, whose other buckets the literal bucket bounds prune) and no
+    * in-memory batch pruning on a cached `factsDF`. */
   private def txRange(after: Option[Long]): DataFrame = {
     val upper = Some(asOfTx).filter(_ != Long.MaxValue)
-    val onTx = upper.map(col("tx") <= _).toSeq ++ after.map(col("tx") > _)
+    val onTx = upper.map(col("tx") <= Pin.column(_)).toSeq ++
+      after.map(col("tx") > Pin.column(_))
     val onBucket = store.txBucketSize.toSeq.flatMap { sz =>
       upper.map(u => col("txBucket") <= lit(u / sz)).toSeq ++
         after.map(t => col("txBucket") >= lit(t / sz))
@@ -220,7 +236,7 @@ final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
     }
     val payload = struct((Fact.valueCols :+ "added").map(col): _*)
     val ord = struct(col("tx"), col("seq"))
-    def at(t: Long): Column = col("tx") <= lit(t)
+    def at(t: Long): Column = col("tx") <= Pin.column(t)
     // max_by ignores rows whose ordering key is null, so the when-guards
     // slice each (e, attr) group per pin without a second pass
     val g = scoped

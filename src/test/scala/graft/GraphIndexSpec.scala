@@ -4,8 +4,10 @@ import java.sql.Timestamp
 import scala.collection.mutable
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, max}
 import graft.graph.GraftGraph
-import graft.log.MemFactLog
+import graft.log.{BulkFactStore, FactLog, MemFactLog}
 import graft.model.{A, AttrCodec, Fact, TxMeta}
 
 /** The interactive graph's per-element reads go through the fact log's
@@ -38,6 +40,52 @@ class GraphIndexSpec extends AnyFunSuite {
           }
       }
     }
+  }
+
+  test("BulkFactStore staircase equals the SQL max over backdated txs frames") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val facts = spark.emptyDataset[Fact].toDF()
+    val touches = spark.emptyDataset[graft.model.Touch].toDF()
+    def bulk(txs: DataFrame) = new BulkFactStore(spark, facts, touches, txs)
+    // probes: before the first instant, on every instant (ties), between
+    // instants, and after the last one
+    val probes = (-1 to 31 by 2).map(minute) ++
+      (-1 to 31 by 4).map(i => new Timestamp(Base + i * 60000L + 30000L))
+    def agree(txs: DataFrame, ctx: String): Unit = {
+      val store = bulk(txs)
+      probes.foreach { at =>
+        assert(store.resolveTx(at) == sqlResolve(txs, at), s"$ctx at=$at")
+      }
+      assert(store.headTx == sqlHead(txs), s"$ctx headTx")
+    }
+    for (seed <- 1 to 3) {
+      val rnd = new Random(seed)
+      // 120 txs over 30 instants, shuffled across partitions: mostly
+      // rising with ties and backdated txs (a long staircase), or drawn
+      // at random (a short one); some null instants (on seed 2, the max tx)
+      // and a null tx
+      val rows = rnd.shuffle((0L until 120L).map { tx =>
+        val at = if (seed == 3) rnd.nextInt(30) else math.max(0, tx.toInt / 4 - rnd.nextInt(3))
+        (Option(tx), if (rnd.nextInt(10) == 0 || tx == 119L && seed == 2) None
+                     else Some(minute(at)))
+      }) :+ ((None, Some(minute(31))))
+      agree(rows.toDF("tx", "txInstant").repartition(3), s"seed=$seed")
+    }
+    agree(Seq.empty[(Option[Long], Option[Timestamp])].toDF("tx", "txInstant"), "empty")
+    agree(Seq((Option(4L), Option.empty[Timestamp])).toDF("tx", "txInstant"), "all-null instants")
+
+    // MemFactLog.save -> FactLog.open round trip on a backdated log
+    val rnd = new Random(7)
+    val log = new MemFactLog(spark)
+    (1 to 80).foreach(_ => log.commit(Seq(Fact.of(log.newEntityId(), A.ElementType, A.Vertex, 0L)),
+      at = Some(minute(rnd.nextInt(30)))))
+    val dir = java.nio.file.Files.createTempDirectory("graftstairs").toString
+    log.save(dir, txBucketSize = 16L)
+    val reopened = FactLog.open(spark, dir)
+    agree(reopened.txsDF, "reopened")
+    probes.foreach(at => assert(reopened.resolveTx(at) == log.resolveTx(at), s"reopened at=$at"))
+    assert(reopened.headTx == log.headTx)
   }
 
   test("indexed element reads equal the whole-log reference on random op sequences") {
@@ -186,6 +234,19 @@ object GraphIndexSpec {
   val Labels = Seq("l0", "l1", "l2")
   val Keys = Seq("p", "q")
   val LabelSets = Seq(Seq.empty[String], Seq("l0"), Seq("l0", "l1"))
+
+  /** The SQL `resolveTx` a BulkFactStore ran before its staircase: max
+    * tx over the rows whose instant ≤ `at`; -1 when none. */
+  def sqlResolve(txs: DataFrame, at: Timestamp): Long = {
+    val r = txs.where(col("txInstant") <= lit(at)).agg(max(col("tx"))).head()
+    if (r.isNullAt(0)) -1L else r.getLong(0)
+  }
+
+  /** The SQL `headTx` before the staircase: max tx; -1 when none. */
+  def sqlHead(txs: DataFrame): Long = {
+    val r = txs.agg(max(col("tx"))).head()
+    if (r.isNullAt(0)) -1L else r.getLong(0)
+  }
 
   /** Max tx whose instant ≤ `at` by a scan of every tx; -1 when none. */
   def linearResolve(txs: Seq[TxMeta], at: Timestamp): Long =
