@@ -1,7 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.gx.RoundSteps.Step
+import graft.pipeline.TextOps
+import graft.util.LruMemo
 
 /** Dev tool: print the executed plan of named registered queries —
   * `runMain graft.PlanDump <sfDir> <query1,query2,...>`. The curated
@@ -19,24 +26,6 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // checkpointing ops show only a LogicalRDD once executed — expose
-    // their PRE-checkpoint plans under dedicated names
-    def docs = spark.read.parquet(s"$dir/documents.parquet")
-    val inner: Map[String, () => Step] = Map(
-      "decontaminate_inner" -> (() => Step(graft.pipeline.TextOps.decontaminate(
-        docs.where(org.apache.spark.sql.functions.col("doc_id") % 25 =!= 0),
-        docs.where(org.apache.spark.sql.functions.col("doc_id") % 25 === 0),
-        n = 3, checkpoint = false))),
-      "unigram_logprob_inner" -> (() =>
-        Step(graft.pipeline.TextOps.unigramLogProb(docs, checkpoint = false))),
-      "bm25_scores_inner" -> (() => Step(graft.pipeline.TextOps.bm25Scores(
-        docs, Seq("spark", "join", "window"), checkpoint = false)))) ++
-      // iterative operators' per-round plans (r15 evidence tooling): the
-      // registered queries return checkpointed results, so the inner
-      // Exchange placement is only visible through these
-      graft.gx.RoundSteps.steps.map { case (n, fn) =>
-        n -> (() => fn(spark, graft.projection.TpchGraph.snapshot(spark, dir)))
-      }
     // SPARK_GRAFT_PLAN_MODE=formatted emits `explain("formatted")` text
     // (operator list + details: PushedFilters/ReadSchema/join build side)
     // — the shape the r14 plan-evidence files under plans/ record.
@@ -46,34 +35,85 @@ object PlanDump {
     val mode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "")
     names.foreach { n =>
       println(s"==== $n ====")
-      val step = inner.get(n).map(_.apply())
-        .getOrElse(Step(SparkEntry.queries(n)(spark, dir)))
-      println(if (mode == "codegen") codegenText(step)
-              else planText(step, mode == "formatted"))
+      println(text(spark, dir, n, mode))
     }
     spark.stop()
   }
 
-  /** The step's plan text; its staging checkpoints are released once the
-    * text is captured, since nothing reads them afterwards. */
-  private[graft] def planText(step: Step, formatted: Boolean): String =
-    try {
-      if (formatted)
-        step.df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      else step.df.queryExecution.executedPlan.toString
-    } finally step.release()
+  // checkpointing ops show only a LogicalRDD once executed — these names
+  // print the plan of the operator's own last localCheckpoint action
+  // instead ([[lastCheckpointPlan]]): the final plan of the real call,
+  // reading its staged frames
+  private val inner: Map[String, (SparkSession, String) => DataFrame] = {
+    def docs(s: SparkSession, d: String) = s.read.parquet(s"$d/documents.parquet")
+    Map(
+      "decontaminate_inner" -> ((s, d) => TextOps.decontaminate(
+        docs(s, d).where(col("doc_id") % 25 =!= 0),
+        docs(s, d).where(col("doc_id") % 25 === 0), n = 3)),
+      "unigram_logprob_inner" -> ((s, d) => TextOps.unigramLogProb(docs(s, d))),
+      "bm25_scores_inner" -> ((s, d) =>
+        TextOps.bm25Scores(docs(s, d), Seq("spark", "join", "window"))))
+  }
 
-  /** Runs the step (so an adaptive plan is final) and returns every
-    * whole-stage subtree with its generated source
-    * (`debug.codegenStringSeq`); staging is released as in [[planText]]. */
-  private[graft] def codegenText(step: Step): String =
+  /** The plan text printed for `name` in `mode` ("", "formatted" or
+    * "codegen"): an `_inner` name, one of the iterative operators'
+    * per-round [[graft.gx.RoundSteps]] (the registered queries return
+    * checkpointed results, so the inner Exchange placement is only
+    * visible through these), or a registered query. Whatever the step
+    * pinned is released once the text is captured. */
+  private[graft] def text(spark: SparkSession, dir: String, name: String,
+                          mode: String): String = {
+    val (qe, release) = inner.get(name) match {
+      case Some(call) =>
+        val (qe, result) = lastCheckpointPlan(spark)(call(spark, dir))
+        (qe, () => LruMemo.releaseCheckpoint(result))
+      case None =>
+        val step = graft.gx.RoundSteps.steps.get(name)
+          .map(_(spark, graft.projection.TpchGraph.snapshot(spark, dir)))
+          .getOrElse(Step(SparkEntry.queries(name)(spark, dir)))
+        (step.df.queryExecution, () => step.release())
+    }
+    try mode match {
+      case "codegen" => codegenText(qe)
+      case "formatted" => qe.explainString(FormattedMode)
+      case _ => qe.executedPlan.toString
+    } finally release()
+  }
+
+  /** Runs `call` and returns the query execution of its LAST
+    * `localCheckpoint` action — for an operator that ends in an eager
+    * checkpoint, the final adaptive plan it actually ran — with the
+    * call's result, whose checkpoint the caller releases. The listener
+    * sees the action after it returns, so the bus is drained (bounded)
+    * before reading it. */
+  private[graft] def lastCheckpointPlan(spark: SparkSession)(
+      call: => DataFrame): (QueryExecution, DataFrame) = {
+    @volatile var last: QueryExecution = null
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") last = qe
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      step.df.queryExecution.toRdd.count()
-      val stages = org.apache.spark.sql.execution.debug
-        .codegenStringSeq(step.df.queryExecution.executedPlan)
-      stages.zipWithIndex.map { case ((subtree, code, _), i) =>
-        s"== Subtree ${i + 1} / ${stages.size} ==\n$subtree\nGenerated code:\n$code"
-      }.mkString(s"Found ${stages.size} WholeStageCodegen subtrees.\n", "\n", "")
-    } finally step.release()
+      val result = call
+      org.apache.spark.sql.graftshim.ListenerBus.drain(spark)
+      require(last != null, "the call ran no localCheckpoint action")
+      (last, result)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every whole-stage subtree of the plan with its generated source
+    * (`debug.codegenStringSeq`). A plan that has not run yet is run
+    * first, so an adaptive plan is final. */
+  private def codegenText(qe: QueryExecution): String = {
+    qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
+      case _ => qe.toRdd.count()
+    }
+    val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan)
+    stages.zipWithIndex.map { case ((subtree, code, _), i) =>
+      s"== Subtree ${i + 1} / ${stages.size} ==\n$subtree\nGenerated code:\n$code"
+    }.mkString(s"Found ${stages.size} WholeStageCodegen subtrees.\n", "\n", "")
+  }
 }

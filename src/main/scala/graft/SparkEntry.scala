@@ -10,6 +10,7 @@ import graft.pipeline.{SketchOps, TextOps, VectorOps}
 import graft.projection.{EventsReplay, TpchGraph}
 import graft.snapshot.Snapshot
 import graft.streaming.EventStream
+import graft.util.Staged
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql` twin where
   * SQL-expressible) per implemented operator from SURVEY.md §2 and the
@@ -1928,20 +1929,19 @@ object SparkEntry {
     "revenue_deciles" -> { (s, d) =>
       import s.implicits._
       val d38 = "decimal(38,0)"
-      val rev = s.read.parquet(s"$d/orders.parquet")
-        .select(col("o_custkey").cast("long").as("c"),
-          floor(col("o_totalprice") * lit(1e6) + lit(0.5)).cast("long").as("m"))
-        .groupBy(col("c")).agg(sum(col("m")).as("x"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nCust = rev.count()
-      val ranked = graft.operators.Ranks.prefixRank(
-          rev, Seq(col("x").asc, col("c").asc), "i")
-        .withColumn("n", lit(nCust))
-        .withColumn("decile", expr("((i - 1) * 10) div n") + lit(1))
-      val rows = ranked.groupBy(col("decile"))
-        .agg(count(lit(1)).as("n_customers"), sum(col("x").cast(d38)).as("xs"))
-        .collect()
-      rev.unpersist(false)
+      val rows = Staged.run { stage =>
+        val rev = stage(s.read.parquet(s"$d/orders.parquet")
+          .select(col("o_custkey").cast("long").as("c"),
+            floor(col("o_totalprice") * lit(1e6) + lit(0.5)).cast("long").as("m"))
+          .groupBy(col("c")).agg(sum(col("m")).as("x")))
+        val nCust = rev.count()
+        graft.operators.Ranks.prefixRank(rev, Seq(col("x").asc, col("c").asc), "i")
+          .withColumn("n", lit(nCust))
+          .withColumn("decile", expr("((i - 1) * 10) div n") + lit(1))
+          .groupBy(col("decile"))
+          .agg(count(lit(1)).as("n_customers"), sum(col("x").cast(d38)).as("xs"))
+          .collect()
+      }
       val total = rows.map(r => BigInt(r.getDecimal(2).toBigInteger)).sum
       rows.toSeq.map { r =>
         val xs = BigInt(r.getDecimal(2).toBigInteger)
@@ -1960,11 +1960,10 @@ object SparkEntry {
     // orderBy+limit = TakeOrderedAndProject (per-partition heaps, the
     // PMI pattern) — the rank window then sees 20 rows, never the full
     // qualifying pair set.
-    "basket_lift" -> { (s, d) =>
+    "basket_lift" -> { (s, d) => Staged.run { stage =>
       val snap = TpchGraph.snapshot(s, d)
-      val baskets = snap.edges.where(col("label") === "contains")
-        .select(col("outV").as("o"), col("inV").as("p")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val baskets = stage(snap.edges.where(col("label") === "contains")
+        .select(col("outV").as("o"), col("inV").as("p")).distinct())
       val nOrders = baskets.select(col("o")).distinct().count()
       val ca = baskets.groupBy(col("p")).agg(count(lit(1)).as("c"))
       val pairs = baskets.select(col("o"), col("p").as("a"))
@@ -1973,7 +1972,7 @@ object SparkEntry {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
         .where(col("c_ab") >= 2)
       import org.apache.spark.sql.expressions.Window
-      val out = pairs
+      pairs
         .join(ca.select(col("p").as("a"), col("c").as("c_a")), "a")
         .join(ca.select(col("p").as("b"), col("c").as("c_b")), "b")
         .select(col("a"), col("b"), col("c_a"), col("c_b"), col("c_ab"),
@@ -1986,9 +1985,7 @@ object SparkEntry {
           round(log(col("ratio")), 4).as("log_lift"),
           col("rk").cast("long").as("rk"))
         .localCheckpoint(true)
-      baskets.unpersist(false)
-      out
-    },
+    }},
 
     // graph motif: two orders by the same customer containing the same
     // part. ΣC(n,2) needs NO pair join (the r9 plan materialized every

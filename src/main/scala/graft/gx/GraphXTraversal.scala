@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
-import graft.util.LruMemo
+import graft.util.{LruMemo, Staged}
 import graft.util.LruMemo.releaseCheckpoint
 
 /**
@@ -170,12 +170,11 @@ object GraphXTraversal {
     * output as meaningless singletons). Each round is one shuffle over
     * the partitioned edge RDD, no driver loop. */
   def componentsDF(spark: SparkSession, snap: Snapshot,
-                   labels: Seq[String]): DataFrame = {
-    val res = cachedLabelGraph(snap, labels).connectedComponents()
-    val out = spark.createDataFrame(res.vertices)
+                   labels: Seq[String]): DataFrame = Staged.run { stage =>
+    // the Pregel result graph is released once the output materializes
+    val res = stage.own(cachedLabelGraph(snap, labels).connectedComponents())
+    spark.createDataFrame(res.vertices)
       .toDF("vertex_id", "component").localCheckpoint(true)
-    res.unpersist(blocking = false) // release the Pregel result graph
-    out
   }
 
   /** PageRank restricted to a label-filtered subgraph, built with
@@ -200,13 +199,11 @@ object GraphXTraversal {
     * `connected_components`. */
   def pageRankStarDF(spark: SparkSession, snap: Snapshot,
                      labels: Seq[String] = Seq("in_nation", "in_region"),
-                     numIter: Int = 3): DataFrame = {
-    val pr = cachedLabelGraph(snap, labels).staticPageRank(numIter)
-    val out = spark.createDataFrame(pr.vertices).toDF("vertex_id", "rank")
+                     numIter: Int = 3): DataFrame = Staged.run { stage =>
+    val pr = stage.own(cachedLabelGraph(snap, labels).staticPageRank(numIter))
+    spark.createDataFrame(pr.vertices).toDF("vertex_id", "rank")
       .select(col("vertex_id"), round(col("rank"), 4).as("rank"))
       .localCheckpoint(true)
-    pr.unpersist(blocking = false) // release the rank graph
-    out
   }
 
   /** Triangle census of the bulk-quantity part-co-occurrence graph:
@@ -231,7 +228,7 @@ object GraphXTraversal {
     * neighbor-set intersection rounds. */
   private[gx] def pairGraph(snap: Snapshot, minQty: Double): Graph[Unit, Unit] = {
     import graft.model.{A, PropType}
-    pairGraphCache.getOrBuild((snap, minQty)) {
+    pairGraphCache.getOrBuild((snap, minQty))(Staged.run { stage =>
       val bulkIds = snap.prop("quantity", PropType.PDouble, A.Edge)
         .where(col("v") >= minQty).select(col("e").as("id"))
       val bulk = snap.edges.where(col("label") === "contains")
@@ -239,28 +236,28 @@ object GraphXTraversal {
       // renamed projections before the self-join (ambiguity gotcha)
       val lhs = bulk.select(col("outV").as("o"), col("inV").as("a"))
       val rhs = bulk.select(col("outV").as("o"), col("inV").as("b"))
-      val pairs = lhs.join(rhs, "o").where(col("a") < col("b"))
-        .select(col("a"), col("b")).distinct().persist()
+      val pairs = stage(lhs.join(rhs, "o").where(col("a") < col("b"))
+        .select(col("a"), col("b")).distinct())
       // width from the ACTUAL pair count (the join can square the input):
       // the staging DF is persisted so the count and the graph build share
       // one execution, then released once the cached edge RDD holds the data
       val built = Graph.fromEdges(
         pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
           .coalesce(widthFor(pairs.count())), ()).cache()
-      built.edges.count() // materialize before dropping the staging persist
-      pairs.unpersist(blocking = false)
+      built.edges.count() // materialize before the staging persist goes
       built
-    }
+    })
   }
 
   def triangleCensusDF(spark: SparkSession, snap: Snapshot,
                        minQty: Double = 30.0): DataFrame = {
     val g = pairGraph(snap, minQty)
     // a < b and distinct → edges are already canonical; triangleCount
-    // re-canonicalizes internally, which is a cheap no-op here
-    val tg = g.triangleCount()
-    val nTriangles = tg.vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
-    tg.unpersist(blocking = false) // counts folded — release the result graph
+    // re-canonicalizes internally, which is a cheap no-op here; the
+    // result graph is released once its counts are folded
+    val nTriangles = Staged.run { stage =>
+      stage.own(g.triangleCount()).vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
+    }
     spark.createDataFrame(
       Seq((g.numVertices, g.numEdges, nTriangles)))
       .toDF("n_parts", "n_coedges", "n_triangles")
@@ -277,9 +274,9 @@ object GraphXTraversal {
     * vertex-sized; the join is on the vertex id — no edge-scale shuffle
     * beyond what triangleCount itself does. */
   def clusteringCoeffDF(spark: SparkSession, snap: Snapshot,
-                        minQty: Double = 30.0): DataFrame = {
+                        minQty: Double = 30.0): DataFrame = Staged.run { stage =>
     val g = pairGraph(snap, minQty)
-    val tg = g.triangleCount()
+    val tg = stage.own(g.triangleCount())
     val joined = g.degrees.leftOuterJoin(tg.vertices)
       .map { case (v, (d, t)) =>
         val tri = t.getOrElse(0).toLong
@@ -288,13 +285,11 @@ object GraphXTraversal {
       }
     // materialize the vertex-sized output, then drop the triangle result
     // graph (NEW cached graph per call — the §16 release discipline)
-    val out = spark.createDataFrame(joined)
+    spark.createDataFrame(joined)
       .toDF("part_id", "degree", "triangles", "coeff")
       .select(col("part_id"), col("degree"), col("triangles"),
         round(col("coeff"), 4).as("coeff"))
       .localCheckpoint(true)
-    tg.unpersist(blocking = false)
-    out
   }
 
   /** Community detection via SYNCHRONOUS label propagation with a
@@ -428,16 +423,15 @@ object GraphXTraversal {
     * label joins on the edge list, then counts. Returns (n_edges,
     * n_communities, modularity). */
   def modularityDF(spark: SparkSession, snap: Snapshot, rounds: Int = 4,
-                   minQty: Double = 30.0): DataFrame = {
+                   minQty: Double = 30.0): DataFrame = Staged.run { stage =>
     import spark.implicits._
     val labels = communitiesLpaDF(spark, snap, rounds, minQty)
     val g = pairGraph(snap, minQty)
     val edges = spark.createDataFrame(
       g.edges.map(e => (e.srcId, e.dstId))).toDF("a", "b")
-    val e2 = edges
+    val e2 = stage(edges
       .join(labels.select(col("part_id").as("a"), col("community").as("ca")), "a")
-      .join(labels.select(col("part_id").as("b"), col("community").as("cb")), "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(labels.select(col("part_id").as("b"), col("community").as("cb")), "b"))
     val m = e2.count()
     val inC = e2.where(col("ca") === col("cb"))
       .groupBy(col("ca").as("c")).agg(count(lit(1)).as("in_c"))
@@ -445,7 +439,6 @@ object GraphXTraversal {
       .groupBy(col("c")).agg(count(lit(1)).as("deg_c"))
     val num = modularityNumerator(m, degC.join(inC, Seq("c"), "left_outer"))
     val nComms = labels.select(col("community")).distinct().count()
-    e2.unpersist(false)
     // the one shared double sequence: N / (4.0 · m · m), round(6)
     val q = num.doubleValue / (4.0 * m * m)
     Seq((m, nComms, BigDecimal(q).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
@@ -717,13 +710,13 @@ object GraphXTraversal {
     * division per row. Returns (k, n_club, e_club, phi). */
   def richClubDF(spark: SparkSession, snap: Snapshot,
                  ks: Seq[Int] = Seq(4, 8, 16, 32),
-                 minQty: Double = 30.0): DataFrame = {
+                 minQty: Double = 30.0): DataFrame = Staged.run { stage =>
     val g = pairGraph(snap, minQty)
-    val e0 = spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId)))
-      .toDF("a", "b").localCheckpoint(true)
-    val deg = e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+    val e0 = stage.checkpoint(
+      spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId))).toDF("a", "b"))
+    val deg = stage.checkpoint(
+      e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("d")))
     import spark.implicits._
     val rows = ks.sorted.map { k =>
       val club = deg.where(col("d") > k).select(col("v"))
@@ -737,7 +730,6 @@ object GraphXTraversal {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       (k.toLong, nClub, eClub, phi)
     }
-    releaseCheckpoint(e0); releaseCheckpoint(deg)
     rows.toDF("k", "n_club", "e_club", "phi")
   }
 
@@ -797,10 +789,10 @@ object GraphXTraversal {
 
   def localBridgesDF(spark: SparkSession, snap: Snapshot,
                      minQty: Double = 30.0): DataFrame =
-    bridgesCache.getOrBuild((snap, minQty)) {
+    bridgesCache.getOrBuild((snap, minQty))(Staged.run { stage =>
       val g = pairGraph(snap, minQty)
-      val e0 = spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId)))
-        .toDF("a", "b").localCheckpoint(true)
+      val e0 = stage.checkpoint(
+        spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId))).toDF("a", "b"))
       val adj = e0.select(col("a").as("v"))
         .unionAll(e0.select(col("b").as("v")))
       val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -809,16 +801,13 @@ object GraphXTraversal {
       // dimension joins 3×; the u-partitioned checkpoint also collapses
       // the wedge self-join's two exchanges. The bridge-sized result is
       // materialized so the staging checkpoints can be released here.
-      val o = partitionedCheckpoint(orientedEdges(e0), col("u"))
-      val out = edgeSupportFromOriented(e0, o).where(col("support") === 0L)
+      val o = stage.own(partitionedCheckpoint(orientedEdges(e0), col("u")))
+      edgeSupportFromOriented(e0, o).where(col("support") === 0L)
         .join(deg.select(col("v").as("a"), col("d").as("deg_a")), "a")
         .join(deg.select(col("v").as("b"), col("d").as("deg_b")), "b")
         .select(col("a"), col("b"), col("deg_a"), col("deg_b"))
         .localCheckpoint(true)
-      releaseCheckpoint(o)
-      releaseCheckpoint(e0)
-      out
-    }
+    })
 
   /**
    * Degree assortativity of the co-occurrence pair graph: the Pearson
@@ -992,19 +981,17 @@ object GraphXTraversal {
 
   private def buildShortestPaths(spark: SparkSession, snap: Snapshot,
                                  landmarks: Seq[Long],
-                                 labels: Seq[String]): DataFrame = {
+                                 labels: Seq[String]): DataFrame = Staged.run { stage =>
     // the Pregel result is a NEW cached graph (spmap vertices + an
     // edge-scale replicated view) — materialize the vertex-sized output,
     // then release it (the §16 leak discipline: algo-returned graphs
     // accumulate across calls and evict the shared snapshot views)
-    val res = org.apache.spark.graphx.lib.ShortestPaths
-      .run(cachedLabelGraph(snap, labels), landmarks)
+    val res = stage.own(org.apache.spark.graphx.lib.ShortestPaths
+      .run(cachedLabelGraph(snap, labels), landmarks))
     val sp = res.vertices
       .flatMap { case (vid, m) => m.map { case (lm, d) => (vid, lm, d) } }
-    val out = spark.createDataFrame(sp).toDF("vertex_id", "landmark_id", "dist")
+    spark.createDataFrame(sp).toDF("vertex_id", "landmark_id", "dist")
       .localCheckpoint(true)
-    res.unpersist(blocking = false)
-    out
   }
 
   /** WEIGHTED single-source-class shortest paths: min-cost distance TO
@@ -1134,7 +1121,7 @@ object GraphXTraversal {
    */
   def randomWalksDF(spark: SparkSession, snap: Snapshot, steps: Int = 5,
                     startLo: Long = 3000000L,
-                    startHi: Long = 4000000L): DataFrame = {
+                    startHi: Long = 4000000L): DataFrame = Staged.run { stage =>
     // pre-partition the walked edges on `v` and checkpoint ONCE
     // ([[partitionedCheckpoint]], r14): every step's frontier join then
     // reuses the preserved HashPartitioning instead of re-exchanging
@@ -1144,35 +1131,28 @@ object GraphXTraversal {
     // then removes the remaining per-step edge Exchange). The per-step
     // barrier itself stays load-bearing (every level feeds the final
     // union).
-    val edges = partitionedCheckpoint(
-      snap.edges.select(col("outV").as("v"), col("inV").as("u")), col("v"))
+    val edges = stage.own(partitionedCheckpoint(
+      snap.edges.select(col("outV").as("v"), col("inV").as("u")), col("v")))
     // starts = vertices in [lo, hi) with ≥1 out-edge (walks from pure
     // sinks would be single-row trivia; the twin replays the same rule)
-    var frontier = edges.select(col("v")).distinct()
+    var frontier = stage.checkpoint(edges.select(col("v")).distinct()
       .where(col("v") >= startLo && col("v") < startHi)
-      .select(col("v").as("walk_id"), col("v"))
-      .localCheckpoint(true)
-    val frontiers = scala.collection.mutable.ArrayBuffer(frontier)
+      .select(col("v").as("walk_id"), col("v")))
     val levels = scala.collection.mutable.ArrayBuffer(
       frontier.select(col("walk_id"), lit(0L).as("step"), col("v")))
     (1 to steps).foreach { t =>
-      val next = frontier.join(edges, "v")
+      val next = stage.checkpoint(frontier.join(edges, "v")
         .select(col("walk_id"), col("u"),
           md5(concat_ws(":", col("walk_id"), lit(t), col("u"))).as("h"))
         .groupBy(col("walk_id"))
         .agg(min(struct(col("h"), col("u"))).as("m"))
-        .select(col("walk_id"), col("m.u").as("v"))
-        .localCheckpoint(true)
-      frontiers += next
+        .select(col("walk_id"), col("m.u").as("v")))
       levels += next.select(col("walk_id"), lit(t.toLong).as("step"), col("v"))
       frontier = next
     }
-    val out = levels.reduce(_ unionAll _)
+    levels.reduce(_ unionAll _)
       .select(col("walk_id"), col("step"), col("v").as("vertex_id"))
       .localCheckpoint(true)
-    frontiers.foreach(releaseCheckpoint)
-    releaseCheckpoint(edges)
-    out
   }
 
   /**
@@ -1206,8 +1186,7 @@ object GraphXTraversal {
   def betweennessLandmarksDF(spark: SparkSession, snap: Snapshot,
       landmarks: Seq[Long],
       labels: Seq[String] = Seq("placed", "contains", "supplied_by"),
-      maxDepth: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+      maxDepth: Int = 3): DataFrame = Staged.run { stage =>
     val sp = shortestPathsDF(spark, snap, landmarks, labels)
     val e = snap.edges.where(col("label").isin(labels: _*))
       .select(col("outV").as("u"), col("inV").as("w"))
@@ -1217,15 +1196,14 @@ object GraphXTraversal {
     // a LEVEL SLICE of this (tree edges only, ≪ |E|) against a
     // vertex-sized frame, instead of re-joining the full edge relation
     // per round (measured 9.8 → 4.6 s at sf0.1).
-    val tree = e
+    val tree = stage(e
       .join(sp.select(col("vertex_id").as("u"), col("landmark_id").as("lm"),
         col("dist").as("du")), "u")
       .join(sp.select(col("vertex_id").as("w2"), col("landmark_id").as("lm2"),
         col("dist").as("dw")),
         col("w") === col("w2") && col("lm") === col("lm2"))
       .where(col("dw") === col("du") - 1)
-      .select(col("u"), col("w"), col("lm"), col("du"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("u"), col("w"), col("lm"), col("du")))
     // forward: σ(landmark) = 1; σ_L(u) = Σ over tree edges u→w of σ(w)
     var sigmas = Vector(sp.where(col("dist") === 0)
       .select(col("vertex_id").as("v"), col("landmark_id").as("lm"),
@@ -1233,12 +1211,11 @@ object GraphXTraversal {
     (1 to maxDepth).foreach { l =>
       val prev = sigmas.last
         .select(col("v").as("pw"), col("lm").as("plm"), col("sigma").as("psigma"))
-      val sl = tree.where(col("du") === l)
+      val sl = stage(tree.where(col("du") === l)
         .join(prev, col("w") === col("pw") && col("lm") === col("plm"))
         .groupBy(col("u"), col("lm"))
         .agg(sum(col("psigma")).as("sigma"))
-        .select(col("u").as("v"), col("lm"), col("sigma"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("u").as("v"), col("lm"), col("sigma")))
       sigmas = sigmas :+ sl
     }
     // backward: δ_mu at the deepest level is 0; each level-l vertex sums
@@ -1259,35 +1236,30 @@ object GraphXTraversal {
           col("uu") === col("dv") && col("ulm") === col("dlm"), "left")
         .select(col("uu"), col("ulm"),
           coalesce(col("ddelta"), lit(0L)).as("udelta"), col("usigma"))
-      val dl = tree.where(col("du") === l + 1)
+      // stage each level's delta (like the sigma levels): dl feeds
+      // BOTH the next level's recursion and the final union — unstaged,
+      // level l re-executes the whole deeper delta chain inside the
+      // union's lineage, quadratic in rounds if maxDepth grows
+      val dl = stage(tree.where(col("du") === l + 1)
         .join(up, col("u") === col("uu") && col("lm") === col("ulm"))
         .join(sigmas(l).select(col("v").as("wv"), col("lm").as("wlm"),
           col("sigma").as("wsigma")),
           col("w") === col("wv") && col("lm") === col("wlm"))
         .groupBy(col("wv"), col("wlm"))
         .agg(sum(expr("(wsigma * (1000000 + udelta)) div usigma")).as("delta"))
-        .select(col("wv").as("v"), col("wlm").as("lm"), col("delta"))
-        // persist each level's delta (like the sigma levels): dl feeds
-        // BOTH the next level's recursion and the final union — unstaged,
-        // level l re-executes the whole deeper delta chain inside the
-        // union's lineage, quadratic in rounds if maxDepth grows
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("wv").as("v"), col("wlm").as("lm"), col("delta")))
       deps += dl
       delta = dl
     }
     // maxDepth ≤ 1 means every non-landmark vertex is a leaf: the
     // correct answer is the empty relation, not an empty-reduce crash
-    val out = (if (deps.isEmpty)
+    (if (deps.isEmpty)
         sp.select(col("vertex_id"), lit(0L).as("btw_mu")).where(lit(false))
       else deps.reduceLeft(_ unionByName _)
         .groupBy(col("v")).agg(sum(col("delta")).as("btw_mu"))
         .where(col("btw_mu") > 0)
         .select(col("v").as("vertex_id"), col("btw_mu")))
       .localCheckpoint(true)
-    sigmas.drop(1).foreach(_.unpersist(false))
-    deps.foreach(_.unpersist(false))
-    tree.unpersist(false)
-    out
   }
 
   /** Static PageRank over the full snapshot graph (`numIter` fixed
@@ -1297,14 +1269,15 @@ object GraphXTraversal {
     * [[pageRankStarDF]], whose subgraph admits a closed form. */
   def pageRankDF(spark: SparkSession, snap: Snapshot, numIter: Int = 10,
                  topK: Int = 30): DataFrame = {
-    val pr = cachedGraph(snap).staticPageRank(numIter)
     // top() = per-partition heads merged on the driver (topK rows), no
-    // full sort shuffle; vid tiebreak keeps the cut deterministic
-    val top = pr.vertices.map { case (vid, r) => (vid, r) }
-      .top(topK)(Ordering.by { case (vid, r) => (r, -vid) })
-    // the rank graph is a NEW cached graph; the top-k is already on the
+    // full sort shuffle; vid tiebreak keeps the cut deterministic. The
+    // rank graph is a NEW cached graph; the top-k is already on the
     // driver, so release it before the next caller piles another one on
-    pr.unpersist(blocking = false)
+    val top = Staged.run { stage =>
+      stage.own(cachedGraph(snap).staticPageRank(numIter))
+        .vertices.map { case (vid, r) => (vid, r) }
+        .top(topK)(Ordering.by { case (vid, r) => (r, -vid) })
+    }
     spark.createDataFrame(top.toSeq).toDF("vertex_id", "rank")
       .select(org.apache.spark.sql.functions.col("vertex_id"),
         org.apache.spark.sql.functions.round(
@@ -1496,10 +1469,11 @@ object GraphXTraversal {
     * governs parallelism exactly as for the global variant. */
   def personalizedPageRankDF(spark: SparkSession, snap: Snapshot, src: Long,
                              numIter: Int = 10, topK: Int = 30): DataFrame = {
-    val pr = cachedGraph(snap).staticPersonalizedPageRank(src, numIter)
-    val top = pr.vertices.map { case (vid, r) => (vid, r) }
-      .top(topK)(Ordering.by { case (vid, r) => (r, -vid) })
-    pr.unpersist(blocking = false) // same release discipline as pageRankDF
+    val top = Staged.run { stage => // same release discipline as pageRankDF
+      stage.own(cachedGraph(snap).staticPersonalizedPageRank(src, numIter))
+        .vertices.map { case (vid, r) => (vid, r) }
+        .top(topK)(Ordering.by { case (vid, r) => (r, -vid) })
+    }
     spark.createDataFrame(top.toSeq).toDF("vertex_id", "rank")
       .select(org.apache.spark.sql.functions.col("vertex_id"),
         org.apache.spark.sql.functions.round(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Staged
+
 /**
  * Multimodal-column plumbing for training-data pipelines: media
  * (image/audio/video) travels as an opaque `binary` column plus a typed
@@ -856,8 +858,7 @@ object MultimodalOps {
     * All columns BIGINT; single-row aggregates join 1×1 (BNLJ by
     * design, the packInvariants shape). */
   def cdcInvariants(media: DataFrame, avgBits: Int = 6,
-                    minBytes: Int = 24): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                    minBytes: Int = 24): DataFrame = Staged.run { stage =>
     // r14 OPTIMIZATION (guide §1.2 step 1: don't compute things twice):
     // the synthesized media frame is an opaque mapPartitions source —
     // every scan regenerates every payload byte — and this audit used to
@@ -869,13 +870,14 @@ object MultimodalOps {
     // by the clustering and the a7 probe, materialize the one-row result
     // and release everything. Measured 3.19 → 1.81 s at sf0.1
     // (same-window bracket); at sf5 the removed work is a full extra
-    // payload-byte pass.
-    val m = media.persist(StorageLevel.MEMORY_AND_DISK)
-    val fps = cdcFingerprints(m, avgBits, minBytes).localCheckpoint(true)
+    // payload-byte pass. A media frame the caller already cached is read
+    // through and stays cached.
+    val m = stage(media)
+    val fps = stage.checkpoint(cdcFingerprints(m, avgBits, minBytes))
     // nearDupMediaCdc's output is already an eager localCheckpoint, so
     // the four family probes below re-read materialized blocks, never
     // re-run the clustering
-    val out = nearDupMediaCdcFromFps(m, fps)
+    val out = stage.own(nearDupMediaCdcFromFps(m, fps))
     val a1 = out.agg(
       count(lit(1)).as("n_rows"),
       countDistinct(col("media_id")).as("n_media"),
@@ -903,35 +905,30 @@ object MultimodalOps {
     val a7 = fps.agg(
       coalesce(sum(when(col("len") >= 0 && col("len") < minBytes, 1L)
         .otherwise(0L)), lit(0L)).as("short_chunks"))
-    val res = a1.join(a2, lit(true))
+    a1.join(a2, lit(true))
       .join(fam(1000000000L, "n_trunc", "trunc_split"), lit(true))
       .join(fam(2000000000L, "n_suffix", "suffix_split"), lit(true))
       .join(fam(3000000000L, "n_ins", "ins_split"), lit(true))
       .join(fam(4000000000L, "n_exact", "exact_split"), lit(true))
       .join(a7, lit(true))
-      .localCheckpoint(true) // one row; lets fps/media release below
-    graft.util.LruMemo.releaseCheckpoint(fps)
-    m.unpersist(false)
-    res
+      .localCheckpoint(true) // one row; lets the staged frames go
   }
 
   /** Shared digest-collapse → candidate join → CC → member-rejoin stage
     * behind [[nearDupMedia]] and [[nearDupMediaCdc]]; `fps` must carry
     * (media_id, digest, keyCols…). */
   private def clusterByChunks(media: DataFrame, fpsIn: DataFrame,
-                              keyCols: Seq[String]): DataFrame = {
+                              keyCols: Seq[String]): DataFrame = Staged.run { stage =>
     val spark = media.sparkSession
-    import org.apache.spark.storage.StorageLevel
-    val fps = fpsIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val fps = stage(fpsIn)
     val memberDigest = fps.groupBy(col("media_id"))
       .agg(first(col("digest")).as("digest"))
     val repIds = memberDigest
       .groupBy(col("digest")).agg(min(col("media_id")).as("drep"))
-    val rfps = fps.join(repIds,
+    val rfps = stage(fps.join(repIds,
         fps("digest") === repIds("digest") && fps("media_id") === repIds("drep"))
       .select(col("drep") +: keyCols.map(fps(_)): _*)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val cond = keyCols.map(k => col(s"x.$k") === col(s"y.$k"))
       .reduce(_ && _) && col("x.drep") < col("y.drep")
     val pairs = rfps.as("x").join(rfps.as("y"), cond)
@@ -940,8 +937,9 @@ object MultimodalOps {
     val edges = pairs.rdd
       .map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
       .coalesce(8)
-    val cc = org.apache.spark.graphx.Graph.fromEdges(edges, ())
-      .connectedComponents().vertices
+    // both GraphX graphs come back cached; release them with the staging
+    val g = stage.own(org.apache.spark.graphx.Graph.fromEdges(edges, ()))
+    val cc = stage.own(g.connectedComponents()).vertices
     val compDF = spark.createDataFrame(cc).toDF("drep", "comp")
     val assigned = media.select(col("media_id").cast("long"), col("kind"))
       .join(memberDigest, Seq("media_id"), "left")
@@ -951,14 +949,11 @@ object MultimodalOps {
         coalesce(col("comp"), col("drep"), col("media_id")).as("rep"))
     val sizes = assigned.groupBy(col("rep"))
       .agg(count(lit(1)).as("n_members"))
-    val out = assigned.join(sizes, "rep")
+    assigned.join(sizes, "rep")
       .select(col("media_id"), col("kind"), col("rep").cast("long"),
         col("n_members").cast("long"),
         (col("media_id") === col("rep")).as("keep"))
       .localCheckpoint(true)
-    rfps.unpersist(false)
-    fps.unpersist(false)
-    out
   }
 
   /** Batch-shape audit: rows per partition — the knob that decides decoder

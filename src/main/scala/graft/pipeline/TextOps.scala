@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.{Stage, Staged}
+
 /**
  * Text-analysis + deduplication operators for large-scale training-data
  * pipelines, over a `documents(doc_id, text, lang, source, n_chars)`
@@ -277,8 +279,8 @@ object TextOps {
    * exact-Jaccard join re-reads only candidate pairs' shingle sets.
    */
   def dedupMinHashLsh(docs: DataFrame, threshold: Double = 0.8,
-                      numHashes: Int = 128, bands: Int = 32): DataFrame = {
-    val (sh, banded, caches) = lshStages(docs, numHashes, bands)
+                      numHashes: Int = 128, bands: Int = 32): DataFrame = Staged.run { stage =>
+    val (sh, banded) = lshStages(stage, docs, numHashes, bands)
 
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -296,38 +298,28 @@ object TextOps {
       .withColumn("jac", inter / union)
       .where(col("jac") >= threshold)
       .select(col("a"), col("b"), round(col("jac"), 3).as("jac"))
-    // materialize the (small) result, then release the stage caches —
-    // otherwise every call pins 5 intermediates for the session lifetime
-    val res = out.localCheckpoint(true)
-    caches.foreach(_.unpersist(false))
-    res
+    out.localCheckpoint(true)
   }
 
   /** Staged shingle-set + banded-signature tables for a doc set — the
     * shared candidate-generation front end of [[dedupMinHashLsh]] and
     * [[dedupIncrementalLsh]]. Returns (sh = (doc_id, sh), banded =
-    * (doc_id, band, bh), caches to release after the result
-    * materializes). The persist() calls are materialization BARRIERS,
+    * (doc_id, band, bh)), staged in the caller's scope. The stages are
+    * materialization BARRIERS,
     * not just caches: every stage's heavy array expression is
     * multi-referenced by the next stage's lambdas, and Spark
     * re-evaluates expression (not attribute) references per use —
     * unstaged, tokenization alone goes O(tokens²) and the signature is
     * recomputed per band (measured 100× total slowdown at 5k docs). */
-  private def lshStages(docs: DataFrame, numHashes: Int, bands: Int,
-                        portable: Boolean = false)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
+  private def lshStages(stage: Stage, docs: DataFrame, numHashes: Int, bands: Int,
+                        portable: Boolean = false): (DataFrame, DataFrame) = {
     val r = numHashes / bands
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sh = toks.select(col("doc_id"), shinglesFromTokens(col("t")).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hp = sh.select(col("doc_id"),
-        (if (portable) portableHashPairs(col("sh")) else hashPairs(col("sh"))).as("hp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = hp.select(col("doc_id"),
-        signatureBest(docs.sparkSession, col("hp"), numHashes).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
+    val sh = stage(toks.select(col("doc_id"), shinglesFromTokens(col("t")).as("sh")))
+    val hp = stage(sh.select(col("doc_id"),
+        (if (portable) portableHashPairs(col("sh")) else hashPairs(col("sh"))).as("hp")))
+    val sig = stage(hp.select(col("doc_id"),
+        signatureBest(docs.sparkSession, col("hp"), numHashes).as("sig")))
     // band hash: xxhash64 (cheapest) by default; md5 of the
     // comma-joined band slice when the oracle must replay the buckets
     def bandHash(b: Column): Column =
@@ -337,13 +329,12 @@ object TextOps {
     // banded join EXPLICITLY — hash-of-null is a per-band constant in
     // both families (md5("")/xxhash64(seed)), which would bucket every
     // shingle-less doc together; the oracle replays "≥1 shingle only"
-    val banded = sig.where(col("sig").isNotNull)
+    val banded = stage(sig.where(col("sig").isNotNull)
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"), bandHash(b).as("bh")))).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (sh, banded, Seq(toks, sh, hp, sig, banded))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh")))
+    (sh, banded)
   }
 
   /**
@@ -365,9 +356,9 @@ object TextOps {
    */
   def dedupIncrementalLsh(newBatch: DataFrame, history: DataFrame,
                           threshold: Double = 0.8,
-                          numHashes: Int = 128, bands: Int = 32): DataFrame = {
-    val (bSh, bBanded, bCaches) = lshStages(newBatch, numHashes, bands)
-    val (hSh, hBanded, hCaches) = lshStages(history, numHashes, bands)
+                          numHashes: Int = 128, bands: Int = 32): DataFrame = Staged.run { stage =>
+    val (bSh, bBanded) = lshStages(stage, newBatch, numHashes, bands)
+    val (hSh, hBanded) = lshStages(stage, history, numHashes, bands)
 
     val cand = bBanded.as("x").join(hBanded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
@@ -384,9 +375,7 @@ object TextOps {
       .withColumn("jac", inter / union)
       .where(col("jac") >= threshold)
       .select(col("doc_id"), col("dup_of"), round(col("jac"), 3).as("jac"))
-    val res = out.localCheckpoint(true)
-    (bCaches ++ hCaches).foreach(_.unpersist(false))
-    res
+    out.localCheckpoint(true)
   }
 
   /**
@@ -420,12 +409,10 @@ object TextOps {
    * eval grams against it, one eval-doc-keyed count. Integers up to a
    * single division (round 4).
    */
-  def evalCoverage(train: DataFrame, evalDocs: DataFrame, n: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val trainToks = train.select(tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val evalToks = evalDocs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def evalCoverage(train: DataFrame, evalDocs: DataFrame,
+                   n: Int = 3): DataFrame = Staged.run { stage =>
+    val trainToks = stage(train.select(tokens(col("text")).as("t")))
+    val evalToks = stage(evalDocs.select(col("doc_id"), tokens(col("text")).as("t")))
     val trainGrams = trainToks
       .select(explode(shinglesFromTokens(col("t"), n)).as("gram")).distinct()
       .withColumn("hit", lit(1L))
@@ -436,16 +423,14 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_covered"))
-    val res = evalDocs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
+    evalDocs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("n_covered"), lit(0L)).as("n_covered"))
       .withColumn("coverage",
         when(col("n_grams") === 0, lit(0.0))
           .otherwise(round(col("n_covered").cast("double") / col("n_grams"), 4)))
-    val out = res.localCheckpoint(true)
-    Seq(trainToks, evalToks).foreach(_.unpersist(false))
-    out
+      .localCheckpoint(true)
   }
 
   /**
@@ -565,14 +550,12 @@ object TextOps {
    * prunes candidates; this is the exact-scoring path for ad-hoc
    * "find documents like this one" lookups.
    */
-  def similarDocs(corpus: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def similarDocs(corpus: DataFrame, queries: DataFrame,
+                  k: Int = 10): DataFrame = Staged.run { stage =>
     // token barrier first (shinglesFromTokens multi-references its arg;
     // collapsed, tokenization would go O(tokens²) per doc)
-    val toks = corpus.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sh = toks.select(col("doc_id"), shinglesFromTokens(col("t")).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(corpus.select(col("doc_id"), tokens(col("text")).as("t")))
+    val sh = stage(toks.select(col("doc_id"), shinglesFromTokens(col("t")).as("sh")))
     val q = broadcast(queries.select(col("doc_id").as("q"), tokens(col("text")).as("t"))
       .select(col("q"), shinglesFromTokens(col("t")).as("qsh")))
     val inter = size(array_intersect(col("qsh"), col("sh"))).cast("double")
@@ -584,11 +567,9 @@ object TextOps {
       .select(col("q"), col("nb"), col("jac"))
     // two-phase rank (VectorOps.groupedTopK): map-side ≤k heaps instead
     // of funnelling every scored corpus doc of a query through one sort
-    val out = VectorOps.groupedTopK(scored, "q", "nb", "jac", k)
+    VectorOps.groupedTopK(scored, "q", "nb", "jac", k)
       .select(col("q"), col("nb"), round(col("jac"), 4).as("jac"))
-    val res = out.localCheckpoint(true)
-    Seq(toks, sh).foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /** 64-bit SimHash from a staged per-token HASH-ARRAY ATTRIBUTE: bit j
@@ -640,8 +621,7 @@ object TextOps {
     bitSums.select(col("doc_id"), fpBits.as("fp"))
   }
 
-  def simhashPairs(docs: DataFrame, maxHam: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def simhashPairs(docs: DataFrame, maxHam: Int = 3): DataFrame = Staged.run { stage =>
     // r14 OPTIMIZATION (guide §1.2 per-task work / §4.1 codegen): the
     // fingerprint used to be built from per-doc HASH ARRAYS — an
     // interpreted `transform` md5 per element feeding 64 interpreted
@@ -656,8 +636,7 @@ object TextOps {
     // fold's empty aggregate did. Measured 2.75 → 1.37 s at sf0.1.
     // fp is referenced by 4 band projections and both self-join sides —
     // keep its barrier.
-    val fp = simhashFingerprints(docs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val fp = stage(simhashFingerprints(docs))
     val banded = fp.select(col("doc_id"), col("fp"),
       explode(transform(sequence(lit(0), lit(3)),
         b => struct(b.as("band"),
@@ -668,15 +647,13 @@ object TextOps {
       val x = col("x.fp").bitwiseXOR(col("y.fp"))
       bit_count(x)
     }
-    val out = banded.as("x").join(banded.as("y"),
+    banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"), ham.as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHam)
-    val res = out.localCheckpoint(true)
-    fp.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /** n-gram-frequency language-ID heuristic: scores text against small
@@ -720,16 +697,14 @@ object TextOps {
    * (doc_id, token), never quadratic per row. The bigram ratio reuses the
    * staged token attribute ([[shinglesFromTokens]] re-eval trap).
    */
-  def repetitionStats(docs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def repetitionStats(docs: DataFrame): DataFrame = Staged.run { stage =>
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
     val freq = toks.select(col("doc_id"), explode(col("t")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_distinct"),
         max(col("c")).as("top_c"))
-    val out = toks.join(freq, Seq("doc_id"), "left")
+    toks.join(freq, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).cast("long").as("n_tokens"),
         round(coalesce(col("n_distinct") / col("n_tokens"), lit(0d)), 4)
@@ -740,9 +715,7 @@ object TextOps {
           round(size(shinglesFromTokens(col("t"), 2)).cast("double") /
             (size(col("t")) - 1), 4))
           .otherwise(lit(1d)).as("bigram_distinct_ratio"))
-    val res = out.localCheckpoint(true)
-    toks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   // PII patterns shared with the DuckDB oracle: ASCII classes + \b only,
@@ -828,15 +801,14 @@ object TextOps {
    * materialized array; unstaged, Spark would re-tokenize per chunk), and
    * the explode is the only row multiplier — no shuffle at all.
    */
-  def chunkDocs(docs: DataFrame, chunkTokens: Int = 50, stride: Int = 40): DataFrame = {
+  def chunkDocs(docs: DataFrame, chunkTokens: Int = 50,
+                stride: Int = 40): DataFrame = Staged.run { stage =>
     require(chunkTokens > 0 && stride > 0 && stride <= chunkTokens,
       "need 0 < stride <= chunkTokens")
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .where(size(col("t")) >= 1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .where(size(col("t")) >= 1))
     val nChunks = floor((size(col("t")) - 1) / lit(stride)) + 1
-    val out = toks
+    toks
       .select(col("doc_id"),
         explode(transform(sequence(lit(0L), nChunks - 1), i =>
           struct(i.as("chunk_id"),
@@ -845,9 +817,7 @@ object TextOps {
             least(lit(chunkTokens), size(col("t")) - i.cast("int") * stride)
               .cast("long").as("n_chunk_tokens")))).as("c"))
       .select(col("doc_id"), col("c.chunk_id"), col("c.chunk"), col("c.n_chunk_tokens"))
-    val res = out.localCheckpoint(true)
-    toks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -869,19 +839,15 @@ object TextOps {
    */
   def decontaminateBloom(train: DataFrame, eval: DataFrame, n: Int = 13,
                          expectedItems: Long = 100000L,
-                         numBits: Long = 800000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                         numBits: Long = 800000L): DataFrame = Staged.run { stage =>
     val spark = train.sparkSession
     require(graft.functions.GraftExtensions.loadedIn(spark),
       "decontaminateBloom needs the graft session extension (graft_bloom_agg)")
-    val evalToks = eval.select(tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val trainToks = train.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val evalToks = stage(eval.select(tokens(col("text")).as("t")))
+    val trainToks = stage(train.select(col("doc_id"), tokens(col("text")).as("t")))
     // distinct eval grams feed BOTH the bloom build and the verify join
-    val evalGrams = evalToks
-      .select(explode(shinglesFromTokens(col("t"), n)).as("gram")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val evalGrams = stage(evalToks
+      .select(explode(shinglesFromTokens(col("t"), n)).as("gram")).distinct())
     val bloomRow = evalGrams.agg(call_function("graft_bloom_agg",
       xxhash64(col("gram")), lit(expectedItems), lit(numBits)).as("bf")).head()
     val out =
@@ -894,9 +860,7 @@ object TextOps {
         .join(broadcast(evalGrams), Seq("gram")) // exact verify: FPs drop here
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_hits")) // grams are pre-distinct per doc
-    val res = out.localCheckpoint(true)
-    Seq(evalToks, trainToks, evalGrams).foreach(_.unpersist(false))
-    res
+    out.localCheckpoint(true)
   }
 
   /**
@@ -977,28 +941,21 @@ object TextOps {
    * the DuckDB oracle replays it bit-for-bit; at petabyte scale you key
    * a 128-bit gram hash instead (same plan shape, 16-byte keys).
    */
-  def decontaminate(train: DataFrame, eval: DataFrame, n: Int = 13,
-                    checkpoint: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def decontaminate(train: DataFrame, eval: DataFrame,
+                    n: Int = 13): DataFrame = Staged.run { stage =>
     // both token arrays staged behind persist barriers: CollapseProject
     // would otherwise inline tokenization into the size(t)+2 references
     // the shingle lambda makes (the measured O(tokens²) trap)
-    val evalToks = eval.select(tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val trainToks = train.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val evalToks = stage(eval.select(tokens(col("text")).as("t")))
+    val trainToks = stage(train.select(col("doc_id"), tokens(col("text")).as("t")))
     val evalGrams = broadcast(
       evalToks.select(explode(shinglesFromTokens(col("t"), n)).as("gram")).distinct())
-    val out = trainToks
+    trainToks
       .select(col("doc_id"), explode(shinglesFromTokens(col("t"), n)).as("gram"))
       .join(evalGrams, Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits")) // grams are pre-distinct per doc
-    if (!checkpoint) return out // plan inspection (PlanDump/PLANS.md)
-    val res = out.localCheckpoint(true)
-    trainToks.unpersist(false)
-    evalToks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1075,23 +1032,18 @@ object TextOps {
    * unigram model is Zipf-shaped — a few 10⁵ rows even at 100 TB — so
    * the join is BROADCAST; token explosion never shuffles.
    */
-  def unigramLogProb(docs: DataFrame, checkpoint: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val exploded = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def unigramLogProb(docs: DataFrame): DataFrame = Staged.run { stage =>
+    val exploded = stage(docs
+      .select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
     val total = exploded.count().toDouble
     val unigrams = exploded.groupBy(col("tok"))
       .agg((count(lit(1)) / total).as("p"))
-    val out = exploded
+    exploded
       .join(broadcast(unigrams), Seq("tok"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         round(avg(log(col("p"))), 4).as("avg_logprob"))
-    if (!checkpoint) return out // plan inspection (PlanDump/PLANS.md)
-    val res = out.localCheckpoint(true)
-    exploded.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1113,40 +1065,35 @@ object TextOps {
    * graceful degradation, and this registered form is the exact-oracle
    * anchor.
    */
-  def bigramLogProb(docs: DataFrame, addK: Double = 0.5): DataFrame = {
-    val (scored, vocab, staged) = bigramLmScored(docs)
-    val out = scored
+  def bigramLogProb(docs: DataFrame, addK: Double = 0.5): DataFrame = Staged.run { stage =>
+    val (scored, vocab) = bigramLmScored(stage, docs)
+    scored
       .select(col("doc_id"),
         log((col("c") + addK) / (col("c1") + addK * vocab)).as("lp"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), round(avg(col("lp")), 4).as("avg_logprob"))
-    val res = out.localCheckpoint(true)
-    staged.foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /** Shared bigram-LM spine of [[bigramLogProb]] and [[perplexityTiers]]:
     * staged token arrays and bigram instances (persist barriers), the
     * c12/c1 count tables (context re-aggregated FROM the bigram counts —
     * no second tokenize pass), and the per-bigram-instance frame joined
-    * to both. Returns (scored instances carrying c/c1, vocabulary size,
-    * frames to unpersist after the caller checkpoints). */
-  private def bigramLmScored(docs: DataFrame): (DataFrame, Double, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val toksAll = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    * to both. Returns (scored instances carrying c/c1, vocabulary size),
+    * the barriers staged in the caller's scope. */
+  private def bigramLmScored(stage: Stage, docs: DataFrame): (DataFrame, Double) = {
+    val toksAll = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
     val vocab = toksAll.select(explode(col("t")).as("tok"))
       .agg(countDistinct(col("tok"))).head().getLong(0).toDouble
-    val bi = toksAll.where(size(col("t")) >= 2)
+    val bi = stage(toksAll.where(size(col("t")) >= 2)
       .select(col("doc_id"), explode(
         transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("w1"),
             element_at(col("t"), i + 1).as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("bg.w1"), col("bg.w2")))
     val c12 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
-    (bi.join(c12, Seq("w1", "w2")).join(c1, Seq("w1")), vocab, Seq(toksAll, bi))
+    (bi.join(c12, Seq("w1", "w2")).join(c1, Seq("w1")), vocab)
   }
 
   /**
@@ -1174,9 +1121,9 @@ object TextOps {
    * over doc-sized rows — the lang-partitioned sort splitStratified
    * already carries.
    */
-  def perplexityTiers(docs: DataFrame, addK: Double = 0.5): DataFrame = {
+  def perplexityTiers(docs: DataFrame, addK: Double = 0.5): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
-    val (scored0, vocab, staged) = bigramLmScored(docs)
+    val (scored0, vocab) = bigramLmScored(stage, docs)
     val perDoc = scored0
       .select(col("doc_id"),
         floor(-log((col("c") + addK) / (col("c1") + addK * vocab)) * 1e6 + 0.5)
@@ -1192,7 +1139,7 @@ object TextOps {
     val w = Window.partitionBy(col("lang"))
     val avgNll = when(col("n_bigrams") === 0, lit(0.0))
       .otherwise(col("sum_nll_mu").cast("double") / col("n_bigrams"))
-    val out = scored
+    scored
       .withColumn("rk", row_number().over(w.orderBy(
         (col("n_bigrams") === 0).cast("int"), avgNll, col("doc_id"))))
       .withColumn("n", count(lit(1)).over(w))
@@ -1200,9 +1147,7 @@ object TextOps {
         when(col("rk") * 3 <= col("n"), "head")
           .when(col("rk") * 3 <= col("n") * 2, "middle")
           .otherwise("tail").as("tier"))
-    val res = out.localCheckpoint(true)
-    staged.foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1216,18 +1161,17 @@ object TextOps {
    * may round differently, and rank boundaries are where that bites);
    * the displayed pmi is the rounded ln. Returns (w1, w2, n, pmi, rk ≤ k).
    */
-  def pmiTopPairs(docs: DataFrame, minCount: Long = 5L, k: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def pmiTopPairs(docs: DataFrame, minCount: Long = 5L,
+                  k: Int = 20): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(tokens(col("text")).as("t"))
-      .where(size(col("t")) >= 2).persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(tokens(col("text")).as("t"))
+      .where(size(col("t")) >= 2))
     val bi = toks.select(explode(
         transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("w1"),
             element_at(col("t"), i + 1).as("w2")))).as("bg"))
       .select(col("bg.w1"), col("bg.w2"))
-    val c12 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c12 = stage(bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n")))
     val total = c12.agg(sum(col("n"))).head().getLong(0).toDouble
     val cl = c12.groupBy(col("w1")).agg(sum(col("n")).as("cl"))
     val cr = c12.groupBy(col("w2")).agg(sum(col("n")).as("cr"))
@@ -1235,7 +1179,7 @@ object TextOps {
     // global top-k via orderBy+limit = TakeOrderedAndProject (per-partition
     // heaps + driver merge of k rows) — NOT a single-partition window sort
     // over every qualifying pair; the rank window then touches k rows only
-    val out = c12.where(col("n") >= minCount)
+    c12.where(col("n") >= minCount)
       .join(cl, "w1").join(cr, "w2")
       .withColumn("ratio", ratio)
       .orderBy(col("ratio").desc, col("w1"), col("w2")).limit(k)
@@ -1243,9 +1187,7 @@ object TextOps {
         col("ratio").desc, col("w1"), col("w2"))))
       .select(col("w1"), col("w2"), col("n"),
         round(log(col("ratio")), 4).as("pmi"), col("rk").cast("long").as("rk"))
-    val res = out.localCheckpoint(true)
-    Seq(toks, c12).foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1403,27 +1345,25 @@ object TextOps {
    * stage's cost profile, not the corpus's.
    */
   def dedupEditPairs(docs: DataFrame, threshold: Double = 0.8,
-                     numHashes: Int = 128, bands: Int = 32): DataFrame = {
+                     numHashes: Int = 128, bands: Int = 32): DataFrame = Staged.run { stage =>
     val pct = math.round(threshold * 100).toInt
     require(pct > 0 && pct < 100 && pct / 100.0 == threshold,
       "threshold must be an integer percent in (0, 1) for the exact predicate")
-    val (_, banded, caches) = lshStages(docs, numHashes, bands, portable = true)
+    val (_, banded) = lshStages(stage, docs, numHashes, bands, portable = true)
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
     val norm = docs.select(col("doc_id"), normText(col("text")).as("nt"))
-    val out = cand
+    cand
       .join(norm.select(col("doc_id").as("a"), col("nt").as("na")), "a")
       .join(norm.select(col("doc_id").as("b"), col("nt").as("nb")), "b")
       .select(col("a"), col("b"),
         levenshtein(col("na"), col("nb")).cast("long").as("lev"),
         greatest(length(col("na")), length(col("nb"))).cast("long").as("max_len"))
       .where(col("lev") * 100 <= col("max_len") * (100 - pct)) // 1 − lev/max ≥ pct/100, exactly
-    val res = out.localCheckpoint(true)
-    caches.foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1438,25 +1378,21 @@ object TextOps {
    * replays bit-for-bit. Map-only: staged token array → positional
    * grams → window minima, no shuffle at all.
    */
-  def winnowFingerprints(docs: DataFrame, w: Int = 4): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .where(size(col("t")) >= 3).persist(StorageLevel.MEMORY_AND_DISK)
+  def winnowFingerprints(docs: DataFrame, w: Int = 4): DataFrame = Staged.run { stage =>
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .where(size(col("t")) >= 3))
     // positional (NOT distinct) 3-gram hashes — winnowing needs every
     // occurrence; staged before the window pass (multi-referenced)
-    val hs = toks.select(col("doc_id"),
+    val hs = stage(toks.select(col("doc_id"),
         transform(sequence(lit(1), size(col("t")) - 2), i =>
           md5(concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))).as("hs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))).as("hs")))
     val nWin = greatest(size(col("hs")) - (w - 1), lit(1))
-    val out = hs.select(col("doc_id"),
+    hs.select(col("doc_id"),
         explode(array_distinct(transform(sequence(lit(1), nWin), i =>
           array_min(slice(col("hs"), i, lit(w)))))).as("fp"))
       .distinct()
-    val res = out.localCheckpoint(true)
-    Seq(toks, hs).foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1481,22 +1417,20 @@ object TextOps {
    * tokens: both engines share the hash, so the oracle is exact
    * irrespective of the (negligible) collision probability.
    */
-  def dupSpans(docs: DataFrame, n: Int = 13): DataFrame = {
+  def dupSpans(docs: DataFrame, n: Int = 13): DataFrame = Staged.run { stage =>
     require(n >= 2, "n must be at least 2")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .where(size(col("t")) >= n).persist(StorageLevel.MEMORY_AND_DISK)
-    val grams = toks.select(col("doc_id"),
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .where(size(col("t")) >= n))
+    val grams = stage(toks.select(col("doc_id"),
         posexplode(transform(sequence(lit(1), size(col("t")) - (n - 1)), i =>
           md5(concat_ws(" ", (0 until n).map(o => element_at(col("t"), i + o)): _*))))
           .as(Seq("p0", "g")))
-      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("g"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("g")))
     val dup = grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
       .where(col("c") > 1).select(col("g"))
     val flagged = grams.join(dup, "g").select(col("doc_id"), col("pos"))
-    val out = flagged
+    flagged
       .withColumn("grp", col("pos") - row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
       .groupBy(col("doc_id"), col("grp"))
@@ -1506,9 +1440,7 @@ object TextOps {
         (col("lastg") + (n - 1)).as("end_pos"),
         (col("lastg") + (n - 1) - col("start_pos") + 1).as("span_tokens"),
         col("n_grams"))
-    val res = out.localCheckpoint(true)
-    Seq(toks, grams).foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -1577,18 +1509,15 @@ object TextOps {
    * shared double is the final division, round(4).
    */
   def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
-                       maxDf: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                       maxDf: Int = 50): DataFrame = Staged.run { stage =>
     // staged: tokens referenced size(t)+n-1 times by the shingle lambda
     // (see shinglesFromTokens's O(tokens²) re-evaluation note)
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dg = toks
-      .select(col("doc_id"), explode(shinglesFromTokens(col("t"), n)).as("g"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
+    val dg = stage(toks
+      .select(col("doc_id"), explode(shinglesFromTokens(col("t"), n)).as("g")))
     val voc = dg.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .where(col("df").between(2, maxDf)).select(col("g"))
-    val idx = dg.join(voc, "g").persist(StorageLevel.MEMORY_AND_DISK)
+    val idx = stage(dg.join(voc, "g"))
     // denominator over ALL distinct grams (see scaladoc: numerator-only
     // truncation keeps the measure asymmetric and conservative)
     val sizes = dg.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
@@ -1596,7 +1525,7 @@ object TextOps {
       .join(idx.select(col("g"), col("doc_id").as("b")), "g")
       .where(col("a") =!= col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_common"))
-    val out = common
+    common
       .join(sizes.select(col("doc_id").as("a"), col("n_grams")), "a")
       .where(col("n_common").cast("double") / col("n_grams") >= threshold)
       .select(col("a").as("contained"), col("b").as("container"),
@@ -1604,8 +1533,6 @@ object TextOps {
         round(col("n_common").cast("double") / col("n_grams"), 4)
           .as("containment"))
       .localCheckpoint(true)
-    Seq(toks, dg, idx).foreach(_.unpersist(false))
-    out
   }
 
   /**
@@ -1655,12 +1582,10 @@ object TextOps {
    * slightly negative on disjoint sources (inclusion–exclusion noise);
    * that is honest sketch output, not clamped.
    */
-  def sourceOverlapSketch(docs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def sourceOverlapSketch(docs: DataFrame): DataFrame = Staged.run { stage =>
     val m = 4096 // p = 12; hex arithmetic below is specific to p = 12
     // maxRank = 64 - p + 1 = 53: idx = top 3 hex chars, tail = next 13
-    val toks = docs.select(col("source"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(col("source"), tokens(col("text")).as("t")))
     val regs = toks
       .select(col("source"), explode(shinglesFromTokens(col("t"))).as("g"))
       .select(col("source"), md5(col("g")).as("h"))
@@ -1672,7 +1597,6 @@ object TextOps {
           .otherwise(lit(53) - length(bin(col("tail")))).cast("int").as("rk"))
       .groupBy(col("source"), col("idx")).agg(max(col("rk")).as("mj"))
       .localCheckpoint(true) // tiny; one corpus scan feeds three readers
-    toks.unpersist(false)
 
     // Z·2^53 as an exact integer (the HllSketchAgg eval contract):
     // Σ 2^(53−mj) over nonzero registers + 2^53 per empty register.
@@ -1792,7 +1716,7 @@ object TextOps {
   def curationPipeline(allDocs: DataFrame, langs: Seq[String] = Seq("en", "de"),
                        minChars: Long = 100L, maxChars: Long = 2000L,
                        evalMod: Int = 25, gramN: Int = 13,
-                       quota: Int = 50): DataFrame = {
+                       quota: Int = 50): DataFrame = Staged.run { stage =>
     val train = allDocs.where(col("doc_id") % evalMod =!= 0)
     val evalSet = allDocs.where(col("doc_id") % evalMod === 0)
     val cleaned = allDocs.join(
@@ -1802,9 +1726,8 @@ object TextOps {
     // split output is consumed twice — without the executor-side
     // checkpoints each reference RE-EXPANDS the whole upstream chain
     // (plan-probed: ~12 corpus scans at r10; 3 with the barriers)
-    val decon = cleaned.join(
-      decontaminate(cleaned, evalSet, gramN), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val decon = stage.checkpoint(cleaned.join(
+      decontaminate(cleaned, evalSet, gramN), Seq("doc_id"), "left_anti"))
     val kept = decon.join(
       domainMix(decon, quota).select(col("doc_id")), "doc_id")
       .localCheckpoint(true)
@@ -1835,7 +1758,7 @@ object TextOps {
                           langs: Seq[String] = Seq("en", "de"),
                           minChars: Long = 100L, maxChars: Long = 2000L,
                           evalMod: Int = 25, simThreshold: Double = 0.35,
-                          quota: Int = 50): DataFrame = {
+                          quota: Int = 50): DataFrame = Staged.run { stage =>
     val train = allDocs.where(col("doc_id") % evalMod =!= 0)
     val cleaned = allDocs.join(
       cleanCorpus(train, langs, minChars, maxChars), "doc_id")
@@ -1844,7 +1767,7 @@ object TextOps {
         embeddings.where(col("vec_id") % evalMod =!= 0), evalEmb, simThreshold)
       .where(!col("contaminated"))
       .select(col("vec_id").as("doc_id"))
-    val decon = cleaned.join(uncontaminated, "doc_id").localCheckpoint(true)
+    val decon = stage.checkpoint(cleaned.join(uncontaminated, "doc_id"))
     val kept = decon.join(
       domainMix(decon, quota).select(col("doc_id")), "doc_id")
       .localCheckpoint(true)
@@ -1868,51 +1791,40 @@ object TextOps {
    * the filter scales with vocabulary size.
    */
   def bm25Scores(docs: DataFrame, queryTerms: Seq[String],
-                 k1: Double = 1.2, b: Double = 0.75,
-                 checkpoint: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame = Staged.run { stage =>
     // run the query through the SAME tokenizer as the documents —
     // "Spark" or "window-function" must match the lowercased
     // alphanumeric tokens the corpus side produces, not silently miss
     val terms = queryTerms.flatMap(_.toLowerCase.split("[^a-z0-9]+"))
       .filter(_.nonEmpty).distinct
     require(terms.nonEmpty, "queryTerms must contain at least one token")
-    val tfBase = docs
+    val tf = stage(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    // checkpoint=false is the plan-inspection path: skip the persist so
-    // the (N, avgdl) scalar job below doesn't leave tf pinned for the
-    // session (the action itself is unavoidable — the plan inlines the
-    // stats as literals)
-    val tf = if (checkpoint) tfBase.persist(StorageLevel.MEMORY_AND_DISK)
-             else tfBase
+      .agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
     // an empty corpus (or all-empty documents) has no avgdl: degrade to
     // the empty scored set like every other TextOps operator
-    if (stats.getLong(0) == 0L || stats.isNullAt(1)) {
-      tf.unpersist(false)
-      return docs.sparkSession.emptyDataFrame
+    if (stats.getLong(0) == 0L || stats.isNullAt(1))
+      docs.sparkSession.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0d).as("bm25")).limit(0)
+    else {
+      val (nDocs, avgdl) = (stats.getLong(0), stats.getDouble(1))
+      val qtf = tf.where(col("tok").isin(terms: _*))
+      val dfreq = qtf.groupBy(col("tok"))
+        .agg(count_distinct(col("doc_id")).as("df"))
+      val idf = log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1)
+      qtf
+        .join(broadcast(dfreq), "tok")
+        .join(dl, "doc_id")
+        .withColumn("contrib",
+          idf * (col("tf") * (k1 + 1)) /
+            (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)))
+        .groupBy(col("doc_id"))
+        .agg(round(sum(col("contrib")), 4).as("bm25"))
+        .localCheckpoint(true)
     }
-    val (nDocs, avgdl) = (stats.getLong(0), stats.getDouble(1))
-    val qtf = tf.where(col("tok").isin(terms: _*))
-    val dfreq = qtf.groupBy(col("tok"))
-      .agg(count_distinct(col("doc_id")).as("df"))
-    val idf = log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val out = qtf
-      .join(broadcast(dfreq), "tok")
-      .join(dl, "doc_id")
-      .withColumn("contrib",
-        idf * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("contrib")), 4).as("bm25"))
-    if (!checkpoint) return out
-    val res = out.localCheckpoint(true)
-    tf.unpersist(false)
-    res
   }
 
   /**
@@ -1944,18 +1856,16 @@ object TextOps {
    * absent from that channel's candidates.
    */
   def hybridSearch(docs: DataFrame, queryTerms: Seq[String],
-                   nCand: Int = 100, k: Int = 20, rrfK: Int = 60): DataFrame = {
+                   nCand: Int = 100, k: Int = 20, rrfK: Int = 60): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     val spark = docs.sparkSession
     val terms = queryTerms.flatMap(_.toLowerCase.split("[^a-z0-9]+"))
       .filter(_.nonEmpty).distinct
     require(terms.nonEmpty, "queryTerms must contain at least one token")
     // ---- lexical channel: BM25 (k1=1.2, b=0.75) in integer micros ----
     val (k1, b) = (1.2, 0.75)
-    val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tf = stage(docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
     require(stats.getLong(0) > 0L && !stats.isNullAt(1),
@@ -1970,11 +1880,11 @@ object TextOps {
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)) * 1e6)
         .cast("long"))
       .groupBy(col("doc_id")).agg(sum(col("m")).as("lex_micros"))
-    val lexTop = lex.orderBy(col("lex_micros").desc, col("doc_id")).limit(nCand)
+    val lexTop = stage.checkpoint(lex
+      .orderBy(col("lex_micros").desc, col("doc_id")).limit(nCand)
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("lex_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("lex_rank"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("lex_rank")))
     // ---- vector channel: hashEmbed corpus, the query embedded by the
     // SAME cell machinery (qid −1 can never collide with a doc id).
     // Reuses the persisted tf counts — the channel used to re-tokenize
@@ -1999,7 +1909,7 @@ object TextOps {
         Window.orderBy(col("sim").desc, col("nb"))))
       .select(col("nb").as("doc_id"), col("vec_rank"))
     // ---- fusion ----
-    val out = lexTop.join(vecTop, Seq("doc_id"), "full_outer")
+    lexTop.join(vecTop, Seq("doc_id"), "full_outer")
       .withColumn("rrf_m", floor((
         coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
         coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0))) * 1e9)
@@ -2010,8 +1920,6 @@ object TextOps {
         col("rrf_m"))
       .orderBy(col("rrf_m").desc, col("doc_id")).limit(k)
       .localCheckpoint(true)
-    tf.unpersist(false)
-    out
   }
 
   /** One packed bin: its member docs and token load. */
@@ -2156,10 +2064,10 @@ object TextOps {
    * plus the sketch's own capacity-bounded aggregation; the join back
    * is vocabulary-sized.
    */
-  def heavyHittersSketchAudit(docs: DataFrame, capacity: Int = 16): DataFrame = {
+  def heavyHittersSketchAudit(docs: DataFrame,
+                              capacity: Int = 16): DataFrame = Staged.run { stage =>
     require(capacity > 0, "capacity must be positive")
-    val toks = docs.select(col("lang"), explode(tokens(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = stage(docs.select(col("lang"), explode(tokens(col("text"))).as("tok")))
     val exact = toks.groupBy(col("lang"), col("tok"))
       .agg(count(lit(1)).as("true_count"))
     val totals = exact.groupBy(col("lang")).agg(sum(col("true_count")).as("n"))
@@ -2167,7 +2075,7 @@ object TextOps {
       .agg(call_function("graft_topfreq", col("tok"), lit(capacity)).as("top"))
       .select(col("lang"), explode(col("top")).as("e"))
       .select(col("lang"), col("e.item").as("tok"), col("e.est").as("est"))
-    val out = exact.join(totals, "lang")
+    exact.join(totals, "lang")
       .join(sketch, Seq("lang", "tok"), "left_outer")
       .select(col("lang"), col("tok"), col("true_count"),
         when(col("est").isNull,
@@ -2176,8 +2084,6 @@ object TextOps {
             (col("true_count") - col("est")) * (capacity + 1) <= col("n"))
           .as("mg_ok"))
       .localCheckpoint(true)
-    toks.unpersist(false)
-    out
   }
 
   /**
@@ -2204,7 +2110,8 @@ object TextOps {
    * hex chars [8i, 8i+8) of md5(tok) as a 32-bit integer, col = word
    * mod w — one md5 per token, d sub-hashes from disjoint digest bits.
    */
-  def cmsHeavyHitters(docs: DataFrame, k: Int = 20, w: Int = 1024): DataFrame = {
+  def cmsHeavyHitters(docs: DataFrame, k: Int = 20,
+                      w: Int = 1024): DataFrame = Staged.run { stage =>
     require(k > 0 && w > 0, "need k > 0 and w > 0")
     import org.apache.spark.sql.expressions.Window
     val cellsOf = // d=4 (row, col) cells per token from one md5
@@ -2212,9 +2119,8 @@ object TextOps {
     // ONE token-scale shuffle (the count agg) feeds both the matrix and
     // the top-k; md5 runs once per DISTINCT token (vocabulary-sized),
     // not per occurrence — cell counters sum the multiplicities
-    val counts = docs.select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("true_count"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = stage(docs.select(explode(tokens(col("text"))).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("true_count")))
     val cells = counts.select(col("true_count"), explode(expr(cellsOf)).as("rc"))
       .groupBy(col("rc.r").as("r"), col("rc.c").as("c"))
       .agg(sum(col("true_count")).as("n"))
@@ -2225,15 +2131,13 @@ object TextOps {
         Window.orderBy(col("true_count").desc, col("tok"))))
     val probes = top.select(col("tok"), col("true_count"), col("rk"),
       explode(expr(cellsOf)).as("rc"))
-    val out = probes
+    probes
       .join(cells, probes("rc.r") === cells("r") && probes("rc.c") === cells("c"))
       .groupBy(col("tok"), col("true_count"), col("rk"))
       .agg(min(col("n")).as("est"))
       .select(col("tok"), col("true_count"), col("est"),
         col("rk").cast("long").as("rk"))
-    val res = out.localCheckpoint(true)
-    counts.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -2378,20 +2282,17 @@ object TextOps {
    * by doc_id — per-doc term counts are bounded by document length, so
    * no partition outgrows a task no matter the corpus size.
    */
-  def tfidfTopTerms(docs: DataFrame, k: Int = 5,
-                    checkpoint: Boolean = true): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, k: Int = 5): DataFrame = Staged.run { stage =>
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val tf = docs
+    val tf = stage(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).cast("double").as("tf")))
     val nDocs = docs.count().toDouble // one scalar action, like bm25's (N, avgdl)
     val dfTab = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("idf", log(lit(nDocs + 1d) / (col("df") + 1d)) + 1d)
-    val out = tf
+    tf
       .join(broadcast(dfTab.select(col("term"), col("idf"))), Seq("term"))
       .withColumn("score", col("tf") * col("idf"))
       .withColumn("rk", row_number().over(
@@ -2399,10 +2300,7 @@ object TextOps {
       .where(col("rk") <= k)
       .select(col("doc_id"), col("term"),
         round(col("score"), 4).as("tfidf"), col("rk").cast("long").as("rk"))
-    if (!checkpoint) return out // plan inspection
-    val res = out.localCheckpoint(true)
-    tf.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -2422,26 +2320,20 @@ object TextOps {
    * at one row per doc×shingle the bounded window is already the plan
    * Spark picks for its own `collect_list`-style shapes.)
    */
-  def bottomKSketch(docs: DataFrame, k: Int = 5,
-                    checkpoint: Boolean = true): DataFrame = {
+  def bottomKSketch(docs: DataFrame, k: Int = 5): DataFrame = Staged.run { stage =>
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     // persist barrier: CollapseProject would otherwise inline tokens()
     // into shinglesFromTokens's size(t)+2 references (the O(tokens²) trap)
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = toks
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
+    toks
       .select(col("doc_id"), explode(shinglesFromTokens(col("t"))).as("sh"))
       .select(col("doc_id"), md5(col("sh")).as("h"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("h"))))
       .where(col("rk") <= k)
       .select(col("doc_id"), col("rk").cast("long").as("rk"), col("h"))
-    if (!checkpoint) return out // plan inspection
-    val res = out.localCheckpoint(true)
-    toks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /** Word n-grams WITH multiplicity from a token-array attribute (the
@@ -2476,10 +2368,8 @@ object TextOps {
    * grams, which the distinct-per-doc projection already caps at one
    * row per (doc, gram).
    */
-  def gramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def gramNovelty(docs: DataFrame, n: Int = 3): DataFrame = Staged.run { stage =>
+    val toks = stage(docs.select(col("doc_id"), tokens(col("text")).as("t")))
     val dg = toks.select(col("doc_id"),
       explode(shinglesFromTokens(col("t"), n)).as("g"))
     val first = dg.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
@@ -2487,7 +2377,7 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("first_doc") < col("doc_id"), 1L).otherwise(0L)).as("n_stale"))
-    val out = docs.select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).cast("long").as("n_grams"),
@@ -2495,9 +2385,7 @@ object TextOps {
       .withColumn("novelty",
         when(col("n_grams") === 0, lit(1.0))
           .otherwise(round(lit(1.0) - col("n_stale").cast("double") / col("n_grams"), 4)))
-    val res = out.localCheckpoint(true)
-    toks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -2599,15 +2487,13 @@ object TextOps {
    * stamp, so no task ever sorts the whole corpus; the token-side
    * plan is unchanged.
    */
-  def heapsLaw(docs: DataFrame, steps: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def heapsLaw(docs: DataFrame, steps: Int = 10): DataFrame = Staged.run { stage =>
     val spark = docs.sparkSession
     import spark.implicits._
     require(steps > 0, "steps must be positive")
-    val ranked = graft.operators.Ranks.prefixRank(
+    val ranked = stage(graft.operators.Ranks.prefixRank(
         docs.select(col("doc_id"), tokens(col("text")).as("t")),
-        Seq(col("doc_id")), "rk")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        Seq(col("doc_id")), "rk"))
     val nDocs = ranked.count()
     val cps = (1 to steps)
       .map(i => (i * 100L / steps, i * nDocs / steps))
@@ -2624,14 +2510,12 @@ object TextOps {
       .join(broadcast(cps), col("fr") <= col("cutoff"))
       .groupBy(col("pct"))
       .agg(count(lit(1)).as("distinct_tokens"))
-    val out = totals.join(vocab, Seq("pct"), "left")
+    totals.join(vocab, Seq("pct"), "left")
       .select(col("pct").cast("long").as("pct"),
         col("n_docs").cast("long").as("n_docs"),
         col("total_tokens").cast("long").as("total_tokens"),
         coalesce(col("distinct_tokens"), lit(0L)).cast("long").as("distinct_tokens"))
-    val res = out.localCheckpoint(true)
-    ranked.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -2662,18 +2546,15 @@ object TextOps {
    * (λ table has ≤ dim rows → broadcast), one doc-keyed sum.
    */
   def dsirWeights(docs: DataFrame, targetLang: String = "en",
-                  dim: Int = 4096): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                  dim: Int = 4096): DataFrame = Staged.run { stage =>
     require(dim > 0, "dim must be positive")
     def bitlen(c: Column): Column = length(bin(c))
-    val toks = docs.select(col("doc_id"), col("lang"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val occ = toks
+    val toks = stage(docs.select(col("doc_id"), col("lang"), tokens(col("text")).as("t")))
+    val occ = stage(toks
       .select(col("doc_id"), col("lang"),
         explode(ngramsFromTokens(col("t"), 2)).as("g"))
       .select(col("doc_id"), col("lang"),
-        (conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % dim).as("f"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        (conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % dim).as("f")))
     val lam = occ.groupBy(col("f"))
       .agg(count(lit(1)).as("r"),
         sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("t"))
@@ -2685,14 +2566,12 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).cast("long").as("n_feat"),
         sum(col("cnt") * col("lam")).cast("long").as("score"))
-    val out = docs.select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_feat"), lit(0L)).as("n_feat"),
         coalesce(col("score"), lit(0L)).as("score"))
-    val res = out.localCheckpoint(true)
-    occ.unpersist(false); toks.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -2751,30 +2630,28 @@ object TextOps {
    * full-outer join on the token key; the totals row broadcasts to the
    * term projection (single-row crossJoin, the heapsLaw shape).
    */
-  def vocabDrift(newBatch: DataFrame, history: DataFrame, k: Int = 20): DataFrame = {
+  def vocabDrift(newBatch: DataFrame, history: DataFrame,
+                 k: Int = 20): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     def counts(df: DataFrame, name: String) =
       df.select(explode(tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as(name))
-    val joined = counts(newBatch, "c_batch")
+    val joined = stage(counts(newBatch, "c_batch")
       .join(counts(history, "c_hist"), Seq("tok"), "full_outer")
       .select(col("tok"),
         coalesce(col("c_batch"), lit(0L)).as("c_batch"),
-        coalesce(col("c_hist"), lit(0L)).as("c_hist"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("c_hist"), lit(0L)).as("c_hist")))
     val tot = joined.agg(
       sum(col("c_batch")).as("nb"), sum(col("c_hist")).as("nh"),
       count(lit(1)).as("vv"))
     val p = (col("c_batch") + lit(0.5)) / (col("nb") + lit(0.5) * col("vv"))
     val q = (col("c_hist") + lit(0.5)) / (col("nh") + lit(0.5) * col("vv"))
-    val terms = joined.crossJoin(broadcast(tot))
+    val terms = stage(joined.crossJoin(broadcast(tot))
       .select(col("tok"), col("c_hist"), col("c_batch"),
         floor((p * log(p / q)) * lit(1e12) + lit(0.5))
-          .cast("long").as("term_pico"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          .cast("long").as("term_pico")))
     val kl = terms.agg(sum(col("term_pico")).as("kl_pico"))
-    val out = terms
+    terms
       .orderBy(abs(col("term_pico")).desc, col("tok")).limit(k)
       .withColumn("rk", row_number().over(
         Window.orderBy(abs(col("term_pico")).desc, col("tok"))))
@@ -2782,8 +2659,6 @@ object TextOps {
       .select(col("tok"), col("c_hist"), col("c_batch"), col("term_pico"),
         col("kl_pico"), col("rk").cast("long").as("rk"))
       .localCheckpoint(true)
-    Seq(joined, terms).foreach(_.unpersist(false))
-    out
   }
 
   /**
@@ -2842,12 +2717,13 @@ object TextOps {
    * on the corpus, exact at any size. Returns (source, tokens,
    * alloc_tokens, epochs_ppm, capped).
    */
-  def epochPlan(docs: DataFrame, budget: Long, maxEpochs: Long = 4L): DataFrame = {
+  def epochPlan(docs: DataFrame, budget: Long,
+                maxEpochs: Long = 4L): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
     require(budget >= 0, "budget must be non-negative")
     require(maxEpochs > 0, "maxEpochs must be positive")
     val w = Window.partitionBy()
-    val q = docs
+    val q = stage(docs
       .select(col("source"), nTokens(col("text")).cast("long").as("tk"))
       .groupBy(col("source")).agg(sum(col("tk")).as("t"))
       .withColumn("s", count(lit(1)).over(w))
@@ -2859,8 +2735,7 @@ object TextOps {
       .withColumn("quota",
         col("base") + when(col("rk") <= col("leftover"), 1L).otherwise(0L))
       .withColumn("cap_alloc", lit(maxEpochs) * col("t"))
-      .select(col("source"), col("t"), col("quota"), col("cap_alloc"))
-      .persist()
+      .select(col("source"), col("t"), col("quota"), col("cap_alloc")))
     val f = q.agg(
       sum(when(col("quota") > col("cap_alloc"),
         col("quota") - col("cap_alloc")).otherwise(0L)).as("freed"),
@@ -2881,15 +2756,13 @@ object TextOps {
             (col("base2") + when(col("rk2") <= col("leftover2"), 1L)
               .otherwise(0L)).as("extra"))
       else unc.select(col("source"), lit(0L).as("extra"))
-    val out = q.join(extra, Seq("source"), "left_outer")
+    q.join(extra, Seq("source"), "left_outer")
       .withColumn("want", col("quota") + coalesce(col("extra"), lit(0L)))
       .select(col("source"), col("t").as("tokens"),
         least(col("cap_alloc"), col("want")).as("alloc_tokens"),
         expr("1000000 * least(cap_alloc, want) div t").as("epochs_ppm"),
         (col("want") > col("cap_alloc")).as("capped"))
       .localCheckpoint(true)
-    q.unpersist(blocking = false)
-    out
   }
 
   /**
@@ -2946,12 +2819,10 @@ object TextOps {
    * backoff), one doc-keyed sum, one per-lang window over doc-sized
    * rows (lang-partitioned sort, the splitStratified shape).
    */
-  def qualityTiers(docs: DataFrame): DataFrame = {
+  def qualityTiers(docs: DataFrame): DataFrame = Staged.run { stage =>
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val exploded = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exploded = stage(docs
+      .select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
     val counts = exploded.groupBy(col("tok"))
       .agg(count(lit(1)).as("c"))
       .select(col("tok"), length(bin(col("c"))).cast("long").as("bl"))
@@ -2967,7 +2838,7 @@ object TextOps {
         when(col("n_tokens") === 0, lit(0.0))
           .otherwise(col("sum_bl").cast("double") / col("n_tokens")))
     val w = Window.partitionBy(col("lang"))
-    val out = scored
+    scored
       .withColumn("rk", row_number().over(
         w.orderBy(col("avg_bl").desc, col("doc_id"))))
       .withColumn("n", count(lit(1)).over(w))
@@ -2975,9 +2846,7 @@ object TextOps {
         when(col("rk") * 3 <= col("n"), "head")
           .when(col("rk") * 3 <= col("n") * 2, "middle")
           .otherwise("tail").as("tier"))
-    val res = out.localCheckpoint(true)
-    exploded.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -3054,11 +2923,9 @@ object TextOps {
       BpeCache.trained(spark, dir, numMerges)._2)
 
   /** Uncached sibling of [[bpeDocTokensCached]] (tests / ad-hoc). */
-  def bpeDocTokens(docs: DataFrame, numMerges: Int): DataFrame = {
-    val (_, finalSyms) = bpeTrain(docs, numMerges)
-    val res = docTokensFrom(docs, finalSyms).localCheckpoint(true)
-    finalSyms.unpersist(false)
-    res
+  def bpeDocTokens(docs: DataFrame, numMerges: Int): DataFrame = Staged.run { stage =>
+    val finalSyms = stage.own(bpeTrain(docs, numMerges)._2)
+    docTokensFrom(docs, finalSyms).localCheckpoint(true)
   }
 
   private def docTokensFrom(docs: DataFrame, finalSyms: DataFrame): DataFrame = {
@@ -3085,11 +2952,9 @@ object TextOps {
    * whether a tokenizer is adequate for a language slice. Integer sums,
    * one final division (round 4).
    */
-  def bpeEncodeStats(docs: DataFrame, numMerges: Int): DataFrame = {
-    val (_, finalSyms) = bpeTrain(docs, numMerges)
-    val res = encodeStatsFrom(docs, finalSyms).localCheckpoint(true)
-    finalSyms.unpersist(false)
-    res
+  def bpeEncodeStats(docs: DataFrame, numMerges: Int): DataFrame = Staged.run { stage =>
+    val finalSyms = stage.own(bpeTrain(docs, numMerges)._2)
+    encodeStatsFrom(docs, finalSyms).localCheckpoint(true)
   }
 
   private def encodeStatsFrom(docs: DataFrame, finalSyms: DataFrame): DataFrame = {
@@ -3126,10 +2991,8 @@ object TextOps {
    * both sides, which measured 41× on 10× data; the single-aggregation
    * form is corpus-linear.
    */
-  def crossLingualLeakage(docs: DataFrame, n: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val toks = docs.select(col("lang"), tokens(col("text")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def crossLingualLeakage(docs: DataFrame, n: Int = 5): DataFrame = Staged.run { stage =>
+    val toks = stage(docs.select(col("lang"), tokens(col("text")).as("t")))
     val byGram = toks
       .select(col("lang"), explode(ngramsFromTokens(col("t"), n)).as("g"))
       .select(col("lang"), md5(col("g")).as("g"))
@@ -3140,12 +3003,10 @@ object TextOps {
       "flatten(transform(ls, (x, i) -> " +
         "transform(slice(ls, i + 2, size(ls)), y -> struct(x AS a, y AS b))))"))
       .as("p"))
-    val res = pairs
+    pairs
       .groupBy(col("p.a").as("lang_a"), col("p.b").as("lang_b"))
       .agg(count(lit(1)).cast("long").as("n_shared_grams"))
-    val out = res.localCheckpoint(true)
-    toks.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 
   /**
@@ -3156,11 +3017,9 @@ object TextOps {
    * end to end: explode of the final symbol arrays weighted by word
    * frequency, one symbol-keyed sum.
    */
-  def bpeVocab(docs: DataFrame, numMerges: Int): DataFrame = {
-    val (_, finalSyms) = bpeTrain(docs, numMerges)
-    val out = vocabFrom(finalSyms).localCheckpoint(true)
-    finalSyms.unpersist(false)
-    out
+  def bpeVocab(docs: DataFrame, numMerges: Int): DataFrame = Staged.run { stage =>
+    val finalSyms = stage.own(bpeTrain(docs, numMerges)._2)
+    vocabFrom(finalSyms).localCheckpoint(true)
   }
 
   private def vocabFrom(finalSyms: DataFrame): DataFrame =
@@ -3189,13 +3048,11 @@ object TextOps {
    * vocabulary-sized re-aggregation of the same tf (no second corpus
    * pass).
    */
-  def sourceChi2(docs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val tf = docs
+  def sourceChi2(docs: DataFrame): DataFrame = Staged.run { stage =>
+    val tf = stage(docs
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).cast("long").as("o"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).cast("long").as("o")))
     val rowTot = tf.groupBy(col("source")).agg(sum(col("o")).as("r"))
     val colTot = tf.groupBy(col("tok")).agg(sum(col("o")).as("c"))
     val nDf = tf.agg(sum(col("o")).cast("decimal(38,0)").as("n"))
@@ -3217,7 +3074,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_cells"), sum(col("micro")).as("obs_micro"),
         first(col("r")).as("r"), sum(col("c")).as("sc"),
         first(col("n")).as("n"))
-    val res = perSource
+    perSource
       .select(col("source"), col("r").cast("long").as("n_tokens"),
         col("n_cells").cast("long"),
         (col("obs_micro") +
@@ -3228,20 +3085,18 @@ object TextOps {
       .select(col("source"), col("n_tokens"), col("n_cells"),
         col("chi2_micro"),
         (col("chi2_micro").cast("double") / lit(1e6)).as("chi2"))
-    val out = res.localCheckpoint(true)
-    tf.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 
   /** Shared BPE training loop: returns (merge table, final per-word
-    * symbol arrays — left persisted; callers unpersist). */
-  private def bpeTrain(docs: DataFrame, numMerges: Int): (DataFrame, DataFrame) = {
+    * symbol arrays — left persisted; the caller owns their release). */
+  private def bpeTrain(docs: DataFrame,
+                       numMerges: Int): (DataFrame, DataFrame) = Staged.run { stage =>
     import org.apache.spark.storage.StorageLevel
     val spark = docs.sparkSession
-    val wf = docs
+    val wf = stage(docs
       .select(explode(tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq")))
     // chars as initial symbols, via the same substring indexing the twin
     // uses (tokens are [a-z0-9]+ — single-byte, so substr == char)
     var syms = wf.select(col("word"), col("freq"),
@@ -3288,7 +3143,6 @@ object TextOps {
     // force the final table once, then release its parent
     syms.count()
     if (prev != null) prev.unpersist(false)
-    wf.unpersist(false)
     import spark.implicits._
     val mergeDf = merges.toSeq
       .toDF("merge_rank", "lhs", "rhs", "weight")

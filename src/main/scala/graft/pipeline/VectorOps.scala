@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.util.LruMemo
+import graft.util.{LruMemo, Staged}
 import graft.util.LruMemo.releaseCheckpoint
 
 /**
@@ -193,9 +193,8 @@ object VectorOps {
     * join — at 100 TB the byte alphabet (256 per position) would be
     * widened to 16-bit chunks, same plan. Returns (a, b, ham). */
   def hammingNearDupPairs(emb: DataFrame, maxHam: Int = 20,
-                          dims: Int = 64): DataFrame = {
-    val sk = signSketch(emb, dims)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                          dims: Int = 64): DataFrame = Staged.run { stage =>
+    val sk = stage(signSketch(emb, dims))
     val ch = sk.select(col("vec_id"), col("lo"), col("hi"),
       explode(array((0 until 8).map { j =>
         val word = if (j < 4) col("lo") else col("hi")
@@ -211,13 +210,11 @@ object VectorOps {
     val cand = lhs.join(rhs, Seq("j", "c")).where(col("a") < col("b"))
       .select(col("a"), col("b"), col("alo"), col("ahi"),
         col("blo"), col("bhi")).distinct()
-    val out = cand.select(col("a"), col("b"),
+    cand.select(col("a"), col("b"),
         (bit_count(col("alo").bitwiseXOR(col("blo"))).cast("long") +
          bit_count(col("ahi").bitwiseXOR(col("bhi"))).cast("long")).as("ham"))
       .where(col("ham") <= maxHam)
       .localCheckpoint(true)
-    sk.unpersist(false)
-    out
   }
 
   /** Deterministic ±1 hyperplane matrix (md5-derived, see
@@ -268,8 +265,8 @@ object VectorOps {
    * with its registered parameters; PipelineSpec gates this).
    */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
-              bands: Int = 4, rowsPerBand: Int = 8, dims: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+              bands: Int = 4, rowsPerBand: Int = 8,
+              dims: Int = 64): DataFrame = Staged.run { stage =>
     val nPlanes = bands * rowsPerBand
     def withBands(df: DataFrame, idCol: String): DataFrame =
       df.select(col("vec_id").as(idCol), dvec(col("embedding")).as(idCol + "v"),
@@ -285,7 +282,7 @@ object VectorOps {
 
     // barrier: evaluate the nPlanes-projection signature once per vector,
     // not once per band reference (CollapseProject would inline it)
-    val c = withBands(corpus, "nb").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = stage(withBands(corpus, "nb"))
     val q = broadcast(withBands(queries, "q"))
     // dedup multi-band collisions on the (q, nb) id pair FIRST — distinct
     // over two longs, not over 2×64-element double arrays — then join the
@@ -301,11 +298,9 @@ object VectorOps {
         cosineBest(corpus.sparkSession, col("qv"), col("nbv")).as("sim"))
     // two-phase rank over the bucket candidates (a hot bucket no longer
     // funnels through one reducer sort)
-    val out = groupedTopK(scoredCand, "q", "nb", "sim", k)
+    groupedTopK(scoredCand, "q", "nb", "sim", k)
       .select(col("q"), col("nb"), round(col("sim"), 4).as("sim"))
-    val res = out.localCheckpoint(true)
-    c.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /** Embedding-cosine near-duplicate pairs: (a, b, sim) with a < b and
@@ -333,15 +328,12 @@ object VectorOps {
 
   def embeddingNearDupPairs(emb: DataFrame, threshold: Double = 0.95,
                             bands: Int = 16, rowsPerBand: Int = 4,
-                            dims: Int = 64): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                            dims: Int = 64): DataFrame = Staged.run { stage =>
     val nPlanes = bands * rowsPerBand
-    val vecs = emb.select(col("vec_id"), dvec(col("embedding")).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sigF = vecs
+    val vecs = stage(emb.select(col("vec_id"), dvec(col("embedding")).as("v")))
+    val sigF = stage(vecs
       .select(col("vec_id"),
-        lshSignatureBest(emb.sparkSession, col("v"), nPlanes, dims).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        lshSignatureBest(emb.sparkSession, col("v"), nPlanes, dims).as("sig")))
     val banded = sigF
       .select(col("vec_id"),
         explode(transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -355,16 +347,14 @@ object VectorOps {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")).distinct()
-    val out = cand
+    cand
       .join(vecs.select(col("vec_id").as("a"), col("v").as("va")), "a")
       .join(vecs.select(col("vec_id").as("b"), col("v").as("vb")), "b")
       .select(col("a"), col("b"),
         cosineBest(emb.sparkSession, col("va"), col("vb")).as("sim"))
       .where(col("sim") >= threshold)
       .select(col("a"), col("b"), round(col("sim"), 4).as("sim"))
-    val res = out.localCheckpoint(true)
-    Seq(vecs, sigF).foreach(_.unpersist(false))
-    res
+      .localCheckpoint(true)
   }
 
   /**
@@ -437,12 +427,10 @@ object VectorOps {
   /** Train the coarse quantizer and assign every corpus vector to its
     * cell — the build half of [[ivfTopK]], eager (the returned index's
     * assignment is materialized and persisted). */
-  def ivfBuild(corpus: DataFrame, k: Int = 16, iters: Int = 3): IvfIndex = {
+  def ivfBuild(corpus: DataFrame, k: Int = 16, iters: Int = 3): IvfIndex = Staged.run { stage =>
     import org.apache.spark.storage.StorageLevel
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val vecs = corpus.select(col("vec_id"), dvec(col("embedding")).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vecs = stage(corpus.select(col("vec_id"), dvec(col("embedding")).as("v")))
 
     // deterministic init: the k lowest vec_ids, cells 0..k−1 in id order.
     // Centroid state is a k-row DATAFRAME end to end (r15, VERDICT r14
@@ -497,8 +485,7 @@ object VectorOps {
     val indexed = assign(vecs)
       .select(col("vec_id").as("nb"), col("v").as("nbv"), col("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    indexed.count() // materialize before releasing the staging cache
-    vecs.unpersist(false)
+    indexed.count() // materialize before the staging cache is released
     // the k-row centroid checkpoint stays pinned with the index (the
     // IvfCache memo holds it for the session, like `indexed`)
     IvfIndex(centroids, indexed, k)
@@ -636,7 +623,7 @@ object VectorOps {
 
   def nswSearch(nn: DataFrame, emb: DataFrame, queries: DataFrame,
                 beam: Int = NswBeam, rounds: Int = NswRounds,
-                topK: Int = 10): DataFrame = {
+                topK: Int = 10): DataFrame = Staged.run { stage =>
     val spark = emb.sparkSession
     // NSW links are UNDIRECTED (Malkov §3: bidirectional connections
     // are what make the graph navigable from any entry) — the kNN
@@ -657,14 +644,13 @@ object VectorOps {
     // round, releasing its predecessor — search cost is now actually
     // beam×rounds-shaped, as the scaladoc always claimed (measured
     // 13.31 → 0.82 s, plan 14,594 → 50 lines).
-    val edges = nn.select(col("q").as("node"), col("nb"))
+    val edges = stage.checkpoint(nn.select(col("q").as("node"), col("nb"))
       .unionAll(nn.select(col("nb").as("node"), col("q").as("nb")))
-      .distinct()
-      .localCheckpoint(true)
-    val vecs = emb.select(col("vec_id").as("node"), dvec(col("embedding")).as("nv"))
-      .localCheckpoint(true)
-    val qs = queries.select(col("vec_id").as("q"), dvec(col("embedding")).as("qv"))
-      .localCheckpoint(true)
+      .distinct())
+    val vecs = stage.checkpoint(
+      emb.select(col("vec_id").as("node"), dvec(col("embedding")).as("nv")))
+    val qs = stage.checkpoint(
+      queries.select(col("vec_id").as("q"), dvec(col("embedding")).as("qv")))
     def score(cand: DataFrame): DataFrame =
       cand.join(vecs, "node").join(qs, "q")
         .select(col("q"), col("node"),
@@ -681,12 +667,11 @@ object VectorOps {
       if (lastBeam != null) releaseCheckpoint(lastBeam)
       lastBeam = beamDf
     }
+    if (lastBeam != null) stage.own(lastBeam)
     val fin = score(beamDf).where(col("node") =!= col("q"))
-    val out = groupedTopK(fin, "q", "node", "s", topK)
+    groupedTopK(fin, "q", "node", "s", topK)
       .select(col("q"), col("node").as("nb"), round(col("s"), 4).as("sim"))
       .localCheckpoint(true)
-    Seq(edges, vecs, qs, beamDf).foreach(releaseCheckpoint)
-    out
   }
 
   /** Embedding ISOTROPY audit: the cosine histogram over a
@@ -741,11 +726,10 @@ object VectorOps {
   /** One-shot build + search (tests and ad-hoc use; long-lived deployments
     * hold the [[IvfIndex]] and call [[ivfSearch]] per query batch). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, topK: Int = 10,
-              k: Int = 16, nProbe: Int = 10, iters: Int = 3): DataFrame = {
+              k: Int = 16, nProbe: Int = 10, iters: Int = 3): DataFrame = Staged.run { stage =>
     val idx = ivfBuild(corpus, k, iters)
-    val res = ivfSearch(idx, queries, topK, nProbe).localCheckpoint(true)
-    idx.indexed.unpersist(false)
-    res
+    Seq(idx.indexed, idx.centroids).foreach(stage.own)
+    ivfSearch(idx, queries, topK, nProbe).localCheckpoint(true)
   }
 
   /**
@@ -762,13 +746,11 @@ object VectorOps {
    * lambdas — unstaged, the max|x| pass would run dims× per vector.
    * Zero vectors (scale = 0) are excluded rather than emitting NaN.
    */
-  def quantizeInt8(emb: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val staged = emb
+  def quantizeInt8(emb: DataFrame): DataFrame = Staged.run { stage =>
+    val staged = stage(emb
       .select(col("vec_id"), dvec(col("embedding")).as("x"))
       .select(col("vec_id"), col("x"),
-        (array_max(transform(col("x"), a => abs(a))) / 127d).as("scale"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        (array_max(transform(col("x"), a => abs(a))) / 127d).as("scale")))
     val err2 = aggregate(
       transform(col("x"), a => pow(a - round(a / col("scale")) * col("scale"), 2)),
       lit(0d), (acc, e) => acc + e) / size(col("x"))
@@ -777,12 +759,10 @@ object VectorOps {
     // col("scale") makes Spark's lateral-column-alias resolution bind the
     // reference to the ROUNDED sibling alias, silently corrupting the
     // error term (measured: rms 4.66e-4 vs the true 4.71e-4)
-    val out = staged.where(col("scale") > 0)
+    staged.where(col("scale") > 0)
       .select(col("vec_id"), col("scale"), round(sqrt(err2), 6).as("rms_err"))
       .select(col("vec_id"), round(col("scale"), 6).as("scale"), col("rms_err"))
-    val res = out.localCheckpoint(true)
-    staged.unpersist(false)
-    res
+      .localCheckpoint(true)
   }
 
   /** Persist a trained index as parquet (centroids + cell assignment) —
@@ -924,30 +904,28 @@ object VectorOps {
     * [[IvfCache]] entry (its persistence would silently vanish and later
     * cached searches would re-scan parquet) — build a private base or
     * evict the cache entry first. */
-  def ivfAppend(index: IvfIndex, newVectors: DataFrame): IvfAppended = {
+  def ivfAppend(index: IvfIndex, newVectors: DataFrame): IvfAppended = Staged.run { stage =>
     import org.apache.spark.storage.StorageLevel
     val vecs = newVectors.select(col("vec_id"), dvec(col("embedding")).as("v"))
     // same broadcast nearest-centroid assignment as ivfBuild: k scored
     // rows per vector, folded map-side before the shuffle
-    val assigned = vecs.join(broadcast(index.centroids), lit(true))
+    val assigned = stage(vecs.join(broadcast(index.centroids), lit(true))
       .select(col("vec_id"), col("v"), col("cell"),
         cosineBest(newVectors.sparkSession, col("v"), col("cv")).as("s"))
       .groupBy(col("vec_id"))
       .agg(max_by(col("cell"), struct(col("s"), -col("cell"))).as("cell"),
         first(col("v")).as("v"))
-      .select(col("vec_id").as("nb"), col("v").as("nbv"), col("cell"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id").as("nb"), col("v").as("nbv"), col("cell")))
+    // the append CONSUMES the base index: its persisted assignment (6/7
+    // of the corpus, now duplicated inside `merged`) is released with the
+    // staging — otherwise every append leaks one full-corpus cache until
+    // storage memory dies. Callers keep using the returned index.
+    stage.own(index.indexed)
     val baseMean = meanAssignedCos(index.indexed, index.centroids)
     val appendedMean = meanAssignedCos(assigned, index.centroids)
     val merged = index.indexed.unionByName(assigned)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    merged.count() // materialize before releasing the staging caches
-    assigned.unpersist(false)
-    // the append CONSUMES the base index: its persisted assignment (6/7
-    // of the corpus, now duplicated inside `merged`) is released here —
-    // otherwise every append leaks one full-corpus cache until storage
-    // memory dies. Callers keep using the returned index.
-    index.indexed.unpersist(false)
+    merged.count() // materialize before the staging caches are released
     IvfAppended(IvfIndex(index.centroids, merged, index.k), baseMean, appendedMean)
   }
 
@@ -1022,11 +1000,11 @@ object VectorOps {
     val verdict = ivfHealth(index, isAppended, stalenessMicro, imbalanceFactor)
       .select(col("rebuild")).head().getBoolean(0)
     if (!verdict) (index, false)
-    else {
+    else Staged.run { stage =>
       val corpus = index.indexed
         .select(col("nb").as("vec_id"), col("nbv").as("embedding"))
       val rebuilt = ivfBuild(corpus, index.k, iters)
-      index.indexed.unpersist(false)
+      stage.own(index.indexed)
       (rebuilt, true)
     }
   }
@@ -1223,8 +1201,7 @@ object VectorOps {
     * init, no RNG. Codebook state on the driver is m×k×subDim doubles —
     * the same k-means-scale state IvfBuild already holds. */
   def pqTrain(corpus: DataFrame, m: Int = 8, k: Int = 16,
-              iters: Int = 3): PqCodebooks = {
-    import org.apache.spark.storage.StorageLevel
+              iters: Int = 3): PqCodebooks = Staged.run { stage =>
     val spark = corpus.sparkSession
     val subDim = {
       val d = corpus.select(size(col("embedding"))).head().getInt(0)
@@ -1238,8 +1215,7 @@ object VectorOps {
     val trainSrc =
       if (sampled.select(col("vec_id")).distinct().limit(k).count() < k) corpus
       else sampled
-    val sub = subVectors(trainSrc, m, subDim)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sub = stage(subVectors(trainSrc, m, subDim))
     // init: the sub-vectors of the k lowest sampled vec_ids, per subspace
     val initIds = sub.select(col("vec_id")).distinct()
       .orderBy(col("vec_id")).limit(k)
@@ -1269,7 +1245,6 @@ object VectorOps {
         bk.zipWithIndex.map { case (c, code) => means.getOrElse((j, code), c) }
       }
     }
-    sub.unpersist(false)
     PqCodebooks(m, subDim, k, books)
   }
 
@@ -1492,7 +1467,7 @@ object VectorOps {
    * dims-keyed equi-join of the two sum tables → #sources-row result.
    */
   def sourceEmbeddingDrift(emb: DataFrame, docs: DataFrame,
-                           scale: Long = 10000L): DataFrame = {
+                           scale: Long = 10000L): DataFrame = Staged.run { stage =>
     val s = scale.toDouble
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val q = emb
@@ -1502,12 +1477,11 @@ object VectorOps {
         floor(col("x") * s + lit(0.5d)).cast("long").as("xq"))
     // sources × dims rows; persisted so the global re-aggregation and
     // the norm branch reuse it instead of re-exploding the corpus
-    val perDim = q.groupBy(col("source"), col("i"))
-      .agg(sum(col("xq")).as("s1"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val perDim = stage(q.groupBy(col("source"), col("i"))
+      .agg(sum(col("xq")).as("s1"), count(lit(1)).as("n")))
     val glob = perDim.groupBy(col("i")).agg(sum(col("s1")).as("g1"))
     val bb = glob.agg(sum(dec(col("g1")) * dec(col("g1"))).as("bb"))
-    val res = perDim.join(broadcast(glob), "i")
+    perDim.join(broadcast(glob), "i")
       .groupBy(col("source"))
       .agg(sum(dec(col("s1")) * dec(col("g1"))).as("dd"),
         sum(dec(col("s1")) * dec(col("s1"))).as("aa"),
@@ -1517,9 +1491,7 @@ object VectorOps {
         round(col("dd").cast("double") /
           (sqrt(col("aa").cast("double")) * sqrt(col("bb").cast("double"))), 6)
           .as("cos_to_global"))
-    val out = res.localCheckpoint(true)
-    perDim.unpersist(false)
-    out
+      .localCheckpoint(true)
   }
 
   /** Topic-mix audit: the (source, label) contingency of the labeled

@@ -1,6 +1,5 @@
 package graft.projection
 
-import scala.collection.mutable
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,6 +7,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.log.BulkFactStore
 import graft.model.A
 import graft.snapshot.Snapshot
+import graft.util.LruMemo
 
 /**
  * Replays the driver's `events` table as a stream of backdated
@@ -39,10 +39,19 @@ object EventsReplay {
   // fine. An operator that ever UNIONs the two stores must remap ids.
   val VUser = 7000000L
 
-  private val cache = mutable.Map.empty[(SparkSession, String), Snapshot]
+  /** Memoized head snapshot per (session, events dir), LRU-bounded like
+    * every engine memo; eviction unpersists the three views persisted
+    * below. Builds run under this object's lock, so two callers never
+    * build (and cache) the same store twice. */
+  private val cache = new LruMemo[(SparkSession, String), Snapshot](
+    TpchGraph.MaxCachedSnapshots, { snap =>
+      snap.currentFacts.unpersist(false)
+      snap.store.factsDF.unpersist(false)
+      snap.store.touchesDF.unpersist(false)
+    })
 
   def snapshot(spark: SparkSession, dir: String): Snapshot = synchronized {
-    cache.getOrElseUpdate((spark, dir), {
+    cache.getOrBuild((spark, dir)) {
       val store = build(spark, dir)
       // persist the LOG tables, not just the head view: every asOf-pinned
       // read (asof_values/asof_diff/diff_*), version-chain walk and the
@@ -55,7 +64,7 @@ object EventsReplay {
       val snap = Snapshot.head(store)
       snap.currentFacts.persist(StorageLevel.MEMORY_AND_DISK)
       snap
-    })
+    }
   }
 
   /** The events table with `ts` as a proper µs TIMESTAMP — the shared

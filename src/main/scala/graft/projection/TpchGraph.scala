@@ -1,12 +1,12 @@
 package graft.projection
 
-import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.log.BulkFactStore
 import graft.model.{A, Fact}
 import graft.snapshot.Snapshot
+import graft.util.LruMemo
 
 /** Shared fact-row constructors for bulk (set-oriented) projections.
   * Every fact is built as a struct column matching the [[Fact]] schema and
@@ -99,19 +99,27 @@ object TpchGraph {
     * overflow past orderkey ≈ 33.5M). */
   val LiStride = 64L
 
-  private val cache = mutable.Map.empty[(SparkSession, String), Snapshot]
+  /** Snapshots each of the projection memos keeps pinned. */
+  private[graft] val MaxCachedSnapshots = 4
+
+  private val cache = new LruMemo[(SparkSession, String), Snapshot](MaxCachedSnapshots, snap => {
+    snap.currentFacts.unpersist(false)
+    snap.edges.unpersist(false)
+  })
 
   /** Memoized head snapshot per (session, sf dir); currentFacts and the
     * edges view are persisted so the per-query cost is the query itself,
     * not the projection rebuild (a real deployment would persist the fact
-    * log as Parquet once — FactLog.save — and open it per job). */
+    * log as Parquet once — FactLog.save — and open it per job). LRU-bounded
+    * like every engine memo, eviction unpersisting both views; builds run
+    * under this object's lock, so a store is never built twice. */
   def snapshot(spark: SparkSession, dir: String): Snapshot = synchronized {
-    cache.getOrElseUpdate((spark, dir), {
+    cache.getOrBuild((spark, dir)) {
       val snap = Snapshot.head(build(spark, dir))
       snap.currentFacts.persist(StorageLevel.MEMORY_AND_DISK)
       snap.edges.persist(StorageLevel.MEMORY_AND_DISK)
       snap
-    })
+    }
   }
 
   def build(spark: SparkSession, dir: String): BulkFactStore = {

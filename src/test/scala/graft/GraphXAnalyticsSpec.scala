@@ -668,8 +668,8 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     import graft.gx.RoundSteps
     val snap = TpchGraph.snapshot(spark, dir)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    def dumpAll(): Unit = RoundSteps.steps.valuesIterator.foreach { fn =>
-      assert(PlanDump.planText(fn(spark, snap), formatted = false).nonEmpty)
+    def dumpAll(): Unit = RoundSteps.steps.keysIterator.foreach { n =>
+      assert(PlanDump.text(spark, dir, n, mode = "").nonEmpty)
     }
     dumpAll() // builds the shared memoized frames the steps read
     val before = persisted
@@ -680,5 +680,19 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     assert(persisted == before)
     dumpAll()
     assert(persisted == before, "a step's staging checkpoint is still pinned after its dump")
+  }
+
+  test("PlanDump _inner plans are the executed plans over staged frames, nothing left pinned") {
+    def rddIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def cacheEntries = org.apache.spark.sql.graftshim.CacheEntries.count(spark)
+    Seq("decontaminate_inner", "unigram_logprob_inner", "bm25_scores_inner").foreach { n =>
+      val (ids0, entries0) = (rddIds, cacheEntries)
+      val text = PlanDump.text(spark, dir, n, mode = "")
+      assert(text.startsWith("AdaptiveSparkPlan isFinalPlan=true"), s"$n: ${text.take(200)}")
+      assert(text.contains("InMemoryTableScan"), s"$n reads no staged frame:\n$text")
+      assert(!text.linesIterator.next().contains("Scan ExistingRDD"), s"$n root is a checkpoint scan")
+      assert(rddIds -- ids0 == Set.empty[Int], s"$n left RDDs persisted")
+      assert(cacheEntries == entries0, s"$n left frames cached")
+    }
   }
 }
