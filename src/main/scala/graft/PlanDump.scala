@@ -55,18 +55,38 @@ object PlanDump {
         TextOps.bm25Scores(docs(s, d), Seq("spark", "join", "window"))))
   }
 
+  // `durable_` names: the sf dir's events store saved to a temp root and
+  // reopened, then the read a temporal_mix request makes at inner pins
+  private val durable: Map[String, (graft.log.BulkFactStore, Long) => DataFrame] = {
+    import graft.model.{A, PropType}
+    def at(log: graft.log.BulkFactStore, tx: Long) = graft.snapshot.Snapshot.head(log).asOfTxId(tx)
+    Map(
+      "durable_asof_prop" -> ((log, head) => at(log, head / 2).prop("value", PropType.PDouble, A.Vertex)
+        .join(at(log, head / 2).prop("last_type", PropType.PString, A.Vertex).withColumnRenamed("v", "type"), "e")),
+      "durable_diff" -> ((log, head) => at(log, head * 3 / 4).differenceFacts(at(log, head / 4))),
+      "durable_chain" -> ((log, _) => graft.temporal.VersionChains.chains(log)
+        .where(col("e") === graft.projection.EventsReplay.VUser + 1)))
+  }
+
   /** The plan text printed for `name` in `mode` ("", "formatted" or
-    * "codegen"): an `_inner` name, one of the iterative operators'
-    * per-round [[graft.gx.RoundSteps]] (the registered queries return
-    * checkpointed results, so the inner Exchange placement is only
-    * visible through these), or a registered query. Whatever the step
-    * pinned is released once the text is captured. */
+    * "codegen"): an `_inner` name, a `durable_` read, one of the
+    * iterative operators' per-round [[graft.gx.RoundSteps]] (the
+    * registered queries return checkpointed results, so the inner
+    * Exchange placement is only visible through these), or a registered
+    * query. Whatever the step pinned or wrote is released once the text
+    * is captured. */
   private[graft] def text(spark: SparkSession, dir: String, name: String,
                           mode: String): String = {
     val (qe, release) = inner.get(name) match {
       case Some(call) =>
         val (qe, result) = lastCheckpointPlan(spark)(call(spark, dir))
         (qe, () => LruMemo.releaseCheckpoint(result))
+      case None if durable.contains(name) =>
+        val root = java.nio.file.Files.createTempDirectory("graft_durable").toFile
+        graft.projection.EventsReplay.build(spark, dir).save(root.toString)
+        val log = graft.log.FactLog.open(spark, root.toString)
+        (durable(name)(log, log.headTx).queryExecution,
+          () => org.apache.commons.io.FileUtils.deleteDirectory(root))
       case None =>
         val step = graft.gx.RoundSteps.steps.get(name)
           .map(_(spark, graft.projection.TpchGraph.snapshot(spark, dir)))

@@ -2,7 +2,12 @@ package graft.log
 
 import scala.collection.mutable
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.graftshim.Relations
+import org.apache.spark.sql.types.StructType
 import graft.model.{A, Fact, Touch, TxMeta}
 
 /**
@@ -51,10 +56,16 @@ trait FactStore {
     * reads PRUNE files instead of scanning the whole history — the
     * 100 TB time-travel path (SURVEY §1.4). */
   def txBucketSize: Option[Long] = None
+
+  /** Persist the store in the durable layout [[FactLog.open]] reopens;
+    * `preDeduped` survives the round-trip via `_graft_meta`. */
+  def save(root: String, txBucketSize: Long = 1000L): Unit =
+    FactLog.write(root, factsDF, touchesDF, txsDF, txBucketSize, preDeduped)
 }
 
 /** Bulk, set-oriented store: all three tables supplied as DataFrames.
-  * Used by projections that build the log with pure DataFrame transforms. */
+  * Used by projections that build the log with pure DataFrame transforms,
+  * and by [[FactLog.open]] over a log saved in the layout it describes. */
 final class BulkFactStore(
     val spark: SparkSession,
     val factsDF: DataFrame,
@@ -79,35 +90,23 @@ final class BulkFactStore(
   def resolveTx(at: Timestamp): Long = txIndex._1.floor(at)
 
   def headTx: Long = txIndex._2
-
-  /** Persist this store in the same tx-bucketed parquet layout the
-    * mutable log writes ([[FactLog.open]] reopens it): the durable path
-    * for compacted/derived stores. The `preDeduped` contract survives the
-    * round-trip via `_graft_meta`, so a reopened compacted store still
-    * skips the latest-wins shuffle on every snapshot read. */
-  def save(root: String, txBucketSize: Long = 1000L): Unit = {
-    factsDF.withColumn("txBucket", expr(s"tx div $txBucketSize"))
-      .write.mode("overwrite").partitionBy("txBucket").parquet(s"$root/facts")
-    touchesDF.write.mode("overwrite").parquet(s"$root/touches")
-    txsDF.write.mode("overwrite").parquet(s"$root/txs")
-    StoreMeta.write(spark, root, txBucketSize, preDeduped)
-  }
 }
 
 /** `_graft_meta` sidecar: key=value lines written through the Hadoop
   * FileSystem API resolved from the session's hadoopConfiguration, so
   * save/open work against ANY Spark-reachable root (hdfs://, s3a://,
-  * file:), not just a driver-local path. */
+  * file:), not just a driver-local path. `buckets` is the layout's n
+  * ([[FactLog]]); stores saved before that layout have none. */
 private[graft] object StoreMeta {
   import org.apache.hadoop.fs.Path
 
   def write(spark: SparkSession, root: String, txBucketSize: Long,
-            preDeduped: Boolean): Unit = {
+            preDeduped: Boolean, buckets: Int): Unit = {
     val path = new Path(root, "_graft_meta")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(path, true)
     try out.write(
-      s"txBucketSize=$txBucketSize\npreDeduped=$preDeduped\n"
+      s"txBucketSize=$txBucketSize\npreDeduped=$preDeduped\nbuckets=$buckets\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -130,7 +129,7 @@ private[graft] object StoreMeta {
 object BulkFactStore {
   /** Single-epoch scaffold — empty touches + one tx-0 metadata row: the
     * shape every one-shot backfill store shares (bulk projections, diff
-    * graphs, reopened bucketed tables). */
+    * graphs). */
   def singleTx(spark: SparkSession, factsDF: DataFrame,
                preDeduped: Boolean = false,
                providedEdges: Option[DataFrame] = None): BulkFactStore = {
@@ -158,14 +157,16 @@ object BulkFactStore {
  *    their own pin;
  *  - per-element tx set: version-chain navigation in O(log chain);
  *  - instant staircase ([[TxStaircase]]): [[resolveTx]] in O(log txs).
- * Whole-graph reads ([[allFacts]] and the DataFrames below) still scan
- * the log.
+ * Whole-graph reads ([[allFacts]]) still scan the log.
  *
  * The DataFrames are ONE partition each: their rows already sit in this
  * JVM, so splitting them buys no parallelism, and a single partition
  * satisfies every clustered distribution — latest-wins and per-element
  * windows over the log plan no exchange (a snapshot read is one job,
- * with no shuffle).
+ * with no shuffle). Rows are encoded once ([[EncodedRows]]), so a read
+ * encodes O(new facts), not O(log) — at the price of driver memory: each
+ * fact, touch and tx once read is also held as an encoded row (roughly
+ * 100–200 bytes a fact) for the life of the log.
  */
 final class MemFactLog(val spark: SparkSession) extends FactStore {
   import spark.implicits._
@@ -192,6 +193,9 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
   private val refEdges = mutable.LongMap.empty[mutable.LinkedHashSet[Long]]
   /** instant → tx staircase, appended at every commit. */
   private val staircase = new TxStaircase
+  private val factRows  = new EncodedRows(facts)
+  private val touchRows = new EncodedRows(touches)
+  private val txRows    = new EncodedRows(txs)
   private var nextTx: Long = 0L
   private var nextEntity: Long = 1L
 
@@ -273,55 +277,79 @@ final class MemFactLog(val spark: SparkSession) extends FactStore {
   def allTouches: Seq[Touch] = synchronized(touches.toSeq)
   def allTxs: Seq[TxMeta] = synchronized(txs.toSeq)
 
-  def factsDF: DataFrame = {
-    val ds: Dataset[Fact] = spark.createDataset(allFacts)
-    ds.toDF().coalesce(1)
-  }
-  def touchesDF: DataFrame = spark.createDataset(allTouches).toDF().coalesce(1)
-  def txsDF: DataFrame = spark.createDataset(allTxs).toDF().coalesce(1)
+  def factsDF: DataFrame = factRows.df(spark, this)
+  def touchesDF: DataFrame = touchRows.df(spark, this)
+  def txsDF: DataFrame = txRows.df(spark, this)
 
-  /** Persist the log as Parquet partitioned by tx-range buckets so later
-    * asOf reads prune files (SURVEY §1.4: partition by tx-range). */
-  def save(root: String, txBucketSize: Long = 1000L): Unit = {
-    import org.apache.spark.sql.functions._
-    factsDF.withColumn("txBucket", expr(s"tx div $txBucketSize"))
-      .write.mode("overwrite").partitionBy("txBucket").parquet(s"$root/facts")
-    touchesDF.write.mode("overwrite").parquet(s"$root/touches")
-    txsDF.write.mode("overwrite").parquet(s"$root/txs")
-    StoreMeta.write(spark, root, txBucketSize, preDeduped = false)
-  }
-
-  /** Persist the log as a BUCKETED table (hash-bucketed + sorted by `e`):
-    * downstream per-entity joins and the latest-wins aggregation read
-    * co-located buckets and skip their shuffle (`bucketBy` needs a table
-    * catalog, hence saveAsTable rather than a path write). */
-  def saveBucketedTable(table: String, buckets: Int = 32): Unit =
-    factsDF.write.mode("overwrite")
-      .bucketBy(buckets, "e").sortBy("e", "attr")
-      .saveAsTable(table)
+  /** Facts encoded so far for [[factsDF]]. */
+  private[graft] def encodedFacts: Int = synchronized(factRows.encoded)
 }
 
-object FactLog {
-  /** Open a hash-bucketed fact table (saved by
-    * [[MemFactLog.saveBucketedTable]] or any `bucketBy(n, "e")` writer) as
-    * a store for point-read-heavy workloads: an `e = id` filter prunes the
-    * scan to ONE bucket (the plan shows `SelectedBucketsCount: 1 out of n`)
-    * instead of scanning the whole fact set — the Spark analog of the
-    * reference's O(log n) EAVT point read (FluxGraph.java:186-198). The
-    * same layout co-locates per-entity joins/aggregations (no exchange). */
-  def openBucketedTable(spark: SparkSession, table: String,
-                        preDeduped: Boolean = false): BulkFactStore =
-    BulkFactStore.singleTx(spark, spark.table(table), preDeduped)
+/** The rows of an append-only driver buffer, each encoded once: a read
+  * under the owning log's lock encodes what was appended since the last
+  * read, and the frame holds an immutable vector, blind to later appends. */
+private final class EncodedRows[T: TypeTag](src: mutable.ArrayBuffer[T]) {
+  private val enc = ExpressionEncoder[T]()
+  private val toRow = enc.createSerializer()
+  private var rows = Vector.empty[InternalRow]
+  /** Encodings done so far. */
+  var encoded = 0
+  def df(spark: SparkSession, lock: AnyRef): DataFrame = {
+    val upToDate = lock.synchronized {
+      rows ++= src.view.drop(rows.size).map { t => encoded += 1; toRow(t).copy() }; rows
+    }
+    Relations.localRows(spark, enc.schema, upToDate).coalesce(1)
+  }
+}
 
-  /** Reopen a saved log as a bulk store; the retained txBucket partition
-    * column lets Snapshot asOf reads prune whole tx-range directories,
-    * and a persisted `preDeduped=true` (compacted store) keeps the
-    * max_by-free snapshot path across the durability round-trip. */
+/**
+ * The durable layout: one writer behind both stores' `save`, read back
+ * by [[open]] — the Spark analog of the EAVT index the reference reads
+ * directly (FluxEdge.java:80-89). `facts/` is parquet partitioned by
+ * `txBucket = tx div txBucketSize` (asOf and since reads prune tx
+ * ranges) and bucketed by `e` into n files per partition, sorted by
+ * (e, attr, tx); `touches/` is bucketed by `e`, sorted by (e, tx);
+ * `txs/` is plain; `_graft_meta` is [[StoreMeta]]. Each table is
+ * repartitioned on `e` into n tasks first, so every (txBucket, bucket)
+ * pair is one file. Reopened with the spec, scans report hash
+ * clustering on `e`: latest-wins, `prop`⋈`prop`, the fused diff and
+ * version-chain windows plan no exchange, and `e = id` reads one bucket.
+ * n = max(1, ⌈estimated facts size ∕ spark.sql.files.maxPartitionBytes⌉),
+ * one bucket per split a scan would make anyway, capped at
+ * spark.sql.sources.bucketing.maxBuckets; fixed at write. A meta without
+ * `buckets` (a store saved before this layout) opens as plain parquet.
+ */
+object FactLog {
+  import org.apache.spark.sql.catalyst.catalog.BucketSpec
+  import org.apache.spark.sql.functions.{col, expr}
+
+  private def factsSpec(n: Int) = BucketSpec(n, Seq("e"), Seq("e", "attr", "tx"))
+  private def touchesSpec(n: Int) = BucketSpec(n, Seq("e"), Seq("e", "tx"))
+
+  private[log] def write(root: String, facts: DataFrame, touches: DataFrame, txs: DataFrame,
+                         txBucketSize: Long, preDeduped: Boolean): Unit = {
+    val conf = facts.sparkSession.sessionState.conf
+    val size = facts.queryExecution.optimizedPlan.stats.sizeInBytes
+    val n = ((size + conf.filesMaxPartitionBytes - 1) / conf.filesMaxPartitionBytes)
+      .max(1).min(conf.bucketingMaxBuckets).toInt
+    Relations.writeBucketed(facts.withColumn("txBucket", expr(s"tx div $txBucketSize"))
+      .repartition(n, col("e")), s"$root/facts", Seq("txBucket"), factsSpec(n))
+    Relations.writeBucketed(touches.repartition(n, col("e")), s"$root/touches", Nil, touchesSpec(n))
+    txs.write.mode("overwrite").parquet(s"$root/txs")
+    StoreMeta.write(facts.sparkSession, root, txBucketSize, preDeduped, n)
+  }
+
+  /** Reopen a saved log as a bulk store: asOf reads prune txBucket
+    * directories, per-entity reads skip their shuffle, and a persisted
+    * `preDeduped=true` (compacted store) keeps the max_by-free path. */
   def open(spark: SparkSession, root: String): BulkFactStore = {
     val meta = StoreMeta.read(spark, root)
+    def table(name: String, schema: StructType, spec: Int => BucketSpec): DataFrame =
+      meta.get("buckets").flatMap(_.toIntOption).fold(spark.read.parquet(s"$root/$name"))(
+        n => Relations.readBucketed(spark, s"$root/$name", schema, spec(n)))
     new BulkFactStore(spark,
-      spark.read.parquet(s"$root/facts"),
-      spark.read.parquet(s"$root/touches"),
+      table("facts", Encoders.product[Fact].schema.add("txBucket", "long"), factsSpec),
+      table("touches", Encoders.product[Touch].schema, touchesSpec),
       spark.read.parquet(s"$root/txs"),
       preDeduped = meta.get("preDeduped").contains("true"),
       txBucketSize = meta.get("txBucketSize").flatMap(_.toLongOption))

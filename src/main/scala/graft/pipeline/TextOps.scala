@@ -346,7 +346,7 @@ object TextOps {
    *
    * Scale shape: in production the history side of this join IS the
    * persisted band index (the banded table saved bucketed by its join
-   * key, the [[graft.log.MemFactLog.saveBucketedTable]] discipline —
+   * key, the bucketed layout of [[graft.log.FactLog]] —
    * ~bands rows per corpus doc, append-only as batches land), so the
    * nightly run computes signatures for the BATCH only and joins
    * shuffle-free against history's layout; history text is touched only
@@ -2193,8 +2193,8 @@ object TextOps {
    * Scale shape: the batch is small relative to history (a day's crawl
    * vs the accumulated corpus), so the anti-join shuffles the BATCH to
    * history's layout, never the reverse: persist the historical
-   * fingerprint set as a table bucketed by the join key (the
-   * [[graft.log.MemFactLog.saveBucketedTable]] discipline) and the
+   * fingerprint set as a table bucketed by the join key (the layout
+   * [[graft.log.FactLog]] gives the fact log) and the
    * nightly run reads it shuffle-free. Keys here are the normalized
    * text itself so the DuckDB oracle replays string-exactly; at 100 TB
    * you key `xxhash64(norm)` — 8-byte keys, same plan (collisions

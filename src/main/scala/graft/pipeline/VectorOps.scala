@@ -487,7 +487,7 @@ object VectorOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     indexed.count() // materialize before the staging cache is released
     // the k-row centroid checkpoint stays pinned with the index (the
-    // IvfCache memo holds it for the session, like `indexed`)
+    // IvfCache memo holds it and releases both on eviction)
     IvfIndex(centroids, indexed, k)
   }
 
@@ -789,11 +789,15 @@ object VectorOps {
   /** Memoized trained IVF index per (session, sf dir) — the deployment
     * shape: the index is built once (a `build_ivf` cost, like the graph
     * projections) and every search reuses it. LRU-bounded at
-    * [[MaxCachedIndexes]]; eviction unpersists the assignment table. */
+    * [[MaxCachedIndexes]]; eviction unpersists the assignment table and
+    * releases the centroid checkpoint. */
   object IvfCache {
+    private def release(ix: IvfIndex): Unit = {
+      ix.indexed.unpersist(false)
+      releaseCheckpoint(ix.centroids)
+    }
     private val cache =
-      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](
-        MaxCachedIndexes, _.indexed.unpersist(false))
+      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](MaxCachedIndexes, release)
     def index(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
       cache.getOrBuild((spark, dir))(
         ivfBuild(spark.read.parquet(s"$dir/embeddings.parquet")))
@@ -807,8 +811,7 @@ object VectorOps {
       * assignment, not a per-search parquet re-scan (plan-asserted in
       * PipelineSpec). */
     private val openedCache =
-      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](
-        MaxCachedIndexes, _.indexed.unpersist(false))
+      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](MaxCachedIndexes, release)
     def opened(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
       openedCache.getOrBuild((spark, dir)) {
         val root = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_opened_${math.abs(dir.hashCode)}"
@@ -830,8 +833,7 @@ object VectorOps {
       * k-means, O(N·√k) assignment) — composes without touching
       * [[semanticDedupPairs]]. */
     private val dedupCache =
-      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](
-        MaxCachedIndexes, _.indexed.unpersist(false))
+      new LruMemo[(org.apache.spark.sql.SparkSession, String), IvfIndex](MaxCachedIndexes, release)
     def dedupIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
       dedupCache.getOrBuild((spark, dir)) {
         val e = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -844,11 +846,10 @@ object VectorOps {
       * self-search runs once per (session, sf dir) instead of once per
       * caller. The localCheckpoint below is the memo's contract —
       * [[knnGraph]] itself returns a LAZY plan, and caching that would
-      * re-run the cell join per caller; eviction needs no unpersist
-      * (ContextCleaner reclaims checkpoint blocks). */
+      * re-run the cell join per caller; eviction releases the checkpoint. */
     private val knnCache =
       new LruMemo[(org.apache.spark.sql.SparkSession, String), DataFrame](
-        MaxCachedIndexes, _ => ())
+        MaxCachedIndexes, releaseCheckpoint)
     def knnGraphFrame(spark: org.apache.spark.sql.SparkSession,
                       dir: String): DataFrame =
       knnCache.getOrBuild((spark, dir)) {

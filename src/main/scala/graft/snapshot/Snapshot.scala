@@ -71,13 +71,14 @@ final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
   /** The current (latest-wins, retraction-filtered) fact set: one row per
     * live (e, attr).
     *
-    * Physical shape: the latest-wins step executes as a `SortAggregate`
-    * (partial + final around one shuffle on (e, attr)), not a hash
-    * aggregation — `max_by`'s buffer holds the payload struct, which the
-    * fixed-width hash-aggregation map cannot store. The payload struct
-    * carries all seven value columns and is built below the aggregation,
-    * so a typed read such as [[prop]] still decodes every value column
-    * even though it projects one. */
+    * Physical shape: a `SortAggregate` (partial + final around one
+    * shuffle on (e, attr)), not a hash aggregation — `max_by`'s buffer
+    * holds the payload struct, which the fixed-width hash map cannot
+    * store. Input already clustered by `e` (the bucketed durable layout
+    * of [[graft.log.FactLog]], the one-partition interactive log) plans
+    * no exchange; a Sort stays, as a bucket spans one file per txBucket.
+    * The payload carries all seven value columns, built below the
+    * aggregation, so a typed [[prop]] still decodes every one. */
   lazy val currentFacts: DataFrame = {
     if (store.preDeduped) {
       // at most one fact per (e, attr) by construction: the latest-wins
@@ -218,9 +219,10 @@ final class Snapshot(val store: FactStore, val asOfTx: Long = Long.MaxValue) {
    * element's type fact only if a non-type fact survives) is a window
    * count over the already-aggregated rows, so the whole diff is one
    * full shuffle on (e, attr) plus one shuffle of the deduped output on
-   * e — no join at all. At 100 TB this halves the data moved and removes
-   * the join hash tables; the working-set filter lands BELOW the
-   * aggregation, so a scoped diff shuffles only the scoped history.
+   * e — no join at all, and no shuffle over a log clustered by `e`. At
+   * 100 TB this halves the data moved and removes the join hash tables;
+   * the working-set filter lands BELOW the aggregation, so a scoped diff
+   * shuffles only the scoped history.
    */
   private def fusedDifference(otherTx: Long, workingSet: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window

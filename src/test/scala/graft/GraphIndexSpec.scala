@@ -135,9 +135,12 @@ class GraphIndexSpec extends AnyFunSuite {
             op()
             checkReads(g, ids.toSeq, Long.MaxValue, s"seed=$seed op=$n inTx")
           }
+          encodedAgree(g.log, s"seed=$seed op=$n inTx")
         }
+        encodedAgree(g.log, s"seed=$seed op=$n after inTx")
       } else op()
       if (n % 10 == 0) {
+        encodedAgree(g.log, s"seed=$seed op=$n")
         checkReads(g, ids.toSeq, Long.MaxValue, s"seed=$seed op=$n head")
         val pin = rnd.nextInt(g.log.headTx.toInt + 2) - 1L
         checkReads(g, ids.toSeq, pin, s"seed=$seed op=$n pin=$pin")
@@ -156,6 +159,14 @@ class GraphIndexSpec extends AnyFunSuite {
       }
     }
     assert(g.log.allFacts.exists(!_.added), s"seed=$seed: history has no retraction")
+  }
+
+  /** The log's encode-once DataFrame equals a fresh encoding of every
+    * committed fact, row for row. */
+  private def encodedAgree(log: MemFactLog, ctx: String): Unit = {
+    import TestSpark.spark.implicits._
+    assert(log.factsDF.collect().toSeq ==
+      TestSpark.spark.createDataset(log.allFacts).toDF().collect().toSeq, s"$ctx factsDF")
   }
 
   /** Every per-element read of every element ever created, at `pin`

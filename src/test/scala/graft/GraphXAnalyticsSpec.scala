@@ -695,4 +695,19 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
       assert(cacheEntries == entries0, s"$n left frames cached")
     }
   }
+
+  test("TpchGraph.snapshot: an evicted build leaves no persisted RDD behind") {
+    import graft.projection.TpchGraph.MaxCachedSnapshots
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val dirs = TestSpark.fixtureCopies(dir, MaxCachedSnapshots + 1,
+      Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem"))
+    val before = persisted
+    val first = TpchGraph.snapshot(spark, dirs.head)
+    assert(first.currentFacts.count() > 0 && first.edges.count() > 0)
+    // currentFacts, edges and the lineitem frame both of them read
+    val pinned = persisted -- before
+    assert(pinned.size == 3, s"expected three persisted frames, got $pinned")
+    dirs.tail.foreach(d => TpchGraph.snapshot(spark, d).edges.count())
+    assert((persisted & pinned).isEmpty, "the evicted build left RDDs persisted")
+  }
 }

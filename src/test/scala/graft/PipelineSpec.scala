@@ -830,6 +830,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(VectorOps.PqCache.cachedCount <= VectorOps.MaxCachedIndexes)
   }
 
+  test("IvfCache: MaxCachedIndexes + 1 keys evict the LRU entry and release all of its RDDs") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // one small seeded corpus, written under a fresh root per key: reads
+    // of distinct paths plan differently, so no two builds share a cache entry
+    val rnd = new scala.util.Random(3)
+    val corpus = (0L until 300L).map(i => (i, Array.fill(8)(rnd.nextFloat()))).toDF("vec_id", "embedding")
+    val dirs = (0 to VectorOps.MaxCachedIndexes).map { _ =>
+      val dir = java.nio.file.Files.createTempDirectory("graftivf").toString
+      corpus.write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    // index: the assignment cache and the centroid checkpoint; kNN graph:
+    // its checkpoint plus the dedup-scaled index it searches
+    for ((name, build, nPinned) <- Seq[(String, String => Any, Int)](
+        ("index", VectorOps.IvfCache.index(spark, _), 2),
+        ("knnGraphFrame", VectorOps.IvfCache.knnGraphFrame(spark, _), 3))) {
+      val before = persisted
+      build(dirs.head)
+      val pinned = persisted -- before
+      assert(pinned.size == nPinned, s"$name: expected $nPinned persisted RDDs, got $pinned")
+      dirs.tail.foreach(build)
+      assert((persisted & pinned).isEmpty, s"$name: the evicted entry left RDDs persisted")
+    }
+  }
+
   test("LruMemo: a lost build race goes to onEvict once; a failed build leaves no entry") {
     import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
     val evicted = new ConcurrentLinkedQueue[AnyRef]()

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.graph.GraftGraph
+import graft.log.{BulkFactStore, FactLog}
 import graft.util.SkewJoin
 
 class SkewAndBucketingSpec extends AnyFunSuite {
@@ -75,45 +76,38 @@ class SkewAndBucketingSpec extends AnyFunSuite {
     }
   }
 
+  private def savedWithBuckets(g: GraftGraph, n: Int): BulkFactStore =
+    FactLog.open(spark, TestSpark.savedWithBuckets(g.log, n))
+
   test("bucketed fact table: point lookup prunes to one bucket and reads correct values") {
     val g = new GraftGraph(spark)
     val vs = (1 to 50).map(i => { val v = g.addVertex(); v.setProperty("n", i.toLong); v })
-    g.log.saveBucketedTable("graft_point_facts", buckets = 8)
-    try {
-      val store = graft.log.FactLog.openBucketedTable(spark, "graft_point_facts")
-      val target = vs(16)
-      // point read THROUGH the snapshot stack: the e = id filter must push
-      // below the latest-wins aggregation into the bucketed scan
-      val snap = graft.snapshot.Snapshot.head(store)
-      val df = snap.currentFacts.where(col("e") === target.id)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
-        s"expected bucket pruning on point lookup:\n$plan")
-      // and the handle facade reads the right value over the same store
-      val view = new graft.graph.SnapshotGraphView(snap)
-      assert(view.vertex(target.id).get.getProperty("n") == 17L)
-      assert(view.vertex(-1L).isEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_point_facts")
-    }
+    val store = savedWithBuckets(g, 8)
+    val target = vs(16)
+    // point read THROUGH the snapshot stack: the e = id filter must push
+    // below the latest-wins aggregation into the bucketed scan
+    val snap = graft.snapshot.Snapshot.head(store)
+    val df = snap.currentFacts.where(col("e") === target.id)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
+      s"expected bucket pruning on point lookup:\n$plan")
+    // and the handle facade reads the right value over the same store
+    val view = new graft.graph.SnapshotGraphView(snap)
+    assert(view.vertex(target.id).get.getProperty("n") == 17L)
+    assert(view.vertex(-1L).isEmpty)
   }
 
   test("bucketed fact table: per-entity aggregation plans without an exchange") {
     val g = new GraftGraph(spark)
     val vs = (1 to 50).map(_ => g.addVertex())
     vs.foreach(v => v.setProperty("p", 1L))
-    g.log.saveBucketedTable("graft_bucketed_facts", buckets = 4)
-    try {
-      val t = spark.table("graft_bucketed_facts")
-      // group by the bucket column: bucketed layout satisfies the
-      // distribution, so no shuffle exchange appears before the agg
-      val agg = t.groupBy(col("e")).agg(max(col("tx")))
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning(e#"),
-        s"expected no exchange on bucketed groupBy:\n$plan")
-      assert(agg.count() == 50) // one row per vertex entity
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_facts")
-    }
+    val t = savedWithBuckets(g, 4).factsDF
+    // group by the bucket column: bucketed layout satisfies the
+    // distribution, so no shuffle exchange appears before the agg
+    val agg = t.groupBy(col("e")).agg(max(col("tx")))
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning(e#"),
+      s"expected no exchange on bucketed groupBy:\n$plan")
+    assert(agg.count() == 50) // one row per vertex entity
   }
 }

@@ -1,23 +1,27 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.debug.codegenStringSeq
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import graft.graph.GraftGraph
-import graft.log.{BulkFactStore, FactLog}
-import graft.model.{A, PropType}
+import graft.log.{BulkFactStore, FactLog, MemFactLog}
+import graft.model.{A, Fact, PropType, Touch}
 import graft.snapshot.Snapshot
 import graft.temporal.VersionChains
 
 /** The per-request costs of a temporal read: pins enter generated code as
-  * bound parameters, so reads at different pins share one compiled class,
-  * and the driver-resident log is one partition, so latest-wins over it
-  * needs no exchange. */
+  * bound parameters, so reads at different pins share one compiled class;
+  * the driver-resident log is one partition, encoded once, so latest-wins
+  * over it needs no exchange and a read encodes only new facts; and the
+  * durable log is bucketed by entity, so per-entity reads over it need no
+  * shuffle. */
 class TemporalReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -111,5 +115,87 @@ class TemporalReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     noExchange(VersionChains.chains(log), "VersionChains.chains")
     assert(rows(VersionChains.chains(log)) == rows(VersionChains.chains(spread)))
     assert(rows(VersionChains.chains(log)).size == log.allTouches.size)
+  }
+
+  /** The reads of the snapshot and temporal layers that group, join or
+    * window by entity, at a pin pair. */
+  private val entityReads: Seq[(String, (Snapshot, Long, Long) => DataFrame)] = Seq(
+    ("asOfTxId.prop", (s, p, _) => s.asOfTxId(p).prop("p", PropType.PLong, A.Vertex)),
+    ("prop join prop", (s, p, q) => s.asOfTxId(p).prop("p", PropType.PLong, A.Vertex)
+      .join(s.asOfTxId(q).prop("p", PropType.PLong, A.Vertex).withColumnRenamed("v", "v2"), "e")),
+    ("fused differenceFacts", (s, p, q) => s.asOfTxId(p).differenceFacts(s.asOfTxId(q))),
+    ("VersionChains.chains", (s, _, _) => VersionChains.chains(s.store)))
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  test("a bucketed durable log plans per-entity reads without a shuffle; rows unchanged") {
+    val g = history()
+    val mem = Snapshot.head(g.log)
+    val rnd = new Random(5)
+    for (n <- Seq(1, 3)) {
+      val store = FactLog.open(spark, TestSpark.savedWithBuckets(g.log, n, txBucketSize = 10L))
+      val durable = Snapshot.head(store)
+      for ((name, read) <- entityReads; _ <- 1 to 3) {
+        val (p, q) = (rnd.nextInt(g.log.headTx.toInt + 1).toLong, rnd.nextInt(g.log.headTx.toInt + 1).toLong)
+        val df = read(durable, p, q)
+        val got = rows(df)
+        assert(got == rows(read(mem, p, q)), s"$name at ($p, $q), $n buckets: rows differ from the MemFactLog read")
+        assert(shuffles(df).isEmpty,
+          s"$name at ($p, $q), $n buckets: shuffle over the log:\n${df.queryExecution.executedPlan}")
+      }
+    }
+  }
+
+  test("a store saved in the tx-partitioned layout without buckets still opens; rows unchanged") {
+    val g = history()
+    val dir = Files.createTempDirectory("graftunbucketed").toString
+    g.log.factsDF.withColumn("txBucket", expr("tx div 10"))
+      .write.partitionBy("txBucket").parquet(s"$dir/facts")
+    g.log.touchesDF.write.parquet(s"$dir/touches")
+    g.log.txsDF.write.parquet(s"$dir/txs")
+    Files.write(Paths.get(dir, "_graft_meta"), "txBucketSize=10\npreDeduped=false\n".getBytes("UTF-8"))
+    val store = FactLog.open(spark, dir)
+    assert(store.txBucketSize.contains(10L))
+    val scans = collect(store.factsDF.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(_.relation.bucketSpec.isEmpty))
+    val (durable, mem) = (Snapshot.head(store), Snapshot.head(g.log))
+    for ((name, read) <- entityReads; (p, q) <- Seq((37L, 14L), (12L, 30L))) {
+      assert(rows(read(durable, p, q)) == rows(read(mem, p, q)), s"$name at ($p, $q)")
+    }
+    assert(rows(durable.since(20L)) == rows(mem.since(20L)))
+    // the contrast the bucketed layout removes: latest-wins shuffles here
+    assert(shuffles(durable.asOfTxId(37L).prop("p", PropType.PLong, A.Vertex)).nonEmpty)
+  }
+
+  test("empty facts and touches tables round-trip through the bucketed layout") {
+    val log = new MemFactLog(spark)
+    val empty = FactLog.open(spark, TestSpark.savedWithBuckets(log, 1))
+    assert(empty.factsDF.count() == 0 && empty.touchesDF.count() == 0 && empty.headTx == -1L)
+    assert(Snapshot.head(empty).currentFacts.count() == 0)
+    // facts but no touches: a bucketed write of the empty touches frame
+    // leaves no file, so the reader must not need one for the schema
+    (1 to 5).foreach(_ => log.commit(Seq(Fact.of(log.newEntityId(), A.ElementType, A.Vertex, 0L))))
+    val store = FactLog.open(spark, TestSpark.savedWithBuckets(log, 1))
+    assert(store.touchesDF.count() == 0)
+    assert(store.touchesDF.schema.fieldNames.toSeq ==
+      org.apache.spark.sql.Encoders.product[Touch].schema.fieldNames.toSeq)
+    assert(rows(Snapshot.head(store).currentFacts) == rows(Snapshot.head(log).currentFacts))
+    assert(VersionChains.chains(store).count() == 0)
+  }
+
+  test("a MemFactLog read encodes only the facts committed since the previous read") {
+    val log = history().log
+    val first = log.factsDF
+    val (seen, n0) = (log.encodedFacts, first.count())
+    assert(seen == log.allFacts.size)
+    (1 to 7).foreach(_ => log.commit(Seq(Fact.of(log.newEntityId(), A.ElementType, A.Vertex, 0L))))
+    val next = log.factsDF
+    assert(log.encodedFacts - seen == 7)
+    log.factsDF
+    assert(log.encodedFacts - seen == 7, "a read with no new commits encoded rows")
+    // a frame keeps the rows of its read; later commits do not leak in
+    assert(first.count() == n0 && next.count() == n0 + 7)
+    assert(next.collect().toSeq == spark.createDataset(log.allFacts).toDF().collect().toSeq)
   }
 }
