@@ -52,7 +52,9 @@ object PlanDump {
         docs(s, d).where(col("doc_id") % 25 === 0), n = 3)),
       "unigram_logprob_inner" -> ((s, d) => TextOps.unigramLogProb(docs(s, d))),
       "bm25_scores_inner" -> ((s, d) =>
-        TextOps.bm25Scores(docs(s, d), Seq("spark", "join", "window"))))
+        TextOps.bm25Scores(docs(s, d), Seq("spark", "join", "window"))),
+      "local_bridges_inner" -> ((s, d) => graft.gx.GraphXTraversal.localBridges(
+        s, graft.projection.TpchGraph.snapshot(s, d), 30.0)))
   }
 
   // `durable_` names: the sf dir's events store saved to a temp root and

@@ -52,8 +52,8 @@ object SparkEntry {
     * bins − oversize ≤ shards + Σsmall/(budget/2+1). Shared by
     * `pack_invariants` and `curation_pipeline_pack`. */
   private def packInvariants(packed0: DataFrame, budget: Int,
-                             shards: Int = 8): DataFrame = {
-    val packed = packed0.localCheckpoint(true)
+                             shards: Int = 8): DataFrame = Staged.run { stage =>
+    val packed = stage.checkpoint(packed0)
     // coalesce: sums over an EMPTY packing must report 0, not null
     // (an all-filtered upstream is a legal, checkable state)
     val agg = packed.agg(
@@ -74,6 +74,7 @@ object SparkEntry {
         (col("n_bins") - col("oversize_bins") <=
           lit(shards) + floor(col("small_tokens") / lit(budget / 2 + 1)))
           .as("bins_within_bound"))
+      .localCheckpoint(true)
   }
 
   /** Memoized compacted / retained stores per (session, sf dir, cutoff)
@@ -1098,17 +1099,16 @@ object SparkEntry {
       // — the production two-channel search primitive; the twin replays
       // both channels and the fusion arithmetic
       TextOps.hybridSearch(docs(s, d), Seq("spark", "join", "window"))),
-    "text_ann_hashed" -> { (s, d) =>
+    "text_ann_hashed" -> ((s, d) => Staged.run { stage =>
       // similarity search over TEXT with no external model: hashEmbed →
       // brute-force cosine top-5 (zero vectors filtered on both sides —
       // cosine is undefined there)
-      val e = TextOps.hashEmbed(docs(s, d))
+      val e = stage.checkpoint(TextOps.hashEmbed(docs(s, d))
         .select(col("doc_id").as("vec_id"),
           expr("transform(vec, x -> CAST(x AS DOUBLE))").as("embedding"))
-        .where(expr("exists(embedding, x -> x != 0D)"))
-        .localCheckpoint(true)
-      VectorOps.bruteForceTopK(e, e.where(col("vec_id") < 5), 5)
-    },
+        .where(expr("exists(embedding, x -> x != 0D)")))
+      VectorOps.bruteForceTopK(e, e.where(col("vec_id") < 5), 5).localCheckpoint(true)
+    }),
     "cms_heavy_hitters" -> ((s, d) =>
       // Count-Min estimates for the exact top-20: counters are SUMS
       // (order-independent, unlike MG), so the full d×w state and the

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
 import graft.util.{LruMemo, Staged}
 import graft.util.LruMemo.releaseCheckpoint
+import org.apache.spark.sql.graftshim.Relations
 
 /**
  * GraphX bridge: materialize a snapshot as a `Graph[Unit, Int]`
@@ -121,16 +122,16 @@ object GraphXTraversal {
     * memory blowup) once the filtered edge RDD is billions of edges. */
   private[graft] val TargetEdgesPerPartition = 100000L
 
-  /** Adaptive GraphX width: proportional to the filtered edge count,
-    * floored at 1 (tiny subgraphs stay task-overhead-free), capped at 4×
-    * the cluster's default parallelism so the width never outruns the
-    * executor count by more than a healthy task queue (on a
-    * 1000-executor cluster the cap binds only past ~10^9 edges — exactly
-    * when you want every core busy). */
-  private[graft] def widthFor(edgeCount: Long): Int = {
+  /** Adaptive width: proportional to the filtered edge count (one
+    * partition per `perPartition` edges), floored at 1 (tiny subgraphs
+    * stay task-overhead-free), capped at 4× the cluster's default
+    * parallelism so the width never outruns the executor count by more
+    * than a healthy task queue (on a 1000-executor cluster the cap binds
+    * only past ~10^9 edges — exactly when you want every core busy). */
+  private[graft] def widthFor(edgeCount: Long, perPartition: Long = TargetEdgesPerPartition): Int = {
     val spark = SparkSession.active
     val cap = math.max(4L * spark.sparkContext.defaultParallelism, 1L)
-    val byRows = (edgeCount + TargetEdgesPerPartition - 1) / TargetEdgesPerPartition
+    val byRows = (edgeCount + perPartition - 1) / perPartition
     math.max(1L, math.min(byRows, cap)).toInt
   }
 
@@ -359,7 +360,7 @@ object GraphXTraversal {
     partitionedCheckpoint(
       pairs.select(col("a").as("x"), col("b").as("y"))
         .unionAll(pairs.select(col("b").as("x"), col("a").as("y"))),
-      col("y"))
+      "y")
 
   private[graft] def lpaRounds(pairs: DataFrame, rounds: Int): DataFrame = {
     val ed = lpaEdges(pairs)
@@ -381,35 +382,25 @@ object GraphXTraversal {
     labels // retained: buildLpa memoizes it (lpaCache)
   }
 
-  /** Eager localCheckpoint that actually PRESERVES the frame's
-    * HashPartitioning. Under AQE (the Spark 4 default),
-    * `repartition(k).localCheckpoint(true)` records
-    * UnknownPartitioning(0) on the resulting LogicalRDD — the adaptive
-    * plan's output partitioning is not propagated — so every downstream
-    * join/aggregation keyed on the layout silently RE-EXCHANGES the
-    * checkpointed side each round: exactly the per-round edge-scale
-    * shuffle the repartition was built to remove (guide §2.4; verified
-    * empirically — the round plan shows `Exchange hashpartitioning`
-    * over the checkpoint scan with AQE on at build time, none with it
-    * off). Building the one-shuffle checkpoint with AQE momentarily off
-    * makes the LogicalRDD carry hashpartitioning(k, shufflePartitions),
-    * which EnsureRequirements in later (AQE-on) queries then reuses.
-    * AQE loses nothing here: the build is a single REPARTITION_BY_COL
-    * exchange, and a fixed width is precisely what layout reuse needs
-    * (the width still scales via spark.sql.shuffle.partitions). The
-    * conf toggle is scoped to the eager build and restored in finally;
-    * builds are serialized so concurrent callers never observe it. */
-  private[graft] def partitionedCheckpoint(
-      df: DataFrame, k: org.apache.spark.sql.Column): DataFrame =
-    AqeToggleLock.synchronized {
-      val conf = df.sparkSession.conf
-      val key = "spark.sql.adaptive.enabled"
-      val prev = conf.get(key)
-      conf.set(key, "false")
-      try df.repartition(k).localCheckpoint(true)
-      finally conf.set(key, prev)
-    }
-  private object AqeToggleLock
+  /** Eager localCheckpoint of `df` hash-partitioned on `k` into `width`
+    * partitions, declaring that layout to the plans that read it. Under
+    * AQE (the Spark 4 default) a checkpoint's LogicalRDD records
+    * UnknownPartitioning(0) even after an explicit `repartition(width,
+    * k)` — the adaptive plan's output partitioning is not propagated —
+    * so every downstream k-keyed join or aggregation would silently
+    * RE-EXCHANGE the checkpointed side each round: exactly the per-round
+    * edge-scale shuffle the repartition is there to remove (guide §2.4).
+    * The checkpoint therefore declares `HashPartitioning(k, width)`
+    * itself; EnsureRequirements reuses it, and shuffles the other side
+    * of a k-keyed join to `width`. The build runs under the session's
+    * own conf and sets none. */
+  private[graft] def partitionedCheckpoint(df: DataFrame, k: String, width: Int): DataFrame =
+    Relations.hashPartitioned(df.repartition(width, col(k)).localCheckpoint(true), k, width)
+
+  /** [[partitionedCheckpoint]] at the session's
+    * `spark.sql.shuffle.partitions` (read, never set). */
+  private[graft] def partitionedCheckpoint(df: DataFrame, k: String): DataFrame =
+    partitionedCheckpoint(df, k, df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Newman modularity of the [[communitiesLpaDF]] labeling — the "did
     * LPA find real structure" number: Q = Σ_c [in_c∕m − (deg_c∕2m)²]
@@ -653,7 +644,7 @@ object GraphXTraversal {
     // exchange on either (guide §2.4 shared-exchange). The checkpoint is
     // released as soon as the round's supported frame materializes.
     def withSupport(edges: DataFrame): DataFrame = {
-      val o = partitionedCheckpoint(orientedEdges(edges), col("u"))
+      val o = partitionedCheckpoint(orientedEdges(edges), "u")
       val s = edgeSupportFromOriented(edges, o).localCheckpoint(true)
       releaseCheckpoint(o)
       s
@@ -789,25 +780,29 @@ object GraphXTraversal {
 
   def localBridgesDF(spark: SparkSession, snap: Snapshot,
                      minQty: Double = 30.0): DataFrame =
-    bridgesCache.getOrBuild((snap, minQty))(Staged.run { stage =>
-      val g = pairGraph(snap, minQty)
-      val e0 = stage.checkpoint(
-        spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId))).toDF("a", "b"))
-      val adj = e0.select(col("a").as("v"))
-        .unionAll(e0.select(col("b").as("v")))
-      val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
-      // stage the oriented frame once (r15, same fix as kTrussPeel): the
-      // lazy edgeSupport re-executed its degree aggregation + both
-      // dimension joins 3×; the u-partitioned checkpoint also collapses
-      // the wedge self-join's two exchanges. The bridge-sized result is
-      // materialized so the staging checkpoints can be released here.
-      val o = stage.own(partitionedCheckpoint(orientedEdges(e0), col("u")))
-      edgeSupportFromOriented(e0, o).where(col("support") === 0L)
-        .join(deg.select(col("v").as("a"), col("d").as("deg_a")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("deg_b")), "b")
-        .select(col("a"), col("b"), col("deg_a"), col("deg_b"))
-        .localCheckpoint(true)
-    })
+    bridgesCache.getOrBuild((snap, minQty))(localBridges(spark, snap, minQty))
+
+  /** [[localBridgesDF]] unmemoized (PlanDump's `local_bridges_inner`). */
+  private[graft] def localBridges(spark: SparkSession, snap: Snapshot,
+                                  minQty: Double): DataFrame = Staged.run { stage =>
+    val g = pairGraph(snap, minQty)
+    val e0 = stage.checkpoint(
+      spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId))).toDF("a", "b"))
+    val adj = e0.select(col("a").as("v"))
+      .unionAll(e0.select(col("b").as("v")))
+    val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
+    // stage the oriented frame once (r15, same fix as kTrussPeel): the
+    // lazy edgeSupport re-executed its degree aggregation + both
+    // dimension joins 3×; the u-partitioned checkpoint also collapses
+    // the wedge self-join's two exchanges. The bridge-sized result is
+    // materialized so the staging checkpoints can be released here.
+    val o = stage.own(partitionedCheckpoint(orientedEdges(e0), "u"))
+    edgeSupportFromOriented(e0, o).where(col("support") === 0L)
+      .join(deg.select(col("v").as("a"), col("d").as("deg_a")), "a")
+      .join(deg.select(col("v").as("b"), col("d").as("deg_b")), "b")
+      .select(col("a"), col("b"), col("deg_a"), col("deg_b"))
+      .localCheckpoint(true)
+  }
 
   /**
    * Degree assortativity of the co-occurrence pair graph: the Pearson
@@ -1038,7 +1033,7 @@ object GraphXTraversal {
           .join(qty, Seq("id"), "left_outer")
           .select(col("src"), col("dst"),
             coalesce(col("q"), lit(1.0)).cast("long").as("wt")),
-        col("dst"))
+        "dst")
     }
 
   def ssspWeightedDF(spark: SparkSession, snap: Snapshot,
@@ -1132,7 +1127,7 @@ object GraphXTraversal {
     // barrier itself stays load-bearing (every level feeds the final
     // union).
     val edges = stage.own(partitionedCheckpoint(
-      snap.edges.select(col("outV").as("v"), col("inV").as("u")), col("v")))
+      snap.edges.select(col("outV").as("v"), col("inV").as("u")), "v"))
     // starts = vertices in [lo, hi) with ≥1 out-edge (walks from pure
     // sinks would be single-row trivia; the twin replays the same rule)
     var frontier = stage.checkpoint(edges.select(col("v")).distinct()
@@ -1321,7 +1316,7 @@ object GraphXTraversal {
       e.join(tot, "u")
         .select(col("u"), col("v"),
           (lit(1.0) / col("d")).as("w"),
-          (col("wt") / col("tw")).as("wq")), col("u"))
+          (col("wt") / col("tw")).as("wq")), "u")
   }
 
   /** Memoized vertex frame (v), pre-partitioned on `v` and eagerly
@@ -1336,7 +1331,7 @@ object GraphXTraversal {
 
   private[gx] def vertexFrame(snap: Snapshot): DataFrame =
     vertsCache.getOrBuild(snap)(
-      partitionedCheckpoint(snap.vertexIds.select(col("id").as("v")), col("v")))
+      partitionedCheckpoint(snap.vertexIds.select(col("id").as("v")), "v"))
 
   /** Quantity-weighted static PageRank as relational rounds — rank flows
     * along `contains` edges in proportion to line-item quantity (bulk

@@ -119,24 +119,33 @@ object HyperAnf {
     * analytics). */
   def hyperAnfDF(spark: SparkSession, snap: Snapshot, hops: Int = 3,
                  labels: Seq[String] = DagLabels): DataFrame =
-    anfCache.getOrBuild((snap, hops, labels))(buildAnf(spark, snap, hops, labels))
+    anfCache.getOrBuild((snap, hops, labels))(buildAnf(snap, hops, labels))
+
+  /** The width every HyperANF frame is built and joined at. Per-round
+    * join volume is Σ_edges |regs(dst)| — ~1e9 rows at sf5 — so the
+    * operator scales its OWN width off the label-filtered edge count
+    * (32 session partitions put ~40M-row partitions through one
+    * sort-merge task and died): one partition per ~250k edges, through
+    * the shared [[GraphXTraversal.widthFor]] rule and cap. */
+  private[gx] def anfWidth(snap: Snapshot, labels: Seq[String]): Int =
+    GraphXTraversal.widthFor(GraphXTraversal.labelEdgeCount(snap, labels), 250000L)
 
   /** The distinct (src, dst) edge frame the systolic rounds walk —
     * extracted so [[graft.gx.RoundSteps]] can dump a round over the
     * identical frame. Multi-edges collapse up front: ball membership is
     * a SET, and the distinct halves the per-round join output on
     * lineitem-derived labels (part→supplier repeats per lineitem row). */
-  private[gx] def anfEdges(snap: Snapshot, labels: Seq[String]): DataFrame =
-    // pre-partitioned on `dst` (r15, VERDICT r14 item 1): every systolic
+  private[gx] def anfEdges(snap: Snapshot, labels: Seq[String], width: Int): DataFrame =
+    // a dst-partitioned checkpoint at the rounds' width: every systolic
     // round joins this edge-scale frame on `dst` against the changed
-    // frontier, so the preserved HashPartitioning removes one edge-scale
-    // exchange per hop (the distinct's (src,dst) layout satisfies no
-    // dst-keyed join; a plain checkpoint recorded UnknownPartitioning)
+    // frontier (itself a `v`-partitioned register frame at the same
+    // width), so neither side is exchanged (the distinct's (src,dst)
+    // layout satisfies no dst-keyed join)
     GraphXTraversal.partitionedCheckpoint(
       snap.edges.where(col("label").isin(labels: _*))
         .select(col("outV").as("src"), col("inV").as("dst"))
         .distinct(),
-      col("dst"))
+      "dst", width)
 
   /** Round-0 dense registers (un-checkpointed): each vertex's 64-int
     * array holds exactly its own (j, rho); `changed` marks the initial
@@ -153,13 +162,18 @@ object HyperAnf {
         lit(true).as("changed"))
   }
 
-  /** One Boldi–Vigna systolic round (un-checkpointed): only edges whose
-    * dst CHANGED last round ship its array; merge is element-wise max. */
-  private[gx] def anfRound(edges: DataFrame, regs: DataFrame): DataFrame = {
+  /** One Boldi–Vigna systolic round (un-checkpointed) over `edges` and
+    * `regs` partitioned at `width` on `dst` and `v`: only edges whose
+    * dst CHANGED last round ship its array; merge is element-wise max.
+    * The pulled arrays are repartitioned on `src` at the same width —
+    * `collect_list` ships every element anyway, so this costs no extra
+    * bytes — and the merge joins them to `regs` with no exchange. */
+  private[gx] def anfRound(edges: DataFrame, regs: DataFrame, width: Int): DataFrame = {
     val zeroArr = transform(sequence(lit(0), lit(M - 1)), _ => lit(0))
     val frontier = regs.where(col("changed"))
       .select(col("v").as("dst"), col("regs").as("nregs"))
     val pulled = edges.join(frontier, "dst")
+      .repartition(width, col("src"))
       .groupBy(col("src").as("v"))
       .agg(aggregate(collect_list(col("nregs")), zeroArr,
         (acc, x) => zip_with(acc, x, (a, b) => greatest(a, b))).as("pulled"))
@@ -172,21 +186,10 @@ object HyperAnf {
         (col("nr") =!= col("regs")).as("changed"))
   }
 
-  private def buildAnf(spark: SparkSession, snap: Snapshot, hops: Int,
-                       labels: Seq[String]): DataFrame = {
-    val edges = anfEdges(snap, labels)
-    // Per-round join volume is Σ_edges |regs(dst)| — ~1e9 rows at sf5 —
-    // so the operator scales its OWN shuffle width off the edge count
-    // (the StreamBench set/restore precedent; 32 global partitions put
-    // ~40M-row partitions through one sort-merge task and died): one
-    // partition per ~250k edges, capped at 4× the cluster parallelism.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val width = try {
-      math.max(prevParts.toInt, math.min(
-        4 * spark.sparkContext.defaultParallelism,
-        (edges.count() / 250000L).toInt))
-    } catch { case _: NumberFormatException => 0 }
-    if (width > 0) spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+  private def buildAnf(snap: Snapshot, hops: Int, labels: Seq[String]): DataFrame = {
+    val width = anfWidth(snap, labels)
+    val edges = anfEdges(snap, labels, width)
+    def registers(df: DataFrame) = GraphXTraversal.partitionedCheckpoint(df, "v", width)
     try {
       // DENSE registers — one 64-int array per vertex, the layout the
       // HyperANF paper actually runs (the r14 sf5 catch: a sparse
@@ -196,7 +199,7 @@ object HyperAnf {
       // smaller, the estimate becomes a pure per-row PROJECTION — no
       // second shuffle — and the systolic skip works at vertex
       // granularity).
-      var regs = anfRegs0(edges).localCheckpoint(true)
+      var regs = registers(anfRegs0(edges))
       // Systolic rounds ([[anfRound]]): sink-sided edges drop out after
       // round 1; converged regions go quiet; a vertex absorbs a
       // neighbour's array once and the skip is exact. Estimates fold out
@@ -204,7 +207,7 @@ object HyperAnf {
       // released: at most two |V|-row frames alive.
       val estParts = Seq.newBuilder[DataFrame]
       (1 to hops).foreach { h =>
-        val next = anfRound(edges, regs).localCheckpoint(true)
+        val next = registers(anfRound(edges, regs, width))
         releaseCheckpoint(regs)
         regs = next
         estParts += estimateOf(next, h).localCheckpoint(true)
@@ -214,10 +217,7 @@ object HyperAnf {
       val est = parts.reduce(_ unionAll _).localCheckpoint(true)
       parts.foreach(releaseCheckpoint)
       est
-    } finally {
-      if (width > 0) spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      releaseCheckpoint(edges)
-    }
+    } finally releaseCheckpoint(edges)
   }
 
   /** Fold one round's dense register frame into its per-vertex

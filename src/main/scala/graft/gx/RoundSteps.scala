@@ -10,14 +10,14 @@ import graft.util.LruMemo
   * ONE un-fused round/step of each iterative operator, built over the
   * SAME shared checkpointed frames the real loops use, for PlanDump —
   * the registered queries' final plans show only a checkpointed result
-  * scan, so the per-round Exchange placement (the thing the
-  * partitionedCheckpoint layout-preservation claims are about) is
-  * invisible without these. Each helper mirrors its loop body verbatim
-  * (or calls the extracted body directly); none is registered as a
-  * query and none is reachable from Bench/Verify. Each returns a [[Step]]:
-  * the frame plus the staging checkpoints it pinned (the shared memoized
-  * frames stay with their memos), released once the plan text is
-  * captured. */
+  * scan, so the per-round Exchange placement (whether a round
+  * re-exchanges a frame GraphXTraversal.partitionedCheckpoint declared
+  * hash-partitioned on its join key) is invisible without these. Each
+  * helper mirrors its loop body verbatim (or calls the extracted body
+  * directly); none is registered as a query and none is reachable from
+  * Bench/Verify. Each returns a [[Step]]: the frame plus the staging
+  * checkpoints it pinned (the shared memoized frames stay with their
+  * memos), released once the plan text is captured. */
 private[graft] object RoundSteps {
 
   /** A step frame and the step-owned staging checkpoints behind it. */
@@ -48,7 +48,7 @@ private[graft] object RoundSteps {
     * randomWalksDF's per-step body at t = 1). */
   def walkStep(spark: SparkSession, snap: Snapshot): Step = {
     val edges = GraphXTraversal.partitionedCheckpoint(
-      snap.edges.select(col("outV").as("v"), col("inV").as("u")), col("v"))
+      snap.edges.select(col("outV").as("v"), col("inV").as("u")), "v")
     val frontier = edges.select(col("v")).distinct()
       .where(col("v") >= 3000000L && col("v") < 4000000L)
       .select(col("v").as("walk_id"), col("v"))
@@ -99,11 +99,13 @@ private[graft] object RoundSteps {
   }
 
   /** One HyperANF systolic round over the anfEdges frame and the
-    * checkpointed round-0 registers (calls the extracted bodies). */
+    * round-0 registers, both partitioned at the operator's own width
+    * (calls the extracted bodies). */
   def hyperanfRound(spark: SparkSession, snap: Snapshot): Step = {
-    val edges = HyperAnf.anfEdges(snap, DagLabels)
-    val regs = HyperAnf.anfRegs0(edges).localCheckpoint(true)
-    Step(HyperAnf.anfRound(edges, regs), Seq(edges, regs))
+    val width = HyperAnf.anfWidth(snap, DagLabels)
+    val edges = HyperAnf.anfEdges(snap, DagLabels, width)
+    val regs = GraphXTraversal.partitionedCheckpoint(HyperAnf.anfRegs0(edges), "v", width)
+    Step(HyperAnf.anfRound(edges, regs, width), Seq(edges, regs))
   }
 
   /** One k-core peel round over the checkpointed pair-edge frame

@@ -472,23 +472,26 @@ object TextOps {
     * only near-dup docs; the corpus-side cost is one equi-join on doc_id.
     * Returns (doc_id, cluster_id, keep) for EVERY document — singletons
     * are their own cluster and always kept. */
-  def dedupClusters(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def dedupClusters(docs: DataFrame, threshold: Double = 0.8): DataFrame = Staged.run { stage =>
     val spark = docs.sparkSession
-    val pairs = dedupMinHashLsh(docs, threshold)
+    val pairs = stage.own(dedupMinHashLsh(docs, threshold))
     // the pair graph is orders of magnitude smaller than the corpus —
     // coalesce so the CC Pregel rounds aren't task-overhead-bound at the
     // corpus partitioning (same measured effect as GraphXTraversal)
     val edges = pairs.select(col("a"), col("b")).rdd
       .map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
       .coalesce(8)
-    val cc = org.apache.spark.graphx.Graph.fromEdges(edges, ())
-      .connectedComponents().vertices
+    // both graphs cache their vertices and edges; they and the pairs are
+    // released once the result materializes
+    val cc = stage.own(stage.own(org.apache.spark.graphx.Graph.fromEdges(edges, ()))
+      .connectedComponents()).vertices
     val compDF = spark.createDataFrame(cc).toDF("doc_id", "cluster_id")
     docs.select(col("doc_id").cast("long").as("doc_id"))
       .join(compDF, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       .withColumn("keep", col("doc_id") === col("cluster_id"))
+      .localCheckpoint(true)
   }
 
   /** Best-keeper variant of [[dedupClusters]]: same transitive
@@ -502,23 +505,23 @@ object TextOps {
     * combined; almost every cluster is a singleton, so the shuffle
     * carries ~corpus rows of three longs) + one cluster-keyed
     * equi-join. Returns (doc_id, cluster_id, keep) for EVERY doc. */
-  def dedupKeepBest(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val cl = dedupClusters(docs, threshold).select(col("doc_id"), col("cluster_id"))
+  def dedupKeepBest(docs: DataFrame, threshold: Double = 0.8): DataFrame = Staged.run { stage =>
+    val cl = stage.own(dedupClusters(docs, threshold)).select(col("doc_id"), col("cluster_id"))
     // BOTH the argmax and the final join read `sized` — materialize it
     // once (eager localCheckpoint) or each reference re-runs the whole
     // LSH + CC cluster pipeline upstream (measured 11 s vs the 1.3 s
     // dedup_clusters itself costs at sf0.1 — the CollapseProject /
     // shared-subplan re-evaluation disease, §16)
-    val sized = cl.join(
+    val sized = stage.checkpoint(cl.join(
       docs.select(col("doc_id").cast("long").as("doc_id"),
-        col("n_chars").cast("long").as("n_chars")), "doc_id")
-      .localCheckpoint(true)
+        col("n_chars").cast("long").as("n_chars")), "doc_id"))
     val best = sized.groupBy(col("cluster_id"))
       .agg(max(struct(col("n_chars"), (-col("doc_id")).as("nd"))).as("b"))
       .select(col("cluster_id"), (-col("b.nd")).as("best_doc"))
     sized.join(best, "cluster_id")
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("best_doc")).as("keep"))
+      .localCheckpoint(true)
   }
 
   /** Per-token 64-bit hashes — stage THIS as an attribute before
@@ -1586,7 +1589,8 @@ object TextOps {
     val m = 4096 // p = 12; hex arithmetic below is specific to p = 12
     // maxRank = 64 - p + 1 = 53: idx = top 3 hex chars, tail = next 13
     val toks = stage(docs.select(col("source"), tokens(col("text")).as("t")))
-    val regs = toks
+    // tiny; one corpus scan feeds three readers
+    val regs = stage.checkpoint(toks
       .select(col("source"), explode(shinglesFromTokens(col("t"))).as("g"))
       .select(col("source"), md5(col("g")).as("h"))
       .select(col("source"),
@@ -1595,8 +1599,7 @@ object TextOps {
       .select(col("source"), col("idx"),
         when(col("tail") === 0L, lit(53))
           .otherwise(lit(53) - length(bin(col("tail")))).cast("int").as("rk"))
-      .groupBy(col("source"), col("idx")).agg(max(col("rk")).as("mj"))
-      .localCheckpoint(true) // tiny; one corpus scan feeds three readers
+      .groupBy(col("source"), col("idx")).agg(max(col("rk")).as("mj")))
 
     // Z·2^53 as an exact integer (the HllSketchAgg eval contract):
     // Σ 2^(53−mj) over nonzero registers + 2^53 per empty register.
@@ -1656,6 +1659,7 @@ object TextOps {
         round(col("e_a") + col("e_b") - col("e_u"), 4).as("est_common"),
         round((col("e_a") + col("e_b") - col("e_u")) / col("e_u"), 4)
           .as("jaccard_est"))
+      .localCheckpoint(true)
   }
 
   /**
@@ -1727,10 +1731,9 @@ object TextOps {
     // checkpoints each reference RE-EXPANDS the whole upstream chain
     // (plan-probed: ~12 corpus scans at r10; 3 with the barriers)
     val decon = stage.checkpoint(cleaned.join(
-      decontaminate(cleaned, evalSet, gramN), Seq("doc_id"), "left_anti"))
-    val kept = decon.join(
-      domainMix(decon, quota).select(col("doc_id")), "doc_id")
-      .localCheckpoint(true)
+      stage.own(decontaminate(cleaned, evalSet, gramN)), Seq("doc_id"), "left_anti"))
+    val kept = stage.checkpoint(decon.join(
+      domainMix(decon, quota).select(col("doc_id")), "doc_id"))
     // kept is quota-bounded (≤ sources × quota rows) BY CONSTRUCTION —
     // broadcast the token-count side instead of letting the checkpoint's
     // unknown stats default to a sort-merge join
@@ -1739,6 +1742,7 @@ object TextOps {
         size(tokens(col("text"))).cast("long").as("n_tokens"))), "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("rk"),
         col("split"), col("n_tokens"))
+      .localCheckpoint(true)
   }
 
   /**
@@ -1768,11 +1772,11 @@ object TextOps {
       .where(!col("contaminated"))
       .select(col("vec_id").as("doc_id"))
     val decon = stage.checkpoint(cleaned.join(uncontaminated, "doc_id"))
-    val kept = decon.join(
-      domainMix(decon, quota).select(col("doc_id")), "doc_id")
-      .localCheckpoint(true)
+    val kept = stage.checkpoint(decon.join(
+      domainMix(decon, quota).select(col("doc_id")), "doc_id"))
     splitAssign(kept, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("bucket"), col("split"))
+      .localCheckpoint(true)
   }
 
   /**

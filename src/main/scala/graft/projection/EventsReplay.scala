@@ -7,7 +7,6 @@ import org.apache.spark.storage.StorageLevel
 import graft.log.BulkFactStore
 import graft.model.A
 import graft.snapshot.Snapshot
-import graft.util.LruMemo
 
 /**
  * Replays the driver's `events` table as a stream of backdated
@@ -40,18 +39,17 @@ object EventsReplay {
   val VUser = 7000000L
 
   /** Memoized head snapshot per (session, events dir), LRU-bounded like
-    * every engine memo; eviction unpersists the three views persisted
-    * below. Builds run under this object's lock, so two callers never
-    * build (and cache) the same store twice. */
-  private val cache = new LruMemo[(SparkSession, String), Snapshot](
-    TpchGraph.MaxCachedSnapshots, { snap =>
-      snap.currentFacts.unpersist(false)
-      snap.store.factsDF.unpersist(false)
-      snap.store.touchesDF.unpersist(false)
-    })
+    * every engine memo; the last eviction for a dir unpersists the three
+    * views persisted below. Builds run under this object's lock, so two
+    * callers never build (and cache) the same store twice. */
+  private val cache = new ViewsMemo[Snapshot]({ snap =>
+    snap.currentFacts.unpersist(false)
+    snap.store.factsDF.unpersist(false)
+    snap.store.touchesDF.unpersist(false)
+  })
 
   def snapshot(spark: SparkSession, dir: String): Snapshot = synchronized {
-    cache.getOrBuild((spark, dir)) {
+    cache.getOrBuild(spark, dir) {
       val store = build(spark, dir)
       // persist the LOG tables, not just the head view: every asOf-pinned
       // read (asof_values/asof_diff/diff_*), version-chain walk and the

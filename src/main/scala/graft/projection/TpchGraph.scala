@@ -53,6 +53,21 @@ object FactCols {
     df.select(explode(array(facts: _*)).as("f")).select("f.*")
 }
 
+/** A per-(session, dir) memo of views persisted from the files under
+  * `dir`, LRU-bounded at [[TpchGraph.MaxCachedSnapshots]]. The views of
+  * one dir are equal plans in every session, and the context-wide
+  * CacheManager keeps one entry per plan, so an evicted entry's views
+  * are released (`release`) only when no live entry for the same dir
+  * still reads them. */
+private[projection] final class ViewsMemo[V](release: V => Unit) {
+  private val memo: LruMemo[(SparkSession, String), (String, V)] =
+    new LruMemo(TpchGraph.MaxCachedSnapshots, { evicted =>
+      if (!memo.values.exists(e => e._1 == evicted._1 && (e ne evicted))) release(evicted._2)
+    })
+  def getOrBuild(spark: SparkSession, dir: String)(build: => V): V =
+    memo.getOrBuild((spark, dir))((dir, build))._2
+}
+
 /**
  * Bulk property-graph projection of the driver's TPC-H-ish tables into a
  * graft fact log (FIXTURES.md §3) — the set-oriented "warehouse load"
@@ -102,22 +117,21 @@ object TpchGraph {
   /** Snapshots each of the projection memos keeps pinned. */
   private[graft] val MaxCachedSnapshots = 4
 
-  private val cache = new LruMemo[(SparkSession, String), (Snapshot, DataFrame)](
-    MaxCachedSnapshots, { case (snap, liSeq) =>
-      snap.currentFacts.unpersist(false)
-      snap.edges.unpersist(false)
-      liSeq.unpersist(false)
-    })
+  private val cache = new ViewsMemo[(Snapshot, DataFrame)]({ case (snap, liSeq) =>
+    snap.currentFacts.unpersist(false)
+    snap.edges.unpersist(false)
+    liSeq.unpersist(false)
+  })
 
   /** Memoized head snapshot per (session, sf dir); currentFacts, the
     * edges view and the lineitem frame both read are persisted so the
     * per-query cost is the query itself, not the projection rebuild (a
     * real deployment would persist the fact log as Parquet once —
     * FactLog.save — and open it per job). LRU-bounded like every engine
-    * memo, eviction unpersisting all three; builds run under this
-    * object's lock, so a store is never built twice. */
+    * memo, the last eviction for a dir unpersisting all three; builds run
+    * under this object's lock, so a store is never built twice. */
   def snapshot(spark: SparkSession, dir: String): Snapshot = synchronized {
-    cache.getOrBuild((spark, dir)) {
+    cache.getOrBuild(spark, dir) {
       val (store, liSeq) = project(spark, dir)
       // the lineitem frame first, so the two views' caches read it
       liSeq.persist(StorageLevel.MEMORY_AND_DISK)

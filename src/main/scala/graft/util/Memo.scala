@@ -1,6 +1,7 @@
 package graft.util
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.graphx.Graph
@@ -39,6 +40,8 @@ private[graft] final class LruMemo[K, V](max: Int, onEvict: V => Unit) {
     }
   }
   def size: Int = synchronized(m.size())
+  /** The values held now; an eviction hook sees its own among them. */
+  def values: Seq[V] = synchronized(m.values().asScala.toList)
   def contains(key: K): Boolean = synchronized(m.containsKey(key))
 }
 

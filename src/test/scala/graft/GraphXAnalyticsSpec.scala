@@ -710,4 +710,27 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     dirs.tail.foreach(d => TpchGraph.snapshot(spark, d).edges.count())
     assert((persisted & pinned).isEmpty, "the evicted build left RDDs persisted")
   }
+
+  test("snapshot memos: one dir in MaxCachedSnapshots + 1 sessions keeps the live sessions' views") {
+    import graft.projection.EventsReplay
+    import graft.projection.TpchGraph.MaxCachedSnapshots
+    import org.apache.spark.storage.StorageLevel.NONE
+    // a dir no other test reads; every session's build is one plan, one cache entry
+    val d = TestSpark.fixtureCopies(dir, 1, Seq("region", "nation", "customer",
+      "supplier", "part", "orders", "lineitem", "events")).head
+    val sessions = Seq.fill(MaxCachedSnapshots + 1)(spark.newSession())
+    val graphs = sessions.map { s => val g = TpchGraph.snapshot(s, d); g.edges.count(); g }
+    val events = sessions.map { s => val e = EventsReplay.snapshot(s, d); e.currentFacts.count(); e }
+    // the last build evicted the first session's entries; the rest stay memoized
+    sessions.tail.zip(graphs.tail).foreach { case (s, g) => assert(TpchGraph.snapshot(s, d) eq g) }
+    sessions.tail.zip(events.tail).foreach { case (s, e) => assert(EventsReplay.snapshot(s, d) eq e) }
+    graphs.tail.foreach { g =>
+      assert(g.edges.storageLevel != NONE && g.currentFacts.storageLevel != NONE,
+        "an eviction dropped views a memoized session still reads")
+    }
+    events.tail.foreach { e =>
+      assert(Seq(e.currentFacts, e.store.factsDF, e.store.touchesDF).forall(_.storageLevel != NONE),
+        "an eviction dropped views a memoized session still reads")
+    }
+  }
 }

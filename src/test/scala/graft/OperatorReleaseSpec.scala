@@ -78,4 +78,31 @@ class OperatorReleaseSpec extends AnyFunSuite {
       } finally graft.util.LruMemo.releaseCheckpoint(out)
     }
   }
+
+  // operators whose staged checkpoints once outlived the call
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val sfDocs = spark.read.parquet(s"$sf/documents.parquet")
+  private val released: Seq[(String, () => DataFrame)] = Seq(
+    "dedupClusters" -> (() => TextOps.dedupClusters(sfDocs, 0.8)),
+    "dedupKeepBest" -> (() => TextOps.dedupKeepBest(sfDocs, 0.8)),
+    "curationPipeline" -> (() => TextOps.curationPipeline(sfDocs)),
+    "curation_pipeline_sem" -> (() => SparkEntry.queries("curation_pipeline_sem")(spark, sf)),
+    "sourceOverlapSketch" -> (() => TextOps.sourceOverlapSketch(sfDocs)),
+    "text_ann_hashed" -> (() => SparkEntry.queries("text_ann_hashed")(spark, sf)),
+    "pack_invariants" -> (() => SparkEntry.queries("pack_invariants")(spark, sf)))
+
+  released.foreach { case (name, op) =>
+    test(s"$name leaves only its result's checkpoint; a second call returns the same rows") {
+      val ids0 = rddIds
+      val out = op()
+      try {
+        assert(rddIds -- ids0 == Set(checkpointRdd(out)), s"$name left a staged checkpoint pinned")
+        val rows = out.collect()
+        assert(rows.nonEmpty)
+        val again = op()
+        try assert(again.collect().toSet == rows.toSet)
+        finally graft.util.LruMemo.releaseCheckpoint(again)
+      } finally graft.util.LruMemo.releaseCheckpoint(out)
+    }
+  }
 }
