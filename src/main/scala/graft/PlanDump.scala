@@ -70,8 +70,8 @@ object PlanDump {
         .where(col("e") === graft.projection.EventsReplay.VUser + 1)))
   }
 
-  /** The plan text printed for `name` in `mode` ("", "formatted" or
-    * "codegen"): an `_inner` name, a `durable_` read, one of the
+  /** The executed plan text printed for `name` in `mode` ("",
+    * "formatted" or "codegen"): an `_inner` name, a `durable_` read, one of the
     * iterative operators' per-round [[graft.gx.RoundSteps]] (the
     * registered queries return checkpointed results, so the inner
     * Exchange placement is only visible through these), or a registered
@@ -95,11 +95,22 @@ object PlanDump {
           .getOrElse(Step(SparkEntry.queries(name)(spark, dir)))
         (step.df.queryExecution, () => step.release())
     }
-    try mode match {
-      case "codegen" => codegenText(qe)
-      case "formatted" => qe.explainString(FormattedMode)
-      case _ => qe.executedPlan.toString
+    try {
+      executed(qe)
+      mode match {
+        case "codegen" => codegenText(qe)
+        case "formatted" => qe.explainString(FormattedMode)
+        case _ => qe.executedPlan.toString
+      }
     } finally release()
+  }
+
+  /** Runs `qe` unless it already ran, so an adaptive plan is final: the
+    * printed plan is the one AQE executed (its runtime join strategies
+    * and partition counts), not the initial plan. */
+  private def executed(qe: QueryExecution): Unit = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
+    case _ => qe.toRdd.count()
   }
 
   /** Runs `call` and returns the query execution of its LAST
@@ -125,14 +136,9 @@ object PlanDump {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Every whole-stage subtree of the plan with its generated source
-    * (`debug.codegenStringSeq`). A plan that has not run yet is run
-    * first, so an adaptive plan is final. */
+  /** Every whole-stage subtree of the (executed) plan with its generated
+    * source (`debug.codegenStringSeq`). */
   private def codegenText(qe: QueryExecution): String = {
-    qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
-      case _ => qe.toRdd.count()
-    }
     val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan)
     stages.zipWithIndex.map { case ((subtree, code, _), i) =>
       s"== Subtree ${i + 1} / ${stages.size} ==\n$subtree\nGenerated code:\n$code"

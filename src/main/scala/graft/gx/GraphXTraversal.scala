@@ -2,7 +2,7 @@ package graft.gx
 
 import org.apache.spark.graphx.{Edge, Graph, TripletFields, VertexId}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
 import graft.util.{LruMemo, Staged}
@@ -392,15 +392,30 @@ object GraphXTraversal {
     * edge-scale shuffle the repartition is there to remove (guide §2.4).
     * The checkpoint therefore declares `HashPartitioning(k, width)`
     * itself; EnsureRequirements reuses it, and shuffles the other side
-    * of a k-keyed join to `width`. The build runs under the session's
-    * own conf and sets none. */
+    * of a k-keyed join to `width`. A frame whose plan already ends
+    * hash-partitioned on `k` at `width` (a projection of another such
+    * checkpoint, a left-outer join that streams one, an aggregation over
+    * a `repartition(width, k)`) checkpoints with no exchange of its own:
+    * EnsureRequirements drops a root repartition its child satisfies.
+    *
+    * The declared layout only pays if the planner reads it: for the
+    * relational rounds, AQE sizes a checkpoint by its statistics and
+    * would BROADCAST an edge-scale frame below the broadcast threshold
+    * (one extra job per round, and the layout bypassed), then turn the
+    * vertex-side join into a second broadcast once the message shuffle
+    * has run. Those rounds therefore pin `shuffle_hash` on their
+    * vertex-sized side ([[pageRankRound]], [[ssspRound]]). The build
+    * runs under the session's own conf and sets none. */
   private[graft] def partitionedCheckpoint(df: DataFrame, k: String, width: Int): DataFrame =
     Relations.hashPartitioned(df.repartition(width, col(k)).localCheckpoint(true), k, width)
 
   /** [[partitionedCheckpoint]] at the session's
     * `spark.sql.shuffle.partitions` (read, never set). */
   private[graft] def partitionedCheckpoint(df: DataFrame, k: String): DataFrame =
-    partitionedCheckpoint(df, k, df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    partitionedCheckpoint(df, k, sessionWidth(df.sparkSession))
+
+  private[gx] def sessionWidth(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Newman modularity of the [[communitiesLpaDF]] labeling — the "did
     * LPA find real structure" number: Q = Σ_c [in_c∕m − (deg_c∕2m)²]
@@ -989,28 +1004,17 @@ object GraphXTraversal {
       .localCheckpoint(true)
   }
 
-  /** WEIGHTED single-source-class shortest paths: min-cost distance TO
-    * the landmark set along edge direction, edge cost = the `quantity`
-    * property where present (contains edges — cast to long: quantities
-    * are integer-valued) and 1 elsewhere, the weighted-PageRank weight
-    * convention. Run as GENERAL relational Bellman–Ford rounds — each
-    * round one equi-join of the edge list against the tentative-
-    * distance frame plus one map-side-combined min-aggregate (the
-    * pagerank-round scale shape; parallel edges relax independently,
-    * so the min over a multi-edge group needs no pre-dedup) — while
-    * the twin derives the fixpoint closed-form from the order DAG's
-    * level structure (min per level, the shortest_paths trick).
-    * Integer arithmetic throughout: costs are long sums of long
-    * weights, order-free and engine-exact, no float path at all.
-    * `rounds` must reach the weighted diameter of the landmark cone
-    * (3 levels here; the default leaves slack — extra rounds are
-    * idempotent at the fixpoint). Returns (vertex_id, landmark_id,
-    * dist_w); unreachable pairs carry no row, landmarks self-report 0. */
   /** Memoized long-weighted edge frames for [[ssspWeightedDF]] in the
     * shared [[graft.util.LruMemo]], like [[contribEdges]]: the
     * fact-table scan + quantity join dominates each call (measured
     * 47 s/rep at sf5 unmemoized), while the relaxation rounds are
-    * landmark-cone-sized. Eviction frees the checkpoint blocks. */
+    * landmark-cone-sized. Eviction frees the checkpoint blocks.
+    * Pre-partitioned on `dst`: every relaxation round joins this
+    * edge-scale frame on `dst` against the `v`-partitioned distances,
+    * and [[ssspRound]] pins that join to `shuffle_hash` built on the
+    * distances, so the edges are streamed in place. Left to its size
+    * statistics, AQE broadcast this checkpoint in every round (a job
+    * per round, and the layout unused). */
   private val wedgeCache =
     new LruMemo[(Snapshot, Seq[String]), DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
@@ -1022,11 +1026,6 @@ object GraphXTraversal {
       val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
         .groupBy(col("e")).agg(max(col("v")).as("q"))
         .select(col("e").as("id"), col("q"))
-      // pre-partitioned on `dst` (r15, VERDICT r14 item 1): every
-      // Bellman–Ford round joins this edge-scale frame on `dst`
-      // against the vertex-sized tentative-distance frame, so the
-      // preserved HashPartitioning removes one edge-scale exchange per
-      // relaxation round (4 per call, memoized across calls)
       partitionedCheckpoint(
         snap.edges.where(col("label").isin(labels: _*))
           .select(col("id"), col("outV").as("src"), col("inV").as("dst"))
@@ -1036,25 +1035,40 @@ object GraphXTraversal {
         "dst")
     }
 
+  /** WEIGHTED single-source-class shortest paths: min-cost distance TO
+    * the landmark set along edge direction, edge cost = the `quantity`
+    * property where present (contains edges — cast to long: quantities
+    * are integer-valued) and 1 elsewhere, the weighted-PageRank weight
+    * convention. Run as GENERAL relational Bellman–Ford rounds — each
+    * round one equi-join of the edge list against the tentative-
+    * distance frame plus one min-aggregate ([[ssspRound]]; parallel
+    * edges relax independently, so the min over a multi-edge group
+    * needs no pre-dedup) — while the twin derives the fixpoint
+    * closed-form from the order DAG's level structure (min per level,
+    * the shortest_paths trick). Integer arithmetic throughout: costs
+    * are long sums of long weights, order-free and engine-exact, no
+    * float path at all. `rounds` must reach the weighted diameter of
+    * the landmark cone (3 levels here; the default leaves slack — extra
+    * rounds are idempotent at the fixpoint). Returns (vertex_id,
+    * landmark_id, dist_w); unreachable pairs carry no row, landmarks
+    * self-report 0.
+    *
+    * The distances (v, lm, d) are carried as a `v`-partitioned
+    * checkpoint at the edges' width, so a round reads both sides in
+    * place and runs ONE exchange and two jobs (the shuffle and the
+    * checkpoint). The landmark set is still an inlined `isin` literal:
+    * a set needs a bound array or a join, not one
+    * [[graft.snapshot.Pin]]. */
   def ssspWeightedDF(spark: SparkSession, snap: Snapshot,
                      landmarks: Seq[Long],
                      labels: Seq[String] =
                        Seq("placed", "contains", "supplied_by"),
                      rounds: Int = 4): DataFrame = {
     val edges = weightedEdges(snap, labels)
-    val lmInGraph = edges.select(col("src").as("v"))
-      .unionAll(edges.select(col("dst").as("v"))).distinct()
-      .where(col("v").isin(landmarks: _*))
-    var dist = lmInGraph
-      .select(col("v"), col("v").as("lm"), lit(0L).as("d"))
-      .localCheckpoint(true)
+    val width = sessionWidth(spark)
+    var dist = ssspStart(edges, landmarks, width)
     (1 to rounds).foreach { _ =>
-      val relaxed = edges
-        .join(dist.select(col("v").as("dst"), col("lm"), col("d")), "dst")
-        .select(col("src").as("v"), col("lm"), (col("wt") + col("d")).as("d"))
-      val next = dist.unionAll(relaxed)
-        .groupBy(col("v"), col("lm")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
+      val next = partitionedCheckpoint(ssspRound(edges, dist, width), "v", width)
       releaseCheckpoint(dist)
       dist = next
     }
@@ -1062,6 +1076,34 @@ object GraphXTraversal {
     // only on LRU eviction)
     dist.select(col("v").as("vertex_id"), col("lm").as("landmark_id"),
       col("d").as("dist_w"))
+  }
+
+  /** Round-0 distances: every landmark on an edge at 0 from itself, as
+    * a `v`-partitioned checkpoint (the distinct's own exchange builds the
+    * layout, so the checkpoint adds none). */
+  private[gx] def ssspStart(edges: DataFrame, landmarks: Seq[Long], width: Int): DataFrame =
+    partitionedCheckpoint(
+      edges.select(col("src").as("v"))
+        .unionAll(edges.select(col("dst").as("v"))).distinct()
+        .where(col("v").isin(landmarks: _*))
+        .select(col("v"), col("v").as("lm"), lit(0L).as("d")),
+      "v", width)
+
+  /** One relaxation round, the body [[ssspWeightedDF]] and
+    * [[RoundSteps]] share: the `dst`-partitioned edges join the
+    * `v`-partitioned distances with no exchange — `shuffle_hash` on the
+    * distance side makes it the build table, where AQE would broadcast
+    * the edges by size — and the only exchange is the `repartition(width,
+    * v)` under the (v, lm) min, which leaves the result `v`-partitioned
+    * so the next round's checkpoint adds no second one. The partial
+    * aggregation before the shuffle is given up for it: relaxed rows are
+    * landmark-cone-sized. */
+  private[gx] def ssspRound(edges: DataFrame, dist: DataFrame, width: Int): DataFrame = {
+    val relaxed = edges
+      .join(dist.select(col("v").as("dst"), col("lm"), col("d")).hint("shuffle_hash"), "dst")
+      .select(col("src").as("v"), col("lm"), (col("wt") + col("d")).as("d"))
+    dist.unionAll(relaxed).repartition(width, col("v"))
+      .groupBy(col("v"), col("lm")).agg(min(col("d")).as("d"))
   }
 
   /** Harmonic centrality TO the landmark set over the label-filtered
@@ -1285,8 +1327,12 @@ object GraphXTraversal {
     * preserved HashPartitioning lets every iteration's rank join reuse
     * the layout instead of re-exchanging the edge-scale side each round
     * (plain localCheckpoint under AQE records UnknownPartitioning and
-    * silently re-exchanged every round — the r14 fix). LRU-bounded in the
-    * shared [[graft.util.LruMemo]]; eviction frees the checkpoint blocks
+    * silently re-exchanged every round — the r14 fix). The layout is only
+    * read if the join keeps it: below the broadcast threshold AQE
+    * broadcast this checkpoint in every round (a job per round), so
+    * [[pageRankRound]] pins `shuffle_hash` built on the ranks and streams
+    * these edges in place. LRU-bounded in the shared
+    * [[graft.util.LruMemo]]; eviction frees the checkpoint blocks
     * explicitly ([[graft.util.LruMemo.releaseCheckpoint]]). */
   private val contribCache = new LruMemo[Snapshot, DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
@@ -1358,55 +1404,79 @@ object GraphXTraversal {
     * round(4) contract absorbs: r_{i+1}(v) = base(v) + 0.85·Σ_{(u,v)}
     * r_i(u)∕outdeg(u), base = 0.15 everywhere (global) or 0.15·1{v=src}
     * (personalized, where r_0 = 1{v=src} — GraphX PageRank.scala
-    * semantics, also the DuckDB twin's unrolled CTEs). Each round is one
-    * rank join against the pre-partitioned contribution edges (only the
-    * vertex-sized rank side exchanges) + one (v)-keyed sum whose
-    * map-side partials collapse the edge-scale messages to
-    * vertex-per-partition rows before the shuffle — the LPA-rewrite
-    * shape (§41) that took modularity 10.5 s → 1.9 s, here applied to
-    * the two queries now at the top of the profile. Rounds materialize
-    * eagerly (localCheckpoint) and release their predecessor — plans
-    * never stack rounds deep. Zero-rank vertices are filtered from the
-    * message side (a 0 contribution adds 0): free for the global
-    * variant, frontier-sized work in the personalized one's early
-    * rounds. Package-visible for the GraphX-equivalence spec. */
+    * semantics, also the DuckDB twin's unrolled CTEs). The source is a
+    * bound [[graft.snapshot.Pin]], so calls from different sources run
+    * the same generated classes. Each round ([[pageRankRound]]) reads
+    * the `u`-partitioned contribution edges, the `v`-partitioned vertex
+    * frame and the `v`-partitioned ranks in place; its only exchange is
+    * the (v)-keyed message sum, whose map-side partials collapse the
+    * edge-scale messages to vertex-per-partition rows before the
+    * shuffle — the LPA-rewrite shape (§41). Ranks materialize every
+    * `fuse` rounds as a `v`-partitioned checkpoint (the left-outer join
+    * already leaves them `v`-partitioned, so the checkpoint adds no
+    * exchange) and release their predecessor — plans never stack rounds
+    * deep. Zero-rank vertices are filtered from the message side (a 0
+    * contribution adds 0): free for the global variant, frontier-sized
+    * work in the personalized one's early rounds. Package-visible for
+    * the GraphX-equivalence spec. */
   private[graft] def pageRankRounds(contrib: DataFrame, verts: DataFrame,
                                     iters: Int, src: Option[Long]): DataFrame = {
-    val base = src match {
-      case Some(s) => when(col("v") === s, lit(0.15)).otherwise(lit(0.0))
-      case None    => lit(0.15)
-    }
-    val init = src match {
-      case Some(s) => when(col("v") === s, lit(1.0)).otherwise(lit(0.0))
-      case None    => lit(1.0)
-    }
-    // Round FUSION (r12 probe at 2, r13 re-probe → 3): materialize every
-    // 3rd round instead of every round — a fused round's plan embeds its
-    // predecessors (rank is referenced exactly once per round, so
-    // lineage depth ≤3 never re-evaluates anything), cutting the
-    // localCheckpoint barriers that were the 10-iteration floor at the
-    // top of the r11 profile. r13 same-host 5-rep medians (sf0.1):
-    // fuse=2 full/weighted/personal 6.2∕6.0∕3.3 s, fuse=3 5.8∕5.4∕3.1 s
-    // (family −8%), fuse=4 regresses personalized to 6.2 s (deep fused
-    // plans defeat the zero-rank frontier prune, the same cliff r12
-    // measured at 5) — 3 is the measured optimum.
-    val fuse = 3
-    var ranks = verts.select(col("v"), init.as("r")).localCheckpoint(true)
+    // Round FUSION: materialize every `fuse`-th round instead of every
+    // round — a fused round's plan embeds its predecessors (rank is
+    // referenced exactly once per round, so a fused plan never
+    // re-evaluates anything), cutting checkpoint jobs. Measured under
+    // the one-exchange round shape on a 4-vCPU host at local[2]:
+    // perfbench `analytics` per-request PPR p50, medians over seeds
+    // 11–18, fuse=2 1.89 s, fuse=3 2.09 s (2 faster on 7 of 8 seeds),
+    // fuse=5 2.15 s (seeds 11–14, where 2 read 1.83 s); sf0.1 graft.Bench
+    // 5-rep medians full/weighted/personal, fuse=2 5.9∕5.9∕2.5 s and
+    // 5.4∕5.7∕2.4 s, fuse=3 6.6∕6.1∕2.8 s. 2 is the measured optimum.
+    // (Under the earlier broadcast-per-round shape, r13 measured 3 as
+    // the optimum at sf0.1: fuse=2 6.2∕6.0∕3.3 s, fuse=3 5.8∕5.4∕3.1 s,
+    // fuse=4 personalized 6.2 s.)
+    val fuse = 2
+    var ranks = pageRankStart(verts, src)
     var lastCp = ranks
     (1 to iters).foreach { i =>
-      val msg = contrib
-        .join(ranks.where(col("r") =!= 0.0).select(col("v").as("u"), col("r")), "u")
-        .groupBy(col("v")).agg(sum(col("r") * col("w")).as("s"))
-      val next = verts.join(msg, Seq("v"), "left_outer")
-        .select(col("v"), (base + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r"))
+      val next = pageRankRound(contrib, verts, ranks, src)
       if (i % fuse == 0 || i == iters) {
-        val cp = next.localCheckpoint(true)
+        val cp = partitionedCheckpoint(next, "v")
         releaseCheckpoint(lastCp)
         lastCp = cp
         ranks = cp
       } else ranks = next
     }
     ranks // caller releases after its final cut materializes
+  }
+
+  /** `mass` at the personalized source (a bound [[graft.snapshot.Pin]],
+    * not an inlined literal), 0 elsewhere; `mass` everywhere when global. */
+  private def teleport(src: Option[Long], mass: Double): Column =
+    src.fold(lit(mass))(s =>
+      when(col("v") === graft.snapshot.Pin.column(s), lit(mass)).otherwise(lit(0.0)))
+
+  /** r_0 over the vertex frame as a `v`-partitioned checkpoint: a
+    * projection of the `v`-partitioned vertex frame, so no exchange. */
+  private[gx] def pageRankStart(verts: DataFrame, src: Option[Long]): DataFrame =
+    partitionedCheckpoint(verts.select(col("v"), teleport(src, 1.0).as("r")), "v")
+
+  /** One PageRank round, the body [[pageRankRounds]] and [[RoundSteps]]
+    * share. Both joins are pinned to `shuffle_hash` built on their
+    * vertex-sized side (the nonzero ranks, then the message sums): the
+    * edge-scale contribution edges and the vertex frame are streamed
+    * where they lie, and nothing is broadcast. Without the hints AQE
+    * broadcast the contribution checkpoint each round by its size
+    * statistics and, once the message shuffle had run, broadcast the
+    * messages too — three jobs per round instead of one. */
+  private[gx] def pageRankRound(contrib: DataFrame, verts: DataFrame,
+                                ranks: DataFrame, src: Option[Long]): DataFrame = {
+    val msg = contrib
+      .join(ranks.where(col("r") =!= 0.0).select(col("v").as("u"), col("r"))
+        .hint("shuffle_hash"), "u")
+      .groupBy(col("v")).agg(sum(col("r") * col("w")).as("s"))
+    verts.join(msg.hint("shuffle_hash"), Seq("v"), "left_outer")
+      .select(col("v"),
+        (teleport(src, 0.15) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r"))
   }
 
   /** GraphX's final rank normalization + deterministic top-k cut over a

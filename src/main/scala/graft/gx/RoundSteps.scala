@@ -12,10 +12,11 @@ import graft.util.LruMemo
   * the registered queries' final plans show only a checkpointed result
   * scan, so the per-round Exchange placement (whether a round
   * re-exchanges a frame GraphXTraversal.partitionedCheckpoint declared
-  * hash-partitioned on its join key) is invisible without these. Each
-  * helper mirrors its loop body verbatim (or calls the extracted body
-  * directly); none is registered as a query and none is reachable from
-  * Bench/Verify. Each returns a [[Step]]: the frame plus the staging
+  * hash-partitioned on its join key) is invisible without these. The
+  * PageRank, SSSP and HyperANF steps call their loops' own round bodies;
+  * the others mirror theirs verbatim. None is registered as a query and
+  * none is reachable from Bench/Verify. PlanDump runs a step before it
+  * prints the plan, so the dump is the final adaptive plan. Each returns a [[Step]]: the frame plus the staging
   * checkpoints it pinned (the shared memoized frames stay with their
   * memos), released once the plan text is captured. */
 private[graft] object RoundSteps {
@@ -29,18 +30,12 @@ private[graft] object RoundSteps {
   private val Landmarks = Seq(4000001L, 4000002L, 4000003L)
 
   /** One relational PageRank round over the shared contribEdges /
-    * vertexFrame checkpoints (mirrors pageRankRounds' loop body; ranks
-    * seeded uniform like round 1 of the global variant). */
+    * vertexFrame checkpoints (pageRankRounds' own body, ranks seeded
+    * uniform like round 1 of the global variant). */
   def pagerankRound(spark: SparkSession, snap: Snapshot): Step = {
-    val contrib = GraphXTraversal.contribEdges(snap)
     val verts = GraphXTraversal.vertexFrame(snap)
-    val ranks = verts.select(col("v"), lit(1.0).as("r")).localCheckpoint(true)
-    val msg = contrib
-      .join(ranks.where(col("r") =!= 0.0).select(col("v").as("u"), col("r")), "u")
-      .groupBy(col("v")).agg(sum(col("r") * col("w")).as("s"))
-    Step(verts.join(msg, Seq("v"), "left_outer")
-      .select(col("v"),
-        (lit(0.15) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r")),
+    val ranks = GraphXTraversal.pageRankStart(verts, None)
+    Step(GraphXTraversal.pageRankRound(GraphXTraversal.contribEdges(snap), verts, ranks, None),
       Seq(ranks))
   }
 
@@ -82,20 +77,12 @@ private[graft] object RoundSteps {
   }
 
   /** One Bellman–Ford relaxation round over the memoized weighted edge
-    * frame (mirrors ssspWeightedDF's loop body with the round-0 dist). */
+    * frame (ssspWeightedDF's own body, from the round-0 distances). */
   def ssspRound(spark: SparkSession, snap: Snapshot): Step = {
     val edges = GraphXTraversal.weightedEdges(snap, DagLabels)
-    val dist = edges.select(col("src").as("v"))
-      .unionAll(edges.select(col("dst").as("v"))).distinct()
-      .where(col("v").isin(Landmarks: _*))
-      .select(col("v"), col("v").as("lm"), lit(0L).as("d"))
-      .localCheckpoint(true)
-    val relaxed = edges
-      .join(dist.select(col("v").as("dst"), col("lm"), col("d")), "dst")
-      .select(col("src").as("v"), col("lm"), (col("wt") + col("d")).as("d"))
-    Step(dist.unionAll(relaxed)
-      .groupBy(col("v"), col("lm")).agg(min(col("d")).as("d")),
-      Seq(dist))
+    val width = GraphXTraversal.sessionWidth(spark)
+    val dist = GraphXTraversal.ssspStart(edges, Landmarks, width)
+    Step(GraphXTraversal.ssspRound(edges, dist, width), Seq(dist))
   }
 
   /** One HyperANF systolic round over the anfEdges frame and the

@@ -385,8 +385,8 @@ object TextOps {
    * for its ingestion. Composition: the memoized LSH pair graph → CC
    * clusters → per-source drop counts; integers up to one division.
    */
-  def dupRatioBySource(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val clusters = dedupClusters(docs, threshold)
+  def dupRatioBySource(docs: DataFrame, threshold: Double = 0.8): DataFrame = Staged.run { stage =>
+    val clusters = stage.own(dedupClusters(docs, threshold))
     docs.select(col("doc_id"), col("source"))
       .join(clusters.select(col("doc_id"), col("keep")), "doc_id")
       .groupBy(col("source"))
@@ -394,6 +394,7 @@ object TextOps {
         sum(when(col("keep"), 0L).otherwise(1L)).cast("long").as("n_dupes"))
       .select(col("source"), col("n_docs"), col("n_dupes"),
         round(col("n_dupes").cast("double") / col("n_docs"), 4).as("dup_ratio"))
+      .localCheckpoint(true)
   }
 
   /**
@@ -791,9 +792,11 @@ object TextOps {
    * itself. Returns (doc_id, cluster_id, keep, split).
    */
   def splitLeakageSafe(docs: DataFrame, threshold: Double = 0.8,
-                       trainPct: Int = 90, valPct: Int = 5): DataFrame =
-    splitAssign(dedupClusters(docs, threshold), "cluster_id", trainPct, valPct)
+                       trainPct: Int = 90, valPct: Int = 5): DataFrame = Staged.run { stage =>
+    splitAssign(stage.own(dedupClusters(docs, threshold)), "cluster_id", trainPct, valPct)
       .select(col("doc_id"), col("cluster_id"), col("keep"), col("split"))
+      .localCheckpoint(true)
+  }
 
   /**
    * Fixed-size token chunking with stride (overlap = chunkTokens −

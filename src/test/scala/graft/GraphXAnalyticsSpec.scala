@@ -664,6 +664,48 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     assert(!persisted.contains(firstRdd), "evicted bridges checkpoint still pinned")
   }
 
+  test("personalized pagerank: the source is bound, so two sources run the same generated code") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val snap = TpchGraph.snapshot(spark, dir)
+    // the generated sources of every round plan (a checkpoint with a
+    // join) one call runs, and its top-k
+    def run(src: Long): (Seq[String], Map[Long, Double]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint") plans.add(qe)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val top = try {
+        val out = graft.gx.GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, src, 10, 30)
+        org.apache.spark.sql.graftshim.ListenerBus.drain(spark)
+        out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      val rounds = plans.asScala.toSeq.map(_.executedPlan).filter { p =>
+        org.apache.spark.sql.execution.debug.codegenStringSeq(p).exists(_._1.contains("Join"))
+      }
+      assert(rounds.nonEmpty)
+      (rounds.flatMap(p => org.apache.spark.sql.execution.debug.codegenStringSeq(p).map(_._2)).sorted,
+        top)
+    }
+    val (codeA, topA) = run(3000042L)
+    val (codeB, topB) = run(3000007L)
+    val specific = codeA.diff(codeB).size
+    assert(specific == 0, s"$specific of ${codeA.size} round-plan sources are source-specific")
+    Seq(3000042L -> topA, 3000007L -> topB).foreach { case (src, rel) =>
+      val gx = graft.gx.GraphXTraversal.personalizedPageRankDF(spark, snap, src, 10, 30)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(rel.keySet == gx.keySet, s"src $src: vertex sets differ")
+      gx.foreach { case (v, r) =>
+        assert(math.abs(rel(v) - r) <= 1e-4 + 1e-9, s"src $src vertex $v: gx=$r rel=${rel(v)}")
+      }
+    }
+  }
+
   test("RoundSteps: dumping every step's plan releases its staging checkpoints") {
     import graft.gx.RoundSteps
     val snap = TpchGraph.snapshot(spark, dir)

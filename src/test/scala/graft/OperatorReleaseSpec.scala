@@ -85,6 +85,8 @@ class OperatorReleaseSpec extends AnyFunSuite {
   private val released: Seq[(String, () => DataFrame)] = Seq(
     "dedupClusters" -> (() => TextOps.dedupClusters(sfDocs, 0.8)),
     "dedupKeepBest" -> (() => TextOps.dedupKeepBest(sfDocs, 0.8)),
+    "dupRatioBySource" -> (() => TextOps.dupRatioBySource(sfDocs, 0.8)),
+    "splitLeakageSafe" -> (() => TextOps.splitLeakageSafe(sfDocs, 0.8)),
     "curationPipeline" -> (() => TextOps.curationPipeline(sfDocs)),
     "curation_pipeline_sem" -> (() => SparkEntry.queries("curation_pipeline_sem")(spark, sf)),
     "sourceOverlapSketch" -> (() => TextOps.sourceOverlapSketch(sfDocs)),
@@ -96,6 +98,8 @@ class OperatorReleaseSpec extends AnyFunSuite {
       val ids0 = rddIds
       val out = op()
       try {
+        assert(out.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+          s"$name returns a plan over a staged frame, not a checkpoint of its own")
         assert(rddIds -- ids0 == Set(checkpointRdd(out)), s"$name left a staged checkpoint pinned")
         val rows = out.collect()
         assert(rows.nonEmpty)

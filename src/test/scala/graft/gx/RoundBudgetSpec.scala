@@ -1,0 +1,155 @@
+package graft.gx
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.ListenerBus
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.TestSpark
+import graft.model.{A, PropType}
+import graft.projection.TpchGraph
+
+/** The per-round budget of the relational round loops, read off what a
+  * call actually ran: every executed query's final adaptive plan (a
+  * `QueryExecutionListener`) and every job (a `SparkListener`). A round
+  * plan broadcasts nothing and runs exactly one shuffle per round, and a
+  * call runs at most two jobs per round plus a fixed number of result
+  * jobs, each named below. */
+class RoundBudgetSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val dir = "/root/testdata/sf0.001"
+  private val DagLabels = Seq("placed", "contains", "supplied_by")
+
+  /** What one call ran: the final plan of every query it executed and the
+    * number of jobs it started. */
+  private final case class Ran(plans: Seq[SparkPlan], jobs: Int)
+
+  private def traced(call: => Unit): Ran = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new AtomicInteger()
+    val queries = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val starts = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(spark)
+    spark.listenerManager.register(queries)
+    spark.sparkContext.addSparkListener(starts)
+    try {
+      call
+      ListenerBus.drain(spark)
+    } finally {
+      spark.sparkContext.removeSparkListener(starts)
+      spark.listenerManager.unregister(queries)
+    }
+    Ran(plans.asScala.toSeq, jobs.get)
+  }
+
+  // the executed plan's nodes, adaptive wrappers and query stages opened
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
+  /** Asserts the round plans of `ran` (the plans with a join; a round has
+    * `joinsPerRound` joins) hold `rounds` rounds in all, with no broadcast
+    * and one shuffle per round, and that the call ran at most two jobs
+    * per round plus the named `fixedJobs`. */
+  private def assertBudget(ran: Ran, rounds: Int, joinsPerRound: Int,
+                           fixedJobs: Map[String, Int]): Unit = {
+    val roundPlans = ran.plans.map(nodes).filter(_.exists(_.isInstanceOf[BaseJoinExec]))
+    val perPlan = roundPlans.map { ns =>
+      val joins = ns.count(_.isInstanceOf[BaseJoinExec])
+      assert(joins % joinsPerRound == 0, s"$joins joins is not whole rounds:\n${ns.head}")
+      val broadcasts = ns.count {
+        case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => true
+        case _ => false
+      }
+      assert(broadcasts == 0, s"a round plan broadcasts:\n${ns.head}")
+      val shuffles = ns.count(_.isInstanceOf[ShuffleExchangeLike])
+      assert(shuffles == joins / joinsPerRound,
+        s"$shuffles shuffles in ${joins / joinsPerRound} rounds:\n${ns.head}")
+      joins / joinsPerRound
+    }
+    assert(perPlan.sum == rounds, s"round plans hold ${perPlan.mkString("+")} rounds, not $rounds")
+    val budget = 2 * rounds + fixedJobs.values.sum
+    assert(ran.jobs <= budget,
+      s"${ran.jobs} jobs, budget 2 x $rounds rounds + ${fixedJobs.mkString(", ")} = $budget")
+  }
+
+  private def ranks(rows: Array[org.apache.spark.sql.Row]): Map[Long, Double] =
+    rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("personalized PageRank: no broadcast, one shuffle per round, two jobs per round") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    val iters = 10
+    // builds the memoized contribution edges and vertex frame untraced
+    GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, 3000043L, iters, 30).collect()
+    val src = 3000042L
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val ran = traced {
+      val out = GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, src, iters, 30)
+      rows = out.collect()
+    }
+    assertBudget(ran, iters, joinsPerRound = 2, fixedJobs = Map(
+      "r_0 checkpoint" -> 1,
+      "rank sum for the normalization (partial-sum shuffle, result)" -> 2,
+      "top-k cut checkpoint" -> 1,
+      "the caller's collect" -> 1))
+    val twin = ranks(GraphXTraversal.personalizedPageRankDF(spark, snap, src, iters, 30).collect())
+    val rel = ranks(rows)
+    assert(rel.keySet == twin.keySet)
+    twin.foreach { case (v, r) => assert(math.abs(rel(v) - r) <= 1e-4 + 1e-9, s"vertex $v") }
+  }
+
+  test("weighted SSSP: no broadcast, one shuffle per round, two jobs per round") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    val rounds = 4
+    GraphXTraversal.ssspWeightedDF(spark, snap, Seq(4000004L), DagLabels, rounds).collect()
+    val lms = Seq(4000001L, 4000002L, 4000003L)
+    var rows: Array[(Long, Long, Long)] = null
+    val ran = traced {
+      rows = GraphXTraversal.ssspWeightedDF(spark, snap, lms, DagLabels, rounds).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    }
+    assertBudget(ran, rounds, joinsPerRound = 1, fixedJobs = Map(
+      "round-0 distances (distinct shuffle, checkpoint)" -> 2,
+      "the caller's collect" -> 1))
+
+    // the shortest-path equations over the snapshot's own edges: d(lm) =
+    // 0, d(v) <= w + d(u) on every edge v -> u, and every reached v > 0
+    // is tight on some edge
+    val qty = snap.prop("quantity", PropType.PDouble, A.Edge).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1).toLong).toMap
+    val edges = snap.edges.where(col("label").isin(DagLabels: _*))
+      .select("id", "outV", "inV").collect()
+      .map(r => (r.getLong(1), r.getLong(2), qty.getOrElse(r.getLong(0), 1L))).toSeq
+    val d = rows.map { case (v, lm, x) => (v, lm) -> x }.toMap
+    assert(d.size > lms.size)
+    lms.foreach(lm => assert(d.get((lm, lm)).contains(0L), s"landmark $lm"))
+    edges.foreach { case (v, u, w) =>
+      lms.foreach(lm => d.get((u, lm)).foreach(du =>
+        assert(d.get((v, lm)).exists(_ <= du + w), s"edge $v -> $u relaxes to $lm")))
+    }
+    val out = edges.groupBy(_._1)
+    d.foreach { case ((v, lm), x) =>
+      assert(x == 0 && lms.contains(v) ||
+        x > 0 && out.getOrElse(v, Nil).exists { case (_, u, w) => d.get((u, lm)).contains(x - w) },
+        s"($v, $lm) = $x is tight on no edge")
+    }
+  }
+}
