@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.snapshot.Snapshot
-import graft.util.LruMemo
+import graft.util.{LruMemo, Staged}
 import graft.util.LruMemo.releaseCheckpoint
 
 /**
@@ -186,11 +186,10 @@ object HyperAnf {
         (col("nr") =!= col("regs")).as("changed"))
   }
 
-  private def buildAnf(snap: Snapshot, hops: Int, labels: Seq[String]): DataFrame = {
-    val width = anfWidth(snap, labels)
-    val edges = anfEdges(snap, labels, width)
-    def registers(df: DataFrame) = GraphXTraversal.partitionedCheckpoint(df, "v", width)
-    try {
+  private def buildAnf(snap: Snapshot, hops: Int, labels: Seq[String]): DataFrame =
+    Staged.run { stage =>
+      val width = anfWidth(snap, labels)
+      val edges = stage.own(anfEdges(snap, labels, width))
       // DENSE registers — one 64-int array per vertex, the layout the
       // HyperANF paper actually runs (the r14 sf5 catch: a sparse
       // (v,j,M)-row layout checkpointed ~600M rows per frame and
@@ -199,26 +198,22 @@ object HyperAnf {
       // smaller, the estimate becomes a pure per-row PROJECTION — no
       // second shuffle — and the systolic skip works at vertex
       // granularity).
-      var regs = registers(anfRegs0(edges))
       // Systolic rounds ([[anfRound]]): sink-sided edges drop out after
       // round 1; converged regions go quiet; a vertex absorbs a
       // neighbour's array once and the skip is exact. Estimates fold out
-      // of each round's frame immediately and the previous frame is
-      // released: at most two |V|-row frames alive.
+      // of each round's frame immediately; at most two |V|-row frames
+      // are alive. Each frame is this scope's too, so one whose
+      // estimate fails is still released.
       val estParts = Seq.newBuilder[DataFrame]
-      (1 to hops).foreach { h =>
-        val next = registers(anfRound(edges, regs, width))
-        releaseCheckpoint(regs)
-        regs = next
-        estParts += estimateOf(next, h).localCheckpoint(true)
+      stage.iterate(GraphXTraversal.partitionedCheckpoint(anfRegs0(edges), "v", width), hops) {
+        (regs, h) =>
+          val next = stage.own(
+            GraphXTraversal.partitionedCheckpoint(anfRound(edges, regs, width), "v", width))
+          estParts += stage.checkpoint(estimateOf(next, h))
+          next
       }
-      releaseCheckpoint(regs)
-      val parts = estParts.result()
-      val est = parts.reduce(_ unionAll _).localCheckpoint(true)
-      parts.foreach(releaseCheckpoint)
-      est
-    } finally releaseCheckpoint(edges)
-  }
+      estParts.result().reduce(_ unionAll _).localCheckpoint(true)
+    }
 
   /** Fold one round's dense register frame into its per-vertex
     * estimates — a pure PROJECTION (SQL lambda fold over the 64-int

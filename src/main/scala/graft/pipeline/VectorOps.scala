@@ -444,14 +444,14 @@ object VectorOps {
     // The limit(k) output is a single task, so the row_number window
     // needs no global sort shuffle.
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))
-    var centroids: DataFrame = vecs.orderBy(col("vec_id")).limit(k)
+    val start = vecs.orderBy(col("vec_id")).limit(k)
       .select((row_number().over(w) - 1).as("cell"), col("v").as("cv"))
       .localCheckpoint(true)
 
     // nearest-centroid assignment on (vec_id, v): k scored rows per vector
     // from the broadcast join, folded back to one by a hash aggregation
     // whose map-side partials run BEFORE the shuffle (ties → lowest cell)
-    def assign(df: DataFrame): DataFrame =
+    def assign(df: DataFrame, centroids: DataFrame): DataFrame =
       df.join(broadcast(centroids), lit(true))
         .select(col("vec_id"), col("v"), col("cell"),
           cosineBest(spark, col("v"), col("cv")).as("s"))
@@ -467,22 +467,20 @@ object VectorOps {
     // coalesce, exactly the old means.getOrElse(j, centroids(j))).
     val sample0 = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
     val sample = if (sample0.limit(1).isEmpty) vecs else sample0
-    (1 to iters).foreach { _ =>
-      val means = assign(sample)
+    val centroids = stage.iterate(start, iters) { (centroids, _) =>
+      val means = assign(sample, centroids)
         .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("cell"), col("i")).agg(avg(col("x")).as("m"))
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("es"))
         .select(col("cell"), expr("transform(es, e -> e.m)").as("nv"))
-      val next = centroids
+      centroids
         .join(means, Seq("cell"), "left_outer")
         .select(col("cell"), coalesce(col("nv"), col("cv")).as("cv"))
         .localCheckpoint(true)
-      releaseCheckpoint(centroids)
-      centroids = next
-    }
+    }.state
 
-    val indexed = assign(vecs)
+    val indexed = assign(vecs, centroids)
       .select(col("vec_id").as("nb"), col("v").as("nbv"), col("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     indexed.count() // materialize before the staging cache is released
@@ -655,20 +653,16 @@ object VectorOps {
       cand.join(vecs, "node").join(qs, "q")
         .select(col("q"), col("node"),
           cosineBest(spark, col("qv"), col("nv")).as("s"))
-    var beamDf: DataFrame = qs.select(col("q"), lit(0L).as("node"))
-    var lastBeam: DataFrame = null
-    (1 to rounds).foreach { _ =>
-      val expanded = beamDf.join(edges, "node")
-        .select(col("q"), col("nb").as("node"))
-      val cand = beamDf.unionAll(expanded).distinct()
-      beamDf = groupedTopK(score(cand), "q", "node", "s", beam)
-        .select(col("q"), col("node"))
-        .localCheckpoint(true)
-      if (lastBeam != null) releaseCheckpoint(lastBeam)
-      lastBeam = beamDf
-    }
-    if (lastBeam != null) stage.own(lastBeam)
-    val fin = score(beamDf).where(col("node") =!= col("q"))
+    val walked = stage.own(stage.iterate(qs.select(col("q"), lit(0L).as("node")), rounds) {
+      (beamDf, _) =>
+        val expanded = beamDf.join(edges, "node")
+          .select(col("q"), col("nb").as("node"))
+        val cand = beamDf.unionAll(expanded).distinct()
+        groupedTopK(score(cand), "q", "node", "s", beam)
+          .select(col("q"), col("node"))
+          .localCheckpoint(true)
+    }.state)
+    val fin = score(walked).where(col("node") =!= col("q"))
     groupedTopK(fin, "q", "node", "s", topK)
       .select(col("q"), col("node").as("nb"), round(col("s"), 4).as("sim"))
       .localCheckpoint(true)

@@ -70,7 +70,8 @@ private[graft] object LruMemo {
   * a materialization barrier, `stage.checkpoint(df)` makes an eager
   * localCheckpoint, `stage.own(x)` takes over a frame or graph a callee
   * pinned; all of them are released, in that order, when the scope
-  * ends. */
+  * ends. `stage.iterate` carries an iterative loop's round state, each
+  * round's predecessor released as its successor is pinned. */
 private[graft] final class Stage private[util] () {
   private val releases = mutable.ArrayBuffer.empty[() => Unit]
 
@@ -93,9 +94,7 @@ private[graft] final class Stage private[util] () {
     * it is an eager checkpoint, left alone if it is neither. Returns
     * `df`. */
   def own(df: DataFrame): DataFrame = {
-    if (df.storageLevel != StorageLevel.NONE) releases += (() => df.unpersist(blocking = false))
-    else if (df.queryExecution.analyzed.isInstanceOf[LogicalRDD])
-      releases += (() => LruMemo.releaseCheckpoint(df))
+    Stage.releaseOf(df).foreach(releases += _)
     df
   }
 
@@ -106,11 +105,61 @@ private[graft] final class Stage private[util] () {
     g
   }
 
+  /** Loop-carried round state: runs `step(state, round)` for rounds 1 to
+    * `maxRounds`, or until `until(state)` holds after a round. The step
+    * builds AND pins its round's frame (an eager checkpoint or a
+    * persist); the driver owns only pinning order, release and stopping:
+    *
+    *  - the predecessor is released as soon as its successor is pinned,
+    *    so at most two round states are alive at once (a `start` that
+    *    pins nothing is never released);
+    *  - if a step or the stop test throws, the live state is released
+    *    before the exception propagates (an eager checkpoint whose own
+    *    job failed is this scope's, see [[Staged]]);
+    *  - the final state goes back to the caller, who releases it (or
+    *    hands it to [[own]]).
+    *
+    * The stop test sees each pinned round state, never `start`. */
+  def iterate(start: DataFrame, maxRounds: Int, until: DataFrame => Boolean = _ => false)(
+      step: (DataFrame, Int) => DataFrame): Rounds = {
+    def free(df: DataFrame): Unit = Stage.releaseOf(df).foreach(Stage.quietly)
+    var state = start
+    try {
+      var round = 0
+      var stopped = false
+      while (!stopped && round < maxRounds) {
+        round += 1
+        val next = step(state, round)
+        require(Stage.releaseOf(next).isDefined, s"round $round returned a frame it did not pin")
+        free(state)
+        state = next
+        stopped = until(state)
+      }
+      Rounds(state, stopped)
+    } catch { case e: Throwable => free(state); throw e }
+  }
+
+  private[util] def release(): Unit = releases.foreach(Stage.quietly)
+}
+
+private[util] object Stage {
+  /** How to release `df`: unpersist a cached frame, free an eager
+    * checkpoint's blocks; None for a frame that pins nothing of its own. */
+  def releaseOf(df: DataFrame): Option[() => Unit] =
+    if (df.storageLevel != StorageLevel.NONE) Some(() => df.unpersist(blocking = false))
+    else if (df.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      Some(() => LruMemo.releaseCheckpoint(df))
+    else None
+
   // non-blocking and best effort: a failed release must not mask the
   // body's own failure, and the ContextCleaner still reclaims the rest
-  private[util] def release(): Unit =
-    releases.foreach(r => try r() catch { case NonFatal(_) => })
+  def quietly(release: () => Unit): Unit = try release() catch { case NonFatal(_) => }
 }
+
+/** What [[Stage.iterate]] hands back: the final round state (the caller
+  * releases it) and whether the stop test, rather than the round cap,
+  * ended the loop. */
+private[graft] final case class Rounds(state: DataFrame, converged: Boolean)
 
 /** One scope for an operator's temporary frames — the single release
   * path for everything an operator pins on the way to its result.

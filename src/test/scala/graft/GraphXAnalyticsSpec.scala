@@ -664,6 +664,32 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     assert(!persisted.contains(firstRdd), "evicted bridges checkpoint still pinned")
   }
 
+  test("communitiesLpaDF: memoized per key; repeats are identical, eviction releases") {
+    import graft.gx.GraphXTraversal.{MaxCachedGraphs, communitiesLpaDF}
+    val snap = TpchGraph.snapshot(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // round counts no other caller memoizes, so each call is a new key
+    val first = communitiesLpaDF(spark, snap, rounds = 5)
+    assert(communitiesLpaDF(spark, snap, rounds = 5) eq first)
+    val firstRdd = backingRddId(first)
+    assert(persisted.contains(firstRdd))
+    (1 to MaxCachedGraphs).foreach(i => communitiesLpaDF(spark, snap, rounds = 5 + i))
+    assert(!persisted.contains(firstRdd), "evicted LPA labeling still pinned")
+  }
+
+  test("shortestPathsDF: memoized per key; repeats are identical, eviction releases") {
+    import graft.gx.GraphXTraversal.{MaxCachedGraphs, shortestPathsDF}
+    val snap = TpchGraph.snapshot(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // single-landmark sets no other caller memoizes
+    val first = shortestPathsDF(spark, snap, Seq(4000001L))
+    assert(shortestPathsDF(spark, snap, Seq(4000001L)) eq first)
+    val firstRdd = backingRddId(first)
+    assert(persisted.contains(firstRdd))
+    (1 to MaxCachedGraphs).foreach(i => shortestPathsDF(spark, snap, Seq(4000001L + i)))
+    assert(!persisted.contains(firstRdd), "evicted shortest-path levels still pinned")
+  }
+
   test("personalized pagerank: the source is bound, so two sources run the same generated code") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.joins.BaseJoinExec

@@ -109,4 +109,21 @@ class OperatorReleaseSpec extends AnyFunSuite {
       } finally graft.util.LruMemo.releaseCheckpoint(out)
     }
   }
+
+  test("ssspWeightedDF returns its last round's checkpoint and pins nothing else") {
+    val snap = graft.projection.TpchGraph.snapshot(spark, sf)
+    val labels = Seq("placed", "contains", "supplied_by")
+    val lms = Seq(4000001L, 4000002L, 4000003L)
+    graft.gx.GraphXTraversal.weightedEdges(snap, labels) // the memoized edges
+    val ids0 = rddIds
+    val out = graft.gx.GraphXTraversal.ssspWeightedDF(spark, snap, lms, labels)
+    try {
+      assert(out.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        "the result is a plan over the last round, not its checkpoint")
+      assert(out.columns.toSeq == Seq("vertex_id", "landmark_id", "dist_w"))
+      assert(rddIds -- ids0 == Set(checkpointRdd(out)), "the call left a round's distances pinned")
+      assert(out.count() > lms.size)
+    } finally graft.util.LruMemo.releaseCheckpoint(out)
+    assert(rddIds -- ids0 == Set.empty[Int])
+  }
 }

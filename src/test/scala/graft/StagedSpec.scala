@@ -68,4 +68,70 @@ class StagedSpec extends AnyFunSuite {
     } finally LruMemo.releaseCheckpoint(out)
     assert(rddIds -- ids0 == Set.empty[Int])
   }
+
+  // Stage.iterate, the driver of every loop that carries pinned round
+  // state: x + 1 per round over an eager checkpoint of 0..99
+  private def checkpointRdd(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get
+  private def plusOne(s: org.apache.spark.sql.DataFrame) =
+    s.select((col("x") + 1).as("x")).localCheckpoint(true)
+  private def least(s: org.apache.spark.sql.DataFrame): Long = s.agg(min(col("x"))).head().getLong(0)
+
+  test("iterate: a step failing in round 3 leaves no round state pinned") {
+    val ids0 = rddIds
+    val e = intercept[Exception](Staged.run { stage =>
+      stage.iterate(frame(1).localCheckpoint(true), 5) { (s, round) =>
+        if (round < 3) plusOne(s)
+        else s.select(when(col("x") === 22, raise_error(lit("planted failure")))
+          .otherwise(col("x")).as("x")).localCheckpoint(true)
+      }
+    })
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted failure")))
+    assert(rddIds -- ids0 == Set.empty[Int])
+  }
+
+  test("iterate: a 5-round run pins exactly the state it returns") {
+    val ids0 = rddIds
+    val out = Staged.run(stage => stage.iterate(frame(1).localCheckpoint(true), 5)((s, _) => plusOne(s)))
+    try {
+      assert(!out.converged)
+      assert(least(out.state) == 5L)
+      assert(rddIds -- ids0 == Set(checkpointRdd(out.state)))
+    } finally LruMemo.releaseCheckpoint(out.state)
+    assert(rddIds -- ids0 == Set.empty[Int])
+  }
+
+  test("iterate: no more than two round states are pinned at any step") {
+    val ids0 = rddIds
+    var pinned = Seq.empty[Int]
+    val out = Staged.run(stage => stage.iterate(frame(1).localCheckpoint(true), 6,
+      until = { s => pinned :+= (rddIds -- ids0).size; false }) { (s, _) =>
+      val next = plusOne(s)
+      pinned :+= (rddIds -- ids0).size
+      next
+    })
+    try {
+      // after each step: its predecessor and its own state; after each
+      // release, before the stop test: the new state alone
+      assert(pinned == Seq.fill(6)(Seq(2, 1)).flatten)
+    } finally LruMemo.releaseCheckpoint(out.state)
+  }
+
+  test("iterate: the stop test ends the loop before the cap and says so") {
+    val ids0 = rddIds
+    val stopped = Staged.run(stage =>
+      stage.iterate(frame(1).localCheckpoint(true), 10, until = least(_) >= 3L)((s, _) => plusOne(s)))
+    try {
+      assert(stopped.converged)
+      assert(least(stopped.state) == 3L)
+    } finally LruMemo.releaseCheckpoint(stopped.state)
+    val capped = Staged.run(stage =>
+      stage.iterate(frame(1).localCheckpoint(true), 2, until = least(_) >= 3L)((s, _) => plusOne(s)))
+    try assert(!capped.converged && least(capped.state) == 2L)
+    finally LruMemo.releaseCheckpoint(capped.state)
+    assert(rddIds -- ids0 == Set.empty[Int])
+  }
 }

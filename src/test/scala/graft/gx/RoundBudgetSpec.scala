@@ -152,4 +152,57 @@ class RoundBudgetSpec extends AnyFunSuite {
         s"($v, $lm) = $x is tight on no edge")
     }
   }
+
+  /** Asserts `ran` started at most `budget` jobs and at least one per
+    * round (so the call ran its rounds instead of hitting a memo). Only
+    * jobs are counted: whether AQE broadcasts a round's join at this
+    * size does not move the bound. */
+  private def assertJobs(ran: Ran, rounds: Int, budget: Int): Unit = {
+    info(s"${ran.jobs} jobs, budget $budget")
+    assert(ran.jobs >= rounds, s"${ran.jobs} jobs for $rounds rounds: the call did not run")
+    assert(ran.jobs <= budget, s"${ran.jobs} jobs, budget $budget")
+  }
+
+  // The budgets below are the job counts of the same calls on the same
+  // fixture and session (local[4], 4 shuffle partitions) at commit
+  // e44ba58, where each loop released its round state by hand: the
+  // ported loops may run fewer jobs, never more.
+  private val LpaJobs = 20
+  private val KCoreJobs = 30
+  private val KTrussJobs = 116
+  private val HyperAnfJobs = 31
+
+  test("LPA: the rounds stay within the hand-released loop's job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    GraphXTraversal.pairEdges(snap, 30.0).count() // the memoized pair graph, untraced
+    // rounds = 3: a key no other caller memoizes
+    val ran = traced(GraphXTraversal.communitiesLpaDF(spark, snap, rounds = 3).collect())
+    assertJobs(ran, rounds = 3, budget = LpaJobs)
+  }
+
+  test("k-core: the peel stays within the hand-released loop's job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    val pairs = GraphXTraversal.pairEdges(snap, 30.0)
+    pairs.count()
+    val ran = traced(GraphXTraversal.kCorePeel(pairs, 12, 12).collect())
+    assertJobs(ran, rounds = 3, budget = KCoreJobs)
+  }
+
+  test("k-truss: the peel stays within the hand-released loop's job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    val pairs = GraphXTraversal.pairEdges(snap, 30.0)
+    pairs.count()
+    // the budget includes each peel round's one (t2, t3) exchange of the
+    // u-partitioned oriented frame under the closing semi-join probe
+    val ran = traced(GraphXTraversal.kTrussPeel(pairs, 4, 8).collect())
+    assertJobs(ran, rounds = 3, budget = KTrussJobs)
+  }
+
+  test("HyperANF: the systolic rounds stay within the hand-released loop's job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    HyperAnf.anfWidth(snap, DagLabels) // the memoized label-edge count, untraced
+    // hops = 4: a key no other caller memoizes
+    val ran = traced(HyperAnf.hyperAnfDF(spark, snap, hops = 4, DagLabels).collect())
+    assertJobs(ran, rounds = 4, budget = HyperAnfJobs)
+  }
 }
