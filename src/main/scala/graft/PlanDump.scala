@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.{ExplainUtils, FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -76,9 +76,21 @@ object PlanDump {
     * registered queries return checkpointed results, so the inner
     * Exchange placement is only visible through these), or a registered
     * query. Whatever the step pinned or wrote is released once the text
-    * is captured. */
+    * is captured. A loop planned once prints its round-0 plan and its
+    * round template, the plans that run, unexecuted: they never change
+    * at run time. */
   private[graft] def text(spark: SparkSession, dir: String, name: String,
-                          mode: String): String = {
+                          mode: String): String =
+    graft.gx.RoundSteps.prepared.get(name) match {
+      case Some(loop) =>
+        val prepared = loop(spark, graft.projection.TpchGraph.snapshot(spark, dir))
+        Seq("start" -> prepared.start, "round" -> prepared.template)
+          .map { case (part, plan) => s"== $part ==\n${planText(plan, mode)}" }.mkString("\n")
+      case None => executedText(spark, dir, name, mode)
+    }
+
+  private def executedText(spark: SparkSession, dir: String, name: String,
+                           mode: String): String = {
     val (qe, release) = inner.get(name) match {
       case Some(call) =>
         val (qe, result) = lastCheckpointPlan(spark)(call(spark, dir))
@@ -98,11 +110,19 @@ object PlanDump {
     try {
       executed(qe)
       mode match {
-        case "codegen" => codegenText(qe)
         case "formatted" => qe.explainString(FormattedMode)
-        case _ => qe.executedPlan.toString
+        case _ => planText(qe.executedPlan, mode)
       }
     } finally release()
+  }
+
+  private def planText(plan: SparkPlan, mode: String): String = mode match {
+    case "codegen" => codegenText(plan)
+    case "formatted" =>
+      val out = new StringBuilder
+      ExplainUtils.processPlan(plan, (s: String) => { out ++= s; () })
+      out.toString
+    case _ => plan.toString
   }
 
   /** Runs `qe` unless it already ran, so an adaptive plan is final: the
@@ -138,8 +158,8 @@ object PlanDump {
 
   /** Every whole-stage subtree of the (executed) plan with its generated
     * source (`debug.codegenStringSeq`). */
-  private def codegenText(qe: QueryExecution): String = {
-    val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan)
+  private def codegenText(plan: SparkPlan): String = {
+    val stages = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
     stages.zipWithIndex.map { case ((subtree, code, _), i) =>
       s"== Subtree ${i + 1} / ${stages.size} ==\n$subtree\nGenerated code:\n$code"
     }.mkString(s"Found ${stages.size} WholeStageCodegen subtrees.\n", "\n", "")

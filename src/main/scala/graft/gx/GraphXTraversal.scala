@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
-import graft.util.{LruMemo, Staged}
+import graft.util.{LruMemo, Observed, PreparedRounds, Staged}
 import graft.util.LruMemo.releaseCheckpoint
 import org.apache.spark.sql.graftshim.Relations
 
@@ -524,15 +524,10 @@ object GraphXTraversal {
     * exceeds the nominal round budget. */
   private[graft] def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = Staged.run { stage =>
     val start = pairs.select(col("a"), col("b")).localCheckpoint(true)
-    // the edge set shrinks monotonically, so an unchanged COUNT means an
-    // unchanged SET — the fixpoint; an empty set is trivially converged
-    var prev = start.count()
-    def fixpoint(edges: DataFrame): Boolean = {
-      val n = edges.count()
-      val done = n == prev || n == 0L
-      prev = n
-      done
-    }
+    // a peeled edge set with no vertex below k is the fixpoint (the next
+    // peel would remove nothing), so the round that reaches the core is
+    // the last one; an empty set is trivially converged
+    def fixpoint(edges: DataFrame): Boolean = degrees(edges).where(col("d") < k).isEmpty
     val peeled = stage.iterate(start, math.max(rounds, 64), fixpoint) { (edges, _) =>
       kcoreRound(edges, k).localCheckpoint(true)
     }
@@ -1017,46 +1012,43 @@ object GraphXTraversal {
     * landmark_id, dist_w); unreachable pairs carry no row, landmarks
     * self-report 0.
     *
-    * The distances are carried under the output names as a
-    * `vertex_id`-partitioned checkpoint at the edges' width, so a round
-    * reads both sides in place and runs ONE exchange and two jobs (the
-    * shuffle and the checkpoint), and the result IS the last round's
-    * checkpoint, which the caller releases. The landmark set is still an
-    * inlined `isin` literal: a set needs a bound array or a join, not
-    * one [[graft.snapshot.Pin]]. */
+    * The distances are carried under the output names, `vertex_id`-
+    * partitioned at the edges' width, so a round reads both sides in
+    * place and runs ONE exchange. The round is planned once
+    * ([[ssspLoop]]) and all `rounds` rounds run as one job, whose
+    * checkpoint of the last round IS the result, which the caller
+    * releases. The landmark set is a bound [[graft.snapshot.PinSet]], so
+    * calls with different sets run the same generated classes. */
   def ssspWeightedDF(spark: SparkSession, snap: Snapshot,
                      landmarks: Seq[Long],
                      labels: Seq[String] =
                        Seq("placed", "contains", "supplied_by"),
-                     rounds: Int = 4): DataFrame = Staged.run { stage =>
+                     rounds: Int = 4): DataFrame =
     // the edges stay parked: they are the MEMOIZED wedgeCache frame
     // (freed only on LRU eviction)
-    val edges = weightedEdges(snap, labels)
-    val width = sessionWidth(spark)
-    stage.iterate(ssspStart(edges, landmarks, width), rounds) { (dist, _) =>
-      partitionedCheckpoint(ssspRound(edges, dist, width), "vertex_id", width)
-    }.state
-  }
+    Staged.run(_.rounds(
+      ssspLoop(weightedEdges(snap, labels), landmarks, sessionWidth(spark)), rounds).state)
 
-  /** Round-0 distances: every landmark on an edge at 0 from itself, as
-    * a `vertex_id`-partitioned checkpoint (the distinct's own exchange
-    * builds the layout, so the checkpoint adds none). */
-  private[gx] def ssspStart(edges: DataFrame, landmarks: Seq[Long], width: Int): DataFrame =
-    partitionedCheckpoint(
-      edges.select(col("src").as("vertex_id"))
-        .unionAll(edges.select(col("dst").as("vertex_id"))).distinct()
-        .where(col("vertex_id").isin(landmarks: _*))
-        .select(col("vertex_id"), col("vertex_id").as("landmark_id"), lit(0L).as("dist_w")),
-      "vertex_id", width)
+  /** The prepared relaxation loop: the round-0 distances and one
+    * [[ssspRound]], each planned once. */
+  private[graft] def ssspLoop(edges: DataFrame, landmarks: Seq[Long], width: Int): PreparedRounds =
+    PreparedRounds(ssspStart(edges, landmarks), "vertex_id", width)(ssspRound(edges, _, width))
 
-  /** One relaxation round, the body [[ssspWeightedDF]] and
-    * [[RoundSteps]] share: the `dst`-partitioned edges join the
-    * `vertex_id`-partitioned distances with no exchange — `shuffle_hash`
-    * on the distance side makes it the build table, where AQE would
-    * broadcast the edges by size — and the only exchange is the
-    * `repartition(width, vertex_id)` under the (vertex, landmark) min,
-    * which leaves the result `vertex_id`-partitioned so the next round's
-    * checkpoint adds no second one. The partial
+  /** Round-0 distances, lazily: every landmark on an edge at 0 from
+    * itself (the distinct's own exchange builds the `vertex_id` layout). */
+  private[gx] def ssspStart(edges: DataFrame, landmarks: Seq[Long]): DataFrame =
+    edges.select(col("src").as("vertex_id"))
+      .unionAll(edges.select(col("dst").as("vertex_id"))).distinct()
+      .where(array_contains(graft.snapshot.PinSet.column(landmarks), col("vertex_id")))
+      .select(col("vertex_id"), col("vertex_id").as("landmark_id"), lit(0L).as("dist_w"))
+
+  /** One relaxation round, the body [[ssspLoop]] plans: the
+    * `dst`-partitioned edges join the `vertex_id`-partitioned distances
+    * with no exchange — `shuffle_hash` on the distance side makes it the
+    * build table, where the planner would broadcast the edges by size —
+    * and the only exchange is the `repartition(width, vertex_id)` under
+    * the (vertex, landmark) min, which leaves the result
+    * `vertex_id`-partitioned for the next round. The partial
     * aggregation before the shuffle is given up for it: relaxed rows are
     * landmark-cone-sized. */
   private[gx] def ssspRound(edges: DataFrame, dist: DataFrame, width: Int): DataFrame = {
@@ -1328,7 +1320,7 @@ object GraphXTraversal {
     * per-u aggregation (count and Σqty together) + one join + one
     * checkpoint — the suite used to build and checkpoint the edge table
     * twice. Callers project the weight column they walk with. */
-  private[gx] def contribEdges(snap: Snapshot): DataFrame = contribCache.getOrBuild(snap) {
+  private[graft] def contribEdges(snap: Snapshot): DataFrame = contribCache.getOrBuild(snap) {
     import graft.model.{A, PropType}
     // one row per edge id BEFORE the join: snap.prop is one-row-per-
     // element at a resolved checkpoint today, but the unweighted
@@ -1360,7 +1352,7 @@ object GraphXTraversal {
     * [[graft.util.LruMemo]] bound + explicit release as [[contribEdges]]. */
   private val vertsCache = new LruMemo[Snapshot, DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
-  private[gx] def vertexFrame(snap: Snapshot): DataFrame =
+  private[graft] def vertexFrame(snap: Snapshot): DataFrame =
     vertsCache.getOrBuild(snap)(
       partitionedCheckpoint(snap.vertexIds.select(col("id").as("v")), "v"))
 
@@ -1396,36 +1388,26 @@ object GraphXTraversal {
     * frame and the `v`-partitioned ranks in place; its only exchange is
     * the (v)-keyed message sum, whose map-side partials collapse the
     * edge-scale messages to vertex-per-partition rows before the
-    * shuffle — the LPA-rewrite shape (§41). Ranks materialize every
-    * `fuse` rounds as a `v`-partitioned checkpoint (the left-outer join
-    * already leaves them `v`-partitioned, so the checkpoint adds no
-    * exchange) and release their predecessor — plans never stack rounds
-    * deep. Zero-rank vertices are filtered from the message side (a 0
-    * contribution adds 0): free for the global variant, frontier-sized
-    * work in the personalized one's early rounds. Package-visible for
-    * the GraphX-equivalence spec. */
+    * shuffle — the LPA-rewrite shape (§41). The round is planned once
+    * ([[pageRankLoop]]) and all `iters` rounds run as one job that pins
+    * only the last ranks, a `v`-partitioned checkpoint whose vertex
+    * count `nv` and rank sum `s` are observed on that same job (the
+    * normalization's inputs). Zero-rank vertices are filtered from the
+    * message side (a 0 contribution adds 0): free for the global variant,
+    * frontier-sized work in the personalized one's early rounds.
+    * Package-visible for the GraphX-equivalence spec. */
   private[graft] def pageRankRounds(contrib: DataFrame, verts: DataFrame,
-                                    iters: Int, src: Option[Long]): DataFrame = Staged.run { stage =>
-    // Round FUSION: materialize every `fuse`-th round instead of every
-    // round — a fused round's plan embeds its predecessors (rank is
-    // referenced exactly once per round, so a fused plan never
-    // re-evaluates anything), cutting checkpoint jobs. Measured under
-    // the one-exchange round shape on a 4-vCPU host at local[2]:
-    // perfbench `analytics` per-request PPR p50, medians over seeds
-    // 11–18, fuse=2 1.89 s, fuse=3 2.09 s (2 faster on 7 of 8 seeds),
-    // fuse=5 2.15 s (seeds 11–14, where 2 read 1.83 s); sf0.1 graft.Bench
-    // 5-rep medians full/weighted/personal, fuse=2 5.9∕5.9∕2.5 s and
-    // 5.4∕5.7∕2.4 s, fuse=3 6.6∕6.1∕2.8 s. 2 is the measured optimum.
-    // (Under the earlier broadcast-per-round shape, r13 measured 3 as
-    // the optimum at sf0.1: fuse=2 6.2∕6.0∕3.3 s, fuse=3 5.8∕5.4∕3.1 s,
-    // fuse=4 personalized 6.2 s.)
-    val fuse = 2
-    stage.iterate(pageRankStart(verts, src), (iters + fuse - 1) / fuse) { (ranks, r) =>
-      val fused = math.min(fuse, iters - (r - 1) * fuse)
-      partitionedCheckpoint(
-        (1 to fused).foldLeft(ranks)((rk, _) => pageRankRound(contrib, verts, rk, src)), "v")
-    }.state // caller releases after its final cut materializes
-  }
+                                    iters: Int, src: Option[Long]): Observed =
+    Staged.run(_.rounds(pageRankLoop(contrib, verts, src), iters,
+      count(lit(1)).as("nv"), sum(col("r")).as("s")))
+
+  /** The prepared PageRank loop: r_0 and one [[pageRankRound]], each
+    * planned once at the session width the contribution edges and vertex
+    * frame were checkpointed at. */
+  private[graft] def pageRankLoop(contrib: DataFrame, verts: DataFrame,
+                                  src: Option[Long]): PreparedRounds =
+    PreparedRounds(pageRankStart(verts, src), "v", sessionWidth(verts.sparkSession))(
+      pageRankRound(contrib, verts, _, src))
 
   /** `mass` at the personalized source (a bound [[graft.snapshot.Pin]],
     * not an inlined literal), 0 elsewhere; `mass` everywhere when global. */
@@ -1433,19 +1415,18 @@ object GraphXTraversal {
     src.fold(lit(mass))(s =>
       when(col("v") === graft.snapshot.Pin.column(s), lit(mass)).otherwise(lit(0.0)))
 
-  /** r_0 over the vertex frame as a `v`-partitioned checkpoint: a
-    * projection of the `v`-partitioned vertex frame, so no exchange. */
+  /** r_0 over the vertex frame, lazily: a projection of the
+    * `v`-partitioned vertex frame, so still `v`-partitioned. */
   private[gx] def pageRankStart(verts: DataFrame, src: Option[Long]): DataFrame =
-    partitionedCheckpoint(verts.select(col("v"), teleport(src, 1.0).as("r")), "v")
+    verts.select(col("v"), teleport(src, 1.0).as("r"))
 
-  /** One PageRank round, the body [[pageRankRounds]] and [[RoundSteps]]
-    * share. Both joins are pinned to `shuffle_hash` built on their
-    * vertex-sized side (the nonzero ranks, then the message sums): the
-    * edge-scale contribution edges and the vertex frame are streamed
-    * where they lie, and nothing is broadcast. Without the hints AQE
-    * broadcast the contribution checkpoint each round by its size
-    * statistics and, once the message shuffle had run, broadcast the
-    * messages too — three jobs per round instead of one. */
+  /** One PageRank round, the body [[pageRankLoop]] plans. Both joins
+    * are pinned to `shuffle_hash` built on their vertex-sized side (the
+    * nonzero ranks, then the message sums): the edge-scale contribution
+    * edges and the vertex frame are streamed where they lie, and nothing
+    * is broadcast. Without the hints the planner broadcast the
+    * contribution checkpoint by its size statistics (under AQE, once the
+    * message shuffle had run, the messages too) — a job per broadcast. */
   private[gx] def pageRankRound(contrib: DataFrame, verts: DataFrame,
                                 ranks: DataFrame, src: Option[Long]): DataFrame = {
     val msg = contrib
@@ -1457,18 +1438,20 @@ object GraphXTraversal {
         (teleport(src, 0.15) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r"))
   }
 
-  /** GraphX's final rank normalization + deterministic top-k cut over a
-    * (v, r) frame: global scales to mean 1 (rank·|V|∕Σrank), personalized
-    * to sum 1 (rank∕Σrank) — PageRank.scala `normalizeRankSum`. The cut
-    * is orderBy+limit = TakeOrderedAndProject: per-partition heaps merged
-    * on the driver, never a global sort shuffle (the same shape
-    * pageRankDF gets from RDD `top`). */
-  private def normalizeTopK(ranks: DataFrame, personalized: Boolean,
+  /** GraphX's final rank normalization + deterministic top-k cut over
+    * [[pageRankRounds]]' (v, r) checkpoint: global scales to mean 1
+    * (rank·|V|∕Σrank), personalized to sum 1 (rank∕Σrank) —
+    * PageRank.scala `normalizeRankSum` — with |V| and Σrank as observed
+    * on the checkpoint's own job. The cut is orderBy+limit =
+    * TakeOrderedAndProject: per-partition heaps merged on the driver,
+    * never a global sort shuffle (the same shape pageRankDF gets from
+    * RDD `top`). */
+  private def normalizeTopK(rounds: Observed, personalized: Boolean,
                             topK: Int): DataFrame = Staged.run { stage =>
-    stage.own(ranks)
-    val agg = ranks.agg(count(lit(1)).as("nv"), sum(col("r")).as("s")).head()
-    val scale = if (personalized) 1.0 / agg.getDouble(1)
-                else agg.getLong(0) / agg.getDouble(1)
+    val ranks = stage.own(rounds.state)
+    val nv = rounds.metrics("nv").asInstanceOf[Long]
+    val s = rounds.metrics("s").asInstanceOf[Double]
+    val scale = if (personalized) 1.0 / s else nv / s
     ranks
       .select(col("v").as("vertex_id"), (col("r") * lit(scale)).as("sr"))
       .orderBy(col("sr").desc, col("vertex_id").asc).limit(topK)

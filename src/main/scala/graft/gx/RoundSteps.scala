@@ -3,10 +3,10 @@ package graft.gx
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.snapshot.Snapshot
-import graft.util.LruMemo
+import graft.util.{LruMemo, PreparedRounds}
 
 /** EVIDENCE TOOLING (r15, closing the r14 verdict's plan-evidence gap):
-  * ONE un-fused round/step of each iterative operator, built over the
+  * ONE round/step of each iterative operator, built over the
   * SAME shared checkpointed frames the real loops use, for PlanDump —
   * the registered queries' final plans show only a checkpointed result
   * scan, so the per-round Exchange placement (whether a round
@@ -17,7 +17,9 @@ import graft.util.LruMemo
   * Bench/Verify. PlanDump runs a step before it prints the plan, so the
   * dump is the final adaptive plan. Each returns a [[Step]]: the frame
   * plus the staging checkpoints it pinned (the shared memoized frames
-  * stay with their memos), released once the plan text is captured. */
+  * stay with their memos), released once the plan text is captured.
+  * The loops planned once are listed apart ([[prepared]]): their
+  * template is the round that runs. */
 private[graft] object RoundSteps {
 
   /** A step frame and the step-owned staging checkpoints behind it. */
@@ -27,16 +29,6 @@ private[graft] object RoundSteps {
 
   private val DagLabels = Seq("placed", "contains", "supplied_by")
   private val Landmarks = Seq(4000001L, 4000002L, 4000003L)
-
-  /** One relational PageRank round over the shared contribEdges /
-    * vertexFrame checkpoints (ranks seeded uniform like round 1 of the
-    * global variant). */
-  def pagerankRound(spark: SparkSession, snap: Snapshot): Step = {
-    val verts = GraphXTraversal.vertexFrame(snap)
-    val ranks = GraphXTraversal.pageRankStart(verts, None)
-    Step(GraphXTraversal.pageRankRound(GraphXTraversal.contribEdges(snap), verts, ranks, None),
-      Seq(ranks))
-  }
 
   /** Random-walk step 1 over the partitioned edge checkpoint. */
   def walkStep(spark: SparkSession, snap: Snapshot): Step = {
@@ -51,15 +43,6 @@ private[graft] object RoundSteps {
     val ed = GraphXTraversal.lpaEdges(GraphXTraversal.pairEdges(snap, 30.0))
     val labels = GraphXTraversal.lpaStart(ed).localCheckpoint(true)
     Step(GraphXTraversal.lpaRound(ed, labels), Seq(ed, labels))
-  }
-
-  /** One Bellman–Ford relaxation round over the memoized weighted edge
-    * frame, from the round-0 distances. */
-  def ssspRound(spark: SparkSession, snap: Snapshot): Step = {
-    val edges = GraphXTraversal.weightedEdges(snap, DagLabels)
-    val width = GraphXTraversal.sessionWidth(spark)
-    val dist = GraphXTraversal.ssspStart(edges, Landmarks, width)
-    Step(GraphXTraversal.ssspRound(edges, dist, width), Seq(dist))
   }
 
   /** One HyperANF systolic round over the anfEdges frame and the
@@ -97,12 +80,20 @@ private[graft] object RoundSteps {
 
   /** Registry for PlanDump: name → round-step frame builder. */
   val steps: Map[String, (SparkSession, Snapshot) => Step] = Map(
-    "pagerank_round" -> pagerankRound,
     "walk_step" -> walkStep,
     "lpa_round" -> lpaRound,
-    "sssp_round" -> ssspRound,
     "hyperanf_round" -> hyperanfRound,
     "kcore_round" -> kcoreRound,
     "ktruss_round" -> ktrussRound,
     "betweenness_round" -> betweennessRound)
+
+  /** The loops planned once ([[graft.util.PreparedRounds]]), whose
+    * template IS the round that runs: the global PageRank loop over the
+    * shared contribEdges / vertexFrame checkpoints, and the relaxation
+    * loop over the memoized weighted edges. Nothing is pinned. */
+  val prepared: Map[String, (SparkSession, Snapshot) => PreparedRounds] = Map(
+    "pagerank_round" -> ((_, snap) => GraphXTraversal.pageRankLoop(
+      GraphXTraversal.contribEdges(snap), GraphXTraversal.vertexFrame(snap), None)),
+    "sssp_round" -> ((spark, snap) => GraphXTraversal.ssspLoop(
+      GraphXTraversal.weightedEdges(snap, DagLabels), Landmarks, GraphXTraversal.sessionWidth(spark))))
 }

@@ -467,7 +467,9 @@ object VectorOps {
     // coalesce, exactly the old means.getOrElse(j, centroids(j))).
     val sample0 = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
     val sample = if (sample0.limit(1).isEmpty) vecs else sample0
-    val centroids = stage.iterate(start, iters) { (centroids, _) =>
+    // the final centroids and `indexed` are the index: the caller keeps
+    // them, unless assembling the index throws
+    val centroids = stage.handOff(stage.iterate(start, iters) { (centroids, _) =>
       val means = assign(sample, centroids)
         .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("cell"), col("i")).agg(avg(col("x")).as("m"))
@@ -478,11 +480,11 @@ object VectorOps {
         .join(means, Seq("cell"), "left_outer")
         .select(col("cell"), coalesce(col("nv"), col("cv")).as("cv"))
         .localCheckpoint(true)
-    }.state
+    }.state)
 
-    val indexed = assign(vecs, centroids)
+    val indexed = stage.handOff(assign(vecs, centroids)
       .select(col("vec_id").as("nb"), col("v").as("nbv"), col("cell"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
     indexed.count() // materialize before the staging cache is released
     // the k-row centroid checkpoint stays pinned with the index (the
     // IvfCache memo holds it and releases both on eviction)

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.graphx.Graph
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.Relations
 import org.apache.spark.storage.StorageLevel
 
 /** Bounded LRU memo — the one eviction discipline behind every engine
@@ -71,9 +72,12 @@ private[graft] object LruMemo {
   * localCheckpoint, `stage.own(x)` takes over a frame or graph a callee
   * pinned; all of them are released, in that order, when the scope
   * ends. `stage.iterate` carries an iterative loop's round state, each
-  * round's predecessor released as its successor is pinned. */
+  * round's predecessor released as its successor is pinned;
+  * `stage.rounds` runs a fixed-round loop planned once and pins only its
+  * last round. */
 private[graft] final class Stage private[util] () {
   private val releases = mutable.ArrayBuffer.empty[() => Unit]
+  private val handedOff = mutable.ArrayBuffer.empty[() => Unit]
 
   /** Persist `df` at MEMORY_AND_DISK, unless it is already cached — a
     * frame the caller (or a memo) holds is used as is and never released
@@ -95,6 +99,14 @@ private[graft] final class Stage private[util] () {
     * `df`. */
   def own(df: DataFrame): DataFrame = {
     Stage.releaseOf(df).foreach(releases += _)
+    df
+  }
+
+  /** Hand `df`, a pinned frame that is part of the scope's result, to
+    * the caller if the scope returns, and release it if the scope throws
+    * (a later step failing after `df` was pinned). Returns `df`. */
+  def handOff(df: DataFrame): DataFrame = {
+    Stage.releaseOf(df).foreach(handedOff += _)
     df
   }
 
@@ -139,7 +151,27 @@ private[graft] final class Stage private[util] () {
     } catch { case e: Throwable => free(state); throw e }
   }
 
+  /** Runs `n` rounds of `loop` as ONE job and pins only the last round:
+    * every round is its prepared plan over the previous round's rows, the
+    * last one is checkpointed eagerly (declaring `HashPartitioning(key,
+    * width)`), and each round runs as one stage of that checkpoint's job.
+    * `metrics` (named aggregate columns) are observed on the same job
+    * and read only once the checkpoint has returned. If the job fails,
+    * its checkpoint is this scope's to release (see [[Staged]]); nothing
+    * else was pinned. The state is handed off ([[handOff]]): the caller
+    * releases it (or hands it to [[own]]). */
+  def rounds(loop: PreparedRounds, n: Int, metrics: Column*): Observed = {
+    val last = loop.result(n)
+    val observation = Observation()
+    val observed =
+      if (metrics.isEmpty) last else last.observe(observation, metrics.head, metrics.tail: _*)
+    val state = handOff(
+      Relations.hashPartitioned(observed.localCheckpoint(true), loop.key, loop.width))
+    Observed(state, if (metrics.isEmpty) Map.empty else observation.get)
+  }
+
   private[util] def release(): Unit = releases.foreach(Stage.quietly)
+  private[util] def releaseHandedOff(): Unit = handedOff.foreach(Stage.quietly)
 }
 
 private[util] object Stage {
@@ -161,6 +193,11 @@ private[util] object Stage {
   * ended the loop. */
 private[graft] final case class Rounds(state: DataFrame, converged: Boolean)
 
+/** What [[Stage.rounds]] hands back: the last round's state (the caller
+  * releases it) and the metrics observed on the job that pinned it, by
+  * name. */
+private[graft] final case class Observed(state: DataFrame, metrics: Map[String, Any])
+
 /** One scope for an operator's temporary frames — the single release
   * path for everything an operator pins on the way to its result.
   *
@@ -179,8 +216,9 @@ private[graft] final case class Rounds(state: DataFrame, converged: Boolean)
   *  - Release on failure: release runs in a `finally`, so a job that
   *    throws inside the body leaves no staged frame pinned for the life
   *    of the session; an eager checkpoint whose own job threw (staged or
-  *    the result) is released too. The body's value must not need the
-  *    staged frames afterwards: end it with an eager
+  *    the result) is released too, and so is every frame the body handed
+  *    off as part of its result (`handOff`). The body's value must not
+  *    need the staged frames afterwards: end it with an eager
   *    `localCheckpoint(true)` (or a collect) so the result is
   *    materialized while they are still held.
   *  - Known race: the cache is shared by every session of a context and
@@ -193,6 +231,7 @@ private[graft] object Staged {
   def run[T](body: Stage => T): T = {
     val stage = new Stage
     try org.apache.spark.sql.graftshim.FailedCheckpoints.releasedOnFailure(body(stage))
+    catch { case e: Throwable => stage.releaseHandedOff(); throw e }
     finally stage.release()
   }
 }

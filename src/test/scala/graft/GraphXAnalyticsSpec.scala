@@ -690,40 +690,26 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     assert(!persisted.contains(firstRdd), "evicted shortest-path levels still pinned")
   }
 
+  // the generated sources of a prepared loop's start and round plans
+  private def preparedCode(loop: graft.util.PreparedRounds): Seq[String] = {
+    val stages = Seq(loop.start, loop.template)
+      .flatMap(org.apache.spark.sql.execution.debug.codegenStringSeq(_))
+    assert(stages.exists(_._1.contains("Join")), "no round plan was generated")
+    stages.map(_._2).sorted
+  }
+
   test("personalized pagerank: the source is bound, so two sources run the same generated code") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.gx.GraphXTraversal
     val snap = TpchGraph.snapshot(spark, dir)
-    // the generated sources of every round plan (a checkpoint with a
-    // join) one call runs, and its top-k
-    def run(src: Long): (Seq[String], Map[Long, Double]) = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          if (funcName == "localCheckpoint") plans.add(qe)
-        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      val top = try {
-        val out = graft.gx.GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, src, 10, 30)
-        org.apache.spark.sql.graftshim.ListenerBus.drain(spark)
-        out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      } finally spark.listenerManager.unregister(listener)
-      import scala.jdk.CollectionConverters._
-      val rounds = plans.asScala.toSeq.map(_.executedPlan).filter { p =>
-        org.apache.spark.sql.execution.debug.codegenStringSeq(p).exists(_._1.contains("Join"))
-      }
-      assert(rounds.nonEmpty)
-      (rounds.flatMap(p => org.apache.spark.sql.execution.debug.codegenStringSeq(p).map(_._2)).sorted,
-        top)
-    }
-    val (codeA, topA) = run(3000042L)
-    val (codeB, topB) = run(3000007L)
+    def code(src: Long): Seq[String] = preparedCode(GraphXTraversal.pageRankLoop(
+      GraphXTraversal.contribEdges(snap), GraphXTraversal.vertexFrame(snap), Some(src)))
+    val (codeA, codeB) = (code(3000042L), code(3000007L))
     val specific = codeA.diff(codeB).size
     assert(specific == 0, s"$specific of ${codeA.size} round-plan sources are source-specific")
-    Seq(3000042L -> topA, 3000007L -> topB).foreach { case (src, rel) =>
-      val gx = graft.gx.GraphXTraversal.personalizedPageRankDF(spark, snap, src, 10, 30)
+    Seq(3000042L, 3000007L).foreach { src =>
+      val rel = GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, src, 10, 30)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val gx = GraphXTraversal.personalizedPageRankDF(spark, snap, src, 10, 30)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(rel.keySet == gx.keySet, s"src $src: vertex sets differ")
       gx.foreach { case (v, r) =>
@@ -732,11 +718,23 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     }
   }
 
+  test("weighted SSSP: the landmark set is bound, so two sets run the same generated code") {
+    import graft.gx.GraphXTraversal
+    val snap = TpchGraph.snapshot(spark, dir)
+    val labels = Seq("placed", "contains", "supplied_by")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def code(lms: Seq[Long]): Seq[String] = preparedCode(
+      GraphXTraversal.ssspLoop(GraphXTraversal.weightedEdges(snap, labels), lms, width))
+    val (codeA, codeB) = (code(Seq(4000001L, 4000002L, 4000003L)), code(Seq(4000005L, 4000009L)))
+    val specific = codeA.diff(codeB).size
+    assert(specific == 0, s"$specific of ${codeA.size} start and round sources are landmark-specific")
+  }
+
   test("RoundSteps: dumping every step's plan releases its staging checkpoints") {
     import graft.gx.RoundSteps
     val snap = TpchGraph.snapshot(spark, dir)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    def dumpAll(): Unit = RoundSteps.steps.keysIterator.foreach { n =>
+    def dumpAll(): Unit = (RoundSteps.steps.keys ++ RoundSteps.prepared.keys).foreach { n =>
       assert(PlanDump.text(spark, dir, n, mode = "").nonEmpty)
     }
     dumpAll() // builds the shared memoized frames the steps read

@@ -110,6 +110,42 @@ class OperatorReleaseSpec extends AnyFunSuite {
     }
   }
 
+  test("ivfBuild pins nothing when assembling the index fails, and keeps its index otherwise") {
+    // a session of its own whose graft_cosine raises on one planted
+    // vector: id 7 is outside the Lloyd sample (ids divisible by 5) and
+    // the k lowest ids that seed it, so only the final assignment job,
+    // after the centroids are pinned, scores it
+    val planted = spark.newSession()
+    planted.udf.register("graft_cosine", (a: Seq[Double], b: Seq[Double]) => {
+      if (a.headOption.contains(99.0) || b.headOption.contains(99.0))
+        throw new IllegalStateException("planted assignment failure")
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+    })
+    def corpus(session: org.apache.spark.sql.SparkSession, plant: Boolean) =
+      session.createDataFrame((0L until 20L).map { id =>
+        val head = if (plant && id == 7L) 99f else 1f + id % 3
+        (id, Array(head, (id % 4).toFloat, 1f))
+      }).toDF("vec_id", "embedding")
+    val (ids0, entries0) = (rddIds, cacheEntries)
+    val e = intercept[Exception](VectorOps.ivfBuild(corpus(planted, plant = true), k = 2, iters = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted assignment failure")), e)
+    assert(rddIds -- ids0 == Set.empty[Int], "ivfBuild left RDDs persisted")
+    assert(cacheEntries == entries0, "ivfBuild left frames in the session cache")
+    // the same session builds the unplanted corpus: the index stays pinned
+    val index = VectorOps.ivfBuild(corpus(planted, plant = false), k = 2, iters = 2)
+    try {
+      assert(index.indexed.storageLevel != StorageLevel.NONE)
+      assert(cacheEntries == entries0 + 1)
+      assert(rddIds.contains(checkpointRdd(index.centroids)))
+      assert(index.indexed.count() == 20)
+    } finally {
+      index.indexed.unpersist(blocking = true)
+      graft.util.LruMemo.releaseCheckpoint(index.centroids)
+    }
+  }
+
   test("ssspWeightedDF returns its last round's checkpoint and pins nothing else") {
     val snap = graft.projection.TpchGraph.snapshot(spark, sf)
     val labels = Seq("placed", "contains", "supplied_by")

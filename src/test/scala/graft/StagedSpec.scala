@@ -45,6 +45,32 @@ class StagedSpec extends AnyFunSuite {
     assert(cacheEntries == entries0)
   }
 
+  test("a handed-off frame stays pinned when the scope returns and is released when it throws") {
+    val (ids0, entries0) = (rddIds, cacheEntries)
+    val e = intercept[IllegalStateException](Staged.run { stage =>
+      stage.handOff(frame(13).persist(StorageLevel.MEMORY_AND_DISK)).count()
+      stage.handOff(frame(17).localCheckpoint(true))
+      throw new IllegalStateException("after the hand-off")
+    })
+    assert(e.getMessage == "after the hand-off")
+    assert(rddIds -- ids0 == Set.empty[Int])
+    assert(cacheEntries == entries0)
+    val (kept, cp) = Staged.run { stage =>
+      val kept = stage.handOff(frame(19).persist(StorageLevel.MEMORY_AND_DISK))
+      kept.count()
+      (kept, stage.handOff(frame(23).localCheckpoint(true)))
+    }
+    try {
+      assert(kept.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(rddIds.contains(
+        cp.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id))
+      assert(cacheEntries == entries0 + 1)
+    } finally {
+      kept.unpersist(blocking = true)
+      LruMemo.releaseCheckpoint(cp)
+    }
+  }
+
   test("an eager checkpoint whose job fails leaves no RDD pinned") {
     val ids0 = rddIds
     val bad = frame(11).select(

@@ -15,8 +15,9 @@ import graft.projection.TpchGraph
 
 /** Every round that reads a partitioned checkpoint: the staged scan
   * declares `HashPartitioning(key, width)` over an RDD of exactly
-  * `width` partitions, and the executed round plan shuffles nothing
-  * straight out of that scan (through per-row operators only) — at the
+  * `width` partitions, and the round plan as it runs (the executed plan,
+  * or a loop's prepared template) shuffles nothing straight out of that
+  * scan (through per-row operators only) — at the
   * session's width and at a width the operator chose itself. */
 class PartitionedCheckpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -63,7 +64,12 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
                                 staged: Seq[(DataFrame, String, Int)],
                                 shuffled: Int = 0): Unit = {
     round.collect()
-    val plan = round.queryExecution.executedPlan
+    assertPlanReuses(round.queryExecution.executedPlan, staged, shuffled)
+  }
+
+  /** [[assertRoundReuses]] over a physical plan as it runs. */
+  private def assertPlanReuses(plan: SparkPlan, staged: Seq[(DataFrame, String, Int)],
+                               shuffled: Int = 0): Unit = {
     val all = nodes(plan)
     val reads = all.collect { case s: RDDScanExec => s.rdd.id }
     val shuffledReads = all.collect { case e: ShuffleExchangeLike => e.child }.flatMap(rowScans)
@@ -105,21 +111,20 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     } finally graft.util.LruMemo.releaseCheckpoint(empty)
   }
 
+  private def prepared(name: String): graft.util.PreparedRounds =
+    RoundSteps.prepared(name)(spark, TpchGraph.snapshot(spark, dir))
+
   test("pagerank round: contribution edges and vertices keep their layout") {
     val snap = TpchGraph.snapshot(spark, dir)
-    withStep("pagerank_round") { step =>
-      assertRoundReuses(step.df, Seq(
-        (GraphXTraversal.contribEdges(snap), "u", sessionWidth),
-        (GraphXTraversal.vertexFrame(snap), "v", sessionWidth)))
-    }
+    assertPlanReuses(prepared("pagerank_round").template, Seq(
+      (GraphXTraversal.contribEdges(snap), "u", sessionWidth),
+      (GraphXTraversal.vertexFrame(snap), "v", sessionWidth)))
   }
 
   test("SSSP round: the weighted edges keep their layout") {
     val snap = TpchGraph.snapshot(spark, dir)
-    withStep("sssp_round") { step =>
-      assertRoundReuses(step.df,
-        Seq((GraphXTraversal.weightedEdges(snap, DagLabels), "dst", sessionWidth)))
-    }
+    assertPlanReuses(prepared("sssp_round").template,
+      Seq((GraphXTraversal.weightedEdges(snap, DagLabels), "dst", sessionWidth)))
   }
 
   test("LPA round: the symmetrized edges keep their layout") {

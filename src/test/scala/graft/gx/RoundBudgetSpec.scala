@@ -21,29 +21,32 @@ import graft.projection.TpchGraph
 
 /** The per-round budget of the relational round loops, read off what a
   * call actually ran: every executed query's final adaptive plan (a
-  * `QueryExecutionListener`) and every job (a `SparkListener`). A round
-  * plan broadcasts nothing and runs exactly one shuffle per round, and a
-  * call runs at most two jobs per round plus a fixed number of result
-  * jobs, each named below. */
+  * `QueryExecutionListener`) and every job with its stages (a
+  * `SparkListener`). The loops planned once (PageRank, SSSP) are held to
+  * their prepared round template: it broadcasts nothing and runs exactly
+  * one shuffle, and a call runs all its rounds as one job, one stage per
+  * round, plus a fixed number of result jobs, each named below. */
 class RoundBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
   private val DagLabels = Seq("placed", "contains", "supplied_by")
 
   /** What one call ran: the final plan of every query it executed and the
-    * number of jobs it started. */
-  private final case class Ran(plans: Seq[SparkPlan], jobs: Int)
+    * number of stages of every job it started, in start order. */
+  private final case class Ran(plans: Seq[SparkPlan], stages: Seq[Int]) {
+    def jobs: Int = stages.size
+  }
 
   private def traced(call: => Unit): Ran = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentLinkedQueue[(Int, Int)]()
     val queries = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     val starts = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId -> e.stageInfos.size)
     }
     ListenerBus.drain(spark)
     spark.listenerManager.register(queries)
@@ -55,40 +58,42 @@ class RoundBudgetSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(starts)
       spark.listenerManager.unregister(queries)
     }
-    Ran(plans.asScala.toSeq, jobs.get)
+    Ran(plans.asScala.toSeq, jobs.asScala.toSeq.sortBy(_._1).map(_._2))
   }
 
-  // the executed plan's nodes, adaptive wrappers and query stages opened
+  // the plan's nodes, adaptive wrappers and query stages opened
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
     case s: QueryStageExec => s +: nodes(s.plan)
     case _ => p +: p.children.flatMap(nodes)
   }
 
-  /** Asserts the round plans of `ran` (the plans with a join; a round has
-    * `joinsPerRound` joins) hold `rounds` rounds in all, with no broadcast
-    * and one shuffle per round, and that the call ran at most two jobs
-    * per round plus the named `fixedJobs`. */
-  private def assertBudget(ran: Ran, rounds: Int, joinsPerRound: Int,
-                           fixedJobs: Map[String, Int]): Unit = {
-    val roundPlans = ran.plans.map(nodes).filter(_.exists(_.isInstanceOf[BaseJoinExec]))
-    val perPlan = roundPlans.map { ns =>
-      val joins = ns.count(_.isInstanceOf[BaseJoinExec])
-      assert(joins % joinsPerRound == 0, s"$joins joins is not whole rounds:\n${ns.head}")
-      val broadcasts = ns.count {
-        case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => true
-        case _ => false
-      }
-      assert(broadcasts == 0, s"a round plan broadcasts:\n${ns.head}")
-      val shuffles = ns.count(_.isInstanceOf[ShuffleExchangeLike])
-      assert(shuffles == joins / joinsPerRound,
-        s"$shuffles shuffles in ${joins / joinsPerRound} rounds:\n${ns.head}")
-      joins / joinsPerRound
+  /** Asserts a prepared plan has `joins` joins, broadcasts nothing and
+    * runs `shuffles` shuffles. */
+  private def assertPlan(what: String, plan: SparkPlan, joins: Int, shuffles: Int): Unit = {
+    val ns = nodes(plan)
+    assert(ns.count(_.isInstanceOf[BaseJoinExec]) == joins, s"$what joins:\n$plan")
+    val broadcasts = ns.count {
+      case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => true
+      case _ => false
     }
-    assert(perPlan.sum == rounds, s"round plans hold ${perPlan.mkString("+")} rounds, not $rounds")
-    val budget = 2 * rounds + fixedJobs.values.sum
-    assert(ran.jobs <= budget,
-      s"${ran.jobs} jobs, budget 2 x $rounds rounds + ${fixedJobs.mkString(", ")} = $budget")
+    assert(broadcasts == 0, s"$what broadcasts:\n$plan")
+    assert(ns.count(_.isInstanceOf[ShuffleExchangeLike]) == shuffles, s"$what shuffles:\n$plan")
+  }
+
+  /** Asserts the call ran its rounds in its first job, one stage per
+    * round after `startStages` (round 0's) plus the checkpoint's result
+    * stage; planned no round adaptively (no executed plan joins); and
+    * started exactly the named `fixedJobs`. */
+  private def assertBudget(ran: Ran, rounds: Int, startStages: Int,
+                           fixedJobs: Map[String, Int]): Unit = {
+    val joined = ran.plans.filter(p => nodes(p).exists(_.isInstanceOf[BaseJoinExec]))
+    assert(joined.isEmpty, s"a round was planned per call:\n${joined.headOption.orNull}")
+    assert(ran.stages.headOption.contains(startStages + rounds + 1),
+      s"the rounds job ran ${ran.stages.headOption} stages for $rounds rounds")
+    val budget = fixedJobs.values.sum
+    info(s"${ran.jobs} jobs (stages ${ran.stages.mkString(", ")}), budget $budget")
+    assert(ran.jobs <= budget, s"${ran.jobs} jobs, budget ${fixedJobs.mkString(", ")} = $budget")
   }
 
   private def ranks(rows: Array[org.apache.spark.sql.Row]): Map[Long, Double] =
@@ -100,14 +105,17 @@ class RoundBudgetSpec extends AnyFunSuite {
     // builds the memoized contribution edges and vertex frame untraced
     GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, 3000043L, iters, 30).collect()
     val src = 3000042L
+    val loop = GraphXTraversal.pageRankLoop(
+      GraphXTraversal.contribEdges(snap), GraphXTraversal.vertexFrame(snap), Some(src))
+    assertPlan("r_0", loop.start, joins = 0, shuffles = 0)
+    assertPlan("the round", loop.template, joins = 2, shuffles = 1)
     var rows: Array[org.apache.spark.sql.Row] = null
     val ran = traced {
       val out = GraphXTraversal.personalizedPageRankRelationalDF(spark, snap, src, iters, 30)
       rows = out.collect()
     }
-    assertBudget(ran, iters, joinsPerRound = 2, fixedJobs = Map(
-      "r_0 checkpoint" -> 1,
-      "rank sum for the normalization (partial-sum shuffle, result)" -> 2,
+    assertBudget(ran, iters, startStages = 0, fixedJobs = Map(
+      "the rounds, r_0 and the observed normalization sums (one checkpoint)" -> 1,
       "top-k cut checkpoint" -> 1,
       "the caller's collect" -> 1))
     val twin = ranks(GraphXTraversal.personalizedPageRankDF(spark, snap, src, iters, 30).collect())
@@ -121,13 +129,17 @@ class RoundBudgetSpec extends AnyFunSuite {
     val rounds = 4
     GraphXTraversal.ssspWeightedDF(spark, snap, Seq(4000004L), DagLabels, rounds).collect()
     val lms = Seq(4000001L, 4000002L, 4000003L)
+    val loop = GraphXTraversal.ssspLoop(GraphXTraversal.weightedEdges(snap, DagLabels), lms,
+      GraphXTraversal.sessionWidth(spark))
+    assertPlan("round-0 distances", loop.start, joins = 0, shuffles = 1)
+    assertPlan("the round", loop.template, joins = 1, shuffles = 1)
     var rows: Array[(Long, Long, Long)] = null
     val ran = traced {
       rows = GraphXTraversal.ssspWeightedDF(spark, snap, lms, DagLabels, rounds).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     }
-    assertBudget(ran, rounds, joinsPerRound = 1, fixedJobs = Map(
-      "round-0 distances (distinct shuffle, checkpoint)" -> 2,
+    assertBudget(ran, rounds, startStages = 1, fixedJobs = Map(
+      "the rounds and round-0 distances (one checkpoint)" -> 1,
       "the caller's collect" -> 1))
 
     // the shortest-path equations over the snapshot's own edges: d(lm) =
@@ -166,9 +178,11 @@ class RoundBudgetSpec extends AnyFunSuite {
   // The budgets below are the job counts of the same calls on the same
   // fixture and session (local[4], 4 shuffle partitions) at commit
   // e44ba58, where each loop released its round state by hand: the
-  // ported loops may run fewer jobs, never more.
+  // ported loops may run fewer jobs, never more. k-core's is its count
+  // since its stop test reads "no vertex below k" off the pinned peel
+  // (30 before, with a no-op confirmation peel and a count per round).
   private val LpaJobs = 20
-  private val KCoreJobs = 30
+  private val KCoreJobs = 22
   private val KTrussJobs = 116
   private val HyperAnfJobs = 31
 
