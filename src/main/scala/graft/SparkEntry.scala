@@ -291,17 +291,17 @@ object SparkEntry {
       // (nation + its customers + suppliers); component id = min member
       // id = the nation vertex (2M+n < 3M+c < 4M+s), which is what the
       // oracle derives relationally from the known star structure while
-      // GraphX runs the GENERAL iterative algorithm
+      // the relational min-label rounds run the GENERAL algorithm
       graft.gx.GraphXTraversal.componentsDF(
         s, TpchGraph.snapshot(s, d), Seq("in_nation"))),
 
     "pagerank" -> ((s, d) =>
-      // GraphX static PageRank on the in_nation/in_region star DAG,
-      // where 3 iterations ARE the fixpoint and the oracle computes the
-      // closed form relationally (normalization included) — the general
-      // iterative engine checked against a known structure, like
-      // connected_components. The full-graph variant (pageRankDF) stays
-      // spec-gated in GraphXAnalyticsSpec.
+      // static PageRank as relational rounds on the in_nation/in_region
+      // star DAG, where 3 iterations ARE the fixpoint and the oracle
+      // computes the closed form relationally (normalization included)
+      // — the general iterative engine checked against a known
+      // structure, like connected_components. The full-graph GraphX
+      // twin (pageRankDF) stays spec-gated in GraphXAnalyticsSpec.
       graft.gx.GraphXTraversal.pageRankStarDF(s, TpchGraph.snapshot(s, d))),
 
     "pagerank_full" -> ((s, d) =>
@@ -326,21 +326,23 @@ object SparkEntry {
         s, TpchGraph.snapshot(s, d), 3000042L, 10, 30)),
 
     "triangle_count" -> ((s, d) =>
-      // GraphX triangle counting (general neighbor-set-intersection
-      // algorithm) on the bulk-quantity part-co-occurrence graph; the
-      // oracle recomputes the census with a 3-way relational self-join
+      // triangle census of the bulk-quantity part-co-occurrence graph
+      // from one degree-oriented edge-support pass (k-truss's wedge
+      // join); the oracle recomputes it with a 3-way relational self-join
       graft.gx.GraphXTraversal.triangleCensusDF(s, TpchGraph.snapshot(s, d))),
 
     "shortest_paths" -> ((s, d) =>
-      // GraphX Pregel BFS to supplier landmarks over the order DAG;
-      // the DAG's level structure gives the oracle a 3-join closed form
+      // BFS to supplier landmarks over the order DAG: the SSSP
+      // relaxation rounds at unit weight, stopped when a round reaches
+      // no new pair; the DAG's level structure gives the oracle a
+      // 3-join closed form
       graft.gx.GraphXTraversal.shortestPathsDF(
         s, TpchGraph.snapshot(s, d), Seq(4000001L, 4000002L, 4000003L))),
 
     "harmonic_centrality" -> ((s, d) =>
       // Σ 1/dist to the supplier landmarks over the order DAG (NEW r11),
       // each reciprocal quantized to integer micros before the order-free
-      // sum; rides the same Pregel BFS as shortest_paths, and the twin
+      // sum; rides the same BFS rounds as shortest_paths, and the twin
       // the same closed-form level structure
       graft.gx.GraphXTraversal.harmonicCentralityDF(
         s, TpchGraph.snapshot(s, d), Seq(4000001L, 4000002L, 4000003L))),

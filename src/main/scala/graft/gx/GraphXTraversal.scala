@@ -5,20 +5,26 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.snapshot.Snapshot
-import graft.util.{LruMemo, Observed, PreparedRounds, Staged}
+import graft.util.{LruMemo, Observed, PreparedRounds, Settled, Stage, Staged}
 import graft.util.LruMemo.releaseCheckpoint
 import org.apache.spark.sql.graftshim.Relations
 
 /**
- * GraphX bridge: materialize a snapshot as a `Graph[Unit, Int]`
- * (dictionary-coded labels as edge attributes) and run the reference's exhaustive 3-hop
- * OUT traversal (FluxBenchmarkTestSuite.java:30-56) as message passing —
- * the iterative-analytics twin of the DataFrame join variant in
- * SparkEntry.hop3. Per BASELINE.md both variants are recorded.
+ * The snapshot graph's iterative analytics, run as relational rounds: a
+ * superstep is one join of the edge frame against the vertex-state frame
+ * plus one group-by (Pregelix's shape), over checkpoints that declare the
+ * layout the next round joins on. Loops that stop on a test carry their
+ * state through [[graft.util.Stage.iterate]]; fixed-round loops are
+ * planned once ([[graft.util.PreparedRounds]]).
  *
- * Path counting by aggregateMessages rounds: hop k's vertex value is the
- * number of length-k label-matching paths ending there; each round is one
- * shuffle over the (partitioned) edge RDD — no per-vertex driver loop.
+ * GraphX is left in two places. [[hop3]] runs the reference's exhaustive
+ * 3-hop OUT traversal (FluxBenchmarkTestSuite.java:30-56) as
+ * aggregateMessages rounds over a memoized `Graph[Unit, Int]`
+ * (dictionary-coded labels as edge attributes), the message-passing twin
+ * of the DataFrame join variant SparkEntry.hop3; per BASELINE.md both
+ * are recorded. [[pageRankDF]] and [[personalizedPageRankDF]] are the
+ * GraphX reference implementations the relational PageRank family is
+ * checked against.
  */
 object GraphXTraversal {
 
@@ -112,78 +118,39 @@ object GraphXTraversal {
       .toDF("n_paths", "n_suppliers")
   }
 
-  /** Edges per partition the Pregel rounds target. Derived from the
-    * measured-good point at sf0.1: the order-DAG label set (~765k
-    * filtered edges) ran best at 8 partitions ≈ 96k edges each (star
-    * PageRank 6.3 s → 0.6 s, CC 3.6 s → sub-second vs the parent's
-    * partitioning), so ~100k reproduces that width where it was measured
-    * while scaling PROPORTIONALLY instead of pinning every subgraph to 8
-    * — a fixed 8 is an 8-way parallelism ceiling (and a per-partition
-    * memory blowup) once the filtered edge RDD is billions of edges. */
-  private[graft] val TargetEdgesPerPartition = 100000L
+  /** The label-filtered edges as an (a, b) pair frame, a = the out
+    * vertex: the input of the label-subgraph analytics, whose vertices
+    * are edge ENDPOINTS only — a 100 TB graph restricted to one edge
+    * label is mostly isolated vertices (here: orders/parts/regions when
+    * filtering to in_nation), which would otherwise dominate both the
+    * rounds and the output as meaningless singletons. */
+  private[gx] def labelPairs(snap: Snapshot, labels: Seq[String]): DataFrame =
+    snap.edges.where(col("label").isin(labels: _*))
+      .select(col("outV").as("a"), col("inV").as("b"))
 
-  /** Adaptive width: proportional to the filtered edge count (one
-    * partition per `perPartition` edges), floored at 1 (tiny subgraphs
-    * stay task-overhead-free), capped at 4× the cluster's default
-    * parallelism so the width never outruns the executor count by more
-    * than a healthy task queue (on a 1000-executor cluster the cap binds
-    * only past ~10^9 edges — exactly when you want every core busy). */
-  private[graft] def widthFor(edgeCount: Long, perPartition: Long = TargetEdgesPerPartition): Int = {
-    val spark = SparkSession.active
-    val cap = math.max(4L * spark.sparkContext.defaultParallelism, 1L)
-    val byRows = (edgeCount + perPartition - 1) / perPartition
-    math.max(1L, math.min(byRows, cap)).toInt
-  }
+  /** Connected components of the label-filtered subgraph (undirected:
+    * direction is ignored): one row per edge endpoint with its component
+    * id, the smallest vertex id in the component — the GraphX
+    * `connectedComponents` labelling, by [[components]]. Memoized per
+    * (snap, labels) in the shared [[graft.util.LruMemo]], like the LPA
+    * labeling; eviction frees the result's blocks. */
+  private val ccCache =
+    new LruMemo[(Snapshot, Seq[String]), DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
-  /** Memoized filtered-edge counts (the width input): one cheap count
-    * over the persisted snapshot edges per (snap, labels), so repeated
-    * [[cachedLabelGraph]] lookups — which must derive the width BEFORE
-    * probing the graph cache — don't re-count. Snapshots are immutable;
-    * identity-keying is safe, same as the graph caches. */
-  private val labelCountCache = new LruMemo[(Snapshot, Seq[String]), Long](MaxCachedGraphs, _ => ())
-  private[graft] def labelEdgeCount(snap: Snapshot, labels: Seq[String]): Long =
-    labelCountCache.getOrBuild((snap, labels.sorted))(
-      snap.edges.where(col("label").isin(labels: _*)).count())
-
-  /** Label-filtered edge RDD for the iterative analytics: built with
-    * `Graph.fromEdges` semantics in mind — only edge ENDPOINTS become
-    * vertices, where `subgraph()` would keep every snapshot vertex as an
-    * isolated singleton (at 100 TB, most of the graph). The filtered
-    * graph is a small fraction of the snapshot, so the coalesce down to
-    * the count-derived width keeps Pregel rounds from being
-    * task-overhead-bound at the parent's partitioning. */
-  private def labelEdges(snap: Snapshot, labels: Seq[String],
-                         numPartitions: Int): RDD[Edge[Unit]] =
-    snap.edges
-      .where(col("label").isin(labels: _*))
-      .select(col("outV"), col("inV")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-      .coalesce(numPartitions)
-
-  /** Connected components of the label-filtered subgraph (undirected
-    * semantics — GraphX CC ignores direction): one row per NON-ISOLATED
-    * vertex with its component id (= min vertex id in the component, the
-    * GraphX convention). `Graph.fromEdges` creates vertices only for
-    * edge endpoints, so isolated vertices never enter the fixpoint (a
-    * 100 TB graph restricted to one edge label is mostly isolated
-    * vertices — here: orders/parts/regions when filtering to in_nation —
-    * which would otherwise dominate both the Pregel rounds and the
-    * output as meaningless singletons). Each round is one shuffle over
-    * the partitioned edge RDD, no driver loop. */
   def componentsDF(spark: SparkSession, snap: Snapshot,
-                   labels: Seq[String]): DataFrame = Staged.run { stage =>
-    // the Pregel result graph is released once the output materializes
-    val res = stage.own(cachedLabelGraph(snap, labels).connectedComponents())
-    spark.createDataFrame(res.vertices)
-      .toDF("vertex_id", "component").localCheckpoint(true)
-  }
+                   labels: Seq[String]): DataFrame =
+    ccCache.getOrBuild((snap, labels.sorted))(Staged.run { stage =>
+      stage.own(components(labelPairs(snap, labels)))
+        .select(col("v").as("vertex_id"), col("lbl").as("component"))
+        .localCheckpoint(true)
+    })
 
-  /** PageRank restricted to a label-filtered subgraph, built with
-    * `Graph.fromEdges` so ONLY edge endpoints become vertices (unlike
-    * `subgraph`, which keeps every snapshot vertex as an isolated
-    * singleton — at 100 TB the label-filtered graph is mostly isolated
-    * vertices, and they would both bloat the output and shift GraphX's
-    * final rank normalization `rank · |V| / Σrank`).
+  /** PageRank restricted to a label-filtered subgraph whose vertices are
+    * its edge endpoints only ([[labelPairs]]; isolated snapshot vertices
+    * would both bloat the output and shift the final rank normalization
+    * `rank · |V| / Σrank`): [[pageRankRounds]] over the subgraph's
+    * [[contributions]], normalized over every vertex ([[normalizeTopK]]
+    * with no cut).
     *
     * On the default `in_nation`/`in_region` labels the graph is a
     * 3-level DAG (customer/supplier → nation → region), where static
@@ -197,39 +164,43 @@ object GraphXTraversal {
     * (mₙ = customers+suppliers of n, each with out-degree 1); raw(r) =
     * 0.15 + 0.85·Σ_{n∈r} raw(n); final = raw · |V| / Σraw — the same
     * verify-the-general-algorithm-on-a-known-structure trick as
-    * `connected_components`. */
+    * `connected_components`. Memoized per (snap, labels, numIter) like
+    * [[componentsDF]]. */
+  private val starCache =
+    new LruMemo[(Snapshot, Seq[String], Int), DataFrame](MaxCachedGraphs, releaseCheckpoint)
+
   def pageRankStarDF(spark: SparkSession, snap: Snapshot,
                      labels: Seq[String] = Seq("in_nation", "in_region"),
-                     numIter: Int = 3): DataFrame = Staged.run { stage =>
-    val pr = stage.own(cachedLabelGraph(snap, labels).staticPageRank(numIter))
-    spark.createDataFrame(pr.vertices).toDF("vertex_id", "rank")
-      .select(col("vertex_id"), round(col("rank"), 4).as("rank"))
-      .localCheckpoint(true)
-  }
+                     numIter: Int = 3): DataFrame =
+    starCache.getOrBuild((snap, labels.sorted, numIter))(Staged.run { stage =>
+      val contrib = stage.own(contributions(labelPairs(snap, labels)
+        .select(col("a").as("u"), col("b").as("v"), lit(1.0).as("wt"))))
+      val verts = stage.own(partitionedCheckpoint(
+        contrib.select(col("u").as("v")).unionAll(contrib.select(col("v"))).distinct(), "v"))
+      normalizeTopK(pageRankRounds(contrib, verts, numIter, None), personalized = false, None)
+    })
 
-  /** Triangle census of the bulk-quantity part-co-occurrence graph:
-    * parts are linked when one order contains BOTH with quantity ≥
-    * `minQty` (the property filter rides the snapshot's typed
-    * edge-prop fact scan, then thins the quadratic pair blowup at the
-    * source — the same guard a 100 TB co-occurrence projection needs,
-    * since pairs-per-order grows as C(items, 2)). Pair generation is
-    * ONE equi-join on the order id plus a distinct — no crossJoin —
-    * and GraphX's general triangle-counting algorithm
-    * (neighbor-set intersection per edge, each round a shuffle over
-    * the partitioned edge RDD) is checked against a DuckDB oracle
-    * that recomputes the census with a 3-way relational self-join.
-    * Returns one row: (n_parts, n_coedges, n_triangles). */
-  private val pairGraphCache =
-    new LruMemo[(Snapshot, Double), Graph[Unit, Unit]](MaxCachedGraphs, _.unpersist(blocking = false))
+  /** The bulk-quantity part co-occurrence pair graph as a canonical
+    * pair frame (`a` < `b`, distinct): parts are linked when one order
+    * contains BOTH with quantity ≥ `minQty` (the property filter rides
+    * the snapshot's typed edge-prop fact scan, then thins the quadratic
+    * pair blowup at the source — the same guard a 100 TB co-occurrence
+    * projection needs, since pairs-per-order grows as C(items, 2)). Pair
+    * generation is ONE equi-join on the order id plus a distinct — no
+    * crossJoin. The input of every pair-graph operator, memoized per
+    * (snap, minQty) in the shared [[graft.util.LruMemo]] as an eager
+    * checkpoint; eviction frees its blocks. It declares no layout: its
+    * readers key on `a`, `b` or neither, and declared `a`-partitioned
+    * (a [[partitionedCheckpoint]]) Adamic–Adar and modularity ran 20–30%
+    * slower at sf0.1 while k-core ran no faster. Callers read it as is:
+    * never re-pin it, and never hand it to [[graft.util.Stage.iterate]]
+    * as `start` (the driver releases its predecessor after round 1). */
+  private val pairCache =
+    new LruMemo[(Snapshot, Double), DataFrame](MaxCachedGraphs, releaseCheckpoint)
 
-  /** The bulk-quantity part co-occurrence pair graph, shared by
-    * [[triangleCensusDF]] and [[clusteringCoeffDF]]: the expensive part
-    * (property-filtered self-join + distinct) gets the same LRU memo as
-    * the label-filtered graphs — repeated analytics pay only their own
-    * neighbor-set intersection rounds. */
-  private[gx] def pairGraph(snap: Snapshot, minQty: Double): Graph[Unit, Unit] = {
-    import graft.model.{A, PropType}
-    pairGraphCache.getOrBuild((snap, minQty))(Staged.run { stage =>
+  private[graft] def pairEdges(snap: Snapshot, minQty: Double): DataFrame =
+    pairCache.getOrBuild((snap, minQty)) {
+      import graft.model.{A, PropType}
       val bulkIds = snap.prop("quantity", PropType.PDouble, A.Edge)
         .where(col("v") >= minQty).select(col("e").as("id"))
       val bulk = snap.edges.where(col("label") === "contains")
@@ -237,66 +208,48 @@ object GraphXTraversal {
       // renamed projections before the self-join (ambiguity gotcha)
       val lhs = bulk.select(col("outV").as("o"), col("inV").as("a"))
       val rhs = bulk.select(col("outV").as("o"), col("inV").as("b"))
-      val pairs = stage(lhs.join(rhs, "o").where(col("a") < col("b"))
-        .select(col("a"), col("b")).distinct())
-      // width from the ACTUAL pair count (the join can square the input):
-      // the staging DF is persisted so the count and the graph build share
-      // one execution, then released once the cached edge RDD holds the data
-      val built = Graph.fromEdges(
-        pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-          .coalesce(widthFor(pairs.count())), ()).cache()
-      built.edges.count() // materialize before the staging persist goes
-      built
-    })
+      lhs.join(rhs, "o").where(col("a") < col("b")).select(col("a"), col("b")).distinct()
+        .localCheckpoint(true)
+    }
+
+  /** (v, d, tri) for every endpoint of a canonical pair frame: its degree
+    * ([[degrees]]) and the triangles through it. Each triangle at v closes
+    * two of v's edges, so tri(v) = Σ incident support ∕ 2, from one
+    * [[edgeSupportFromOriented]] pass over the `u`-partitioned
+    * [[orientedEdges]] checkpoint, pinned in `stage` (the shape
+    * [[kTrussPeel]] runs each round). */
+  private def vertexTriangles(stage: Stage, e0: DataFrame): DataFrame = {
+    val sup = edgeSupportFromOriented(e0, stage.own(partitionedCheckpoint(orientedEdges(e0), "u")))
+    val tri = sup.select(explode(array(col("a"), col("b"))).as("v"), col("support"))
+      .groupBy(col("v")).agg(expr("sum(support) div 2").as("tri"))
+    degrees(e0).join(tri, "v")
   }
 
-  /** The [[pairGraph]] edges as a canonical pair frame (`a` < `b`,
-    * distinct) — the input of every relational pair-graph operator.
-    * Unmemoized: each call maps the memoized graph's edge RDD afresh. */
-  private[gx] def pairEdges(snap: Snapshot, minQty: Double): DataFrame =
-    snap.edges.sparkSession.createDataFrame(
-      pairGraph(snap, minQty).edges.map(e => (e.srcId, e.dstId))).toDF("a", "b")
-
+  /** Triangle census of the [[pairEdges]] graph: one row (n_parts,
+    * n_coedges, n_triangles) folded from [[vertexTriangles]] — Σd ∕ 2
+    * edges and Σtri ∕ 3 triangles. Checked against a DuckDB oracle that
+    * recomputes the census with a 3-way relational self-join. */
   def triangleCensusDF(spark: SparkSession, snap: Snapshot,
-                       minQty: Double = 30.0): DataFrame = {
-    val g = pairGraph(snap, minQty)
-    // a < b and distinct → edges are already canonical; triangleCount
-    // re-canonicalizes internally, which is a cheap no-op here; the
-    // result graph is released once its counts are folded
-    val nTriangles = Staged.run { stage =>
-      stage.own(g.triangleCount()).vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
-    }
-    spark.createDataFrame(
-      Seq((g.numVertices, g.numEdges, nTriangles)))
+                       minQty: Double = 30.0): DataFrame = Staged.run { stage =>
+    val r = vertexTriangles(stage, pairEdges(snap, minQty))
+      .agg(count(lit(1)), coalesce(sum(col("d")), lit(0L)), coalesce(sum(col("tri")), lit(0L)))
+      .head()
+    spark.createDataFrame(Seq((r.getLong(0), r.getLong(1) / 2, r.getLong(2) / 3)))
       .toDF("n_parts", "n_coedges", "n_triangles")
   }
 
   /** Per-vertex local clustering coefficient over the same co-occurrence
     * pair graph: coeff(v) = 2·triangles(v) / (deg(v)·(deg(v)−1)), 0 for
     * degree < 2 — the "how clique-like is this part's neighborhood"
-    * signal. GraphX runs the GENERAL per-vertex triangle count
-    * (neighbor-set intersection per edge) and a degree aggregation; the
-    * DuckDB oracle recomputes both relationally (per-vertex wedge
-    * closure + pair-endpoint counts), so the iterative engine is checked
-    * on every vertex, not just the census total. Both RDDs are
-    * vertex-sized; the join is on the vertex id — no edge-scale shuffle
-    * beyond what triangleCount itself does. */
+    * signal, from [[vertexTriangles]]. The DuckDB oracle recomputes
+    * both relationally (per-vertex wedge closure + pair-endpoint
+    * counts), so every vertex is checked, not just the census total. */
   def clusteringCoeffDF(spark: SparkSession, snap: Snapshot,
                         minQty: Double = 30.0): DataFrame = Staged.run { stage =>
-    val g = pairGraph(snap, minQty)
-    val tg = stage.own(g.triangleCount())
-    val joined = g.degrees.leftOuterJoin(tg.vertices)
-      .map { case (v, (d, t)) =>
-        val tri = t.getOrElse(0).toLong
-        val coeff = if (d < 2) 0d else 2d * tri / (d.toLong * (d - 1L))
-        (v, d.toLong, tri, coeff)
-      }
-    // materialize the vertex-sized output, then drop the triangle result
-    // graph (NEW cached graph per call — the §16 release discipline)
-    spark.createDataFrame(joined)
-      .toDF("part_id", "degree", "triangles", "coeff")
-      .select(col("part_id"), col("degree"), col("triangles"),
-        round(col("coeff"), 4).as("coeff"))
+    vertexTriangles(stage, pairEdges(snap, minQty))
+      .select(col("v").as("part_id"), col("d").as("degree"), col("tri").as("triangles"),
+        round(when(col("d") < 2, lit(0.0))
+          .otherwise(lit(2.0) * col("tri") / (col("d") * (col("d") - 1))), 4).as("coeff"))
       .localCheckpoint(true)
   }
 
@@ -387,6 +340,45 @@ object GraphXTraversal {
     stage.iterate(lpaStart(ed).localCheckpoint(true), rounds) { (labels, _) =>
       lpaRound(ed, labels).localCheckpoint(true)
     }.state // retained: buildLpa memoizes it (lpaCache)
+  }
+
+  /** One connected-components round, LPA's round ([[lpaRound]]) with the
+    * min in place of the mode: every vertex keeps the smallest of its own
+    * label and its neighbours' labels; `moved` marks a vertex whose label
+    * fell. Both joins are pinned to `shuffle_hash` built on their
+    * vertex-sized side, as in [[pageRankRound]]: the `y`-partitioned
+    * edges and the `v`-partitioned labels are read in place, nothing is
+    * broadcast (left to the size statistics, the planner broadcast the
+    * labels into both joins every round, a job each), and the
+    * neighbour-min aggregation is the round's one exchange. Every vertex
+    * of `labels` is an endpoint of `ed`, so it has a neighbour. */
+  private[gx] def ccRound(ed: DataFrame, labels: DataFrame): DataFrame = {
+    val low = ed.join(labels.select(col("v").as("y"), col("lbl").as("nl")).hint("shuffle_hash"), "y")
+      .groupBy(col("x").as("v")).agg(min(col("nl")).as("nl"))
+    labels.join(low.hint("shuffle_hash"), "v")
+      .select(col("v"), least(col("lbl"), col("nl")).as("lbl"), (col("nl") < col("lbl")).as("moved"))
+  }
+
+  /** Connected components of an edge frame (columns `a`, `b`; direction,
+    * duplicates and self-loops ignored): (v, lbl, moved) for every edge
+    * endpoint, `lbl` the smallest vertex id in its component — GraphX's
+    * `connectedComponents` labelling. [[ccRound]] over the [[lpaEdges]] /
+    * [[lpaStart]] frames, planned once ([[graft.util.PreparedRounds]]), runs on
+    * [[graft.util.Stage.iterate]] until no label falls, a count observed
+    * on the job that pins each round ([[graft.util.Settled]]): one job per
+    * round. A label only ever falls, so the loop ends within the largest
+    * component's diameter + 1 rounds and needs no cap. The result is a
+    * `v`-partitioned checkpoint the caller releases. */
+  private[graft] def components(pairs: DataFrame): DataFrame = Staged.run { stage =>
+    val ed = stage.own(lpaEdges(pairs))
+    // round 0: lpaStart's labels, none moved
+    val loop = PreparedRounds(lpaStart(ed).withColumn("moved", lit(false)), "v",
+      sessionWidth(ed.sparkSession))(ccRound(ed, _))
+    val settled = new Settled(_ => count(when(col("moved"), 1)))
+    // round 1 reads the round-0 labels unpinned (pinning them is a job)
+    stage.iterate(loop.result(0), Int.MaxValue, settled) { (labels, n) =>
+      partitionedCheckpoint(settled.observe(loop.after(labels), n), "v", loop.width)
+    }.state
   }
 
   /** Eager localCheckpoint of `df` hash-partitioned on `k` into `width`
@@ -504,7 +496,7 @@ object GraphXTraversal {
       .select(col("v").as("part_id"), col("d").as("degree"), col("converged"))
 
   /** (v, d): the degree of every endpoint of a pair-edge frame. */
-  private def degrees(edges: DataFrame): DataFrame = edges
+  private[gx] def degrees(edges: DataFrame): DataFrame = edges
     .select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
     .groupBy(col("v")).agg(count(lit(1)).as("d"))
 
@@ -523,7 +515,8 @@ object GraphXTraversal {
     * the fixpoint spec can drive synthetic graphs whose peeling depth
     * exceeds the nominal round budget. */
   private[graft] def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = Staged.run { stage =>
-    val start = pairs.select(col("a"), col("b")).localCheckpoint(true)
+    // a projection: the memoized pair frame is read, never released here
+    val start = pairs.select(col("a"), col("b"))
     // a peeled edge set with no vertex below k is the fixpoint (the next
     // peel would remove nothing), so the round that reaches the core is
     // the last one; an empty set is trivially converged
@@ -584,9 +577,7 @@ object GraphXTraversal {
     * the closing semi-join probe), so unstaged it re-executed the degree
     * aggregation and both joins 3× per pass. */
   private[gx] def orientedEdges(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
+    val deg = degrees(edges)
     // orient u→w by (deg, id); carry the head's degree so the wedge
     // filter can order out-neighbours by the same total order without
     // re-joining degrees
@@ -662,12 +653,13 @@ object GraphXTraversal {
     // computed IN the fixpoint subgraph, so they are the final recount —
     // returned as is, with no extra wedge join; an empty set is trivially
     // converged. Past the cap, the last round's supports are the honest
-    // recount of the last edge set.
-    val peeled = stage.iterate(ktrussStart(pairs, minSup).localCheckpoint(true),
-        math.max(rounds, 32) + 1, until = _.where(col("support") < minSup).isEmpty) {
-      (supported, _) =>
+    // recount of the last edge set. The edges below the cut are counted
+    // on the job that pins the round.
+    val settled = new Settled(_ => count(when(col("support") < minSup, 1)))
+    val peeled = stage.iterate(ktrussStart(pairs, minSup), math.max(rounds, 32) + 1, settled) {
+      (supported, n) =>
         // the oriented checkpoint is released once the round materializes
-        Staged.run(round => ktrussRound(supported, minSup, round.own(_)).localCheckpoint(true))
+        Staged.run(r => settled.observe(ktrussRound(supported, minSup, r.own(_)), n).localCheckpoint(true))
     }
     stage.own(peeled.state).withColumn("converged", lit(peeled.converged))
       .localCheckpoint(true)
@@ -684,10 +676,8 @@ object GraphXTraversal {
   def richClubDF(spark: SparkSession, snap: Snapshot,
                  ks: Seq[Int] = Seq(4, 8, 16, 32),
                  minQty: Double = 30.0): DataFrame = Staged.run { stage =>
-    val e0 = stage.checkpoint(pairEdges(snap, minQty))
-    val deg = stage.checkpoint(
-      e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d")))
+    val e0 = pairEdges(snap, minQty)
+    val deg = stage.checkpoint(degrees(e0))
     import spark.implicits._
     val rows = ks.sorted.map { k =>
       val club = deg.where(col("d") > k).select(col("v"))
@@ -715,13 +705,8 @@ object GraphXTraversal {
     * integer micros before the sum (§28), one shared final division.
     * Returns one row (k, d_k1, alpha). */
   def degreeTailAlphaDF(spark: SparkSession, snap: Snapshot, k: Int = 100,
-                        minQty: Double = 30.0): DataFrame = {
-    val g = pairGraph(snap, minQty)
-    import spark.implicits._
-    val deg = spark.createDataFrame(
-      g.degrees.map { case (v, d) => (v, d.toLong) }).toDF("v", "d")
-    tailAlphaFromDegrees(deg, k)
-  }
+                        minQty: Double = 30.0): DataFrame =
+    tailAlphaFromDegrees(degrees(pairEdges(snap, minQty)), k)
 
   /** The estimator core over a (v, d) degree frame — package-visible so
     * the spec can drive hand-built degree sets with known closed forms.
@@ -766,10 +751,8 @@ object GraphXTraversal {
   /** [[localBridgesDF]] unmemoized (PlanDump's `local_bridges_inner`). */
   private[graft] def localBridges(spark: SparkSession, snap: Snapshot,
                                   minQty: Double): DataFrame = Staged.run { stage =>
-    val e0 = stage.checkpoint(pairEdges(snap, minQty))
-    val adj = e0.select(col("a").as("v"))
-      .unionAll(e0.select(col("b").as("v")))
-    val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
+    val e0 = pairEdges(snap, minQty)
+    val deg = degrees(e0)
     // stage the oriented frame once (r15, same fix as kTrussPeel): the
     // lazy oriented frame re-executed its degree aggregation + both
     // dimension joins 3×; the u-partitioned checkpoint also collapses
@@ -801,19 +784,14 @@ object GraphXTraversal {
    */
   def assortativityDF(spark: SparkSession, snap: Snapshot,
                       minQty: Double = 30.0): DataFrame = {
-    val g = pairGraph(snap, minQty)
-    import spark.implicits._
-    val deg = spark.createDataFrame(g.degrees.map { case (v, d) => (v, d.toLong) })
-      .toDF("v", "d")
     val e = pairEdges(snap, minQty)
+    val deg = degrees(e)
     // symmetrize: each undirected edge contributes (da,db) AND (db,da),
     // making the x and y marginals identical (the undirected convention)
-    val xy = e.join(deg.select(col("v").as("a"), col("d").as("da")), "a")
+    val ends = e.join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      .select(col("da").as("x"), col("db").as("y"))
-      .unionAll(e.join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-        .select(col("db").as("x"), col("da").as("y")))
+    val xy = ends.select(col("da").as("x"), col("db").as("y"))
+      .unionAll(ends.select(col("db").as("x"), col("da").as("y")))
     val (n, sx, sy, sxy, sxx, syy) = assortativityMoments(xy)
     val num = (BigInt(n) * sxy - sx * sy).toDouble
     val den = math.sqrt((BigInt(n) * sxx - sx * sx).toDouble) *
@@ -899,45 +877,25 @@ object GraphXTraversal {
         (col("aa_micro").cast("double") / lit(1e6)).as("aa"))
   }
 
-  /** Memoized label-filtered graphs, same LRU discipline as
-    * [[cachedGraph]]: repeated iterative analytics over the same
-    * subgraph (the bench's 3-rep medians, or a session exploring one
-    * label set) pay the edge-RDD materialization once — measured at
-    * sf0.1 that build dominates the Pregel rounds for the big order-DAG
-    * label set. Running over the FULL cached graph instead is 3× worse
-    * (Pregel state and iteration joins then span every snapshot vertex
-    * and edge), so filter-then-memoize is the right order. */
-  private val labelGraphCache =
-    new LruMemo[(Snapshot, Seq[String], Int), Graph[Unit, Unit]](
-      MaxCachedGraphs, _.unpersist(blocking = false))
-  def cachedLabelGraph(snap: Snapshot, labels: Seq[String]): Graph[Unit, Unit] = {
-    // width derived from the filtered edge count (memoized), and kept in
-    // the key: a snapshot whose subgraph grew enough to change the width
-    // must not silently return a graph built at the old one
-    val width = widthFor(labelEdgeCount(snap, labels))
-    labelGraphCache.getOrBuild((snap, labels.sorted, width))(
-      Graph.fromEdges(labelEdges(snap, labels, width), ()).cache())
-  }
-
-  /** Single-source-class BFS: GraphX `ShortestPaths` (Pregel, distances
-    * follow edge DIRECTION: each vertex learns its hop distance TO the
-    * landmark set along out-edges) over the order DAG
-    * customer -placed-> order -contains-> part -supplied_by-> supplier,
-    * with supplier landmarks. The structure pins the answer relationally
-    * — parts supplying a landmark sit at 1, orders containing such parts
-    * at 2, their customers at 3 — so the DuckDB oracle derives every
-    * (vertex, landmark, dist) row with three joins while GraphX runs
-    * the GENERAL fixpoint: the same verify-the-general-algorithm-on-a-
-    * known-structure trick as `connected_components`/`pagerank`.
-    * Unreachable vertices carry no row (Graph.fromEdges keeps only
-    * endpoints; the SPMap stays empty off the landmark cone). The
-    * filtered graph comes from [[cachedLabelGraph]] — see its note on
-    * why filter-then-memoize beats running over the full graph. */
-  /** Memoized Pregel BFS results — shortest_paths, harmonic_centrality
-    * AND betweenness_landmarks all start from the same (snap, landmarks,
+  /** Single-source-class BFS (distances follow edge DIRECTION: each
+    * vertex learns its hop distance TO the landmark set along out-edges)
+    * over the order DAG customer -placed-> order -contains-> part
+    * -supplied_by-> supplier, with supplier landmarks. The structure pins
+    * the answer relationally — parts supplying a landmark sit at 1,
+    * orders containing such parts at 2, their customers at 3 — so the
+    * DuckDB oracle derives every (vertex, landmark, dist) row with three
+    * joins while the rounds run the GENERAL fixpoint: the same
+    * verify-the-general-algorithm-on-a-known-structure trick as
+    * `connected_components`/`pagerank`. Returns (vertex_id, landmark_id,
+    * dist INT), GraphX `ShortestPaths`' rows: a landmark on an edge
+    * reports itself at 0, unreachable pairs and landmarks on no edge
+    * carry no row.
+    *
+    * Memoized — shortest_paths, harmonic_centrality AND
+    * betweenness_landmarks all start from the same (snap, landmarks,
     * labels) level table; the checkpointed frame is shared through the
-    * [[graft.util.LruMemo]], like the LPA labeling, instead of
-    * re-running Pregel per caller. Eviction frees its blocks. */
+    * [[graft.util.LruMemo]], like the LPA labeling, instead of re-running
+    * the rounds per caller. Eviction frees its blocks. */
   private val spCache = new LruMemo[(Snapshot, Seq[Long], Seq[String]), DataFrame](
     MaxCachedGraphs, releaseCheckpoint)
 
@@ -948,19 +906,30 @@ object GraphXTraversal {
     spCache.getOrBuild((snap, landmarks, labels))(
       buildShortestPaths(spark, snap, landmarks, labels))
 
+  /** The prepared SSSP loop ([[ssspLoop]]: [[ssspStart]] and
+    * [[ssspRound]]) at unit weight over the memoized [[weightedEdges]],
+    * on [[graft.util.Stage.iterate]]. At unit weight a pair's distance is
+    * final when it is first reached, so round n adds exactly the pairs at
+    * distance n, and the loop stops after the first round that adds none
+    * — a count observed on the job that pins the round
+    * ([[graft.util.Settled]]). Distances only grow by one per round, so
+    * the loop needs no cap. */
   private def buildShortestPaths(spark: SparkSession, snap: Snapshot,
                                  landmarks: Seq[Long],
                                  labels: Seq[String]): DataFrame = Staged.run { stage =>
-    // the Pregel result is a NEW cached graph (spmap vertices + an
-    // edge-scale replicated view) — materialize the vertex-sized output,
-    // then release it (the §16 leak discipline: algo-returned graphs
-    // accumulate across calls and evict the shared snapshot views)
-    val res = stage.own(org.apache.spark.graphx.lib.ShortestPaths
-      .run(cachedLabelGraph(snap, labels), landmarks))
-    val sp = res.vertices
-      .flatMap { case (vid, m) => m.map { case (lm, d) => (vid, lm, d) } }
-    spark.createDataFrame(sp).toDF("vertex_id", "landmark_id", "dist")
-      .localCheckpoint(true)
+    val width = sessionWidth(spark)
+    // a projection keeps the memoized edges' `dst` layout and pins nothing
+    val loop = ssspLoop(
+      weightedEdges(snap, labels).select(col("src"), col("dst"), lit(1L).as("wt")), landmarks, width)
+    val added = new Settled(n => count(when(col("dist_w") === n, 1)))
+    val dist = stage.iterate(loop.result(0), Int.MaxValue, added) { (d, n) =>
+      partitionedCheckpoint(added.observe(loop.after(d), n), "vertex_id", width)
+    }.state
+    // a checkpoint that declares no layout: the betweenness sweep planned
+    // over the state's `vertex_id` partitioning ran ~6× slower at sf0.1
+    stage.own(dist)
+      .select(col("vertex_id"), col("landmark_id"), col("dist_w").cast("int").as("dist"))
+      .repartition(width).localCheckpoint(true)
   }
 
   /** Memoized long-weighted edge frames for [[ssspWeightedDF]] in the
@@ -1065,7 +1034,7 @@ object GraphXTraversal {
     * DAG: h(v) = Σ_{lm reachable} 1∕d(v, lm) — the centrality that stays
     * well-defined on disconnected graphs (unreachable landmarks
     * contribute 0 instead of ∞, Boldi & Vigna 2014). Rides
-    * [[shortestPathsDF]]'s Pregel BFS, then one vertex-keyed
+    * [[shortestPathsDF]]' BFS rounds, then one vertex-keyed
     * aggregation; each distance's reciprocal quantizes to integer
     * micros ⌊10⁶∕d + ½⌋ BEFORE the sum (the §28 order-free doctrine;
     * landmarks at d=0 are excluded from their own sum, the convention).
@@ -1330,9 +1299,16 @@ object GraphXTraversal {
     val qty = snap.prop("quantity", PropType.PDouble, A.Edge)
       .groupBy(col("e")).agg(max(col("v")).as("wt"))
       .select(col("e").as("id"), col("wt"))
-    val e = snap.edges.select(col("id"), col("outV").as("u"), col("inV").as("v"))
+    contributions(snap.edges.select(col("id"), col("outV").as("u"), col("inV").as("v"))
       .join(qty, Seq("id"), "left_outer")
-      .select(col("u"), col("v"), coalesce(col("wt"), lit(1.0)).as("wt"))
+      .select(col("u"), col("v"), coalesce(col("wt"), lit(1.0)).as("wt")))
+  }
+
+  /** The contribution edges (u, v, w, wq) of a weighted edge frame (u, v,
+    * wt), one row per edge: w = 1∕outdeg u and wq = wt∕Σ_out wt, as a
+    * `u`-partitioned checkpoint the caller releases. The builder behind
+    * [[contribEdges]] and [[pageRankStarDF]]. */
+  private def contributions(e: DataFrame): DataFrame = {
     val tot = e.groupBy(col("u"))
       .agg(count(lit(1)).as("d"), sum(col("wt")).as("tw"))
     partitionedCheckpoint(
@@ -1374,7 +1350,7 @@ object GraphXTraversal {
       pageRankRounds(
         contribEdges(snap).select(col("u"), col("v"), col("wq").as("w")),
         vertexFrame(snap), numIter, None),
-      personalized = false, topK)
+      personalized = false, Some(topK))
 
   /** The power method as DataFrame rounds — the relational twin of
     * GraphX's `staticPageRank`, same recurrence to the bit pattern the
@@ -1438,23 +1414,22 @@ object GraphXTraversal {
         (teleport(src, 0.15) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r"))
   }
 
-  /** GraphX's final rank normalization + deterministic top-k cut over
-    * [[pageRankRounds]]' (v, r) checkpoint: global scales to mean 1
-    * (rank·|V|∕Σrank), personalized to sum 1 (rank∕Σrank) —
+  /** GraphX's final rank normalization + an optional deterministic top-k
+    * cut over [[pageRankRounds]]' (v, r) checkpoint: global scales to
+    * mean 1 (rank·|V|∕Σrank), personalized to sum 1 (rank∕Σrank) —
     * PageRank.scala `normalizeRankSum` — with |V| and Σrank as observed
     * on the checkpoint's own job. The cut is orderBy+limit =
     * TakeOrderedAndProject: per-partition heaps merged on the driver,
     * never a global sort shuffle (the same shape pageRankDF gets from
-    * RDD `top`). */
+    * RDD `top`); with no cut every vertex is returned. */
   private def normalizeTopK(rounds: Observed, personalized: Boolean,
-                            topK: Int): DataFrame = Staged.run { stage =>
+                            topK: Option[Int]): DataFrame = Staged.run { stage =>
     val ranks = stage.own(rounds.state)
     val nv = rounds.metrics("nv").asInstanceOf[Long]
     val s = rounds.metrics("s").asInstanceOf[Double]
     val scale = if (personalized) 1.0 / s else nv / s
-    ranks
-      .select(col("v").as("vertex_id"), (col("r") * lit(scale)).as("sr"))
-      .orderBy(col("sr").desc, col("vertex_id").asc).limit(topK)
+    val scaled = ranks.select(col("v").as("vertex_id"), (col("r") * lit(scale)).as("sr"))
+    topK.fold(scaled)(k => scaled.orderBy(col("sr").desc, col("vertex_id").asc).limit(k))
       .select(col("vertex_id"), round(col("sr"), 4).as("rank"))
       .localCheckpoint(true)
   }
@@ -1467,7 +1442,7 @@ object GraphXTraversal {
                            numIter: Int = 10, topK: Int = 30): DataFrame =
     normalizeTopK(
       pageRankRounds(contribEdges(snap), vertexFrame(snap), numIter, None),
-      personalized = false, topK)
+      personalized = false, Some(topK))
 
   /** Personalized PageRank from `src` as relational rounds — the twin of
     * [[personalizedPageRankDF]], sharing [[contribEdges]] with the
@@ -1478,7 +1453,7 @@ object GraphXTraversal {
                                        topK: Int = 30): DataFrame =
     normalizeTopK(
       pageRankRounds(contribEdges(snap), vertexFrame(snap), numIter, Some(src)),
-      personalized = true, topK)
+      personalized = true, Some(topK))
 
   /** Personalized PageRank from one source vertex (GraphX
     * `staticPersonalizedPageRank`, `numIter` fixed rounds, damping 0.85):

@@ -126,9 +126,32 @@ object HyperAnf {
     * operator scales its OWN width off the label-filtered edge count
     * (32 session partitions put ~40M-row partitions through one
     * sort-merge task and died): one partition per ~250k edges, through
-    * the shared [[GraphXTraversal.widthFor]] rule and cap. */
+    * the [[widthFor]] rule and cap. */
   private[gx] def anfWidth(snap: Snapshot, labels: Seq[String]): Int =
-    GraphXTraversal.widthFor(GraphXTraversal.labelEdgeCount(snap, labels), 250000L)
+    widthFor(labelEdgeCount(snap, labels), 250000L)
+
+  /** Adaptive width: proportional to the filtered edge count (one
+    * partition per `perPartition` edges), floored at 1 (tiny subgraphs
+    * stay task-overhead-free), capped at 4× the cluster's default
+    * parallelism so the width never outruns the executor count by more
+    * than a healthy task queue (on a 1000-executor cluster the cap binds
+    * only past ~10^9 edges — exactly when you want every core busy). */
+  private[graft] def widthFor(edgeCount: Long, perPartition: Long): Int = {
+    val spark = SparkSession.active
+    val cap = math.max(4L * spark.sparkContext.defaultParallelism, 1L)
+    val byRows = (edgeCount + perPartition - 1) / perPartition
+    math.max(1L, math.min(byRows, cap)).toInt
+  }
+
+  /** Memoized filtered-edge counts (the width input): one cheap count
+    * over the persisted snapshot edges per (snap, labels), so repeated
+    * [[anfWidth]] lookups don't re-count. Snapshots are immutable;
+    * identity-keying is safe. */
+  private val labelCountCache =
+    new LruMemo[(Snapshot, Seq[String]), Long](GraphXTraversal.MaxCachedGraphs, _ => ())
+  private[graft] def labelEdgeCount(snap: Snapshot, labels: Seq[String]): Long =
+    labelCountCache.getOrBuild((snap, labels.sorted))(
+      snap.edges.where(col("label").isin(labels: _*)).count())
 
   /** The distinct (src, dst) edge frame the systolic rounds walk —
     * extracted so [[graft.gx.RoundSteps]] can dump a round over the

@@ -54,20 +54,27 @@ private[graft] object RoundSteps {
     Step(HyperAnf.anfRound(edges, regs, width), Seq(edges, regs))
   }
 
-  /** One k-core peel (k = 12) over the checkpointed pair-edge frame. */
-  def kcoreRound(spark: SparkSession, snap: Snapshot): Step = {
-    val edges = GraphXTraversal.pairEdges(snap, 30.0).localCheckpoint(true)
-    Step(GraphXTraversal.kcoreRound(edges, 12), Seq(edges))
-  }
+  /** One k-core peel (k = 12) over the memoized pair-edge frame. */
+  def kcoreRound(spark: SparkSession, snap: Snapshot): Step =
+    Step(GraphXTraversal.kcoreRound(GraphXTraversal.pairEdges(snap, 30.0), 12))
 
   /** The first k-truss support round (k = 4) from the loop's start
     * state, over the staged oriented frame the round pins. */
   def ktrussRound(spark: SparkSession, snap: Snapshot): Step = {
     val start = GraphXTraversal.ktrussStart(GraphXTraversal.pairEdges(snap, 30.0), 2)
-      .localCheckpoint(true)
     val oriented = Seq.newBuilder[DataFrame]
     val round = GraphXTraversal.ktrussRound(start, 2, o => { oriented += o; o })
-    Step(round, oriented.result() :+ start)
+    Step(round, oriented.result())
+  }
+
+  /** One connected-components round over the in_nation subgraph's
+    * lpaEdges frame, from the round-0 labeling: the body the prepared
+    * loop plans once (GraphXTraversal.components), run adaptively
+    * here so its executed plan shows the layout each read keeps. */
+  def componentsRound(spark: SparkSession, snap: Snapshot): Step = {
+    val ed = GraphXTraversal.lpaEdges(GraphXTraversal.labelPairs(snap, Seq("in_nation")))
+    val labels = GraphXTraversal.partitionedCheckpoint(GraphXTraversal.lpaStart(ed), "v")
+    Step(GraphXTraversal.ccRound(ed, labels), Seq(ed, labels))
   }
 
   /** The level-1 forward σ round of the landmark-betweenness sweep, over
@@ -85,6 +92,7 @@ private[graft] object RoundSteps {
     "hyperanf_round" -> hyperanfRound,
     "kcore_round" -> kcoreRound,
     "ktruss_round" -> ktrussRound,
+    "components_round" -> componentsRound,
     "betweenness_round" -> betweennessRound)
 
   /** The loops planned once ([[graft.util.PreparedRounds]]), whose

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.gx.GraphXTraversal
 import graft.util.Staged
 
 /**
@@ -407,8 +408,9 @@ object MultimodalOps {
    * enter an exchange.
    *
    * Clusters: near-dup is transitive in curation policy (keep ONE of a
-   * truncation chain), so candidate pairs feed GraphX
-   * connectedComponents — the pair graph is orders of magnitude
+   * truncation chain), so candidate pairs feed the relational
+   * connected components ([[graft.gx.GraphXTraversal.components]]) —
+   * the pair graph is orders of magnitude
    * smaller than the corpus (the [[graft.pipeline.TextOps.dedupClusters]]
    * shape), the component id IS the representative (min media_id:
    * each digest rep is its group's min, so the component min over reps
@@ -914,12 +916,12 @@ object MultimodalOps {
       .localCheckpoint(true) // one row; lets the staged frames go
   }
 
-  /** Shared digest-collapse → candidate join → CC → member-rejoin stage
+  /** Shared digest-collapse → candidate join → connected components
+    * ([[graft.gx.GraphXTraversal.components]]) → member-rejoin stage
     * behind [[nearDupMedia]] and [[nearDupMediaCdc]]; `fps` must carry
     * (media_id, digest, keyCols…). */
   private def clusterByChunks(media: DataFrame, fpsIn: DataFrame,
                               keyCols: Seq[String]): DataFrame = Staged.run { stage =>
-    val spark = media.sparkSession
     val fps = stage(fpsIn)
     val memberDigest = fps.groupBy(col("media_id"))
       .agg(first(col("digest")).as("digest"))
@@ -934,13 +936,9 @@ object MultimodalOps {
     val pairs = rfps.as("x").join(rfps.as("y"), cond)
       .select(col("x.drep").as("a"), col("y.drep").as("b"))
       .distinct()
-    val edges = pairs.rdd
-      .map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
-      .coalesce(8)
-    // both GraphX graphs come back cached; release them with the staging
-    val g = stage.own(org.apache.spark.graphx.Graph.fromEdges(edges, ()))
-    val cc = stage.own(g.connectedComponents()).vertices
-    val compDF = spark.createDataFrame(cc).toDF("drep", "comp")
+    // the component labels are released with the staging
+    val compDF = stage.own(GraphXTraversal.components(pairs))
+      .select(col("v").as("drep"), col("lbl").as("comp"))
     val assigned = media.select(col("media_id").cast("long"), col("kind"))
       .join(memberDigest, Seq("media_id"), "left")
       .join(repIds, Seq("digest"), "left")

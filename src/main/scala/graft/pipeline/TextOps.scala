@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.gx.GraphXTraversal
 import graft.util.{Stage, Staged}
 
 /**
@@ -465,28 +466,21 @@ object TextOps {
     * CLUSTERS and pick one representative per cluster — "a~b, b~c"
     * must keep one of {a,b,c}, not run two independent pair drops.
     * Composition: [[dedupMinHashLsh]] candidate pairs (banded LSH +
-    * exact-Jaccard verify) → GraphX `connectedComponents` over the PAIR
-    * graph only (the component id is the min doc_id, which IS the
-    * representative) → a left join assigns every corpus doc its cluster.
+    * exact-Jaccard verify) → relational connected components over the
+    * PAIR graph only ([[graft.gx.GraphXTraversal.components]]: the
+    * component id is the min doc_id, which IS the representative) → a
+    * left join assigns every corpus doc its cluster.
     * Scale shape: the pair graph is orders of magnitude smaller than the
-    * corpus (that is the point of LSH), so the iterative CC rounds touch
+    * corpus (that is the point of LSH), so the min-label rounds touch
     * only near-dup docs; the corpus-side cost is one equi-join on doc_id.
     * Returns (doc_id, cluster_id, keep) for EVERY document — singletons
     * are their own cluster and always kept. */
   def dedupClusters(docs: DataFrame, threshold: Double = 0.8): DataFrame = Staged.run { stage =>
-    val spark = docs.sparkSession
     val pairs = stage.own(dedupMinHashLsh(docs, threshold))
-    // the pair graph is orders of magnitude smaller than the corpus —
-    // coalesce so the CC Pregel rounds aren't task-overhead-bound at the
-    // corpus partitioning (same measured effect as GraphXTraversal)
-    val edges = pairs.select(col("a"), col("b")).rdd
-      .map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
-      .coalesce(8)
-    // both graphs cache their vertices and edges; they and the pairs are
-    // released once the result materializes
-    val cc = stage.own(stage.own(org.apache.spark.graphx.Graph.fromEdges(edges, ()))
-      .connectedComponents()).vertices
-    val compDF = spark.createDataFrame(cc).toDF("doc_id", "cluster_id")
+    // the pairs and the component labels are released once the result
+    // materializes
+    val compDF = stage.own(GraphXTraversal.components(pairs.select(col("a"), col("b"))))
+      .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
     docs.select(col("doc_id").cast("long").as("doc_id"))
       .join(compDF, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -131,7 +131,9 @@ private[graft] final class Stage private[util] () {
     *  - the final state goes back to the caller, who releases it (or
     *    hands it to [[own]]).
     *
-    * The stop test sees each pinned round state, never `start`. */
+    * The stop test sees each pinned round state, never `start`. A
+    * [[Settled]] stop test runs no job: it reads a count observed on the
+    * job that pinned the round. */
   def iterate(start: DataFrame, maxRounds: Int, until: DataFrame => Boolean = _ => false)(
       step: (DataFrame, Int) => DataFrame): Rounds = {
     def free(df: DataFrame): Unit = Stage.releaseOf(df).foreach(Stage.quietly)
@@ -186,6 +188,27 @@ private[util] object Stage {
   // non-blocking and best effort: a failed release must not mask the
   // body's own failure, and the ContextCleaner still reclaims the rest
   def quietly(release: () => Unit): Unit = try release() catch { case NonFatal(_) => }
+}
+
+/** A [[Stage.iterate]] stop test read off the job that pins each round,
+  * not run as a job of its own: the step passes its round frame through
+  * [[observe]] before it pins it, `metric(round)` (a count over the
+  * round's rows) is observed on the pinning job, and the loop stops after
+  * the first round where it reads 0. */
+private[graft] final class Settled(metric: Int => Column) extends (DataFrame => Boolean) {
+  private var pending: Observation = _
+
+  /** `frame`, round `round`'s result, with the metric observed on
+    * whichever job first runs it: the one that pins it. */
+  def observe(frame: DataFrame, round: Int): DataFrame = {
+    pending = Observation()
+    frame.observe(pending, metric(round).as("n"))
+  }
+
+  def apply(state: DataFrame): Boolean = {
+    require(pending != null, "the round was pinned without observe")
+    try pending.get("n") == 0L finally pending = null
+  }
 }
 
 /** What [[Stage.iterate]] hands back: the final round state (the caller

@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.PreparedPlans
 
@@ -19,7 +19,8 @@ import org.apache.spark.sql.graftshim.PreparedPlans
   *
   * Nothing runs until an action reads [[result]]; that action's job then
   * runs each round as one stage. Loops that need an action between
-  * rounds (a stop test, a per-round output) use [[Stage.iterate]]. */
+  * rounds (a stop test, a per-round output) drive [[after]] from
+  * [[Stage.iterate]]: each pinned round is then one job, planned never. */
 private[graft] final class PreparedRounds private (
     val start: SparkPlan, val template: SparkPlan, leaf: DataFrame,
     val key: String, val width: Int) {
@@ -35,6 +36,17 @@ private[graft] final class PreparedRounds private (
     * nothing is pinned and no job has run. */
   def result(n: Int): DataFrame =
     PreparedPlans.declared(leaf.sparkSession, template.schema, rows(n)(), key, width)
+
+  /** The round after `state`, this loop's state as a frame over an RDD
+    * (a checkpoint, or [[result]]), as a frame declaring its layout.
+    * Lazy, like [[result]]. */
+  def after(state: DataFrame): DataFrame = {
+    val rows = state.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    require(PreparedRounds.columns(state.schema) == PreparedRounds.columns(template.schema),
+      s"the state is ${state.schema.simpleString}, the round reads ${template.schema.simpleString}")
+    PreparedPlans.declared(leaf.sparkSession, template.schema,
+      PreparedPlans.rows(template, leaf, () => rows)(), key, width)
+  }
 }
 
 private[graft] object PreparedRounds {
@@ -52,9 +64,10 @@ private[graft] object PreparedRounds {
       plan
     }
     val template = planned(round(leaf))
-    def columns(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
     require(columns(template.schema) == columns(start.schema),
       s"the round returns ${template.schema.simpleString}, the state is ${start.schema.simpleString}")
     new PreparedRounds(planned(start), template, leaf, key, width)
   }
+
+  private def columns(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
 }

@@ -276,27 +276,22 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
   }
 
   test("adaptive width: proportional to the filtered edge count, floored and capped") {
-    import graft.gx.GraphXTraversal.{widthFor, TargetEdgesPerPartition, labelEdgeCount, cachedLabelGraph}
+    import graft.gx.HyperAnf.widthFor
     // small subgraph → narrow (the measured-good sf0.1 point reproduced:
-    // ~765k edges land on 8 partitions; tiny subgraphs collapse to 1)
-    assert(widthFor(0L) == 1)
-    assert(widthFor(1L) == 1)
-    assert(widthFor(TargetEdgesPerPartition) == 1)
-    assert(widthFor(765000L) == 8)
+    // ~765k edges land on 8 partitions at 100k edges each; tiny
+    // subgraphs collapse to 1). HyperANF, the one caller, building at
+    // the derived width is PartitionedCheckpointSpec's HyperANF case.
+    val perPartition = 100000L
+    assert(widthFor(0L, perPartition) == 1)
+    assert(widthFor(1L, perPartition) == 1)
+    assert(widthFor(perPartition, perPartition) == 1)
+    assert(widthFor(765000L, perPartition) == 8)
     // large subgraph → proportional, until the parallelism cap binds
     // (4× defaultParallelism — on a 1000-executor cluster that cap only
     // binds past ~10^9 edges, exactly when every core should be busy)
     val cap = 4 * spark.sparkContext.defaultParallelism
-    assert(widthFor(100L * TargetEdgesPerPartition) == math.min(100, cap))
-    assert(widthFor(Long.MaxValue / 2) == cap)
-    // the BUILT graph carries the derived width, on both a small and a
-    // larger real subgraph
-    val snap = TpchGraph.snapshot(spark, dir)
-    for (labels <- Seq(Seq("in_nation"), Seq("placed", "contains", "supplied_by"))) {
-      val expected = widthFor(labelEdgeCount(snap, labels))
-      assert(cachedLabelGraph(snap, labels).edges.getNumPartitions == expected,
-        s"labels $labels")
-    }
+    assert(widthFor(100L * perPartition, perPartition) == math.min(100, cap))
+    assert(widthFor(Long.MaxValue / 2, perPartition) == cap)
   }
 
   test("pagerank: nation/region hubs outrank leaf vertices") {
@@ -626,8 +621,7 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     Seq("supplied_by"), Seq("in_region"), Seq("placed", "contains"))
 
   test("gx memos: MaxCachedGraphs + 1 keys evict and release the LRU entry; hits are identical") {
-    import graft.gx.GraphXTraversal.{MaxCachedGraphs, cachedLabelGraph, weightedEdges}
-    import org.apache.spark.storage.StorageLevel
+    import graft.gx.GraphXTraversal.{MaxCachedGraphs, pairEdges, weightedEdges}
     assert(freshLabelSets.size == MaxCachedGraphs + 1)
     val snap = TpchGraph.snapshot(spark, dir)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
@@ -641,11 +635,11 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     // the key is the SORTED label set
     assert(weightedEdges(snap, freshLabelSets.last.reverse) eq frames.last)
 
-    val graphs = freshLabelSets.map(cachedLabelGraph(snap, _))
-    assert(graphs.head.edges.getStorageLevel == StorageLevel.NONE,
-      "evicted graph's edge RDD still persisted")
-    assert(graphs.last.edges.getStorageLevel != StorageLevel.NONE)
-    assert(cachedLabelGraph(snap, freshLabelSets.last) eq graphs.last)
+    // quantity cuts no other caller memoizes
+    val pairs = (1 to MaxCachedGraphs + 1).map(i => pairEdges(snap, 40.0 + i))
+    assert(!persisted.contains(backingRddId(pairs.head)), "evicted pair frame still pinned")
+    assert(persisted.contains(backingRddId(pairs.last)))
+    assert(pairEdges(snap, 40.0 + MaxCachedGraphs + 1) eq pairs.last)
   }
 
   test("localBridgesDF: memoized per (snap, minQty); repeats pin nothing new, eviction releases") {
@@ -739,10 +733,15 @@ class GraphXAnalyticsSpec extends AnyFunSuite {
     }
     dumpAll() // builds the shared memoized frames the steps read
     val before = persisted
-    // every step except betweenness stages at least one checkpoint
-    val staged = RoundSteps.steps.valuesIterator.map(_(spark, snap))
-      .map { step => val n = step.staging.size; step.release(); n }.toSeq
-    assert(staged.count(_ > 0) == RoundSteps.steps.size - 1)
+    // every step stages at least one checkpoint, except betweenness and
+    // k-core, which read only memoized frames
+    val staged = RoundSteps.steps.map { case (name, build) =>
+      val step = build(spark, snap)
+      val n = step.staging.size
+      step.release()
+      name -> n
+    }
+    assert(staged.collect { case (name, 0) => name }.toSet == Set("betweenness_round", "kcore_round"))
     assert(persisted == before)
     dumpAll()
     assert(persisted == before, "a step's staging checkpoint is still pinned after its dump")

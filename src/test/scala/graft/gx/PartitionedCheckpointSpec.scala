@@ -133,6 +133,13 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     }
   }
 
+  test("components round: the symmetrized edges and the labels keep their layout") {
+    withStep("components_round") { step =>
+      val Seq(edges, labels) = step.staging
+      assertRoundReuses(step.df, Seq((edges, "y", sessionWidth), (labels, "v", sessionWidth)))
+    }
+  }
+
   test("walk step: the walked edges keep their layout") {
     withStep("walk_step") { step =>
       assertRoundReuses(step.df, Seq((step.staging.head, "v", sessionWidth)))
@@ -149,9 +156,8 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
   }
 
   test("k-truss wedge join: both sides read the oriented edges in their layout") {
-    val g = GraphXTraversal.pairGraph(TpchGraph.snapshot(spark, dir), 30.0)
-    val edges = spark.createDataFrame(g.edges.map(e => (e.srcId, e.dstId)))
-      .toDF("a", "b").localCheckpoint(true)
+    // the memoized pair frame, read as is and left to its memo
+    val edges = GraphXTraversal.pairEdges(TpchGraph.snapshot(spark, dir), 30.0)
     val oriented = GraphXTraversal.partitionedCheckpoint(
       GraphXTraversal.orientedEdges(edges), "u")
     // both wedge sides read the frame as is; the closing semi-join
@@ -159,6 +165,6 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     // is shuffled
     try assertRoundReuses(GraphXTraversal.edgeSupportFromOriented(edges, oriented),
       Seq((oriented, "u", sessionWidth)), shuffled = 1)
-    finally Seq(edges, oriented).foreach(graft.util.LruMemo.releaseCheckpoint)
+    finally graft.util.LruMemo.releaseCheckpoint(oriented)
   }
 }

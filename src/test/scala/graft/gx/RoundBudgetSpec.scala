@@ -180,11 +180,19 @@ class RoundBudgetSpec extends AnyFunSuite {
   // e44ba58, where each loop released its round state by hand: the
   // ported loops may run fewer jobs, never more. k-core's is its count
   // since its stop test reads "no vertex below k" off the pinned peel
-  // (30 before, with a no-op confirmation peel and a count per round).
+  // (30 before, with a no-op confirmation peel and a count per round)
+  // and its start reads the memoized pair frame (22 before); k-truss's
+  // since its stop test is observed on the job that pins the round and
+  // its start reads the memoized pair frame too (116 before). The
+  // connected-components and BFS budgets are the counts of their first
+  // relational loops, whose stop tests are observed the same way.
   private val LpaJobs = 20
-  private val KCoreJobs = 22
-  private val KTrussJobs = 116
+  private val KCoreJobs = 21
+  private val KTrussJobs = 93
   private val HyperAnfJobs = 31
+  private val ComponentsJobs = 4
+  private val PathComponentsJobs = 202
+  private val ShortestPathsJobs = 7
 
   test("LPA: the rounds stay within the hand-released loop's job count") {
     val snap = TpchGraph.snapshot(spark, dir)
@@ -218,5 +226,31 @@ class RoundBudgetSpec extends AnyFunSuite {
     // hops = 4: a key no other caller memoizes
     val ran = traced(HyperAnf.hyperAnfDF(spark, snap, hops = 4, DagLabels).collect())
     assertJobs(ran, rounds = 4, budget = HyperAnfJobs)
+  }
+
+  test("connected components: the min-label rounds stay within their job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    // every member of a nation star neighbours the nation, its smallest
+    // id: one round labels the stars, the second moves nothing
+    val ran = traced(graft.util.LruMemo.releaseCheckpoint(
+      GraphXTraversal.components(GraphXTraversal.labelPairs(snap, Seq("in_nation")))))
+    assertJobs(ran, rounds = 2, budget = ComponentsJobs)
+  }
+
+  test("connected components: a planted 200-vertex path stays within its job count") {
+    val s = spark
+    import s.implicits._
+    val pairs = ((0L until 199L).map(i => (i, i + 1)) :+ ((1000L, 1001L))).toDF("a", "b")
+    val ran = traced(graft.util.LruMemo.releaseCheckpoint(GraphXTraversal.components(pairs)))
+    assertJobs(ran, rounds = 200, budget = PathComponentsJobs)
+  }
+
+  test("BFS: the unit-weight rounds stay within their job count") {
+    val snap = TpchGraph.snapshot(spark, dir)
+    GraphXTraversal.weightedEdges(snap, DagLabels).count() // the memoized edges, untraced
+    // levels 1 to 3 of the order DAG, then a round that adds nothing;
+    // a landmark set no other caller memoizes
+    val ran = traced(GraphXTraversal.shortestPathsDF(spark, snap, Seq(4000007L), DagLabels).collect())
+    assertJobs(ran, rounds = 4, budget = ShortestPathsJobs)
   }
 }

@@ -1,15 +1,19 @@
 #!/usr/bin/env python3
 """Staging census: per-file code-line counts of the calls that pin and
-release Spark frames, plus session-conf writes, over src/main.
+release Spark frames, session-conf writes and GraphX references, over
+src/main.
 
     python3 tools/staging_census.py [ROOT] [--lines]
 
 A line counts once per pattern it contains; comments (line and nested
 block comments, scaladoc included) and string literals are stripped
-first, so prose and SQL text never count. `code_lines` is the file's
+first, so prose and SQL text never count. The `graphx` column counts the
+lines that name the `org.apache.spark.graphx` package, or one of the
+GraphX types the file imports from it (every GraphX type under a
+wildcard import), used unqualified. `code_lines` is the file's
 non-blank lines after stripping comments. With --lines, every matching
-`unpersist(` line is printed too (file:line: text), which shows where
-the remaining manual releases are.
+`unpersist(` and `graphx` line is printed too (file:line: text), which
+shows where the remaining manual releases and GraphX uses are.
 """
 import os
 import re
@@ -20,6 +24,27 @@ PATTERNS = ["persist(", "unpersist(", "localCheckpoint(",
 # `persist(` must not match inside `unpersist(`
 MATCHERS = [re.compile(r"(?<!un)persist\(")] + [
     re.compile(re.escape(p)) for p in PATTERNS[1:]]
+
+GRAPHX = "org.apache.spark.graphx"
+GRAPHX_TYPES = ["Graph", "Edge", "EdgeContext", "EdgeDirection", "EdgeRDD",
+                "EdgeTriplet", "GraphLoader", "GraphOps", "PartitionStrategy",
+                "Pregel", "TripletFields", "VertexId", "VertexRDD"]
+GRAPHX_IMPORT = re.compile(
+    r"import\s+org\.apache\.spark\.graphx\.(?:\{([^}]*)\}|(\w+))")
+
+
+def graphx_matcher(lines):
+    """Matches a line that references GraphX: the package by name, or an
+    imported GraphX type used unqualified (`A.Edge` is not one)."""
+    names = set()
+    for l in lines:
+        for group, single in GRAPHX_IMPORT.findall(l):
+            for n in (group.split(",") if group else [single]):
+                n = n.split("=>")[0].strip()
+                names.update(GRAPHX_TYPES if n == "_" else [n])
+    names = sorted(n for n in names if n)
+    typed = re.compile(r"(?<![\w.])(?:%s)\b" % "|".join(names)) if names else None
+    return lambda l: GRAPHX in l or bool(typed and typed.search(l))
 
 
 def strip(src):
@@ -75,10 +100,12 @@ def census(root):
                 p = os.path.join(d, f)
                 with open(p, encoding="utf-8") as fh:
                     lines = strip(fh.read()).split("\n")
+                gx = graphx_matcher(lines)
                 counts = [sum(1 for l in lines if m.search(l)) for m in MATCHERS]
+                counts.append(sum(1 for l in lines if gx(l)))
                 code = sum(1 for l in lines if l.strip())
                 hits = [(k + 1, l.strip()) for k, l in enumerate(lines)
-                        if "unpersist(" in l]
+                        if "unpersist(" in l or gx(l)]
                 rows.append((os.path.relpath(p, root), counts, code, hits))
     return sorted(rows)
 
@@ -89,10 +116,10 @@ def main(argv):
     root = args[0] if args else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "..", "src", "main")
     rows = census(root)
-    head = ["file"] + PATTERNS + ["code_lines"]
+    head = ["file"] + PATTERNS + ["graphx", "code_lines"]
     w = max(len(r[0]) for r in rows + [("total",)])
     print(f"{head[0]:<{w}} " + " ".join(f"{h:>18}" for h in head[1:]))
-    tot = [0] * (len(PATTERNS) + 1)
+    tot = [0] * (len(PATTERNS) + 2)
     for name, counts, code, _ in rows:
         vals = counts + [code]
         tot = [a + b for a, b in zip(tot, vals)]
